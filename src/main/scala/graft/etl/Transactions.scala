@@ -95,8 +95,14 @@ object Transactions {
       .drop("CountryRaw")
   }
 
+  /** One memo entry: the cached cleaned table plus the frames derived
+    * from it and persisted beside it (see [[derived]]). */
+  private final class Entry(val cleaned: DataFrame) {
+    val derived = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
+  }
+
   private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Entry]
 
   /** Lineitem rows per cleaned-cache partition (r17): the cleaned
     * substrate inherited the lineitem PARQUET SPLIT count — THREE
@@ -131,21 +137,41 @@ object Transactions {
     * long-lived process that cycles SparkSessions does not retain dead
     * plans (and their cached-block lineage) forever; [[invalidate]] is
     * the explicit flush for live sessions. */
-  def cleaned(spark: SparkSession, dir: String): DataFrame = {
+  def cleaned(spark: SparkSession, dir: String): DataFrame =
+    entry(spark, dir).cleaned
+
+  private def entry(spark: SparkSession, dir: String): Entry = {
     memo.keysIterator
       .filter { case (s, _) => s.sparkContext.isStopped }
       .foreach(memo.remove)
     memo.getOrElseUpdate((spark, dir),
-      cleanSpread(spark, dir, clean(raw(spark, dir))).cache())
+      new Entry(cleanSpread(spark, dir, clean(raw(spark, dir))).cache()))
+  }
+
+  /** `build(cleaned)` persisted at the cleaned table's storage level and
+    * registered under `name` in the cleaned table's memo entry: every
+    * call for the same (session, dir, name) returns the same frame, and
+    * [[invalidate]] releases it together with the table it was computed
+    * from. The first action on it materializes it; later actions read
+    * the stored blocks instead of recomputing from the cleaned cache. */
+  def derived(spark: SparkSession, dir: String, name: String)(
+      build: DataFrame => DataFrame): DataFrame = {
+    val e = entry(spark, dir)
+    e.derived.getOrElseUpdate(name, build(e.cleaned).persist(e.cleaned.storageLevel))
   }
 
   /** Drop and unpersist every memoized cleaned table for `spark`
-    * (all dirs). Safe to call mid-flight: downstream plans already built
-    * from the cached frame recompute from the parquet lineage. */
+    * (all dirs), and every frame [[derived]] from one. Safe to call
+    * mid-flight: downstream plans already built from the cached frames
+    * recompute from the parquet lineage. */
   def invalidate(spark: SparkSession): Unit =
     memo.keysIterator.filter(_._1 eq spark).foreach { k =>
-      memo.remove(k).foreach { df =>
-        try df.unpersist(blocking = false) catch { case _: Throwable => () }
+      memo.remove(k).foreach { e =>
+        // derived frames first: unpersisting the cleaned table would
+        // otherwise re-plan their cache entries around it
+        (e.derived.values ++ Seq(e.cleaned)).foreach { df =>
+          try df.unpersist(blocking = false) catch { case _: Throwable => () }
+        }
       }
     }
 }

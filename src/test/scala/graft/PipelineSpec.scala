@@ -2,9 +2,13 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
-import graft.etl.{Load, Pipeline}
+import graft.etl.{Load, Pipeline, Transactions}
 
 /** End-to-end pipeline + sink tests (ref: etl.py:390-413, 264-386). */
 class PipelineSpec extends SparkSpec {
@@ -165,5 +169,37 @@ class PipelineSpec extends SparkSpec {
     // values survive the rewrite
     assert(spark.read.parquet(out2).count() ===
       graft.etl.Tables.lineitem(spark, "/root/testdata/sf0.1").count())
+  }
+
+  test("transform materializes each summary once; invalidate releases it with the cleaned table") {
+    val summaries = Seq("customer_summary", "product_summary", "daily_sales", "country_summary")
+    val tables = Pipeline.transform(spark, sfDir)
+    Load.writeParquet(tables, Files.createTempDirectory("graft_once").toString)
+    val level = tables("transactions").storageLevel
+    summaries.foreach { t =>
+      assert(tables(t).storageLevel === level, s"$t not persisted at the cleaned level")
+    }
+    // a second transform on the same cleaned table reuses the frames
+    val again = Pipeline.transform(spark, sfDir)
+    (summaries :+ "transactions").foreach(t => assert(again(t) eq tables(t), s"$t rebuilt"))
+    // a count reads the stored summary, not a recompute from the cleaned cache
+    def storedAs(df: DataFrame): Int = df.queryExecution.optimizedPlan match {
+      case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id
+      case p => fail(s"not materialized:\n$p")
+    }
+    val ids = (summaries :+ "transactions").map(t => t -> storedAs(tables(t))).toMap
+    summaries.foreach { t =>
+      val reads = tables(t).groupBy().count().queryExecution.optimizedPlan.collect {
+        case r: InMemoryRelation => r.cacheBuilder.cachedColumnBuffers.id
+      }
+      assert(reads === Seq(ids(t)), s"$t count does not read its stored result")
+      assert(tables(t).count() > 0)
+    }
+    def stored() = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    ids.foreach { case (t, id) => assert(stored()(id), s"$t holds no block") }
+    Transactions.invalidate(spark)
+    eventually(timeout(30.seconds)) {
+      ids.foreach { case (t, id) => assert(!stored()(id), s"$t still holds blocks") }
+    }
   }
 }
