@@ -13,9 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `transform()` (etl.py:251-254), each output table is materialized
   * once: the summaries are persisted at the cleaned table's storage
   * level, so the first sink write computes each one and every other
-  * sink and the row count read the stored result. They live in the
-  * cleaned table's memo entry ([[Transactions.derived]]), and
-  * [[Transactions.invalidate]] releases them together with it.
+  * sink and the row count read the stored result. They are registered
+  * under the cleaned table's registry kind, so [[Transactions.invalidate]]
+  * releases them together with it, newest first.
   */
 object Pipeline {
 
@@ -32,7 +32,10 @@ object Pipeline {
   def transform(spark: SparkSession, dir: String): Map[String, DataFrame] =
     Map("transactions" -> Transactions.cleaned(spark, dir)) ++
       summaries.map { case (name, build) =>
-        name -> Transactions.derived(spark, dir, name)(build)
+        name -> graft.Substrates.frame(spark, dir, s"${Transactions.Kind}.summary", name) {
+          val cleaned = Transactions.cleaned(spark, dir)
+          build(cleaned).persist(cleaned.storageLevel)
+        }
       }
 
   /** Full run: returns per-table row counts (the reference's summary

@@ -255,54 +255,11 @@ object Tables {
     * fixtures where 32-task dispatch is pure overhead. */
   val DocSpreadRowsPerPartition = 160L
 
-  private val docCountMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
-  /** documents row count per (session, dir) — metadata-cheap parquet
-    * footer count, memoized (stopped sessions swept on access). */
-  private def documentsCount(spark: SparkSession, dir: String): Long = {
-    docCountMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(docCountMemo.remove)
-    docCountMemo.getOrElseUpdate((spark, dir), documents(spark, dir).count())
-  }
-
-  /** Dir-level invalidation for BOTH corpus row-count memos (r14
-    * advice gap: [[graft.ops.SimilarityOps.invalidateQuantized]]
-    * clears the embeddings count session-wide, but NOTHING cleared
-    * the documents count) — call after appending to / rewriting a
-    * corpus dir so the next [[documentsSpread]] (and the similarity
-    * family's self-sized exchanges) see the new row count instead of
-    * a stale spread width. Count memos only: the embedding side's
-    * DERIVED caches (quantized substrate, signatures, IVF indexes)
-    * stay owned by `invalidateQuantized`, which a data change also
-    * requires. */
-  def invalidateCorpusCounts(spark: SparkSession, dir: String): Unit = {
-    docCountMemo.remove((spark, dir))
-    graft.ops.SimilarityOps.invalidateEmbeddingsCount(spark, dir)
-  }
-
-  /** FULL corpus-refresh invalidation — the ONE call an append to /
-    * rewrite of a corpus dir requires (r16 verdict #6, closed r18):
-    * the count memos ([[invalidateCorpusCounts]]) plus every
-    * cached-DataFrame substrate family keyed on this corpus — the
-    * co-purchase graph memos (edges/degrees/oriented/LPA:
-    * [[graft.ops.GraphOps.invalidateGraph]]), the shingle/near-dup
-    * sketch substrate ([[graft.ops.DedupOps.invalidateSketches]] —
-    * session-wide by its own contract), and the quantized/IVF family
-    * ([[graft.ops.SimilarityOps.invalidateQuantized]], which also
-    * drops the persisted indexes so they rebuild against the new
-    * corpus fingerprint). Callers touching a single family may keep
-    * calling its own invalidator; a corpus APPEND seam should call
-    * this one so no family is forgotten — the gap r16 flagged was
-    * exactly a seam that refreshed counts but left the graph memos
-    * serving the pre-append edge set. */
-  def invalidateCorpusDerived(spark: SparkSession, dir: String): Unit = {
-    invalidateCorpusCounts(spark, dir)
-    graft.ops.GraphOps.invalidateGraph(spark, dir)
-    graft.ops.DedupOps.invalidateSketches(spark)
-    graft.ops.SimilarityOps.invalidateQuantized(spark)
-  }
+  /** documents row count — a metadata-cheap parquet footer count,
+    * registered per (session, dir) in [[graft.Substrates]]. */
+  private def documentsCount(spark: SparkSession, dir: String): Long =
+    graft.Substrates[Long](spark, dir, "documents.count")(_ => ())(
+      documents(spark, dir).count())
 
   def documentsSpread(spark: SparkSession, dir: String): DataFrame = {
     val width = math.max(1L, math.min(

@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
 /** Shared machinery for write-once persisted BUCKETED catalog tables
   * (the band index in DedupOps, the bucketed lists twin in
   * SimilarityOps): one implementation of the
-  * memo → catalog → on-disk-re-registration → build ladder, so its
+  * registry entry → catalog → on-disk-re-registration → build ladder, so its
   * correctness properties — freshness guarding on EVERY branch,
   * lowercased locations, file cleanup — exist in exactly one place.
   *
@@ -30,23 +30,12 @@ import org.apache.spark.sql.SparkSession
   * returning different rows.
   *
   * == Locking ==
-  * Callers hold their own build lock around [[resolve]]/[[build]]
-  * (double-checked against their session memo) — the ladder itself is
-  * not thread-safe, by design: the lock also covers the caller's other
-  * index mutations.
+  * Callers hold their own build lock around [[resolve]] (inside the
+  * [[graft.Substrates]] key lock of their entry) — the ladder itself
+  * is not thread-safe, by design: the lock also covers the caller's
+  * other index mutations.
   */
 private[graft] object BucketedTables {
-
-  /** Double-checked memo access for cached-DataFrame memos.
-    * `TrieMap.getOrElseUpdate` computes its value OUTSIDE any lock, so
-    * two concurrent first-touch callers would both build and
-    * `.cache()` a plan — and the losing plan's cache entry would never
-    * be unpersisted. Hits stay lock-free; first touch serializes on
-    * the caller's `lock` (the same lock its invalidate path takes, so
-    * a build can't interleave with a teardown). */
-  def memoized[K, V](memo: scala.collection.concurrent.TrieMap[K, V],
-                     key: K, lock: AnyRef)(build: => V): V =
-    memo.get(key).getOrElse(lock.synchronized(memo.getOrElseUpdate(key, build)))
 
   /** Eagerly localCheckpoint several INDEPENDENT small frames as
     * CONCURRENT jobs (guide §2.6 — overlap independent jobs so one
@@ -138,7 +127,7 @@ private[graft] object BucketedTables {
     Files.exists(f) && corpusLine(Files.readString(f)) == fingerprint
   }
 
-  /** The ladder below the session memo: a FRESH catalog table wins; a
+  /** The ladder below the registry entry: a FRESH catalog table wins; a
     * fresh on-disk layout from a previous session re-registers as an
     * external table (`registerDdl`); anything else (absent OR stale
     * either way) rebuilds via `build` (which must pre-drop). Caller

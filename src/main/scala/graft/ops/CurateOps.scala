@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Substrates
 import graft.etl.Tables
 
 /** Training-corpus curation operators — the stages a real LLM data
@@ -100,46 +101,13 @@ object CurateOps {
     * family's shingles deliberately stay at 3. */
   val DecontaminationShingleN = 8
 
-  /** Train/eval DECONTAMINATION — the step an LLM data pipeline runs
-    * before training: flag every train-split document that shares
-    * n-gram content with the held-out eval (test) split, so benchmark
-    * answers can't leak into the training corpus.
-    *
-    * Mechanism: explode each document's distinct n-token shingles
-    * (the near-dup family's native `token_shingles` primitive at
-    * [[DecontaminationShingleN]] — wider than dedup's 3-gram, see the
-    * constant's scaladoc), split with the deterministic md5 split, and
-    * count, per train document, the distinct eval documents and
-    * distinct shingles it collides with.
-    *
-    * Scale shape (100 TB): the eval side is a FIXED-SIZE benchmark
-    * suite — thousands of documents, not a fraction of the corpus — so
-    * its shingle set is broadcast and the train side never shuffles:
-    * one narrow pass over the corpus + a broadcast-hash semi-count.
-    * (At test SF the "eval set" is the ~10% test split; the broadcast
-    * stays correct, just less lopsided.) Output is every train doc
-    * with its contamination evidence, zero-filled via left join.
-    */
-  private val shinglesMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), DataFrame]
-  private val shinglesMemoLock = new Object
-
-  /** Drop `spark`'s memoized wide-window shingle tables — invoked by
-    * [[DedupOps.invalidateSketches]] so one corpus-refresh call clears
-    * every shingle substrate regardless of window width. */
-  private[ops] def invalidateShingles(spark: SparkSession): Unit =
-    shinglesMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-      shinglesMemo.remove(k).foreach(_.unpersist(false))
-    }
-
   /** The corpus shingle table at window `n`: the dedup family's
     * memoized+cached 3-gram table when n == 3 (one md5 pass, shared
     * session-wide), else a session-memoized `token_shingles(text, n)`
     * pass of its own — [[decontaminate]] shingles BOTH join sides and
     * runs inside the gate query, `runCurationPipeline`, AND
     * `curationFunnel`, so an uncached wide-window pass would re-md5
-    * the corpus on every call (caught in round-8 review). Same
-    * stopped-session eviction as the dedup memos.
+    * the corpus on every call (caught in round-8 review).
     *
     * The wide-window (n != 3) substrate carries shingles as
     * `xxhash64` INT64 keys, not strings (round-12: the x100 decade
@@ -162,11 +130,7 @@ object CurateOps {
     if (n == 3) DedupOps.sharedShingles(spark, dir)
     else {
       graft.functions.ShingleExpressions.register(spark)
-      shinglesMemo.keysIterator
-        .filter { case (s, _, _) => s.sparkContext.isStopped }
-        .foreach(shinglesMemo.remove)
-      graft.ops.BucketedTables.memoized(
-        shinglesMemo, (spark, dir, n), shinglesMemoLock)(
+        Substrates.frame(spark, dir, "curate.shingles", n)(
         Tables.documents(spark, dir)
           .select(col("doc_id"), expr(shingleKeysSql(n)).as("Sh"))
           .cache())
@@ -195,6 +159,26 @@ object CurateOps {
       .select(explode(col("Sh")).as("Shingle"), col("doc_id").as("EvalId"))
       .distinct()
 
+  /** Train/eval DECONTAMINATION — the step an LLM data pipeline runs
+    * before training: flag every train-split document that shares
+    * n-gram content with the held-out eval (test) split, so benchmark
+    * answers can't leak into the training corpus.
+    *
+    * Mechanism: explode each document's distinct n-token shingles
+    * (the near-dup family's native `token_shingles` primitive at
+    * [[DecontaminationShingleN]] — wider than dedup's 3-gram, see the
+    * constant's scaladoc), split with the deterministic md5 split, and
+    * count, per train document, the distinct eval documents and
+    * distinct shingles it collides with.
+    *
+    * Scale shape (100 TB): the eval side is a FIXED-SIZE benchmark
+    * suite — thousands of documents, not a fraction of the corpus — so
+    * its shingle set is broadcast and the train side never shuffles:
+    * one narrow pass over the corpus + a broadcast-hash semi-count.
+    * (At test SF the "eval set" is the ~10% test split; the broadcast
+    * stays correct, just less lopsided.) Output is every train doc
+    * with its contamination evidence, zero-filled via left join.
+    */
   def decontaminate(spark: SparkSession, dir: String,
                     n: Int = DecontaminationShingleN): DataFrame = {
     val sh = shinglesAt(spark, dir, n)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Substrates
 import graft.etl.Tables
 
 /** Deduplication operators over `documents`: exact, MinHash+LSH,
@@ -43,14 +44,6 @@ object DedupOps {
       .select(col("doc_id"), expr("token_shingles(text)").as("Sh"))
   }
 
-  private val bandsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Guards first-touch builds of the cached-DataFrame memos
-    * ([[bandsMemo]]/[[sourceShinglesMemo]]/[[chunksMemo]]) and their
-    * invalidation — see BucketedTables.memoized for the race. */
-  private val cacheMemoLock = new Object
-
   /** doc_id, Sh, B1..B4 LSH band values (native MinHash-8 → 4 bands).
     *
     * Memoized + `.cache()`d per (session, dir) — the sketch table is
@@ -58,19 +51,15 @@ object DedupOps {
     * near-dup candidate join, shingle verify lookups, clustering
     * edges), so one deliberate long-lived cache replaces per-call
     * orphan caches (same pattern as SimilarityOps.quantized);
-    * [[invalidateSketches]] releases it explicitly. */
-  private def docBands(spark: SparkSession, dir: String): DataFrame = {
-    bandsMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(bandsMemo.remove)
-    BucketedTables.memoized(bandsMemo, (spark, dir), cacheMemoLock) {
+    * [[Substrates.invalidate]] releases it explicitly. */
+  private def docBands(spark: SparkSession, dir: String): DataFrame =
+    Substrates.frame(spark, dir, "dedup.docBands") {
       val withBands = docShingles(spark, dir)
         .withColumn("Bands", expr("minhash_bands(Sh)"))
       (1 to NumBands).foldLeft(withBands) { (df, b) =>
         df.withColumn(s"B$b", element_at(col("Bands"), b))
       }.drop("Bands").cache()
     }
-  }
 
   /** The cached per-doc shingle sets, for operators OUTSIDE the dedup
     * family that consume the same substrate (CurateOps.decontaminate):
@@ -80,29 +69,19 @@ object DedupOps {
   def sharedShingles(spark: SparkSession, dir: String): DataFrame =
     docBands(spark, dir).select(col("doc_id"), col("Sh"))
 
-  private val sourceShinglesMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** DISTINCT (source, Shingle) pairs — the substrate of the
     * corpus-vs-corpus cards (TextOps.sourceSimilarity), which consumes
     * it THREE times per invocation (signature aggregate + both sides
     * of the exact-intersection self-join). Same owner/invalidate
     * pattern as [[docBands]]; derives from the shared shingle cache,
     * so the md5 sketch pass itself is never repeated. */
-  private[ops] def sourceShingles(spark: SparkSession, dir: String): DataFrame = {
-    sourceShinglesMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(sourceShinglesMemo.remove)
-    BucketedTables.memoized(sourceShinglesMemo, (spark, dir), cacheMemoLock)(
+  private[ops] def sourceShingles(spark: SparkSession, dir: String): DataFrame =
+    Substrates.frame(spark, dir, "dedup.sourceShingles")(
       sharedShingles(spark, dir)
         .join(Tables.documents(spark, dir).select(col("doc_id"), col("source")), "doc_id")
         .select(col("source"), explode(col("Sh")).as("Shingle"))
         .distinct()
         .cache())
-  }
-
-  private val sourceHashesMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
   /** DISTINCT (source, V) 48-bit shingle-hash pairs — the KMV overlap
     * family's substrate (r17): both gate queries (`sketch_source_
@@ -113,20 +92,13 @@ object DedupOps {
     * Hash definition stays the single [[graft.ops.TextOps
     * .shingleHashCol]] site. Same owner/invalidate pattern as
     * [[sourceShingles]], which it derives from. */
-  private[ops] def sourceShingleHashes(spark: SparkSession, dir: String): DataFrame = {
-    sourceHashesMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(sourceHashesMemo.remove)
-    BucketedTables.memoized(sourceHashesMemo, (spark, dir), cacheMemoLock)(
+  private[ops] def sourceShingleHashes(spark: SparkSession, dir: String): DataFrame =
+    Substrates.frame(spark, dir, "dedup.sourceShingleHashes")(
       sourceShingles(spark, dir)
         .select(col("source"),
           graft.ops.TextOps.shingleHashCol(col("Shingle")).as("V"))
         .distinct()
         .cache())
-  }
-
-  private val prefixRankMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
   /** Exploded shingles with their global document frequency and the
     * per-doc (Df asc, Shingle asc) rank — the THRESHOLD-INDEPENDENT
@@ -137,11 +109,8 @@ object DedupOps {
     * bound, and [[dedupReport]] re-ran both kernels on top. One row
     * per (doc, shingle): (Shingle, doc_id, N = |doc's shingle set|,
     * Df, Pos). Same owner/invalidate pattern as [[sourceShingles]]. */
-  private[ops] def prefixRankedShingles(spark: SparkSession, dir: String): DataFrame = {
-    prefixRankMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(prefixRankMemo.remove)
-    BucketedTables.memoized(prefixRankMemo, (spark, dir), cacheMemoLock) {
+  private[ops] def prefixRankedShingles(spark: SparkSession, dir: String): DataFrame =
+    Substrates.frame(spark, dir, "dedup.prefixRankedShingles") {
       val exploded = sharedShingles(spark, dir)
         .withColumn("N", size(col("Sh"))).filter(col("N") > 0)
         .select(col("doc_id"), col("N"), explode(col("Sh")).as("Shingle"))
@@ -151,10 +120,6 @@ object DedupOps {
           Window.partitionBy(col("doc_id")).orderBy(col("Df"), col("Shingle"))))
         .cache()
     }
-  }
-
-  private val chunksMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
   /** doc_id + DISTINCT content-defined chunk md5s + total/distinct
     * counts (native one-pass `rolling_chunks`; parameters + the SQL
@@ -164,10 +129,7 @@ object DedupOps {
     * hash is the most codepoint-heavy sketch pass in the engine. */
   private[graft] def docChunks(spark: SparkSession, dir: String): DataFrame = {
     graft.functions.TextExpressions.register(spark)
-    chunksMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(chunksMemo.remove)
-    BucketedTables.memoized(chunksMemo, (spark, dir), cacheMemoLock)(
+    Substrates.frame(spark, dir, "dedup.docChunks")(
       Tables.documentsSpread(spark, dir)
         .withColumn("Ch", expr("rolling_chunks(text)"))
         .select(col("doc_id"),
@@ -176,9 +138,6 @@ object DedupOps {
         .withColumn("NDistinctChunks", size(col("Chs")))
         .cache())
   }
-
-  private val cooledChunksMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), DataFrame]
 
   /** The hot-capped exploded (doc_id, H, ND) chunk listing — one row
     * per below-cap distinct chunk per doc, carrying the doc's
@@ -194,13 +153,10 @@ object DedupOps {
     * the denominators still count the SAME below-cap universe as the
     * numerator so the cap bounds join volume without diluting the
     * containment fraction for boilerplate-heavy documents. Released by
-    * [[invalidateSketches]]. */
+    * [[Substrates.invalidate]]. */
   private[ops] def cooledChunks(spark: SparkSession, dir: String,
-                                cap: Int = graft.ops.TextOps.HotChunkMaxOccupancy): DataFrame = {
-    cooledChunksMemo.keysIterator
-      .filter { case (s, _, _) => s.sparkContext.isStopped }
-      .foreach(cooledChunksMemo.remove)
-    BucketedTables.memoized(cooledChunksMemo, (spark, dir, cap), cacheMemoLock) {
+                                cap: Int = graft.ops.TextOps.HotChunkMaxOccupancy): DataFrame =
+    Substrates.frame(spark, dir, "dedup.cooledChunks", cap) {
       val exploded = docChunks(spark, dir)
         .select(col("doc_id"), explode(col("Chs")).as("H"))
       val cooled = exploded.join(
@@ -211,57 +167,6 @@ object DedupOps {
         cooled.groupBy(col("doc_id")).agg(count(lit(1)).as("ND")), "doc_id")
         .cache()
     }
-  }
-
-  /** Drop and unpersist every memoized sketch table for `spark`, AND
-    * drop its persisted band-index tables (a stale on-disk index
-    * against a refreshed corpus would silently return mixed-version
-    * matches — the managed-table DROP removes the files too). */
-  def invalidateSketches(spark: SparkSession): Unit = {
-    // the curation family's wide-window shingle memo rides the same
-    // corpus — one refresh call must clear every shingle substrate
-    graft.ops.CurateOps.invalidateShingles(spark)
-    // same lock as the memo first-touch builds, so a teardown cannot
-    // interleave with a concurrent build-if-absent of the same entry
-    cacheMemoLock.synchronized {
-      bandsMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        bandsMemo.remove(k).foreach(_.unpersist(false))
-      }
-      chunksMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        chunksMemo.remove(k).foreach(_.unpersist(false))
-      }
-      cooledChunksMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        cooledChunksMemo.remove(k).foreach(_.unpersist(false))
-      }
-      sourceShinglesMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        sourceShinglesMemo.remove(k).foreach(_.unpersist(false))
-      }
-      sourceHashesMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        sourceHashesMemo.remove(k).foreach(_.unpersist(false))
-      }
-      prefixRankMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        prefixRankMemo.remove(k).foreach(_.unpersist(false))
-      }
-      componentLabelsMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        componentLabelsMemo.remove(k).foreach(_.unpersist(false))
-      }
-      cooledBandsMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        cooledBandsMemo.remove(k).foreach(_.unpersist(false))
-      }
-      verifiedPairsMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        verifiedPairsMemo.remove(k).foreach(_.unpersist(false))
-      }
-    }
-    // drop under the build lock: an invalidate racing a concurrent
-    // build-if-absent must not delete a half-written index
-    bandBuildLock.synchronized {
-      bandIndexMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        // managed tables drop files with the table; EXTERNAL
-        // re-registrations do not — dropWithFiles removes both
-        bandIndexMemo.remove(k).foreach(BucketedTables.dropWithFiles(spark, _))
-      }
-    }
-  }
 
   /** Exact dedup via order-insensitive content fingerprint: canonical
     * id = min doc_id per fingerprint group. */
@@ -492,22 +397,15 @@ object DedupOps {
         .select(col("band_id"), col("band_val")),
       Seq("band_id", "band_val"))
 
-  private val cooledBandsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** The hot-capped (doc_id, band_id, band_val) listing, memoized +
     * `.cache()`d per (session, dir) — the shared blocking substrate of
     * the self-join dedup family (Jaccard, edit-distance, components
     * edges). Tiny (≤ 4 rows per doc) and consumed repeatedly, so the
     * cap's occupancy join runs once per corpus, not once per query
-    * execution. Released by [[invalidateSketches]]. */
-  private def cooledBands(spark: SparkSession, dir: String): DataFrame = {
-    cooledBandsMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(cooledBandsMemo.remove)
-    BucketedTables.memoized(cooledBandsMemo, (spark, dir), cacheMemoLock)(
+    * execution. Released by [[Substrates.invalidate]]. */
+  private def cooledBands(spark: SparkSession, dir: String): DataFrame =
+    Substrates.frame(spark, dir, "dedup.cooledBands")(
       coolBands(explodedBands(docBands(spark, dir))).cache())
-  }
 
   /** LSH candidate pairs (band agreement, D1 < D2) — the blocking
     * stage shared by the Jaccard verify and the edit-distance verify.
@@ -532,21 +430,15 @@ object DedupOps {
       .select(col("D1"), col("D2")).distinct()
   }
 
-  private val verifiedPairsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** Memoized + `.cache()`d like [[cooledBands]]: the verified pair
     * set is a corpus-level artifact consumed by three queries
     * (near-dup presentation, edit-distance blocking comparison,
     * components edges) and re-running the candidate join + Jaccard
     * verify per execution repriced every one of them. Row volume is
     * the near-dup pair count — orders of magnitude below the corpus.
-    * Released by [[invalidateSketches]]. */
-  private def verifiedPairs(spark: SparkSession, dir: String): DataFrame = {
-    verifiedPairsMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(verifiedPairsMemo.remove)
-    BucketedTables.memoized(verifiedPairsMemo, (spark, dir), cacheMemoLock) {
+    * Released by [[Substrates.invalidate]]. */
+  private def verifiedPairs(spark: SparkSession, dir: String): DataFrame =
+    Substrates.frame(spark, dir, "dedup.verifiedPairs") {
       // One sketch pass (memoized cache in docBands): the band self-join
       // and both shingle lookups reuse it instead of recomputing 8
       // MinHash functions per reference (3× the dominant cost otherwise).
@@ -559,7 +451,6 @@ object DedupOps {
         .select(col("D1"), col("D2"), col("NInter"), col("NUnion"), col("Jaccard"))
         .cache()
     }
-  }
 
   /** Minimum normalized edit similarity (1 − dist/maxlen) for a
     * verified pair: the test corpus is bimodal (true near-dups ≥ 0.97,
@@ -693,13 +584,12 @@ object DedupOps {
         col("band_id"), col("band_val"), col("Sh").as("ShC"))
   }
 
-  private val bandIndexMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
-  /** Serializes band-index build/register/drop — same reasoning as
-    * SimilarityOps.ivfBuildLock: the batch query, the streaming twin,
-    * and the concurrent Verify harness can all first-touch the index,
-    * and TrieMap.getOrElseUpdate computes outside any lock. */
+  /** Serializes band-index build/register/drop/append/compact — same
+    * reasoning as SimilarityOps.ivfBuildLock: the batch query, the
+    * streaming twin, and the concurrent Verify harness can all touch
+    * the index at once. Taken inside the registry's key lock, never
+    * around a registry call that may build or release an index entry
+    * (see [[Substrates]]). */
   private val bandBuildLock = new Object
 
   /** Buckets for the persisted band index. */
@@ -744,7 +634,7 @@ object DedupOps {
     * default in-memory catalog forgets tables across sessions while
     * the warehouse directory persists, and `saveAsTable` refuses a
     * dangling location. */
-  def buildBandIndex(spark: SparkSession, dir: String): String = bandBuildLock.synchronized {
+  private def buildBandIndex(spark: SparkSession, dir: String): String = bandBuildLock.synchronized {
     val name = bandIndexName(dir)
     BucketedTables.dropWithFiles(spark, name)
     corpusBandIndex(spark, dir)
@@ -753,11 +643,10 @@ object DedupOps {
       .sortBy("band_id", "band_val")
       .saveAsTable(name)
     BucketedTables.writeFingerprint(spark, name, corpusFingerprint(dir))
-    bandIndexMemo.put((spark, dir), name)
     name
   }
 
-  /** Build-if-absent: session memo → catalog table → files already on
+  /** Build-if-absent: registry entry → catalog table → files already on
     * disk from a PREVIOUS session (re-registered as an external
     * bucketed table — the in-memory catalog can't remember it, but the
     * bucketed layout is still there) → build, via the shared
@@ -765,15 +654,17 @@ object DedupOps {
     * `_corpus_fingerprint` check — catalog hit included, since a
     * sibling session sharing the catalog could otherwise adopt a table
     * built from a corpus refreshed since; a stale index is rebuilt,
-    * never adopted. The ladder runs under [[bandBuildLock]],
-    * double-checked against the memo. Same-session corpus mutation
-    * still requires [[invalidateSketches]]. */
-  def bandIndexTable(spark: SparkSession, dir: String): String = {
-    bandIndexMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(bandIndexMemo.remove)
-    bandIndexMemo.getOrElse((spark, dir), bandBuildLock.synchronized {
-      bandIndexMemo.getOrElseUpdate((spark, dir), {
+    * never adopted. The ladder runs under [[bandBuildLock]] inside
+    * the registry's key lock. The entry's release drops the table AND
+    * its files (managed tables drop files with the table; EXTERNAL
+    * re-registrations do not); the name is a function of the dir, so
+    * the entry stays valid across appends and compactions.
+    * Same-session corpus mutation still requires
+    * [[Substrates.invalidate]]. */
+  def bandIndexTable(spark: SparkSession, dir: String): String =
+    Substrates[String](spark, dir, "dedup.bandIndex")(n =>
+      bandBuildLock.synchronized(BucketedTables.dropWithFiles(spark, n))) {
+      bandBuildLock.synchronized {
         val name = bandIndexName(dir)
         val loc = BucketedTables.location(spark, name)
         BucketedTables.resolve(spark, name,
@@ -785,9 +676,8 @@ object DedupOps {
                |LOCATION '${loc.toUri}'""".stripMargin,
           fingerprint = corpusFingerprint(dir),
           build = () => buildBandIndex(spark, dir))
-      })
-    })
-  }
+      }
+    }
 
   /** Compact the band index after every this-many appended batches
     * (each append adds a file generation per occupied bucket; the
@@ -881,7 +771,6 @@ object DedupOps {
     BucketedTables.writeFingerprint(spark, name, corpusFingerprint(dir) +
       (if (batches > 0) s"\nbatches:$batches" else ""))
     BucketedTables.deleteRecursively(stage)
-    bandIndexMemo.put((spark, dir), name)
     name
   }
 
@@ -1068,8 +957,6 @@ object DedupOps {
     * id. Clustering itself is [[componentsOf]] (convergence-checked
     * min-label propagation); the oracle is DuckDB's recursive-CTE TRUE
     * transitive closure, so any under-merge is a hash mismatch. */
-  private val componentLabelsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
 
   /** The corpus near-dup component labeling — (doc_id, ClusterId),
     * node-sized — memoized + `.cache()`d per (session, dir) like the
@@ -1079,16 +966,12 @@ object DedupOps {
     * curationFlags), and each invocation re-ran the convergence loop
     * over the same memoized verified pairs. [[componentsOf]] itself
     * stays memo-free — probes and other domains measure the real
-    * loop. Evicted by [[invalidateSketches]]. */
-  private[graft] def componentLabelsFor(spark: SparkSession, dir: String): DataFrame = {
-    componentLabelsMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(componentLabelsMemo.remove)
-    BucketedTables.memoized(componentLabelsMemo, (spark, dir), cacheMemoLock) {
+    * loop. Evicted by [[Substrates.invalidate]]. */
+  private[graft] def componentLabelsFor(spark: SparkSession, dir: String): DataFrame =
+    Substrates.frame(spark, dir, "dedup.componentLabels") {
       componentsOf(verifiedPairs(spark, dir).select(col("D1"), col("D2")),
         Tables.documents(spark, dir).select(col("doc_id"))).cache()
     }
-  }
 
   def components(spark: SparkSession, dir: String): DataFrame =
     componentLabelsFor(spark, dir)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Substrates
 import graft.etl.Tables
 
 /** Graph analytics over relationally-derived graphs — the family next
@@ -49,10 +50,6 @@ object GraphOps {
     * pair expansion (quadratic hot-key guard; TPC-H max is 7). */
   val MaxOrderParts = 50
 
-  private val edgesMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val edgesLock = new Object
-
   /** Per-round rank/label lookup join — deliberately UNHINTED (r17
     * measured): a `shuffle_hash` hint on the node-sized side looked
     * right on paper (never sort the m-row side), but at gate scale it
@@ -85,11 +82,8 @@ object GraphOps {
     * production it is a materialized table the iteration never
     * rebuilds (the GraphX/Pregel shape). The uncached form re-derived
     * the four edge-build stages under every materialization. */
-  def coPurchaseEdges(spark: SparkSession, dir: String): DataFrame = {
-    edgesMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(edgesMemo.remove)
-    graft.ops.BucketedTables.memoized(edgesMemo, (spark, dir), edgesLock) {
+  def coPurchaseEdges(spark: SparkSession, dir: String): DataFrame =
+    Substrates.frame(spark, dir, "graph.coPurchaseEdges") {
       Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("OrderKey"), col("l_partkey").as("Part"))
         .distinct()
@@ -114,31 +108,22 @@ object GraphOps {
         // consecutive shuffle on the same key
         .cache()
     }
-  }
 
   /** (Src, OutDeg) — one row per node of a degree-carrying edge
     * substrate. Every kernel in this family starts from it. */
   private def degreesOf(edges: DataFrame): DataFrame =
     edges.select(col("Src"), col("OutDeg")).distinct()
 
-  private val degMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val degLock = new Object
-
   /** The corpus node/degree table, memoized + `.cache()`d per
     * (session, dir) beside [[coPurchaseEdges]] (r17): all eight gate
     * graph queries re-derived it per invocation as a distinct over the
     * m-row cached substrate (~0.3-0.8 s each at sf0.1). Node-sized
-    * cache; evicted by [[invalidateGraph]]; the `*Of` kernel forms
+    * cache; evicted by [[Substrates.invalidate]]; the `*Of` kernel forms
     * still derive it fresh so probes measure the real cost. */
-  private[graft] def degreesFor(spark: SparkSession, dir: String): DataFrame = {
-    degMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(degMemo.remove)
-    graft.ops.BucketedTables.memoized(degMemo, (spark, dir), degLock) {
+  private[graft] def degreesFor(spark: SparkSession, dir: String): DataFrame =
+    Substrates.frame(spark, dir, "graph.degrees") {
       degreesOf(coPurchaseEdges(spark, dir)).cache()
     }
-  }
 
   /** Pairs reported by [[basketPairLift]]. */
   val BasketTopK = 50
@@ -282,10 +267,14 @@ object GraphOps {
 
   /** [[triangles]] over any degree-carrying edge substrate (see
     * [[pagerankOf]]) — memo-free: probes measure the full build. */
-  def trianglesOf(e: DataFrame): DataFrame = {
+  def trianglesOf(e: DataFrame): DataFrame = trianglesPinned(e)._1
+
+  /** [[trianglesOf]] plus the oriented pin it reads, for a caller that
+    * releases the pin itself (GraphScaleProbe). */
+  private[graft] def trianglesPinned(e: DataFrame): (DataFrame, DataFrame) = {
     val deg = e.select(col("Src").as("N"), col("OutDeg").as("Deg")).distinct()
     val (o, bloomBytes) = orientedWithBloom(e, deg)
-    trianglesFrom(deg, o, bloomBytes)
+    (trianglesFrom(deg, o, bloomBytes), o)
   }
 
   /** The degree-ORIENTED edge set (lower-(deg, id) → higher-(deg, id)
@@ -304,16 +293,28 @@ object GraphOps {
     * wedge enumeration — the O(m^{3/2}) per-row-expensive pass —
     * cluster-wide where AQE's byte-sized coalescing collapsed a
     * ~10 MB input to 8 tasks and serialized 40-60 s of enumeration
-    * CPU (JobProfileProbe, sf0.1). The cache is released by
-    * [[invalidateGraph]] (memoized path) / [[unpersistOrientedOf]]
-    * (probe path); entries are keyed by canonicalized plan, so
-    * repeated [[trianglesOf]] calls over one substrate share one
+    * CPU (JobProfileProbe, sf0.1). The returned frame holds the
+    * cache: the memoized path's registry entry releases it
+    * ([[Substrates.invalidate]]), a probe unpersists it itself
+    * ([[trianglesPinned]]). Entries are keyed by canonicalized plan,
+    * so repeated [[trianglesOf]] calls over one substrate share one
     * entry instead of leaking one per call. */
   private[graft] def orientedWithBloom(e: DataFrame,
                                        deg: DataFrame): (DataFrame, Array[Byte]) = {
     val spark = e.sparkSession
     graft.functions.SketchAggregates.register(spark)
-    val o = orientedPlan(e, deg).persist()
+    // edge rows carrying BOTH endpoint degrees (one node-sized join —
+    // unhinted, the joinEdgesOnSrc rationale: AQE broadcasts deg)
+    val withDd = e
+      .join(deg.select(col("N").as("DstN"), col("Deg").as("DegD")),
+        col("Dst") === col("DstN"))
+      .select(col("Src"), col("Dst"), col("OutDeg").as("DegS"), col("DegD"))
+    val width = math.max(spark.sessionState.conf.numShufflePartitions,
+      spark.sparkContext.defaultParallelism)
+    val o = withDd.filter(col("DegS") < col("DegD") ||
+        (col("DegS") === col("DegD") && col("Src") < col("Dst")))
+      .repartition(width, col("Src"))
+      .persist()
     val edgeKeys = o.count() // materializes the pin
     val log2Bits = math.min(26, math.max(16,
       64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, edgeKeys * 10L - 1L))))
@@ -323,58 +324,20 @@ object GraphOps {
     (o, bloomBytes)
   }
 
-  /** The oriented edge set's LAZY plan — shared by [[orientedWithBloom]]
-    * (which pins it) and [[unpersistOrientedOf]] (which addresses the
-    * pin by canonical plan equality to release it). */
-  private def orientedPlan(e: DataFrame, deg: DataFrame): DataFrame = {
-    // edge rows carrying BOTH endpoint degrees (one node-sized join —
-    // unhinted, the joinEdgesOnSrc rationale: AQE broadcasts deg)
-    val spark = e.sparkSession
-    val withDd = e
-      .join(deg.select(col("N").as("DstN"), col("Deg").as("DegD")),
-        col("Dst") === col("DstN"))
-      .select(col("Src"), col("Dst"), col("OutDeg").as("DegS"), col("DegD"))
-    val width = math.max(spark.sessionState.conf.numShufflePartitions,
-      spark.sparkContext.defaultParallelism)
-    withDd.filter(col("DegS") < col("DegD") ||
-        (col("DegS") === col("DegD") && col("Src") < col("Dst")))
-      .repartition(width, col("Src"))
-  }
-
-  /** Release the oriented-set cache [[trianglesOf]] pinned over `e`
-    * (probe hygiene — GraphScaleProbe runs multi-hundred-MB corpora
-    * back to back; the memoized gate path releases via
-    * [[invalidateGraph]] instead). Safe no-op when nothing is
-    * cached. */
-  def unpersistOrientedOf(e: DataFrame): Unit = {
-    // EXACTLY trianglesOf's deg construction: the cache is addressed
-    // by canonical plan equality, so the lazy rebuild must mirror it.
-    val deg = e.select(col("Src").as("N"), col("OutDeg").as("Deg")).distinct()
-    orientedPlan(e, deg).unpersist(): Unit
-  }
-
-  private val orientedMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, Array[Byte])]
-  private val orientedLock = new Object
-
   /** [[orientedWithBloom]] over the corpus co-purchase substrate,
     * memoized per (session, dir) like [[lpaLabelsFor]] (r16 verdict
     * task #2): every `graph_triangles` invocation re-ran the oriented
     * checkpoint build, its count, and the bloom aggregate (~3 s of the
     * gate wall at sf0.1) even though the edge substrate itself was
-    * memoized. Evicted by [[invalidateGraph]]; the memo-free
+    * memoized. Released by [[Substrates.invalidate]]; the memo-free
     * [[trianglesOf]] path is untouched, so probes still measure the
     * full build. */
   private[graft] def orientedBloomFor(spark: SparkSession,
-                                      dir: String): (DataFrame, Array[Byte]) = {
-    orientedMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(orientedMemo.remove)
-    graft.ops.BucketedTables.memoized(orientedMemo, (spark, dir), orientedLock) {
+                                      dir: String): (DataFrame, Array[Byte]) =
+    Substrates[(DataFrame, Array[Byte])](spark, dir, "graph.orientedBloom")(
+      _._1.unpersist(false))(
       orientedWithBloom(coPurchaseEdges(spark, dir), degreesFor(spark, dir)
-        .select(col("Src").as("N"), col("OutDeg").as("Deg")))
-    }
-  }
+        .select(col("Src").as("N"), col("OutDeg").as("Deg"))))
 
   /** The wedge-enumerate / bloom-prune / exact-close kernel over the
     * cache-pinned oriented edge set (see [[orientedWithBloom]]). The
@@ -564,10 +527,6 @@ object GraphOps {
       .orderBy(col("PartKey"))
   }
 
-  private val lpaMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val lpaLock = new Object
-
   /** The corpus LPA labeling, memoized + cached per (session, dir)
     * like the [[coPurchaseEdges]] substrate itself: the labeling is a
     * SHARED substrate — [[labelPropagation]] presents it and
@@ -576,38 +535,10 @@ object GraphOps {
     * computed (measured 3.35 s of the card's 3.9 s board price).
     * Node-sized cache (one (Node, Lbl) row per node). The `*Of`
     * substrate forms stay memo-free — probes measure the real loop. */
-  private[graft] def lpaLabelsFor(spark: SparkSession, dir: String): DataFrame = {
-    lpaMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(lpaMemo.remove)
-    graft.ops.BucketedTables.memoized(lpaMemo, (spark, dir), lpaLock) {
+  private[graft] def lpaLabelsFor(spark: SparkSession, dir: String): DataFrame =
+    Substrates.frame(spark, dir, "graph.lpaLabels") {
       lpaLabels(coPurchaseEdges(spark, dir)).cache()
     }
-  }
-
-  /** Dir-level eviction of the graph family's derived caches — the
-    * edge substrate and the memoized LPA labeling — the
-    * [[graft.etl.Tables.invalidateCorpusCounts]] discipline applied
-    * to this family (that hook is counts-only by design; these are
-    * the cached-DataFrame memos a corpus APPEND would leave stale).
-    * Unpersists before dropping so executor memory releases
-    * immediately; the next call rebuilds from the current files. */
-  def invalidateGraph(spark: SparkSession, dir: String): Unit = {
-    lpaLock.synchronized {
-      lpaMemo.remove((spark, dir)).foreach(_.unpersist()): Unit
-    }
-    orientedLock.synchronized {
-      // the oriented pin is a plan-visible cache (r18): unpersist
-      // before dropping so the executor memory releases immediately
-      orientedMemo.remove((spark, dir)).foreach(_._1.unpersist()): Unit
-    }
-    degLock.synchronized {
-      degMemo.remove((spark, dir)).foreach(_.unpersist()): Unit
-    }
-    edgesLock.synchronized {
-      edgesMemo.remove((spark, dir)).foreach(_.unpersist()): Unit
-    }
-  }
 
   /** k-core threshold as a density ratio: K = (7 · ⌊Σdeg/n⌋) div 10 —
     * 0.7× the average degree, all integer divisions, so K self-scales
@@ -825,9 +756,9 @@ object GraphOps {
     * substrate instance as last call. Keyed WEAKLY on the analyzed
     * logical plan object — the memoized substrates hand every caller
     * one stable plan instance, so a hit is exact; a fresh probe frame
-    * (new plan object) always re-checks, and [[invalidateGraph]]
-    * dropping the memo drops the only strong reference so the entry
-    * ages out with it. */
+    * (new plan object) always re-checks, and [[Substrates.invalidate]]
+    * dropping the entry drops the only strong reference so the entry
+    * here ages out with it. */
   private val symCheckPassed = java.util.Collections.synchronizedMap(
     new java.util.WeakHashMap[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       java.lang.Boolean]())

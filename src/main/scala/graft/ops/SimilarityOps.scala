@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Substrates
 import graft.etl.Tables
 import graft.functions.VectorExpressions
 
@@ -116,27 +117,13 @@ object SimilarityOps {
     math.max(1L, math.min(spark.sparkContext.defaultParallelism.toLong,
       (rows + SpreadRowsPerPartition - 1L) / SpreadRowsPerPartition)).toInt
 
-  private val embCountMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Long]
-
-  /** Corpus row count, memoized per (session, dir) — a metadata-cheap
-    * parquet count (footer row counts, no column IO) that sizes the
-    * pinned spread and the candidate-join exchanges below. Released
-    * with the substrate caches by [[invalidateQuantized]]. */
-  private[graft] def embeddingsCount(spark: SparkSession, dir: String): Long = {
-    embCountMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(embCountMemo.remove)
-    embCountMemo.getOrElseUpdate((spark, dir),
+  /** Corpus row count, registered per (session, dir) — a
+    * metadata-cheap parquet count (footer row counts, no column IO)
+    * that sizes the pinned spread and the candidate-join exchanges
+    * below. */
+  private[graft] def embeddingsCount(spark: SparkSession, dir: String): Long =
+    Substrates[Long](spark, dir, "embeddings.count")(_ => ())(
       Tables.embeddings(spark, dir).count())
-  }
-
-  /** Dir-level eviction of the embeddings row-count memo — the
-    * [[graft.etl.Tables.invalidateCorpusCounts]] hook. Counts only;
-    * the derived caches keyed on the same (session, dir) belong to
-    * [[invalidateQuantized]]. */
-  private[graft] def invalidateEmbeddingsCount(spark: SparkSession, dir: String): Unit =
-    cacheMemoLock.synchronized { embCountMemo.remove((spark, dir)): Unit }
 
   /** Per-task candidate-row cap for the family's self-sized exchanges
     * — the round-14 promotion of the shuffle-sizing rule from operator
@@ -203,28 +190,17 @@ object SimilarityOps {
     math.max(session, math.min(byCand, byInput))
   }
 
-  private val quantMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Guards first-touch builds of the cached-DataFrame memos
-    * ([[quantMemo]]/[[sigMemo]]) and their invalidation — see
-    * BucketedTables.memoized for why bare getOrElseUpdate races. */
-  private val cacheMemoLock = new Object
-
   /** vec_id, label, quantized int vector Q, exact squared norm NormSq.
     *
-    * Memoized + `.cache()`d per (session, dir) — the quantized corpus
+    * Registered + `.cache()`d per (session, dir) — the quantized corpus
     * is the shared substrate of every similarity query (topk's scan,
     * LSH's sketch input, IVF's k-means/lists/probes), so one
     * deliberate long-lived cache replaces the per-call orphan cache
     * round 2 flagged (cached inside one query, never unpersisted,
-    * unreachable afterwards). [[invalidateQuantized]] releases it
-    * explicitly; entries for stopped sessions are swept on access. */
+    * unreachable afterwards). [[Substrates.invalidate]] releases it
+    * explicitly. */
   private def quantized(spark: SparkSession, dir: String): DataFrame = {
     VectorExpressions.register(spark)
-    quantMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(quantMemo.remove)
     // PINNED spread (the Tables.documentsSpread rule, one substrate
     // over): the cached table's partition count is what every
     // downstream MAP-SIDE pass runs at — Lloyd assignment dots,
@@ -244,7 +220,7 @@ object SimilarityOps {
     // pay 32-task dispatch per stage; the handful of gate queries
     // whose per-row work is orders above the family norm re-spread
     // themselves ([[computeSpread]]).
-    BucketedTables.memoized(quantMemo, (spark, dir), cacheMemoLock)(
+    Substrates.frame(spark, dir, "similarity.quantized")(
       Tables.embeddings(spark, dir)
         .repartition(spreadPartitions(spark, embeddingsCount(spark, dir)),
           col("vec_id"))
@@ -272,44 +248,6 @@ object SimilarityOps {
     else df
   }
 
-  /** Drop and unpersist every memoized quantized corpus (and LSH
-    * signature table) for `spark`, and invalidate the session's IVF
-    * indexes — memo entries AND the persisted codebook/lists, which
-    * are derived from the quantized corpus and would otherwise be
-    * silently reused stale against freshly rebuilt probes (mixed
-    * index/query versions — the exact failure the cache-ownership
-    * contract exists to prevent). */
-  def invalidateQuantized(spark: SparkSession): Unit = {
-    // same lock as the memo first-touch builds, so a teardown cannot
-    // interleave with a concurrent build-if-absent of the same entry
-    cacheMemoLock.synchronized {
-      embCountMemo.keysIterator.filter(_._1 eq spark).foreach(embCountMemo.remove)
-      quantMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        quantMemo.remove(k).foreach(_.unpersist(false))
-      }
-      sigMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        sigMemo.remove(k).foreach(_.unpersist(false))
-      }
-      hierAssignMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        hierAssignMemo.remove(k).foreach(_.unpersist(false))
-      }
-    }
-    // deletion under the same lock that guards builds, so an invalidate
-    // racing a concurrent build-if-absent cannot delete a half-written
-    // index out from under it
-    ivfBuildLock.synchronized {
-      ivfMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        ivfMemo.remove(k).foreach(deleteRecursively)
-      }
-      pqFlatMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        pqFlatMemo.remove(k).foreach(deleteRecursively)
-      }
-      listsTableMemo.keysIterator.filter(_._1 eq spark).foreach { k =>
-        listsTableMemo.remove(k).foreach(BucketedTables.dropWithFiles(spark, _))
-      }
-    }
-  }
-
   private def deleteRecursively(path: String): Unit = {
     val root = java.nio.file.Paths.get(path)
     if (java.nio.file.Files.exists(root)) {
@@ -319,9 +257,6 @@ object SimilarityOps {
     }
   }
 
-  private val sigMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int, Int), DataFrame]
-
   /** The banded LSH signature table, memoized + `.cache()`d per
     * (session, dir, band shape) — consumed twice per [[lshNeardup]]
     * call (band self-join + exact-verify lookup), and across calls.
@@ -329,13 +264,9 @@ object SimilarityOps {
     * left this one as a per-call `.cache()` with no owner (the one
     * cache-hygiene stray the verdict flagged). */
   private def bandedSig(spark: SparkSession, dir: String,
-                        bands: Int, planesPerBand: Int): DataFrame = {
-    sigMemo.keysIterator
-      .filter { case (s, _, _, _) => s.sparkContext.isStopped }
-      .foreach(sigMemo.remove)
-    BucketedTables.memoized(sigMemo, (spark, dir, bands, planesPerBand), cacheMemoLock)(
+                        bands: Int, planesPerBand: Int): DataFrame =
+    Substrates.frame(spark, dir, "similarity.bandedSig", bands, planesPerBand)(
       withBands(quantized(spark, dir), bands, planesPerBand).cache())
-  }
 
   /** Adds Band1..BandN sign-bit-string columns. The ±1 plane matrix is
     * md5-derived on the driver and shipped as array literals; each bit
@@ -521,7 +452,7 @@ object SimilarityOps {
     * appended corpus hash-mismatches BY CONSTRUCTION (codebooks
     * differ), not from an engine defect. Rebuild the index (delete
     * the index dir, or refresh the corpus through
-    * [[invalidateQuantized]]) before gating a routed graph over
+    * [[Substrates.invalidate]]) before gating a routed graph over
     * appended data; steady-state search paths ([[ivfTopk]]) are the
     * append consumers.
     *
@@ -692,9 +623,6 @@ object SimilarityOps {
     * codes); bump on any encoding change. */
   private val PqFlatLayoutVersion = "flat-v1"
 
-  private val pqFlatMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
-
   /** Build-if-absent for the PERSISTED flat-PQ index: `pqcodebook/`
     * (the M×K per-subspace codebook) and `pqcodes/` (vec_id, NormSq,
     * Codes[M]) under their own fingerprinted base, mirroring
@@ -710,35 +638,30 @@ object SimilarityOps {
     * session reuses the index instead of re-training. */
   def pqFlatIndexPath(spark: SparkSession, dir: String): String = {
     VectorExpressions.register(spark)
-    pqFlatMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(pqFlatMemo.remove)
-    pqFlatMemo.getOrElse((spark, dir), ivfBuildLock.synchronized {
-      pqFlatMemo.getOrElseUpdate((spark, dir), {
-        val base = indexBase(spark, dir, "pqflat")
-        val layoutFile = java.nio.file.Paths.get(base, "_pq_layout")
-        val fpFile = java.nio.file.Paths.get(base, "_corpus_fingerprint")
-        val complete = Seq("pqcodebook", "pqcodes").forall(d =>
-          java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/$d/_SUCCESS"))) &&
-          java.nio.file.Files.exists(layoutFile) &&
-          java.nio.file.Files.readString(layoutFile) == PqFlatLayoutVersion
-        val fresh = java.nio.file.Files.exists(fpFile) &&
-          java.nio.file.Files.readString(fpFile) == corpusFingerprint(dir)
-        if (!(complete && fresh)) {
-          deleteRecursively(base)
-          val all = quantized(spark, dir)
-          pqCodebook(all).write.mode("overwrite").parquet(s"$base/pqcodebook")
-          all.select(col("vec_id"), col("NormSq"))
-            .join(pqAssign(pqSlices(all), spark.read.parquet(s"$base/pqcodebook"))
-              .groupBy(col("vec_id"))
-              .agg(expr("transform(array_sort(collect_list(struct(Sub, Cid))), x -> x.Cid)").as("Codes")),
-              "vec_id")
-            .write.mode("overwrite").parquet(s"$base/pqcodes")
-          java.nio.file.Files.writeString(layoutFile, PqFlatLayoutVersion)
-          java.nio.file.Files.writeString(fpFile, corpusFingerprint(dir))
-        }
-        base
-      })
+    indexDir(spark, dir, "similarity.pqFlatIndex")(ivfBuildLock.synchronized {
+      val base = indexBase(spark, dir, "pqflat")
+      val layoutFile = java.nio.file.Paths.get(base, "_pq_layout")
+      val fpFile = java.nio.file.Paths.get(base, "_corpus_fingerprint")
+      val complete = Seq("pqcodebook", "pqcodes").forall(d =>
+        java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/$d/_SUCCESS"))) &&
+        java.nio.file.Files.exists(layoutFile) &&
+        java.nio.file.Files.readString(layoutFile) == PqFlatLayoutVersion
+      val fresh = java.nio.file.Files.exists(fpFile) &&
+        java.nio.file.Files.readString(fpFile) == corpusFingerprint(dir)
+      if (!(complete && fresh)) {
+        deleteRecursively(base)
+        val all = quantized(spark, dir)
+        pqCodebook(all).write.mode("overwrite").parquet(s"$base/pqcodebook")
+        all.select(col("vec_id"), col("NormSq"))
+          .join(pqAssign(pqSlices(all), spark.read.parquet(s"$base/pqcodebook"))
+            .groupBy(col("vec_id"))
+            .agg(expr("transform(array_sort(collect_list(struct(Sub, Cid))), x -> x.Cid)").as("Codes")),
+            "vec_id")
+          .write.mode("overwrite").parquet(s"$base/pqcodes")
+        java.nio.file.Files.writeString(layoutFile, PqFlatLayoutVersion)
+        java.nio.file.Files.writeString(fpFile, corpusFingerprint(dir))
+      }
+      base
     })
   }
 
@@ -746,7 +669,7 @@ object SimilarityOps {
     * is (vec_id, NormSq, Codes[M]) with the exact norm kept alongside
     * the compressed codes (asymmetric distance needs it). Reads the
     * persisted layout of [[pqFlatIndexPath]]; released/rebuilt via
-    * [[invalidateQuantized]]. */
+    * [[Substrates.invalidate]]. */
   private def pqIndex(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val base = pqFlatIndexPath(spark, dir)
     (spark.read.parquet(s"$base/pqcodebook"), spark.read.parquet(s"$base/pqcodes"))
@@ -1016,9 +939,6 @@ object SimilarityOps {
     cent
   }
 
-  private val ivfMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), String]
-
   /** Root directory for persisted IVF indexes: `SPARK_GRAFT_IVF_DIR`
     * if set, else `<spark.sql.warehouse.dir>/graft_ivf` — never a bare
     * cwd-relative literal (a query path must not impose a hidden
@@ -1065,7 +985,13 @@ object SimilarityOps {
     * shuffle+write at build time, partition-pruned I/O on every probe
     * after. */
   def buildIvfIndex(spark: SparkSession, dir: String,
-                    nCentroids: Int = DefaultNCentroids): String = ivfBuildLock.synchronized {
+                    nCentroids: Int = DefaultNCentroids): String = {
+    val base = writeIvfIndex(spark, dir, nCentroids)
+    indexDir(spark, dir, "similarity.ivfIndex", nCentroids)(base)
+  }
+
+  private def writeIvfIndex(spark: SparkSession, dir: String,
+                            nCentroids: Int): String = ivfBuildLock.synchronized {
     val all = quantized(spark, dir)
     val base = ivfBase(spark, dir, nCentroids)
     // wipe the whole base first: per-subdir overwrite alone would let
@@ -1086,15 +1012,14 @@ object SimilarityOps {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(base, "_corpus_fingerprint"),
       corpusFingerprint(dir))
-    ivfMemo.put((spark, dir, nCentroids), base)
     base
   }
 
   /** Fingerprint of the embeddings parquet an index was built from
     * (names+sizes+mtimes) — checked before cross-session reuse of an
     * on-disk index, so a refreshed corpus REBUILDS instead of silently
-    * probing stale lists (invalidateQuantized can only cover indexes
-    * built in ITS session; its memo is per-session). */
+    * probing stale lists ([[Substrates.invalidate]] can only cover
+    * indexes built in ITS session; its entries are per-session). */
   private def corpusFingerprint(dir: String): String = {
     val p = java.nio.file.Paths.get(dir, "embeddings.parquet")
     def one(f: java.nio.file.Path) =
@@ -1110,11 +1035,13 @@ object SimilarityOps {
   }
 
   /** Serializes every index-directory mutation ([[buildIvfIndex]],
-    * [[ivfIndexPath]]'s build-if-absent, [[invalidateQuantized]]'s
-    * delete): since round 5 FOUR queries share one index and the
-    * Verify harness runs them concurrently — TrieMap.getOrElseUpdate
-    * computes its value outside any lock, so two racing callers would
-    * both run buildIvfIndex into the SAME directory mid-overwrite.
+    * [[ivfIndexPath]]'s build-if-absent, a registry release's
+    * delete, appends and reclusters): since round 5 FOUR queries share
+    * one index and the Verify harness runs them concurrently, and two
+    * racing writers (a forced build beside a first touch) would both
+    * write into the SAME directory mid-overwrite. Taken inside the
+    * registry's key lock, never around a registry call that may
+    * build or release an index entry (see [[Substrates]]).
     * JVM-local by design: the index dir is per-driver state (keyed
     * under this session's warehouse dir unless SPARK_GRAFT_IVF_DIR
     * points several drivers at one root — coordinating THAT is an
@@ -1122,32 +1049,36 @@ object SimilarityOps {
     * env var's docs). */
   private val ivfBuildLock = new Object
 
-  /** Build-if-absent: reuse the session-memoized index, else an index
-    * already persisted on disk (cross-session reuse — the point of
-    * persistence; callers that mutate the corpus in place must
-    * [[invalidateQuantized]], which deletes it), else build. The
-    * memo-hit fast path takes no lock; a miss builds under
-    * [[ivfBuildLock]] (double-checked against the memo inside). */
+  /** Build-if-absent: reuse the session's registered index, else an
+    * index already persisted on disk (cross-session reuse — the point
+    * of persistence; callers that mutate the corpus in place must
+    * [[Substrates.invalidate]], which deletes it), else build. A hit
+    * takes no lock; a miss builds under [[ivfBuildLock]] inside the
+    * registry's key lock. */
   def ivfIndexPath(spark: SparkSession, dir: String,
-                   nCentroids: Int = DefaultNCentroids): String = {
-    ivfMemo.keysIterator
-      .filter { case (s, _, _) => s.sparkContext.isStopped }
-      .foreach(ivfMemo.remove)
-    ivfMemo.getOrElse((spark, dir, nCentroids), ivfBuildLock.synchronized {
-      ivfMemo.getOrElseUpdate((spark, dir, nCentroids), {
-        val base = ivfBase(spark, dir, nCentroids)
-        val complete = Seq("codebook", "lists").forall(d =>
-          java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/$d/_SUCCESS")))
-        val fp = java.nio.file.Paths.get(base, "_corpus_fingerprint")
-        // line-1 compare (BucketedTables.corpusLine): an APPENDED index
-        // is still fresh for its corpus; a replaced corpus is not
-        val fresh = java.nio.file.Files.exists(fp) &&
-          BucketedTables.corpusLine(java.nio.file.Files.readString(fp)) ==
-            corpusFingerprint(dir)
-        if (complete && fresh) base else buildIvfIndex(spark, dir, nCentroids)
-      })
+                   nCentroids: Int = DefaultNCentroids): String =
+    indexDir(spark, dir, "similarity.ivfIndex", nCentroids)(ivfBuildLock.synchronized {
+      val base = ivfBase(spark, dir, nCentroids)
+      val complete = Seq("codebook", "lists").forall(d =>
+        java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/$d/_SUCCESS")))
+      val fp = java.nio.file.Paths.get(base, "_corpus_fingerprint")
+      // line-1 compare (BucketedTables.corpusLine): an APPENDED index
+      // is still fresh for its corpus; a replaced corpus is not
+      val fresh = java.nio.file.Files.exists(fp) &&
+        BucketedTables.corpusLine(java.nio.file.Files.readString(fp)) ==
+          corpusFingerprint(dir)
+      if (complete && fresh) base else writeIvfIndex(spark, dir, nCentroids)
     })
-  }
+
+  /** Register the persisted index dir `base` in [[Substrates]]; its
+    * release deletes the dir under [[ivfBuildLock]]. The path is a
+    * function of the key, so an entry stays valid across rebuilds,
+    * appends and reclusters; registering after a rebuild outside the
+    * key lock keeps an existing entry. */
+  private def indexDir(spark: SparkSession, dir: String, kind: String,
+                       params: Any*)(base: => String): String =
+    Substrates[String](spark, dir, kind, params: _*)(b =>
+      ivfBuildLock.synchronized(deleteRecursively(b)))(base)
 
   /** Recluster when the largest inverted list exceeds this multiple
     * of the mean list size after an append. */
@@ -1251,11 +1182,7 @@ object SimilarityOps {
       } finally assigned.unpersist(false)
     }
     val (batches, routedIds) = routed
-    // OUTSIDE the build lock: hierAssigned's first-touch build holds
-    // cacheMemoLock while calling ivfIndexPath (which takes the build
-    // lock), so taking cacheMemoLock while holding the build lock here
-    // would be the classic AB/BA deadlock under Verify's concurrency
-    dropHierAssign(spark, dir, nCentroids)
+    releaseListsDerived(dir, nCentroids)
     // skew check is PERIODIC: the per-Cid count scans the whole index
     if (batches % skewCheckEvery == 0) {
       val sizes = spark.read.parquet(s"$base/lists")
@@ -1280,8 +1207,7 @@ object SimilarityOps {
   def reclusterIvfIndex(spark: SparkSession, dir: String,
                         nCentroids: Int = DefaultNCentroids): Unit = {
     reclusterLocked(spark, dir, nCentroids)
-    // outside the build lock — same deadlock-ordering rule as ivfAppend
-    dropHierAssign(spark, dir, nCentroids)
+    releaseListsDerived(dir, nCentroids)
   }
 
   private def reclusterLocked(spark: SparkSession, dir: String,
@@ -1306,15 +1232,22 @@ object SimilarityOps {
     dropListsTwin(spark, dir, nCentroids)
   }
 
-  /** Drop the bucketed lists twin for (dir, K) — its content derives
-    * from the lists, so any lists mutation invalidates it. Dropped by
-    * NAME, not just via the memo: a twin left on disk by a sibling
-    * session must not survive an append either. Caller holds
-    * [[ivfBuildLock]]. */
-  private def dropListsTwin(spark: SparkSession, dir: String, nCentroids: Int): Unit = {
-    listsTableMemo.remove((spark, dir, nCentroids))
+  /** Drop the bucketed lists twin for (dir, K) by NAME, whichever
+    * session built it: its content derives from the lists, so any
+    * lists mutation invalidates it, and a recluster leaves its
+    * fingerprint unchanged. Caller holds [[ivfBuildLock]] and calls
+    * [[releaseListsDerived]] after leaving it. */
+  private def dropListsTwin(spark: SparkSession, dir: String, nCentroids: Int): Unit =
     BucketedTables.dropWithFiles(spark, listsTableName(dir, nCentroids))
-  }
+
+  /** Release every session's registry entries derived from the lists
+    * of (dir, K) — the bucketed twin and the cached hierarchical
+    * assignments — after an index mutation. Called OUTSIDE
+    * [[ivfBuildLock]]: a release waits on the entry's key lock, and
+    * the twin's build takes the index lock under it. */
+  private def releaseListsDerived(dir: String, nCentroids: Int): Unit =
+    Substrates.release(k => k.dir == dir && k.params.headOption.contains(nCentroids) &&
+      (k.kind == ListsTableKind || k.kind == HierAssignKind))
 
   /** Fingerprint of the lists CONTENT for (dir, K): the corpus line
     * plus the appended-batch count. Layouts derived from the lists
@@ -1433,7 +1366,7 @@ object SimilarityOps {
     * the semantic-dedup family) never pay the PQ encode. Freshness
     * rides the base index's fingerprint: [[buildIvfIndex]] wipes the
     * whole base before a rebuild, so stale codes cannot outlive a
-    * corpus change; [[invalidateQuantized]] deletes the base
+    * corpus change; [[Substrates.invalidate]] deletes the base
     * recursively, codes included. */
   /** Versions the on-disk PQ encoding; bump on any layout change. */
   private val PqLayoutVersion = "residual-v1"
@@ -1707,8 +1640,7 @@ object SimilarityOps {
       .transform(graft.etl.Summaries.smallSort(_, col("Cid")))
   }
 
-  private val listsTableMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int), String]
+  private val ListsTableKind = "similarity.listsTable"
 
   /** Buckets for [[bucketedListsTable]] — matches the default cluster
     * count so each bucket holds ~one inverted list. */
@@ -1726,10 +1658,9 @@ object SimilarityOps {
     * with zero exchanges on both sides). Two layouts of one relation
     * for two access paths is the standard warehouse trade; both are
     * write-once, fingerprint-guarded, and dropped by
-    * [[invalidateQuantized]]. */
-  def buildBucketedLists(spark: SparkSession, dir: String,
-                         nCentroids: Int = DefaultNCentroids): String = ivfBuildLock.synchronized {
-    val base = ivfIndexPath(spark, dir, nCentroids)
+    * [[Substrates.invalidate]]. */
+  private def buildBucketedLists(spark: SparkSession, dir: String, nCentroids: Int,
+                                 base: String): String = ivfBuildLock.synchronized {
     val name = listsTableName(dir, nCentroids)
     BucketedTables.dropWithFiles(spark, name)
     spark.read.parquet(s"$base/lists")
@@ -1740,24 +1671,22 @@ object SimilarityOps {
       .saveAsTable(name)
     BucketedTables.writeFingerprint(spark, name,
       listsContentFingerprint(spark, dir, nCentroids))
-    listsTableMemo.put((spark, dir, nCentroids), name)
     name
   }
 
-  /** Build-if-absent for the bucketed lists: session memo →
+  /** Build-if-absent for the bucketed lists: registry entry →
     * [[BucketedTables.resolve]] ladder (freshness-guarded on every
-    * branch), with the ladder run under [[ivfBuildLock]] and
-    * double-checked against the memo — TrieMap.getOrElseUpdate alone
-    * computes outside any lock, and two racing first-callers would
+    * branch), with the ladder run under [[ivfBuildLock]] inside the
+    * registry's key lock — two racing first-callers would otherwise
     * both run the DROP+rebuild against the directory the other is
     * reading. */
   def bucketedListsTable(spark: SparkSession, dir: String,
-                         nCentroids: Int = DefaultNCentroids): String = {
-    listsTableMemo.keysIterator
-      .filter { case (s, _, _) => s.sparkContext.isStopped }
-      .foreach(listsTableMemo.remove)
-    listsTableMemo.getOrElse((spark, dir, nCentroids), ivfBuildLock.synchronized {
-      listsTableMemo.getOrElseUpdate((spark, dir, nCentroids), {
+                         nCentroids: Int = DefaultNCentroids): String =
+    Substrates[String](spark, dir, ListsTableKind, nCentroids)(n =>
+      ivfBuildLock.synchronized(BucketedTables.dropWithFiles(spark, n))) {
+      // the IVF key first, outside the index lock (Substrates locking)
+      val base = ivfIndexPath(spark, dir, nCentroids)
+      ivfBuildLock.synchronized {
         val name = listsTableName(dir, nCentroids)
         val loc = BucketedTables.location(spark, name)
         BucketedTables.resolve(spark, name,
@@ -1768,10 +1697,9 @@ object SimilarityOps {
                |INTO $ListsTableBuckets BUCKETS
                |LOCATION '${loc.toUri}'""".stripMargin,
           fingerprint = listsContentFingerprint(spark, dir, nCentroids),
-          build = () => buildBucketedLists(spark, dir, nCentroids))
-      })
-    })
-  }
+          build = () => buildBucketedLists(spark, dir, nCentroids, base))
+      }
+    }
 
   /** SemDeDup-style semantic dedup: near-duplicate detection scoped
     * to k-means clusters. A vector is a duplicate iff some LOWER-id
@@ -2082,56 +2010,39 @@ object SimilarityOps {
       .select(col("vec_id"), col("Q"), col("NormSq"), col("Cid"))
   }
 
+  private val HierAssignKind = "similarity.hierAssign"
+
+  /** The hierarchical assignment as a cached substrate per (session,
+    * dir, K, nprobe) — in production the assignment IS a materialized
+    * index artifact (it is what the persisted lists are for the flat
+    * path), so the coarse Lloyd + routing pipeline runs once per
+    * corpus and every consumer (the pair self-join reads it from BOTH
+    * sides) scans the cache. It derives from the persisted codebook,
+    * so every index MUTATION (append, recluster) releases it
+    * ([[releaseListsDerived]]) the way it drops the bucketed lists
+    * twin; the flat path needs no such hook only because it re-reads
+    * the lists files per plan.
+    *
+    * Lock order: this build holds its key lock while it resolves the
+    * IVF index (its key lock, then [[ivfBuildLock]], then the
+    * quantized key) and the quantized key. Index mutations release
+    * this key only after leaving [[ivfBuildLock]], so no thread holds
+    * the index lock while it waits for this key, and no AB/BA pair
+    * between the two can form. */
+  private def hierAssigned(spark: SparkSession, dir: String,
+                           nCentroids: Int, nprobe: Int): DataFrame =
+    Substrates.frame(spark, dir, HierAssignKind, nCentroids, nprobe) {
+      val base = ivfIndexPath(spark, dir, nCentroids)
+      val vecs = quantized(spark, dir).select(col("vec_id"), col("Q"), col("NormSq"))
+      assignHierarchical(vecs, spark.read.parquet(s"$base/codebook"), nprobe).cache()
+    }
+
   /** [[semanticDedup]] with the hierarchical assignment — identical
     * pair semantics over clusters assigned by [[assignHierarchical]]
     * against the SAME persisted codebook. The opt-in scale variant: at
     * the √n-K policy its assignment is n^1.25 where flat is n^1.5;
     * divergence is confined to cluster-boundary vectors (measured in
     * OpsSpec, timed at 100× in PERFORMANCE.md). */
-  private val hierAssignMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, Int, Int), DataFrame]
-
-  /** Drop the cached hierarchical assignments for (dir, K) — they
-    * derive from the persisted codebook+corpus, so every index
-    * MUTATION (append, recluster) must release them the way it drops
-    * the bucketed lists twin; the flat path needs no such hook only
-    * because it re-reads the lists files per plan. */
-  private def dropHierAssign(spark: SparkSession, dir: String, nCentroids: Int): Unit =
-    cacheMemoLock.synchronized {
-      hierAssignMemo.keysIterator
-        .filter { case (s, d, k, _) => (s eq spark) && d == dir && k == nCentroids }
-        .foreach { k => hierAssignMemo.remove(k).foreach(_.unpersist(false)) }
-    }
-
-  /** The hierarchical assignment as a memoized cached substrate per
-    * (session, dir, K, nprobe) — in production the assignment IS a
-    * materialized index artifact (it is what the persisted lists are
-    * for the flat path), so the coarse Lloyd + routing pipeline runs
-    * once per corpus and every consumer (the pair self-join reads it
-    * from BOTH sides) scans the cache. Released by
-    * [[invalidateQuantized]] and on index mutation by
-    * [[dropHierAssign]]. */
-  private def hierAssigned(spark: SparkSession, dir: String,
-                           nCentroids: Int, nprobe: Int): DataFrame = {
-    hierAssignMemo.keysIterator
-      .filter { case (s, _, _, _) => s.sparkContext.isStopped }
-      .foreach(hierAssignMemo.remove)
-    hierAssignMemo.getOrElse((spark, dir, nCentroids, nprobe), {
-      // resolve BOTH dependencies before entering the memo lock:
-      // memoized() runs its build closure INSIDE cacheMemoLock, and
-      // ivfIndexPath takes ivfBuildLock whose holder (buildIvfIndex)
-      // takes cacheMemoLock via quantized() — nesting either call
-      // under the memo lock is the AB/BA deadlock pair. Out here both
-      // acquisitions are un-nested; a racing first-toucher just
-      // resolves idempotent paths twice and loses the getOrElseUpdate.
-      val base = ivfIndexPath(spark, dir, nCentroids)
-      val vecs = quantized(spark, dir).select(col("vec_id"), col("Q"), col("NormSq"))
-      val cent = spark.read.parquet(s"$base/codebook")
-      BucketedTables.memoized(hierAssignMemo, (spark, dir, nCentroids, nprobe), cacheMemoLock)(
-        assignHierarchical(vecs, cent, nprobe).cache())
-    })
-  }
-
   def semanticDedupHierarchical(spark: SparkSession, dir: String,
                                 threshold: Double = DefaultSemDedupThreshold,
                                 nCentroids: Int = DefaultNCentroids,

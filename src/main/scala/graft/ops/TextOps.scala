@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Substrates
 import graft.etl.Tables
 
 /** Text-analysis operators over `documents`: tokenization stats,
@@ -973,21 +974,17 @@ object TextOps {
   }
 
   private val BpeTab = "\t"
-  private val bpeModelMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (Seq[(Int, String, String, String, Long)], DataFrame)]
-  private val bpeModelLock = new Object
 
   /** Learn the BPE model once per (session, corpus): the merge table
     * plus the final word dictionary `(W, Cnt, Seg)` — memoized like
     * [[langidModel]] (train once, encode/report per query). The dict
     * is localCheckpointed per step, so the memoized frame is
-    * materialized and lineage-free. */
+    * materialized and lineage-free; its blocks live until the frame
+    * is collected, so the registry entry has nothing to release. */
   private def bpeModel(spark: SparkSession, dir: String)
       : (Seq[(Int, String, String, String, Long)], DataFrame) = {
-    bpeModelMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(bpeModelMemo.remove)
-    BucketedTables.memoized(bpeModelMemo, (spark, dir), bpeModelLock) {
+    Substrates[(Seq[(Int, String, String, String, Long)], DataFrame)](
+        spark, dir, "text.bpeModel")(_ => ()) {
       val tab = BpeTab
       var dict = Tables.documents(spark, dir)
         .select(explode(expr(toksSql)).as("W"))
@@ -1040,10 +1037,6 @@ object TextOps {
       .agg(count(lit(1)).cast(LongType).as("M"))
   }
 
-  private val langidModelMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
-  private val langidModelLock = new Object
-
   /** TRAINED langid MODEL substrate `(grid, totals)` — the
     * Cavnar–Trenkle profile grid `(PLang, Tri, Bits)` plus the
     * language totals, memoized + cached per (session, dir) like
@@ -1057,11 +1050,10 @@ object TextOps {
     * at 500k docs under a 4 GiB driver); streaming passes are the
     * safe shape. */
   private def langidModel(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    langidModelMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(langidModelMemo.remove)
     graft.functions.TextExpressions.register(spark)
-    BucketedTables.memoized(langidModelMemo, (spark, dir), langidModelLock) {
+    Substrates[(DataFrame, DataFrame)](spark, dir, "text.langidModel") { case (grid, totals) =>
+      grid.unpersist(false); totals.unpersist(false)
+    } {
       val langCnt = langTrigrams(spark, dir)
         .groupBy(col("lang"), col("Tri")).agg(sum(col("M")).as("C"))
         .localCheckpoint()
@@ -1081,13 +1073,6 @@ object TextOps {
     }
   }
 
-  private val postingsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val postingsLock = new Object
-  private val docStatsMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val docStatsLock = new Object
-
   /** Corpus POSTINGS substrate `(doc_id, Dl, Term, Tf)` — the inverted
     * index in relational shape, memoized + `.cache()`d per (session,
     * dir) like [[unigramCounts]]/DedupOps.docBands. Every lexical-
@@ -1102,11 +1087,8 @@ object TextOps {
     * identical to counting raw exploded rows downstream, so every
     * consumer's arithmetic (and its oracle hash) is unchanged. */
   def docPostings(spark: SparkSession, dir: String): DataFrame = {
-    postingsMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(postingsMemo.remove)
     graft.functions.TextExpressions.register(spark)
-    BucketedTables.memoized(postingsMemo, (spark, dir), postingsLock) {
+    Substrates.frame(spark, dir, "text.docPostings") {
       Tables.documentsSpread(spark, dir)
         .withColumn("TS", expr("token_stats(text)"))
         .select(col("doc_id"), col("TS.NTokens").as("Dl"),
@@ -1122,11 +1104,8 @@ object TextOps {
     * toward N and avgdl exactly as the original per-query aggregate
     * did (they have no postings rows). Trivially cached. */
   def docStats(spark: SparkSession, dir: String): DataFrame = {
-    docStatsMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(docStatsMemo.remove)
     graft.functions.TextExpressions.register(spark)
-    BucketedTables.memoized(docStatsMemo, (spark, dir), docStatsLock) {
+    Substrates.frame(spark, dir, "text.docStats") {
       Tables.documents(spark, dir)
         .withColumn("TS", expr("token_stats(text)"))
         .agg(count(lit(1)).cast(IntegerType).as("NDocs"),
@@ -1216,27 +1195,19 @@ object TextOps {
     * perplexity filter. Shared with the DuckDB mirror. */
   val PplBandBits = 0.5
 
-  private val unigramMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val unigramLock = new Object
-
   /** Corpus unigram counts (Token, C) — the language-model substrate of
     * [[perplexity]]. Memoized + `.cache()`d per (session, dir) like
     * DedupOps.docBands: in production the LM counts are materialized
     * once per corpus snapshot and every scoring pass joins against
     * them; the memo gives the same one-build/many-read shape here.
     * Vocabulary-sized (≪ corpus), so the cache cost is trivial. */
-  private def unigramCounts(spark: SparkSession, dir: String): DataFrame = {
-    unigramMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(unigramMemo.remove)
-    BucketedTables.memoized(unigramMemo, (spark, dir), unigramLock) {
+  private def unigramCounts(spark: SparkSession, dir: String): DataFrame =
+    Substrates.frame(spark, dir, "text.unigramCounts") {
       Tables.documentsSpread(spark, dir)
         .select(explode(expr(toksSql)).as("Token"))
         .groupBy(col("Token")).agg(count(lit(1)).as("C"))
         .cache()
     }
-  }
 
   /** Unigram-LM surprisal scoring — the perplexity-style quality filter
     * (CCNet's wikipedia-LM filter, re-expressed engine-portably): each
@@ -1467,10 +1438,6 @@ object TextOps {
       .orderBy(col("source"))
   }
 
-  private val bigramMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val bigramLock = new Object
-
   /** Corpus ADJACENT-BIGRAM counts `(A, B, C2)` — the order-2 LM
     * substrate, memoized + `.cache()`d per (session, dir) exactly like
     * [[unigramCounts]]: in production the bigram table is materialized
@@ -1480,11 +1447,8 @@ object TextOps {
     * combines into a pair-keyed hash aggregate; the cached output is
     * vocab²-BOUNDED but corpus-LIMITED (≤ total bigram occurrences),
     * and Zipf corpora keep it far below either bound. */
-  private def bigramCounts(spark: SparkSession, dir: String): DataFrame = {
-    bigramMemo.keysIterator
-      .filter { case (s, _) => s.sparkContext.isStopped }
-      .foreach(bigramMemo.remove)
-    BucketedTables.memoized(bigramMemo, (spark, dir), bigramLock) {
+  private def bigramCounts(spark: SparkSession, dir: String): DataFrame =
+    Substrates.frame(spark, dir, "text.bigramCounts") {
       Tables.documentsSpread(spark, dir)
         .select(expr(toksSql).as("T"))
         .filter(size(col("T")) >= 2)
@@ -1495,7 +1459,6 @@ object TextOps {
         .agg(count(lit(1)).as("C2"))
         .cache()
     }
-  }
 
   /** Collocation-mining knobs: an adjacent bigram must occur at least
     * [[PmiMinPairCount]] times corpus-wide to be scored (the standard

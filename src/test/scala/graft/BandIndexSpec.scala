@@ -68,14 +68,14 @@ class BandIndexSpec extends SparkSpec {
     // invalidate (drops table + files + memo), restore the stash
     val stash = Files.createTempDirectory("graft-bandidx-stash")
     copyTree(loc, stash)
-    DedupOps.invalidateSketches(spark)
+    Substrates.invalidate(spark, dir)
     copyTree(stash, Files.createDirectories(loc))
     // fresh corpus fingerprint matches → re-registered as EXTERNAL, no rebuild
     assert(DedupOps.bandIndexTable(spark, dir) === name)
     assert(tableType(name) === "EXTERNAL")
     // corpus changes on disk → fingerprint mismatch → REBUILT (managed),
     // and the matches reflect the NEW corpus, not the stale index
-    DedupOps.invalidateSketches(spark) // simulate session end: table+files+memos gone
+    Substrates.invalidate(spark, dir) // simulate session end: table+files+memos gone
     copyTree(stash, Files.createDirectories(loc)) // ...but the old session's files remain
     writeDocs(dir, Seq((1L, "totally different content words"), (2L, "unrelated words here now"),
       (9L, "alpha beta gamma delta")))
@@ -110,14 +110,14 @@ class BandIndexSpec extends SparkSpec {
     assert(DedupOps.bandIndexTable(sibling, dir) === name)
     val matches = DedupOps.incremental(sibling, dir).collect()
     assert(matches.isEmpty, s"stale catalog hit was adopted: ${matches.mkString(",")}")
-    DedupOps.invalidateSketches(sibling)
-    DedupOps.invalidateSketches(spark)
+    Substrates.invalidate(sibling, dir)
+    Substrates.invalidate(spark, dir)
   }
 
-  test("invalidateSketches drops the persisted index; the next query rebuilds it") {
+  test("invalidation drops the persisted index; the next query rebuilds it") {
     val name = DedupOps.bandIndexTable(spark, sfDir)
     assert(spark.catalog.tableExists(name))
-    DedupOps.invalidateSketches(spark)
+    Substrates.invalidate(spark, sfDir)
     // stale index against a refreshed corpus = silently wrong matches;
     // it must go with the session caches
     assert(!spark.catalog.tableExists(name), "stale band index survived invalidation")

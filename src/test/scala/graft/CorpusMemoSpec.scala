@@ -13,7 +13,7 @@ import graft.ops.SimilarityOps
   * embeddings count that sizes the similarity family's exchanges. */
 class CorpusMemoSpec extends SparkSpec {
 
-  test("invalidateCorpusCounts refreshes the documents spread width and the embeddings count after an append") {
+  test("dir invalidation refreshes the documents spread width and the embeddings count after an append") {
     val dir = Files.createTempDirectory("graft_memo_").toString
     // 100 docs → ceil(100/160) = 1 partition at local[4]
     val doc = (n: Long) => spark.range(n)
@@ -41,14 +41,14 @@ class CorpusMemoSpec extends SparkSpec {
     assert(Tables.documentsSpread(spark, dir).rdd.getNumPartitions === 1)
     assert(SimilarityOps.embeddingsCount(spark, dir) === 100L)
 
-    Tables.invalidateCorpusCounts(spark, dir)
+    Substrates.invalidate(spark, dir)
 
     // 1000 docs → min(defaultParallelism = 4, ceil(1000/160) = 7) = 4
     assert(Tables.documentsSpread(spark, dir).rdd.getNumPartitions === 4)
     assert(SimilarityOps.embeddingsCount(spark, dir) === 1000L)
   }
 
-  test("invalidateCorpusDerived refreshes the co-purchase graph memos after an external fact append") {
+  test("dir invalidation refreshes the co-purchase graph memos after an external fact append") {
     // r16 verdict #6 (closed r18): the graph family's cached memos
     // (edges/degrees/oriented) are keyed on (session, dir) over the
     // fact table. An append issued THROUGH this session's writer is
@@ -89,7 +89,38 @@ class CorpusMemoSpec extends SparkSpec {
     finally listing.close()
     // the memos are deliberately sticky — stale until invalidated
     assert(nNodes() === before)
-    Tables.invalidateCorpusDerived(spark, dir)
+    Substrates.invalidate(spark, dir)
     assert(nNodes() === before * 2)
+  }
+
+  test("dir invalidation refreshes the text family's corpus memos after an external documents append") {
+    // postings, doc stats, the n-gram LMs, langid and BPE are all keyed
+    // on (session, dir) over documents; land new documents by FILE
+    // MOVE (a same-session write would recache and hide staleness)
+    val dir = Files.createTempDirectory("graft_memo_text_").toString
+    val doc = (from: Long, n: Long) => spark.range(from, from + n)
+      .select(col("id").as("doc_id"),
+        concat(lit("body of document "), col("id")).as("text"),
+        lit("en").as("lang"), lit("web").as("source"),
+        (length(col("id").cast("string")) + 17L).as("n_chars"))
+    doc(0L, 100L).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def docIds(): Set[Long] = graft.ops.TextOps.docPostings(spark, dir)
+      .select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSet
+    assert(docIds() === (0L until 100L).toSet)
+    val stage = Files.createTempDirectory("graft_memo_text_stage_")
+    doc(1000L, 50L).write.mode("overwrite").parquet(stage.toString)
+    import scala.jdk.CollectionConverters._
+    val listing = Files.list(stage)
+    try listing.iterator().asScala
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .foreach { f =>
+        Files.move(f, java.nio.file.Paths.get(
+          s"$dir/documents.parquet", f.getFileName.toString))
+      }
+    finally listing.close()
+    // the memos are deliberately sticky — stale until invalidated
+    assert(docIds() === (0L until 100L).toSet)
+    Substrates.invalidate(spark, dir)
+    assert(docIds() === ((0L until 100L) ++ (1000L until 1050L)).toSet)
   }
 }

@@ -1277,11 +1277,11 @@ class OpsSpec extends SparkSpec {
     assert(math.abs(cums.last - observed.map(_.getDouble(2)).sum) < 1e-6)
   }
 
-  test("similarity: invalidateQuantized deletes the persisted IVF index and the next query rebuilds it") {
+  test("similarity: invalidation deletes the persisted IVF index and the next query rebuilds it") {
     import java.nio.file.{Files, Paths}
     val base = SimilarityOps.ivfIndexPath(spark, sfDir)
     assert(Files.exists(Paths.get(s"$base/lists/_SUCCESS")))
-    SimilarityOps.invalidateQuantized(spark)
+    Substrates.invalidate(spark, sfDir)
     // the on-disk index must go with the session caches — a stale
     // persisted codebook against freshly rebuilt probes would return
     // silently wrong mixed-version results

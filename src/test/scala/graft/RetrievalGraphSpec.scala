@@ -305,7 +305,7 @@ class RetrievalGraphSpec extends SparkSpec {
     assert(totalQ >= -0.5 && totalQ < 1.0)
   }
 
-  test("graph substrate invalidation: edges and labeling memos rebuild after invalidateGraph") {
+  test("graph substrate invalidation: edges and labeling memos rebuild after invalidation") {
     // corpus-append discipline (the invalidateCorpusCounts shape):
     // the memoized edge substrate and LPA labeling must be evictable
     // per (session, dir) so an appended corpus is re-read — observable
@@ -315,7 +315,7 @@ class RetrievalGraphSpec extends SparkSpec {
     assert(GraphOps.coPurchaseEdges(spark, sfDir) eq e1)
     val l1 = GraphOps.lpaLabelsFor(spark, sfDir)
     assert(GraphOps.lpaLabelsFor(spark, sfDir) eq l1)
-    GraphOps.invalidateGraph(spark, sfDir)
+    Substrates.invalidate(spark, sfDir)
     val e2 = GraphOps.coPurchaseEdges(spark, sfDir)
     val l2 = GraphOps.lpaLabelsFor(spark, sfDir)
     assert(!(e2 eq e1), "edge memo survived invalidation")
