@@ -83,9 +83,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // GraftSession hoists extension-function registration out of the
-    // timed loop (and out of any concurrent analysis) — same seam as
-    // Verify.registerAll
+    // the native functions come with the session (GraftExtensions):
+    // no registration inside the timed loop
     val spark = GraftSession.local()
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     require(passes >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $passes")

@@ -6,22 +6,22 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions._
 
-/** Library installer: registers every graft native function on any
-  * session via the standard extensions mechanism —
+/** The one way a graft native function reaches a session: the
+  * standard extensions mechanism.
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  *   // or, on a builder (GraftSession.builder() in this repo):
+  *   // GraftSession.builder() installs it on every session it builds:
   *   builder.withExtensions(new GraftExtensions) ...
   * }}}
   *
-  * This is the supported way to ship custom Catalyst expressions with
-  * a library (functions become available in SQL text and `expr()` on
-  * every session of the cluster, including thrift/connect sessions,
-  * with no per-session `register` call). The per-module
-  * `register(spark)` helpers remain for ad-hoc/local use; both paths
-  * bind the same constructors, and injected functions land in the
-  * session's registry so either registration order is idempotent. */
+  * Spark copies the injected functions into each session's function
+  * registry when the session state is built, so they are callable
+  * from SQL text and `expr()` before any query is analyzed. A
+  * `newSession()` sibling builds its registry from the same
+  * extensions, and a `foreachBatch` clone copies its parent's. No
+  * caller registers anything, so no registry is ever mutated while
+  * another thread analyzes a plan. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String, usage: String) =
@@ -36,8 +36,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       es => TokenStats(es.head)),
     ("token_fingerprint", "md5 set-fingerprint / min-hash struct over text",
       es => TokenFingerprint(es.head)),
-    ("token_shingles", "distinct 3-gram token shingles of text",
-      es => TokenShingles(es.head)),
+    ("token_shingles", "distinct n-token shingles of text (text[, n]); n defaults to 3",
+      es => TokenShingles(es.head, es.lift(1).fold(3)(shingleWindow))),
     ("minhash_bands", "MinHash-8 LSH band values of a shingle array",
       es => MinhashBands(es.head)),
     ("simhash_bits", "8-bit SimHash bit string of text",
@@ -65,10 +65,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ("audiofp_bands", "4 band ints of the energy-delta audio fingerprint of text",
       es => AudioFpBands(es.head)))
 
-  /** Every function name this installer injects — the parity contract
-    * the per-module register() path (Verify.registerAll) is tested
-    * against, so a function added to one path can't silently go
-    * missing from the other. */
+  /** The shingle window must be known at analysis time: it sizes the
+    * expression, not a row. */
+  private def shingleWindow(e: Expression): Int =
+    if (e.foldable) e.eval().asInstanceOf[Number].intValue()
+    else throw new IllegalArgumentException(
+      s"token_shingles window must be a literal, got $e")
+
+  /** Every function name this installer injects (ExtensionsSpec checks
+    * each resolves on every kind of session). */
   private[graft] def functionNames: Seq[String] = functions.map(_._1)
 
   override def apply(ext: SparkSessionExtensions): Unit =

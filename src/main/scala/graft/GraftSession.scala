@@ -35,14 +35,12 @@ import org.apache.spark.sql.SparkSession
   *   - 800s/60s network/heartbeat (this host shows multi-minute
   *     whole-VM stalls; a tripped heartbeat kills the local executor
   *     mid-measurement);
-  *   - UI off, WARN logs, all graft functions registered
-  *     ([[registerAll]] — hoisted out of every timed loop). */
+  *   - UI off, WARN logs;
+  *   - every graft native function, through [[GraftExtensions]]: the
+  *     session state is built with them, and so is that of every
+  *     `newSession()` sibling and `foreachBatch` clone. */
 object GraftSession {
 
-  /** The shared builder. Callers that need a non-standard session
-    * shape chain onto it (`GraftSession.builder(2).appName(...)
-    * .withExtensions(...)`) or pass probe-specific confs via
-    * [[local]]'s `extraConfs`. */
   /** Read an env override that must be a positive integer, failing
     * with the variable NAME in the message — the same validation
     * SPARK_GRAFT_OHA_FALLBACK got in round 15 and for the same
@@ -55,6 +53,9 @@ object GraftSession {
     v
   }
 
+  /** The shared builder. Callers that need a non-standard session
+    * shape chain onto it (`GraftSession.builder(2).appName(...)`) or
+    * pass probe-specific confs via [[local]]'s `extraConfs`. */
   def builder(defaultCpus: Int = 32): SparkSession.Builder = {
     val cpus = positiveIntEnv("SPARK_GRAFT_CPUS", defaultCpus.toString)
     val shuffle = positiveIntEnv("SPARK_GRAFT_SHUFFLE", cpus)
@@ -86,34 +87,20 @@ object GraftSession {
       .config("spark.network.timeout", "800s")
       .config("spark.executor.heartbeatInterval", "60s")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
   }
 
-  /** Build (or join) the local session at engine settings, set WARN
-    * logs, and register every graft native function. `extraConfs` is
-    * for probe-specific tuning (e.g. SkewProbe's tiny AQE thresholds)
-    * — note `getOrCreate` ignores confs when a session already exists
-    * in the JVM, exactly as the hand-rolled builders did. */
+  /** Build (or join) the local session at engine settings and set WARN
+    * logs. `extraConfs` is for probe-specific tuning (e.g.
+    * StateStoreAbProbe's state-store provider) — note `getOrCreate`
+    * ignores confs when a session already exists in the JVM, exactly
+    * as the hand-rolled builders did. */
   def local(defaultCpus: Int = 32,
             extraConfs: Seq[(String, String)] = Nil): SparkSession = {
     val b = builder(defaultCpus)
     extraConfs.foreach { case (k, v) => b.config(k, v) }
     val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    registerAll(spark)
     spark
-  }
-
-  /** Register ALL graft extension functions. One site, called before
-    * any concurrent plan analysis: the per-op register calls are
-    * replace-idempotent, but a partially populated registry observed
-    * by another thread's analysis is a latent race (the seam the
-    * Tables scaladoc flags). `GraftExtensions` is the cluster-deploy
-    * path to the same registrations. */
-  def registerAll(spark: SparkSession): Unit = {
-    graft.functions.TextExpressions.register(spark)
-    graft.functions.ShingleExpressions.register(spark)
-    graft.functions.VectorExpressions.register(spark)
-    graft.functions.SketchAggregates.register(spark)
-    graft.functions.PerceptualHashExpressions.register(spark)
   }
 }

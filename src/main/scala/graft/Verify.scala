@@ -6,8 +6,6 @@ import java.util.concurrent.Executors
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
@@ -19,23 +17,15 @@ import org.apache.spark.sql.SparkSession
   */
 object Verify {
 
-  /** One-shot registration of every extension-function family on the
-    * shared session — call before launching concurrent query threads.
-    * (Alias kept for existing callers; the one definition lives in
-    * [[GraftSession.registerAll]].) */
-  def registerAll(spark: SparkSession): Unit = GraftSession.registerAll(spark)
-
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query-name subset (local
     // iteration — the driver always passes two args = full run)
     val Array(sfDir, outDir) = args.take(2)
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    // GraftSession registers ALL extension functions BEFORE the
-    // concurrent pool starts: the per-op register calls are
-    // replace-idempotent, but a partially-populated registry observed
-    // by another thread's plan analysis is a latent race (the seam
-    // Tables' scaladoc flags).
+    // the session is built with every native function
+    // (GraftExtensions), so the concurrent pool below never mutates
+    // the function registry while another thread analyzes a plan
     val spark = GraftSession.local(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     val pool = Executors.newFixedThreadPool(8)

@@ -88,7 +88,6 @@ object Load {
     require(dims.size >= 2, s"z-order needs >= 2 dims, got ${dims.size}")
     require(dims.size <= 8, s"z-order supports <= 8 dims, got ${dims.size}")
     require(nFiles >= 1, s"nFiles must be >= 1, got $nFiles")
-    graft.functions.VectorExpressions.register(df.sparkSession)
     val bits = 63 / dims.size
     val maxV = (1L << bits) - 1
     val known = dims.forall(bounds.contains)

@@ -86,7 +86,8 @@ object Summaries {
     * (key, col) first (partial-aggregated shuffle), then count. One
     * `countDistinct` plans Expand-free, but each ADDITIONAL one makes
     * the aggregate replay the fact stream through an N+1-way Expand —
-    * measured ~1.8× on the summaries (tools/Scratch). The per-distinct
+    * measured ~1.8× on the summaries (PERFORMANCE.md, round-3
+    * optimization pass). The per-distinct
     * chains join back on the small group key (AQE broadcasts them). */
   private def distinctCount(src: DataFrame, keys: Seq[String], c: String,
                             as: String): DataFrame =

@@ -1,13 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native perceptual-hash expressions for the multimodal near-dup
+/* Native perceptual-hash expressions for the multimodal near-dup
   * family (graft.ops.MultimodalOps) — text → the 4 band ints of the
   * aHash / pHash-DCT / audio-energy fingerprint byte twins.
   *
@@ -25,19 +24,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * are bit-identical to the HOF forms (the SQL semantics each kernel
   * reproduces are documented on the kernel; the DuckDB mirrors are
   * unchanged, so the oracle gate proves the equivalence every round).
+  * `graft.GraftExtensions` binds their SQL names.
   */
-object PerceptualHashExpressions {
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("ahash_bands",
-      exprs => AhashBands(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("phash_bands",
-      exprs => PhashBands(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("audiofp_bands",
-      exprs => AudioFpBands(exprs.head), "built-in")
-  }
-}
 
 /** Common shape of the three band-hash expressions: string → the 4
   * band ints of a 64-bit perceptual hash, one static-kernel call per

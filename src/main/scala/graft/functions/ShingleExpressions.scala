@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -8,7 +7,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Native shingling + MinHash expressions for the dedup pipeline.
+/* Native shingling + MinHash expressions for the dedup pipeline.
   *
   * The declarative forms (`transform(sequence(1, size-2), i ->
   * concat(element_at(...)))` and `array_min(transform(sh, md5(...)))`)
@@ -17,24 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * functions, and the whole thing landed in ONE task (334 s) when the
   * planner put it on a join build side. These compute identical values
   * (validated against the DuckDB oracle) one document at a time in
-  * plain JVM loops.
+  * plain JVM loops. `graft.GraftExtensions` binds their SQL names.
   */
-object ShingleExpressions {
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("token_shingles",
-      exprs => TokenShingles(exprs.head, exprs.lift(1).map {
-        case e if e.foldable => e.eval().asInstanceOf[Number].intValue()
-        case other => throw new IllegalArgumentException(
-          s"token_shingles window must be a literal, got $other")
-      }.getOrElse(3)), "built-in")
-    reg.createOrReplaceTempFunction("minhash_bands",
-      exprs => MinhashBands(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("simhash_bits",
-      exprs => SimhashBits(exprs.head), "built-in")
-  }
-}
 
 /** text → 8-char SimHash bit string, one md5 PER DISTINCT TOKEN with
   * all 8 hex positions read from that single digest — replaces the 8

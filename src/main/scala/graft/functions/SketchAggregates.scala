@@ -5,7 +5,6 @@ import java.nio.charset.StandardCharsets
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
@@ -82,24 +81,6 @@ object SketchAggregates {
         s"(in-memory ObjectHashAggregate groups before the sort " +
         s"fallback), got '$raw'")
     raw
-  }
-
-  /** Register SQL-callable names on a session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("misra_gries",
-      es => MisraGriesTopK(es(0), intLit(es(1), "misra_gries(col, k)")), "built-in")
-    reg.createOrReplaceTempFunction("bloom_build",
-      es => BloomBuildAgg(es(0), intLit(es(1), "bloom_build(col, log2Bits)")), "built-in")
-    reg.createOrReplaceTempFunction("bloom_contains",
-      es => BloomMightContain(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("kmv_kmin",
-      es => KMinValues(es(0), intLit(es(1), "kmv_kmin(col, k)")), "built-in")
-    reg.createOrReplaceTempFunction("topk_edges",
-      es => TopKEdges(es(0), es(1), intLit(es(2), "topk_edges(id, score, k)")),
-      "built-in")
-    reg.createOrReplaceTempFunction("label_argmax",
-      es => LabelArgmax(es(0)), "built-in")
   }
 
   private[graft] def intLit(e: Expression, usage: String): Int = e match {

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -26,16 +25,6 @@ import graft.ops.TextOps
   * UTF8String byte-wise ops.
   */
 object TextExpressions {
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("token_stats",
-      exprs => TokenStats(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("token_fingerprint",
-      exprs => TokenFingerprint(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("rolling_chunks",
-      exprs => RollingChunks(exprs.head), "built-in")
-  }
 
   /** Must match Spark `split(trim(text), '\s+')` exactly — Spark split
     * has limit -1, which KEEPS a trailing empty token: an empty string

@@ -2,7 +2,6 @@ package graft.functions
 
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -22,17 +21,6 @@ import org.apache.spark.sql.types._
   * operator → mapPartitions.
   */
 object VectorExpressions {
-
-  /** Register SQL-callable names on a session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("long_dot",
-      exprs => LongDotProduct(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("quantize_vec",
-      exprs => QuantizeVector(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("zorder_long",
-      exprs => ZOrderLong(exprs.head), "built-in")
-  }
 
   /** Exactly Spark's `round(x)`-then-`cast(bigint)` semantics
     * (HALF_UP on the shortest decimal representation — matches the

@@ -128,13 +128,10 @@ object CurateOps {
     * real overlap). */
   private def shinglesAt(spark: SparkSession, dir: String, n: Int): DataFrame =
     if (n == 3) DedupOps.sharedShingles(spark, dir)
-    else {
-      graft.functions.ShingleExpressions.register(spark)
-        Substrates.frame(spark, dir, "curate.shingles", n)(
-        Tables.documents(spark, dir)
-          .select(col("doc_id"), expr(shingleKeysSql(n)).as("Sh"))
-          .cache())
-    }
+    else Substrates.frame(spark, dir, "curate.shingles", n)(
+      Tables.documents(spark, dir)
+        .select(col("doc_id"), expr(shingleKeysSql(n)).as("Sh"))
+        .cache())
 
   /** The per-row shingle-KEY array expression at window `n` — the one
     * definition of what a "shingle key" is, shared by [[shinglesAt]]'s
@@ -144,8 +141,8 @@ object CurateOps {
     * its band columns hash those), `xxhash64` int64 keys otherwise. A
     * consumer that hand-rolls the hashing joins bigint against string
     * on the n == 3 substrate and silently matches NOTHING — factored
-    * here so that mismatch is unwritable. Requires
-    * ShingleExpressions.register on the session. */
+    * here so that mismatch is unwritable. `token_shingles` reaches
+    * every session through [[graft.GraftExtensions]]. */
   private[graft] def shingleKeysSql(n: Int): String =
     if (n == 3) "token_shingles(text)"
     else s"transform(token_shingles(text, $n), s -> xxhash64(s))"
@@ -349,7 +346,6 @@ object CurateOps {
     * boundary bucket needs the exact ordered scan. */
   def tokenBudget(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.TextExpressions.register(spark)
     val scored = Tables.documents(spark, dir)
       .withColumn("TS", expr("token_stats(text)"))
       .select(col("doc_id"),
@@ -389,7 +385,6 @@ object CurateOps {
     * otherwise make `LastSeq` ill-defined). */
   def packSequences(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.TextExpressions.register(spark)
     val toks = Tables.documents(spark, dir)
       .select(col("source"), col("doc_id"),
         expr("token_stats(text).NTokens").as("NTokens"))
@@ -428,7 +423,6 @@ object CurateOps {
     * Scale: one narrow filter pass, no shuffle before the
     * presentation sort. */
   def sampleWeighted(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExpressions.register(spark)
     val pow48 = 281474976710656.0 // 2^48
     Tables.documents(spark, dir)
       .select(col("source"), col("doc_id"),
@@ -485,7 +479,6 @@ object CurateOps {
   def mixtureSample(spark: SparkSession, dir: String,
                     weights: Map[String, Long] = Map.empty): DataFrame = {
     require(weights.values.forall(_ > 0), "mixture weights must be positive")
-    graft.functions.TextExpressions.register(spark)
     val weightCol = weights.foldLeft(lit(1L)) {
       case (acc, (src, w)) => when(col("source") === src, w).otherwise(acc)
     }
@@ -662,7 +655,6 @@ object CurateOps {
     * All scores are exact-integer ratios, so the DuckDB oracle
     * reproduces every comparison bit-for-bit (threshold included). */
   def curate(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExpressions.register(spark)
     val scored = Tables.documents(spark, dir)
       .withColumn("TS", expr("token_stats(text)"))
       .select(col("doc_id"),

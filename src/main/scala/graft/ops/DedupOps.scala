@@ -35,7 +35,6 @@ object DedupOps {
     * expression; the declarative HOF equivalent is kept in
     * TextOps.shinglesSql and validated identical via the oracle). */
   private def docShingles(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ShingleExpressions.register(spark)
     // documentsSpread (PINNED count): the substrate under the entire
     // dedup family — an AQE one-partition collapse here would
     // serialize every shingle pass (the rule + measurement live on
@@ -128,7 +127,6 @@ object DedupOps {
     * fingerprint query and the containment self-join, and the rolling
     * hash is the most codepoint-heavy sketch pass in the engine. */
   private[graft] def docChunks(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExpressions.register(spark)
     Substrates.frame(spark, dir, "dedup.docChunks")(
       Tables.documentsSpread(spark, dir)
         .withColumn("Ch", expr("rolling_chunks(text)"))
@@ -546,7 +544,6 @@ object DedupOps {
     * foreachBatch twin (graft.streaming.DocsStream). */
   def incrementalAgainst(spark: SparkSession, newDocs: DataFrame,
                          corpusBands: DataFrame): DataFrame = {
-    graft.functions.ShingleExpressions.register(spark)
     val newSide = newDocs
       .select(col("doc_id").as("NewId"), expr("token_shingles(text)").as("ShN"))
       .withColumn("Bands", expr("minhash_bands(ShN)"))
@@ -710,7 +707,6 @@ object DedupOps {
     * admit a batch, then dedup the next batch against it). */
   def bandAppend(spark: SparkSession, dir: String, newDocs: DataFrame): String = {
     val name = bandIndexTable(spark, dir)
-    graft.functions.ShingleExpressions.register(spark)
     val batches = bandBuildLock.synchronized {
       // BATCH-LOCAL hot-bucket cooling at append time (a flood batch
       // sharing one band value must not insert a hot bucket), plus a
@@ -1016,7 +1012,6 @@ object DedupOps {
     * declarative form ran 8 interpreted HOF lambdas, re-hashing every
     * token once per position). */
   def simhash(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ShingleExpressions.register(spark)
     Tables.documentsSpread(spark, dir)
       .withColumn("Simhash", expr("simhash_bits(text)"))
       .withColumn("BucketSize", count(lit(1)).over(Window.partitionBy(col("Simhash"))).cast(IntegerType))

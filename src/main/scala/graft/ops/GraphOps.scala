@@ -302,7 +302,6 @@ object GraphOps {
   private[graft] def orientedWithBloom(e: DataFrame,
                                        deg: DataFrame): (DataFrame, Array[Byte]) = {
     val spark = e.sparkSession
-    graft.functions.SketchAggregates.register(spark)
     // edge rows carrying BOTH endpoint degrees (one node-sized join —
     // unhinted, the joinEdgesOnSrc rationale: AQE broadcasts deg)
     val withDd = e
@@ -488,7 +487,6 @@ object GraphOps {
     * at runtime, but a plan test on the joined form can't count
     * rounds. */
   private[graft] def lpaLabels(edges: DataFrame): DataFrame = {
-    graft.functions.SketchAggregates.register(edges.sparkSession)
     val deg = edges.select(col("Src"), col("OutDeg")).distinct()
     var labels = deg.select(col("Src").as("Node"), col("Src").as("Lbl"))
     for (_ <- 1 to LpaRounds) {

@@ -386,7 +386,6 @@ object MultimodalOps {
     * value-identical by the unchanged DuckDB mirror). */
   def ahashNeardup(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.PerceptualHashExpressions.register(spark)
     // documentsSpread = the PINNED-count spread (AQE's byte-based
     // coalescer would collapse an unpinned repartition(doc_id) to ONE
     // partition and serialize this per-row-expensive pass — measured
@@ -478,7 +477,6 @@ object MultimodalOps {
     * volume. */
   def phashNeardup(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.PerceptualHashExpressions.register(spark)
     // pinned spread: see ahashNeardup's AQE-coalesce note
     val base = Tables.documentsSpread(spark, dir)
       .select(col("doc_id"), expr("phash_bands(text)").as("BV"))
@@ -532,7 +530,6 @@ object MultimodalOps {
     * the pHash non-vacuous-gate discipline). */
   def audioFingerprint(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.PerceptualHashExpressions.register(spark)
     // pinned spread: see ahashNeardup's AQE-coalesce note
     val base = Tables.documentsSpread(spark, dir)
       .select(col("doc_id"), expr("audiofp_bands(text)").as("BV"))

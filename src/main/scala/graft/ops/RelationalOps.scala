@@ -362,7 +362,6 @@ object RelationalOps {
     * approximate and merge-order-dependent. Integer threshold
     * arithmetic (Cnt·100 ≥ φpct·N) keeps the filter fp-free. */
   def heavyHitters(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.SketchAggregates.register(spark)
     val sales = Transactions.cleaned(spark, dir)
       .filter(!col("IsCancelled"))
       .select(col("Country"))
@@ -412,7 +411,6 @@ object RelationalOps {
     * WholeStageCodegen stage. SketchSpec asserts the below-the-join
     * plan shape. */
   def bloomPrunedJoin(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.SketchAggregates.register(spark)
     val dimKeys = Tables.orders(spark, dir)
       .filter(col("o_orderpriority") === "1-URGENT")
       .select(col("o_orderkey"))
@@ -451,7 +449,6 @@ object RelationalOps {
     * same documented probabilistic-bound caveat as
     * `sketch_approx_stats`. */
   def kmvDistinct(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.SketchAggregates.register(spark)
     val pow48 = 281474976710656.0 // 2^48: hash prefix → (0,1) scale
     val hashes = Transactions.cleaned(spark, dir)
       .filter(!col("IsCancelled"))
@@ -660,9 +657,9 @@ object RelationalOps {
     * `percentile_disc WITHIN GROUP` sort-aggregates (each its own
     * boxed value→count map per group), and the approx sketches into
     * one `agg` — the exact gate cost 16.5 s, dwarfing the sketches it
-    * checks (measured variants in tools/Scratch). Restructured into
-    * three lean chains joined on the tiny Country key (AQE broadcasts
-    * the ≤#countries-row sides):
+    * checks (measured variants: PERFORMANCE.md, round-3 optimization
+    * pass). Restructured into three lean chains joined on the tiny
+    * Country key (AQE broadcasts the ≤#countries-row sides):
     *   1. exact+HLL distinct counts via two-level aggregation
     *      (dedup (Country, key) first — HLL is duplicate-insensitive,
     *      so the post-dedup sketch is value-identical — then count),

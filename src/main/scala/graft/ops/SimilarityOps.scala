@@ -7,7 +7,6 @@ import org.apache.spark.sql.types._
 
 import graft.Substrates
 import graft.etl.Tables
-import graft.functions.VectorExpressions
 
 /** Similarity search over the `embeddings` table (64-dim float
   * vectors): brute-force top-k cosine as the exact baseline and
@@ -200,7 +199,6 @@ object SimilarityOps {
     * unreachable afterwards). [[Substrates.invalidate]] releases it
     * explicitly. */
   private def quantized(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     // PINNED spread (the Tables.documentsSpread rule, one substrate
     // over): the cached table's partition count is what every
     // downstream MAP-SIDE pass runs at — Lloyd assignment dots,
@@ -495,7 +493,6 @@ object SimilarityOps {
                                       sampleEvery: Long = 1L,
                                       capRowsPerTask: Long = CandidateRowsPerTask,
                                       minRowsPerTask: Long = MinShuffleRowsPerTask): DataFrame = {
-    graft.functions.SketchAggregates.register(spark)
     val base = ivfIndexPath(spark, dir, nCentroids)
     val cent = spark.read.parquet(s"$base/codebook")
     val lists = spark.read.parquet(s"$base/lists")
@@ -637,7 +634,6 @@ object SimilarityOps {
     * read, the same degradation mode as the IVF lists, and a fresh
     * session reuses the index instead of re-training. */
   def pqFlatIndexPath(spark: SparkSession, dir: String): String = {
-    VectorExpressions.register(spark)
     indexDir(spark, dir, "similarity.pqFlatIndex")(ivfBuildLock.synchronized {
       val base = indexBase(spark, dir, "pqflat")
       val layoutFile = java.nio.file.Paths.get(base, "_pq_layout")
@@ -857,7 +853,6 @@ object SimilarityOps {
       // (O(n·K·vecWidth) transient spill, the round-14 disk kill in
       // its second form). The query columns rejoin by id afterwards:
       // n rows through a join instead of n·K through a sort.
-      graft.functions.SketchAggregates.register(vecs.sparkSession)
       val cidType = cent.schema("Cid").dataType
       val routes = withDist
         .select(col(idCol), col("Dist"), col("Cid"))
@@ -1149,7 +1144,6 @@ object SimilarityOps {
                 skewFactor: Double = IvfSkewFactor,
                 skewCheckEvery: Int = IvfSkewCheckEveryBatches): Array[Long] = {
     val base = ivfIndexPath(spark, dir, nCentroids)
-    VectorExpressions.register(spark)
     val routed = ivfBuildLock.synchronized {
       val cent = spark.read.parquet(s"$base/codebook")
       val q = arrivals
@@ -1382,7 +1376,6 @@ object SimilarityOps {
   def ivfPqIndexPath(spark: SparkSession, dir: String,
                      nCentroids: Int = DefaultNCentroids): String = {
     val base = ivfIndexPath(spark, dir, nCentroids)
-    VectorExpressions.register(spark)
     val layoutFile = java.nio.file.Paths.get(base, "_pq_layout")
     def built = Seq("pqcodebook", "pqcodes").forall(d =>
       java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/$d/_SUCCESS"))) &&
@@ -1563,10 +1556,6 @@ object SimilarityOps {
     * broadcast back. No corpus self-join, no window over members. */
   def outliers(spark: SparkSession, dir: String,
                nCentroids: Int = DefaultNCentroids): DataFrame = {
-    // register long_dot explicitly: this query reads the PERSISTED
-    // index without touching the quantized() memo, so on a fresh
-    // session with a pre-built index nothing else registers it
-    VectorExpressions.register(spark)
     val base = ivfIndexPath(spark, dir, nCentroids)
     val cent = spark.read.parquet(s"$base/codebook")
     val lists = spark.read.parquet(s"$base/lists")
@@ -1612,7 +1601,6 @@ object SimilarityOps {
     * (the kmeansProfile majority pattern — no window over members). */
   def medoids(spark: SparkSession, dir: String,
               nCentroids: Int = DefaultNCentroids): DataFrame = {
-    VectorExpressions.register(spark)
     val base = ivfIndexPath(spark, dir, nCentroids)
     val lists = spark.read.parquet(s"$base/lists")
     val sumVec = lists
@@ -1801,7 +1789,6 @@ object SimilarityOps {
     * [[assignHierarchical]] — the baseline the hierarchical variant is
     * measured against (HierAssignProbe / PERFORMANCE.md round 8). */
   def assignFlat(vecs: DataFrame, fineCent: DataFrame): DataFrame = {
-    VectorExpressions.register(vecs.sparkSession)
     nearestCentroids(vecs, fineCent, 1, "vec_id", "Q", "NormSq")
       .select(col("vec_id"), col("Q"), col("NormSq"), col("Cid"))
   }
@@ -1842,7 +1829,6 @@ object SimilarityOps {
     * HOFs over the quantized substrate) — no join, no shuffle except
     * the presentation sort; rows out = RpOutDims per vector. */
   def randomProjection(spark: SparkSession, dir: String): DataFrame = {
-    VectorExpressions.register(spark)
     val signsSql = RpSigns.map(_.mkString("array(", ",", ")"))
       .mkString("array(", ",", ")")
     computeSpread(spark, dir, quantized(spark, dir), col("vec_id"))
@@ -1969,7 +1955,6 @@ object SimilarityOps {
 
   def assignHierarchical(vecs: DataFrame, fineCent: DataFrame,
                          nprobe: Int = HierNProbe): DataFrame = {
-    VectorExpressions.register(vecs.sparkSession)
     val k = fineCent.count().toInt
     val coarseK = math.max(1, math.round(math.sqrt(k.toDouble)).toInt)
     // cluster the centroids: reshape (Cid, CQ, CNorm) to the corpus
@@ -2125,13 +2110,11 @@ object SimilarityOps {
 
   /** Quantize a raw (vec_id, embedding, …) arrival batch into the
     * (QId, QP, NormP) probe shape [[incrementalDedupAgainst]] takes —
-    * the adapter the streaming twin applies per microbatch. Registers
-    * the native functions on the BATCH's own session: a foreachBatch
-    * DataFrame resolves against the stream's isolated session clone,
-    * whose registry was snapshotted at stream start — registering on
-    * the outer session would be invisible to it. */
+    * the adapter the streaming twin applies per microbatch. The batch
+    * resolves against the stream's session clone, whose function
+    * registry is a copy of the outer session's, so the native
+    * functions [[graft.GraftExtensions]] installs are already there. */
   def quantizeArrivals(arrivals: DataFrame): DataFrame = {
-    VectorExpressions.register(arrivals.sparkSession)
     arrivals
       .select(col("vec_id").as("QId"), expr("quantize_vec(embedding)").as("QP"))
       .withColumn("NormP", expr("long_dot(QP, QP)"))

@@ -61,7 +61,6 @@ object TextOps {
     * (graft.functions.TokenStats) — same integers as the declarative
     * HOF form, ~20× less per-token interpretation overhead. */
   private def docsWithStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExpressions.register(spark)
     Tables.documents(spark, dir).withColumn("TS", expr("token_stats(text)"))
   }
 
@@ -173,7 +172,6 @@ object TextOps {
     * one doc aggregate, a zero-fill left join. No pair join, no
     * super-linear term. */
   def novelty(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.ShingleExpressions.register(spark)
     val sh = Tables.documentsSpread(spark, dir)
       .select(col("doc_id"), explode(expr("token_shingles(text, 3)")).as("Sh"))
     val first = sh.groupBy(col("Sh")).agg(min(col("doc_id")).as("FirstDoc"))
@@ -409,7 +407,6 @@ object TextOps {
     * low-cardinality lang key. */
   def corpusStats(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.TextExpressions.register(spark)
     val scored = Tables.documents(spark, dir)
       .withColumn("TS", expr("token_stats(text)"))
       .select(col("lang"),
@@ -594,7 +591,6 @@ object TextOps {
     * it per-batch composable: bottom-k of a union of bottom-ks IS the
     * bottom-k of the union (the streaming twin's merge step). */
   private[graft] def kmvSketchOf(rows: DataFrame): DataFrame = {
-    graft.functions.SketchAggregates.register(rows.sparkSession)
     rows.groupBy(col("source"))
       .agg(expr(s"kmv_kmin(V, ${graft.ops.RelationalOps.KmvK})").as("Ks"))
   }
@@ -701,7 +697,6 @@ object TextOps {
     * whole-corpus exact certificates. */
   private[graft] def kmvDifferencePairs(hs: DataFrame): DataFrame = {
     val spark = hs.sparkSession
-    graft.functions.SketchAggregates.register(spark)
     val k = graft.ops.RelationalOps.KmvK
     val srcs = hs.groupBy(col("source"))
       .agg(count(lit(1)).as("N"), expr(s"kmv_kmin(V, $k)").as("Ks"))
@@ -735,7 +730,6 @@ object TextOps {
     * check the estimator against hand-computed order statistics). */
   private[graft] def kmvOverlapPairs(hs: DataFrame): DataFrame = {
     val spark = hs.sparkSession
-    graft.functions.SketchAggregates.register(spark)
     val k = graft.ops.RelationalOps.KmvK
     val srcs = hs.groupBy(col("source"))
       .agg(count(lit(1)).as("N"), expr(s"kmv_kmin(V, $k)").as("Ks"))
@@ -1050,7 +1044,6 @@ object TextOps {
     * at 500k docs under a 4 GiB driver); streaming passes are the
     * safe shape. */
   private def langidModel(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.functions.TextExpressions.register(spark)
     Substrates[(DataFrame, DataFrame)](spark, dir, "text.langidModel") { case (grid, totals) =>
       grid.unpersist(false); totals.unpersist(false)
     } {
@@ -1087,7 +1080,6 @@ object TextOps {
     * identical to counting raw exploded rows downstream, so every
     * consumer's arithmetic (and its oracle hash) is unchanged. */
   def docPostings(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExpressions.register(spark)
     Substrates.frame(spark, dir, "text.docPostings") {
       Tables.documentsSpread(spark, dir)
         .withColumn("TS", expr("token_stats(text)"))
@@ -1104,7 +1096,6 @@ object TextOps {
     * toward N and avgdl exactly as the original per-query aggregate
     * did (they have no postings rows). Trivially cached. */
   def docStats(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExpressions.register(spark)
     Substrates.frame(spark, dir, "text.docStats") {
       Tables.documents(spark, dir)
         .withColumn("TS", expr("token_stats(text)"))
@@ -1730,7 +1721,6 @@ object TextOps {
     * the sorted distinct token set) and a min-hash (the 1-permutation
     * MinHash primitive). Both portable to any engine with md5. */
   def fingerprint(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExpressions.register(spark)
     Tables.documentsSpread(spark, dir)
       .withColumn("TF", expr("token_fingerprint(text)"))
       .select(

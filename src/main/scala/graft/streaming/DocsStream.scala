@@ -64,7 +64,6 @@ object DocsStream {
     * the one-shot staging makes the final trigger's table equal the
     * batch answer. The driver-side collect is |sources| rows. */
   def driftChisqStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextExpressions.register(spark)
     val streamDir = stageDocsOnce(dir)
     try {
       val docsTs = readDocsStream(spark, streamDir.toString)
@@ -99,7 +98,6 @@ object DocsStream {
   def decontaminateBatch(spark: SparkSession, docs: DataFrame,
                          evalSh: DataFrame,
                          n: Int = CurateOps.DecontaminationShingleN): DataFrame = {
-    graft.functions.ShingleExpressions.register(spark)
     docs
       .filter(CurateOps.splitOf(col("doc_id")) === "train")
       // the ONE shingle-key definition (CurateOps.shingleKeysSql):

@@ -57,8 +57,8 @@ object VecsStream {
     * what was admitted, one microbatch at a time, without a rebuild.
     *
     * The kernel runs on the BATCH's session (the stream's isolated
-    * clone — registrations and memo entries must land there, the
-    * standard foreachBatch seam in this repo); all index mutations
+    * clone — memo entries must land there, the standard foreachBatch
+    * seam in this repo); all index mutations
     * serialize on ivfBuildLock, and microbatches arrive sequentially,
     * so a stream of appends composes into exactly the same index as
     * one batch append of the union (StreamingSpec). */

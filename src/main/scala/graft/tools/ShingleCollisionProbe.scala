@@ -24,7 +24,6 @@ object ShingleCollisionProbe {
     val n = if (args.length > 1) args(1).toInt
       else graft.ops.CurateOps.DecontaminationShingleN
     val spark = graft.GraftSession.local()
-    graft.functions.ShingleExpressions.register(spark)
     val sh = graft.etl.Tables.documents(spark, dir)
       .select(explode(expr(s"token_shingles(text, $n)")).as("S"))
     val t0 = System.nanoTime()

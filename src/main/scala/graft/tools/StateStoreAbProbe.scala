@@ -9,18 +9,20 @@ package graft.tools
   * at this state size — the point of the probe is the committed
   * number either way, so the block stops being re-examined.
   *
-  * usage: runMain graft.tools.StateStoreAbProbe <sfDir> <query>[,...] [reps]
+  * usage: runMain graft.tools.StateStoreAbProbe <sfDir> <query>[,...] [reps] [reverse]
   */
 object StateStoreAbProbe {
   def main(args: Array[String]): Unit = {
-    if (args.length < 2) {
+    // `reverse` is a flag, not a positional arg
+    val positional = args.filterNot(_ == "reverse")
+    if (positional.length < 2) {
       System.err.println(
-        "usage: runMain graft.tools.StateStoreAbProbe <sfDir> <query>[,...] [reps]")
+        "usage: runMain graft.tools.StateStoreAbProbe <sfDir> <query>[,...] [reps] [reverse]")
       sys.exit(2)
     }
-    val sfDir = args(0)
-    val names = args(1).split(",").toSeq
-    val reps = if (args.length > 2) args(2).toInt else 3
+    val sfDir = positional(0)
+    val names = positional(1).split(",").toSeq
+    val reps = if (positional.length > 2) positional(2).toInt else 3
     // both orders must be run and compared: the second arm rides a
     // JIT-warm JVM, which alone is worth ~10-20% on these one-shot
     // queries (pass `reverse` for the rocksdb-first leg)

@@ -1,24 +1,22 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftExtensions must make every native function SQL-callable on a
-  * fresh session with no per-module register calls, with values
-  * identical to the register() path. */
-class ExtensionsSpec extends AnyFunSuite {
+/** GraftExtensions, installed by GraftSession.builder, is the only way a
+  * native function reaches a session: every function must be
+  * SQL-callable on every session kind with no register call. */
+class ExtensionsSpec extends SparkSpec {
 
   test("extensions-installed session evaluates all graft functions") {
-    // getOrCreate returns any existing default session (ignoring
-    // extensions), so clear the registries first; the builder then
-    // creates a FRESH session with extensions applied, reusing the
-    // JVM's SparkContext. Never stop() here — that would kill the
-    // context shared with the other suites.
+    // getOrCreate returns any existing default session, so clear the
+    // registries first; the builder then creates a FRESH session whose
+    // state is built with the extensions, reusing the JVM's
+    // SparkContext. Never stop() here — that would kill the context
+    // shared with the other suites.
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     val spark = GraftSession.builder(defaultCpus = 2)
       .appName("graft-extensions-spec")
-      .withExtensions(new GraftExtensions)
       .getOrCreate()
     try {
       val r = spark.sql(
@@ -64,7 +62,6 @@ class ExtensionsSpec extends AnyFunSuite {
       // a Janino compile failure in the generated code must THROW, not
       // silently degrade to interpreted execution
       .config("spark.sql.codegen.fallback", "false")
-      .withExtensions(new GraftExtensions)
       .getOrCreate()
     try {
       // non-constant inputs so ConstantFolding cannot pre-evaluate the
@@ -116,60 +113,50 @@ class ExtensionsSpec extends AnyFunSuite {
     }
   }
 
-  test("Verify.registerAll covers every GraftExtensions function (registration-path parity)") {
-    // Verify/Bench hoist registration before their concurrent pools;
-    // a function injected by the extensions installer but missing from
-    // registerAll would re-introduce the mid-analysis registration
-    // race this parity check exists to prevent.
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = GraftSession.builder(defaultCpus = 2)
-      .appName("graft-registerall-parity")
-      .getOrCreate()
-    try {
-      Verify.registerAll(spark)
-      val missing = (new GraftExtensions).functionNames
-        .filterNot(spark.catalog.functionExists)
-      assert(missing.isEmpty,
-        s"registerAll does not register: ${missing.mkString(", ")}")
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
+  test("every GraftExtensions function resolves on the session, its siblings and foreachBatch clones") {
+    // no register call anywhere: the builder installs the extensions,
+    // a newSession() sibling builds its registry from them and a
+    // foreachBatch clone copies its parent's
+    val names = (new GraftExtensions).functionNames
+    def missing(s: SparkSession): Seq[String] = names.filterNot(s.catalog.functionExists)
+    assert(missing(spark).isEmpty, s"session lacks: ${missing(spark).mkString(", ")}")
+    val sibling = spark.newSession()
+    assert(missing(sibling).isEmpty, s"sibling lacks: ${missing(sibling).mkString(", ")}")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ext_stream")
+    import spark.implicits._
+    Seq("a b c d").toDF("text").write.mode("overwrite").parquet(s"$dir/in")
+    val seen = collection.mutable.ArrayBuffer.empty[(Boolean, Seq[String])]
+    val q = spark.readStream.schema("text STRING").parquet(s"$dir/in")
+      .writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        val s = batch.sparkSession
+        seen.synchronized { seen += ((s ne spark) -> missing(s)) }
+        ()
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(seen.nonEmpty, "no microbatch ran — the clone check is vacuous")
+    seen.foreach { case (isClone, lacks) =>
+      assert(isClone, "the batch ran on the outer session, not a clone")
+      assert(lacks.isEmpty, s"foreachBatch clone lacks: ${lacks.mkString(", ")}")
     }
+    // static floor: the functions that once skipped the installer stay
+    // pinned by name
+    val floor = Set("label_argmax", "topk_edges", "kmv_kmin", "bloom_build")
+    assert((floor -- names).isEmpty, s"GraftExtensions lost: ${(floor -- names).mkString(", ")}")
   }
 
-  test("GraftExtensions covers every registerAll function (reverse parity — r16 advice #2)") {
-    // the forward check above proves registerAll ⊇ extensions; without
-    // THIS direction a new SketchAggregates registration can silently
-    // skip the installer (label_argmax and topk_edges did exactly that
-    // in r16), leaving cluster-deploy extensions-only sessions unable
-    // to resolve the function in SQL text.
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = GraftSession.builder(defaultCpus = 2)
-      .appName("graft-extensions-reverse-parity")
-      .getOrCreate()
-    try {
-      import scala.jdk.CollectionConverters._
-      def tempFns: Set[String] = spark.catalog.listFunctions()
-        .collectAsList().asScala.filter(_.isTemporary).map(_.name).toSet
-      val before = tempFns
-      Verify.registerAll(spark)
-      // temp-function diff: empty when a shared JVM session was already
-      // registered (getOrCreate reuse) — the static floor below keeps
-      // the test non-vacuous in that case
-      val registered = tempFns -- before
-      val injected = (new GraftExtensions).functionNames.toSet
-      val missing = registered -- injected
-      assert(missing.isEmpty,
-        s"GraftExtensions does not inject: ${missing.mkString(", ")}")
-      // static floor: the r16 escapees stay pinned by name
-      val floor = Set("label_argmax", "topk_edges", "kmv_kmin", "bloom_build")
-      assert((floor -- injected).isEmpty,
-        s"GraftExtensions lost: ${(floor -- injected).mkString(", ")}")
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
+  test("token_shingles takes an optional literal window, 3 by default") {
+    val r = spark.sql(
+      "SELECT token_shingles('a b c d', 2) AS w2, token_shingles('a b c d') AS w3").head()
+    assert(r.getAs[Seq[String]]("w2") === Seq("a b", "b c", "c d"))
+    assert(r.getAs[Seq[String]]("w3") === Seq("a b c", "b c d"))
+    val e = intercept[Exception] {
+      spark.range(2).selectExpr("CAST(id AS STRING) AS text", "CAST(id AS INT) AS id")
+        .selectExpr("token_shingles(text, id)")
     }
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage))
+    assert(messages.exists(_.contains("token_shingles window must be a literal")), e.toString)
   }
 }

@@ -47,12 +47,12 @@ class IndexMaintenanceSpec extends SparkSpec {
     val expected = Files.readString(fp)
     // window 1: codebook+lists committed, crash before the fingerprint
     Files.delete(fp)
-    val s2 = spark.newSession(); GraftSession.registerAll(s2)
+    val s2 = spark.newSession()
     assert(SimilarityOps.ivfIndexPath(s2, dir) === base)
     assert(Files.readString(fp) === expected) // rebuilt + re-fingerprinted
     // window 2: crash mid lists write (no job commit marker)
     Files.delete(Paths.get(base, "lists", "_SUCCESS"))
-    val s3 = spark.newSession(); GraftSession.registerAll(s3)
+    val s3 = spark.newSession()
     assert(SimilarityOps.ivfIndexPath(s3, dir) === base)
     assert(Files.exists(Paths.get(base, "lists", "_SUCCESS")))
     assert(Files.readString(fp) === expected)

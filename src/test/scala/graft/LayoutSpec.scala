@@ -16,7 +16,6 @@ import graft.etl.{Load, Tables}
 class LayoutSpec extends SparkSpec {
 
   test("zorder_long interleaves bits (kernel truth table)") {
-    graft.functions.VectorExpressions.register(spark)
     import spark.implicits._
     // n=2: bit b of dim j lands at 2b+j
     val got = Seq((1L, 0L), (0L, 1L), (3L, 3L), (2L, 1L))
@@ -103,7 +102,6 @@ class LayoutSpec extends SparkSpec {
   }
 
   test("zorder_long and writeZOrdered fail loudly on degenerate inputs") {
-    graft.functions.VectorExpressions.register(spark)
     import spark.implicits._
     // empty array: defined as the curve origin, not a crash
     assert(Seq(1).toDF("x")

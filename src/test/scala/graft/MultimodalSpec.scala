@@ -287,7 +287,6 @@ class MultimodalSpec extends SparkSpec {
     // edge cases the corpus never exercises (empty text, non-ASCII
     // codepoints, texts shorter than the sample count)
     import org.apache.spark.sql.functions.{col, expr}
-    graft.functions.PerceptualHashExpressions.register(spark)
     def hofSamples(k: Int) =
       s"transform(sequence(0, ${k - 1}), i -> ascii(substr(text, CAST((CAST(i AS BIGINT) * length(text)) div $k AS INT) + 1, 1)))"
     val cl = MultimodalOps.PhashDctBasis.map(v => s"${v}L").mkString("array(", ", ", ")")

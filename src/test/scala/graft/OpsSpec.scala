@@ -362,7 +362,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("similarity: MMR selection equals a driver-run of the same greedy rounds") {
-    graft.functions.VectorExpressions.register(spark)
     // candidate pool + quantized vectors, exactly as the engine sees them
     val cand = SimilarityOps.topk(spark, sfDir, SimilarityOps.MmrCandK).collect()
       .groupBy(_.getAs[Long]("QId"))
@@ -616,7 +615,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("text: rolling chunks equal a driver reference implementation on every doc") {
-    graft.functions.TextExpressions.register(spark)
     import graft.ops.{TextOps => T}
     def refChunks(text: String): Seq[String] = {
       val cps = text.codePoints().toArray
@@ -645,7 +643,6 @@ class OpsSpec extends SparkSpec {
   }
 
   test("dedup: content-defined chunks survive a prepended edit (the property position-based chunking lacks)") {
-    graft.functions.TextExpressions.register(spark)
     import spark.implicits._
     // pick a corpus doc with enough chunks that the claim has teeth
     val t = graft.etl.Tables.documents(spark, sfDir)
@@ -742,7 +739,6 @@ class OpsSpec extends SparkSpec {
     // cross-pair accuracy at H=16 is probabilistic and not asserted)
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, explode, expr, md5, min, concat_ws, lit}
-    graft.functions.ShingleExpressions.register(spark)
     val sh = Seq((1L, "a b c d e"), (2L, "a b c d e"))
       .toDF("doc_id", "text")
       .select(col("doc_id"), explode(expr("token_shingles(text)")).as("Shingle"))

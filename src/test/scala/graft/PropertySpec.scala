@@ -133,7 +133,6 @@ class PropertySpec extends SparkSpec {
     // contiguous curve ranges are unions of aligned boxes and each
     // output file's footer stats stay tight in all dimensions.
     import org.apache.spark.sql.functions.col
-    graft.functions.VectorExpressions.register(spark)
     val n = 2
     val bits = 63 / n // 31 bits per dim
     val pairGen = for {

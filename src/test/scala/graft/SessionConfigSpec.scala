@@ -12,7 +12,9 @@ import scala.jdk.CollectionConverters._
   * cannot forbid calling Spark's public builder, so this spec scans
   * the main source tree instead — the same enforcement shape as the
   * shared shingle-hash seam (`shingleHashCol`): make the wrong
-  * version UNWRITABLE, not merely discouraged. */
+  * version UNWRITABLE, not merely discouraged. The same scan keeps
+  * [[GraftExtensions]] the one place a native function is
+  * registered. */
 class SessionConfigSpec extends SparkSpec {
 
   private def mainSources: Seq[Path] = {
@@ -33,6 +35,21 @@ class SessionConfigSpec extends SparkSpec {
       s"session builders outside GraftSession (engine confs WILL be " +
         s"silently missed there — use GraftSession.local/builder): " +
         offenders.mkString(", "))
+  }
+
+  test("GraftExtensions is the ONLY native-function registration site under src/main") {
+    // a per-call registration replaces a function while other threads
+    // may be analyzing plans; the builder's extensions already give
+    // every session, sibling and foreachBatch clone all the functions
+    val forbidden = Seq("createOrReplaceTempFunction", "registerFunction", ".register(spark")
+    val offenders = mainSources
+      .filterNot(_.getFileName.toString == "GraftExtensions.scala")
+      .flatMap { p =>
+        val src = new String(Files.readAllBytes(p), "UTF-8")
+        forbidden.filter(src.contains).map(f => s"$p: $f")
+      }
+    assert(offenders.isEmpty,
+      s"function registration outside GraftExtensions: ${offenders.mkString(", ")}")
   }
 
   test("the shared session carries every engine-wide conf GraftSession promises") {

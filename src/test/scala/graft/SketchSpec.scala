@@ -65,7 +65,6 @@ class SketchSpec extends SparkSpec {
   }
 
   test("misra_gries: MG guarantees hold under compaction and arbitrary merge order") {
-    graft.functions.SketchAggregates.register(spark)
     val sales = Transactions.cleaned(spark, sfDir)
       .filter(!col("IsCancelled"))
       .select(col("Country"))
@@ -117,7 +116,6 @@ class SketchSpec extends SparkSpec {
   }
 
   test("kmv_kmin: keeps exactly the k smallest distinct values under any partitioning") {
-    graft.functions.SketchAggregates.register(spark)
     import spark.implicits._
     // values with planted duplicates — the sketch must dedup
     val vals = (1L to 5000L).map(i => (i * 2654435761L) % 100000L)
@@ -224,7 +222,6 @@ class SketchSpec extends SparkSpec {
 
   test("topk_edges: bit-identical to the row_number window it replaces, ties included") {
     import spark.implicits._
-    graft.functions.SketchAggregates.register(spark)
     // deterministic synthetic scores with PLANTED ties: score has only
     // 17 distinct values over 400 (group, id) rows, so most groups
     // exercise the id-ascending tie-break; a few groups have fewer
@@ -253,7 +250,6 @@ class SketchSpec extends SparkSpec {
 
   test("topk_edges: signed zeros rank as ONE value; NaN is dropped on every path") {
     import spark.implicits._
-    graft.functions.SketchAggregates.register(spark)
     // -0.0 vs 0.0: Spark's sort normalizes float zeros, so the window
     // form ranks them purely by the id tie-break — a raw Double.compare
     // TreeSet order would put 0.0 ahead of -0.0 and break bit-identity

@@ -822,7 +822,6 @@ class StreamingSpec extends SparkSpec {
 
   test("drift histogram state accumulates across TWO microbatches to the batch card") {
     import java.nio.file.Files
-    graft.functions.TextExpressions.register(spark)
     val docs = graft.etl.Tables.documents(spark, sfDir)
     val watch = Files.createTempDirectory("graft_drift_watch")
     try {

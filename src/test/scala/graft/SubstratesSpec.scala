@@ -62,7 +62,6 @@ class SubstratesSpec extends SparkSpec {
     val idsB = newRdds(postingsB.count())
     assert(idsB.nonEmpty)
     val sibling = spark.newSession()
-    GraftSession.registerAll(sibling)
     val statsSibling = TextOps.docStats(sibling, dirA)
 
     val built = Seq(
