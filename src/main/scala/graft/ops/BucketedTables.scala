@@ -76,11 +76,14 @@ private[graft] object BucketedTables {
     Paths.get(spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"),
       name.toLowerCase(java.util.Locale.ROOT))
 
+  /** Delete `p` and everything under it, if it exists. Errors are
+    * thrown: the index drops rely on the files being gone. */
   def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
       import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(Files.deleteIfExists(_))
+      val walk = Files.walk(p) // must close: holds dir handles
+      try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
+      finally walk.close()
     }
 
   /** DROP the catalog entry AND its files (managed tables drop files

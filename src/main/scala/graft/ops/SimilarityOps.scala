@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.nio.file.Paths
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -7,6 +9,7 @@ import org.apache.spark.sql.types._
 
 import graft.Substrates
 import graft.etl.Tables
+import graft.ops.BucketedTables.deleteRecursively
 
 /** Similarity search over the `embeddings` table (64-dim float
   * vectors): brute-force top-k cosine as the exact baseline and
@@ -244,15 +247,6 @@ object SimilarityOps {
     if (spreadPartitions(spark, embeddingsCount(spark, dir)) < dp)
       df.repartition(dp, key)
     else df
-  }
-
-  private def deleteRecursively(path: String): Unit = {
-    val root = java.nio.file.Paths.get(path)
-    if (java.nio.file.Files.exists(root)) {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(root).iterator().asScala.toSeq.reverseIterator
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
   }
 
   /** The banded LSH signature table, memoized + `.cache()`d per
@@ -645,7 +639,7 @@ object SimilarityOps {
       val fresh = java.nio.file.Files.exists(fpFile) &&
         java.nio.file.Files.readString(fpFile) == corpusFingerprint(dir)
       if (!(complete && fresh)) {
-        deleteRecursively(base)
+        deleteRecursively(Paths.get(base))
         val all = quantized(spark, dir)
         pqCodebook(all).write.mode("overwrite").parquet(s"$base/pqcodebook")
         all.select(col("vec_id"), col("NormSq"))
@@ -993,7 +987,7 @@ object SimilarityOps {
     // OPTIONAL layers built lazily on top of the index (the PQ codes
     // of [[ivfPqIndexPath]]) survive a corpus-change rebuild and be
     // silently probed stale against the new codebook/lists
-    deleteRecursively(base)
+    deleteRecursively(Paths.get(base))
     kmeansCentroids(all, nCentroids)
       .write.mode("overwrite").parquet(s"$base/codebook")
     // assignment against the PERSISTED codebook (read it back rather
@@ -1073,7 +1067,7 @@ object SimilarityOps {
   private def indexDir(spark: SparkSession, dir: String, kind: String,
                        params: Any*)(base: => String): String =
     Substrates[String](spark, dir, kind, params: _*)(b =>
-      ivfBuildLock.synchronized(deleteRecursively(b)))(base)
+      ivfBuildLock.synchronized(deleteRecursively(Paths.get(b))))(base)
 
   /** Recluster when the largest inverted list exceeds this multiple
     * of the mean list size after an append. */
@@ -1217,12 +1211,13 @@ object SimilarityOps {
     assignAuto(rows, spark.read.parquet(s"$base/codebook_next"))
       .write.mode("overwrite").partitionBy("Cid").parquet(s"$base/lists_next")
     Seq("codebook", "lists").foreach { d =>
-      deleteRecursively(s"$base/$d")
+      deleteRecursively(Paths.get(s"$base/$d"))
       java.nio.file.Files.move(
         java.nio.file.Paths.get(s"$base/${d}_next"),
         java.nio.file.Paths.get(s"$base/$d"))
     }
-    Seq("pqcodebook", "pqcodes").foreach(d => deleteRecursively(s"$base/$d"))
+    Seq("pqcodebook", "pqcodes").foreach(d =>
+      deleteRecursively(Paths.get(s"$base/$d")))
     dropListsTwin(spark, dir, nCentroids)
   }
 

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.IntegerType
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.etl.Tables
 import graft.ops.{CurateOps, DedupOps}
@@ -21,6 +21,11 @@ import graft.ops.{CurateOps, DedupOps}
   * (no watermark can evict by doc_id), which at firehose scale is a
   * slow OOM. Each doc lives in exactly one microbatch, so per-batch
   * results compose into exactly the batch answer (StreamingSpec).
+  *
+  * The driver-gate one-shots (`driftChisqStreamQuery`,
+  * `decontaminateStreamQuery` and the two sketch twins) keep only
+  * their kernel and presentation here; staging, sink names, draining,
+  * read-back and cleanup are [[OneShot]]'s.
   */
 object DocsStream {
 
@@ -29,28 +34,6 @@ object DocsStream {
     spark.readStream
       .schema(Tables.documentsSchema)
       .parquet(dir)
-
-  private val onceCounter = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Stage the documents parquet (one compacted file OR a dir of part
-    * files) into a fresh temp dir so every staged file is visible
-    * before `start()` — the parquet file source with no
-    * maxFilesPerTrigger then takes the whole corpus in ONE batch.
-    * Caller deletes the returned dir. */
-  private[streaming] def stageDocsOnce(dir: String): java.nio.file.Path = {
-    import java.nio.file.{Files, Path, Paths}
-    val streamDir = Files.createTempDirectory("graft_docs_once")
-    def stage(src: Path, dst: Path): Unit =
-      if (Files.isDirectory(src)) {
-        Files.createDirectories(dst)
-        val listing = Files.list(src) // must close: holds a dir handle
-        try listing.forEach(p => stage(p, dst.resolve(p.getFileName)))
-        finally listing.close()
-      } else Files.copy(src, dst)
-    stage(Paths.get(s"$dir/documents.parquet"),
-      streamDir.resolve("documents.parquet"))
-    streamDir
-  }
 
   /** Streaming twin of `text_drift_chisq`: documents stream in and a
     * SOURCE-KEYED streaming aggregation maintains each source's
@@ -63,27 +46,12 @@ object DocsStream {
     * card: in production each trigger publishes a fresh drift table;
     * the one-shot staging makes the final trigger's table equal the
     * batch answer. The driver-side collect is |sources| rows. */
-  def driftChisqStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val streamDir = stageDocsOnce(dir)
-    try {
-      val docsTs = readDocsStream(spark, streamDir.toString)
-        .withColumn("TS", expr("token_stats(text)"))
-      val perSource = graft.ops.TextOps.driftPerSource(docsTs)
-      val name = s"text_drift_once_${onceCounter.incrementAndGet()}"
-      val q = perSource.writeStream
-        .outputMode("complete").format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-      val schema = spark.table(name).schema
-      val rows = spark.table(name).collect() // |sources| rows
-      spark.catalog.dropTempView(name)
-      val perS = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows.toSeq).asJava),
-        schema)
-      graft.ops.TextOps.driftFromPerSource(perS)
-    } finally graft.ops.BucketedTables.deleteRecursively(streamDir)
-  }
+  def driftChisqStreamQuery(spark: SparkSession, dir: String): DataFrame =
+    graft.ops.TextOps.driftFromPerSource(
+      OneShot.memoryOnce(s"$dir/documents.parquet", "text_drift_once",
+          OutputMode.Complete())(d =>
+        graft.ops.TextOps.driftPerSource(readDocsStream(spark, d)
+          .withColumn("TS", expr("token_stats(text)")))))
 
   /** The per-batch decontamination kernel: per-train-doc distinct
     * eval-doc/shingle collision counts against the static `(Shingle,
@@ -142,40 +110,24 @@ object DocsStream {
     * contaminated-rows-sized (a production sink upserts hits to a
     * table and the shaping is a view over it). */
   def decontaminateStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    val streamDir = stageDocsOnce(dir)
-    try {
-      val evalSh = CurateOps.evalShingles(spark, dir)
-      val buf = collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-      val batches = new java.util.concurrent.atomic.AtomicInteger(0)
-      val q = runDecontaminate(spark,
-        readDocsStream(spark, streamDir.toString), evalSh) { out =>
-        val rows = out.collect()
-        if (rows.nonEmpty) batches.incrementAndGet()
-        buf.synchronized { buf ++= rows }
-      }
-      q.processAllAvailable()
-      q.stop()
-      // countDistinct rows are NOT composable across batches by plain
-      // union (a doc split over two triggers would double-report) —
-      // the one-shot staging above guarantees a single batch; assert
-      // it rather than silently fan out in decontaminateShape
-      require(batches.get() <= 1,
-        s"decontaminateStreamQuery expected one-shot staging to yield one " +
-          s"microbatch with hits, saw ${batches.get()} — per-batch distinct " +
-          "counts do not compose by union")
-      val hitSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("NEvalDocs", IntegerType),
-        org.apache.spark.sql.types.StructField("NSharedShingles", IntegerType)))
-      val hits = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(buf.toSeq).asJava),
-        hitSchema)
-      CurateOps.decontaminateShape(spark, dir, hits)
-    } finally {
-      graft.ops.BucketedTables.deleteRecursively(streamDir)
-    }
+    val evalSh = CurateOps.evalShingles(spark, dir)
+    val batches = OneShot(once => OneShot.batchRows(runDecontaminate(spark,
+      readDocsStream(spark, once.stage(s"$dir/documents.parquet", "docs")), evalSh)(_)))
+    // countDistinct rows are NOT composable across batches by plain
+    // union (a doc split over two triggers would double-report) —
+    // the one-shot staging above guarantees a single batch; assert
+    // it rather than silently fan out in decontaminateShape
+    val withHits = batches.count(_.nonEmpty)
+    require(withHits <= 1,
+      s"decontaminateStreamQuery expected one-shot staging to yield one " +
+        s"microbatch with hits, saw $withHits — per-batch distinct " +
+        "counts do not compose by union")
+    val hitSchema = StructType(Seq(
+      StructField("doc_id", LongType),
+      StructField("NEvalDocs", IntegerType),
+      StructField("NSharedShingles", IntegerType)))
+    CurateOps.decontaminateShape(spark, dir,
+      OneShot.frame(spark, batches.flatten, hitSchema))
   }
 
   /** Drive the incremental-dedup kernel (DedupOps.incrementalAgainst —
@@ -264,9 +216,7 @@ object DocsStream {
     latestSketchGeneration(spark, tablePath) match {
       case Some((_, genPath)) =>
         spark.read.schema(sketchTableSchema).parquet(genPath)
-      case None => spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        sketchTableSchema)
+      case None => OneShot.frame(spark, Nil, sketchTableSchema)
     }
 
   /** Publish one new generation of the sketch table ATOMICALLY
@@ -352,11 +302,7 @@ object DocsStream {
         val merged = graft.ops.TextOps.kmvSketchOf(
           prior.unionByName(partials)
             .select(col("source"), explode(col("Ks")).as("V")))
-        val pinned = spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](
-            scala.jdk.CollectionConverters.SeqHasAsJava(
-              merged.collect().toSeq).asJava),
-          sketchTableSchema)
+        val pinned = OneShot.frame(spark, merged.collect().toSeq, sketchTableSchema)
         writeSketchGeneration(spark, pinned, tablePath)
         publish(batchId,
           graft.ops.TextOps.kmvPairEstimates(pinned)
@@ -399,21 +345,11 @@ object DocsStream {
     * partials, merge by re-sketching the union (exact — the KMV
     * composability property). Shared by both sketch stream twins. */
   private def mergedSourceSketchesOnce(spark: SparkSession, dir: String): DataFrame = {
-    val streamDir = stageDocsOnce(dir)
-    try {
-      val buf = collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-      val q = runSourceSketch(spark, readDocsStream(spark, streamDir.toString)) {
-        out => val rows = out.collect(); buf.synchronized { buf ++= rows }
-      }
-      q.processAllAvailable()
-      q.stop()
-      val partials = spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(buf.toSeq).asJava),
-        sketchTableSchema)
-      graft.ops.TextOps.kmvSketchOf(
-        partials.select(col("source"), explode(col("Ks")).as("V")))
-    } finally graft.ops.BucketedTables.deleteRecursively(streamDir)
+    val batches = OneShot(once => OneShot.batchRows(runSourceSketch(spark,
+      readDocsStream(spark, once.stage(s"$dir/documents.parquet", "docs")))(_)))
+    graft.ops.TextOps.kmvSketchOf(
+      OneShot.frame(spark, batches.flatten, sketchTableSchema)
+        .select(col("source"), explode(col("Ks")).as("V")))
   }
 
   /** Streaming INDEX MAINTENANCE, text side — the mirror of

@@ -13,7 +13,8 @@ import graft.etl.Tables
   *
   * The batch queries in graft.ops.EventsOps define the semantics; these
   * run the same logic incrementally. Local tests drive them from the
-  * events parquet with a memory sink + `processAllAvailable()`.
+  * events parquet; the driver-gate one-shots below run under
+  * [[OneShot]].
   *
   * Scale: state is partitioned by group key across executors
   * (HDFS/RocksDB-backed state store in production); the watermark
@@ -359,46 +360,22 @@ object EventsStream {
         (unix_micros(col("cts")) - unix_micros(col("vts"))).as("LagUs"))
   }
 
-  /** Run the hourly aggregation over the parquet events as a stream
-    * into a memory sink; returns the completed result table. Used by
-    * tests and as a library entry point for local verification. */
-  def runHourlyOnce(spark: SparkSession, dir: String, queryName: String = "events_hourly_stream"): DataFrame = {
-    val q = hourlyCounts(readEventsStream(spark, dir))
-      .writeStream.outputMode(OutputMode.Update())
-      .format("memory").queryName(queryName)
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    spark.table(queryName)
-  }
+  /** Run the hourly aggregation over the parquet events in `dir` as a
+    * stream into a memory sink; returns the completed result table.
+    * Used by tests and as a library entry point for local
+    * verification. */
+  def runHourlyOnce(spark: SparkSession, dir: String,
+                    queryName: String = "events_hourly_stream"): DataFrame =
+    OneShot.memorySink(hourlyCounts(readEventsStream(spark, dir)),
+      OutputMode.Update(), queryName)
 
   // ---- driver-gate one-shot twins ------------------------------------
   // These run the REAL streaming operators (file source → watermark →
-  // memory sink) over the same parquet the batch queries read, shaped
-  // to hash-match the BATCH oracle SQL — so the driver's correctness
-  // gate now exercises the streaming engine, not just the specs.
-
-  /** Unique sink names: Verify runs queries concurrently and Bench
-    * re-runs each one — a shared memory-sink name would collide. */
-  private val onceCounter = new java.util.concurrent.atomic.AtomicLong()
-
-  /** Sink dirs whose returned frames read them LAZILY (so they cannot
-    * be deleted inside the query) are registered here and reclaimed by
-    * one JVM shutdown hook — without this, every sessionWindows
-    * one-shot left a corpus-linear parquet directory in /tmp for the
-    * life of the MACHINE; the hook bounds the residue to the life of
-    * the process (the caller may hold the frame until then). */
-  private val pendingSinkDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val sinkDirCleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var p = pendingSinkDirs.poll()
-      while (p != null) { deleteRecursively(p); p = pendingSinkDirs.poll() }
-    }, "graft-sink-dir-cleanup"))
-  private def registerSinkDirForCleanup(p: java.nio.file.Path): Unit = {
-    sinkDirCleanupHook
-    pendingSinkDirs.add(p)
-  }
+  // sink) over the same parquet the batch queries read, shaped to
+  // hash-match the BATCH oracle SQL — so the driver's correctness gate
+  // exercises the streaming engine, not just the specs. Staging, sink
+  // names, draining, read-back and cleanup are [[OneShot]]'s; each twin
+  // here is its kernel and its presentation.
 
   /** Rows of in-flight state one store partition is sized to carry.
     * Above this, per-partition snapshot/commit and lookup costs
@@ -434,39 +411,12 @@ object EventsStream {
     s
   }
 
-  /** Write `df` as ONE parquet file at `dst` with an explicit mtime —
-    * the FileStreamSource orders batches by modification time, which
-    * is what sequences the data-then-sentinel staging below. The
-    * intermediate write dir is deleted before returning. */
-  private def stageOneFile(df: DataFrame, dst: java.nio.file.Path, mtimeMs: Long): Unit = {
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    val tmp = Files.createTempDirectory("graft_stage")
-    try {
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val listing = Files.list(tmp)
-      val part =
-        try listing.iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        finally listing.close()
-      Files.copy(part, dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-    } finally deleteRecursively(tmp)
-  }
-
-  /** Best-effort recursive delete for one-shot staging dirs — the gate
-    * queries otherwise leave a full corpus copy in /tmp per invocation
-    * (12+ per bench run). Safe after `q.stop()`: the memory sink holds
-    * COLLECTED rows, so the returned frame never re-reads the files. */
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    try {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
-      finally walk.close()
-    } catch { case _: java.io.IOException => () } // cleanup is advisory
+  /** The typed event stream the `GroupState` kernels take. */
+  private def typedEvents(spark: SparkSession, dir: String): Dataset[Event] = {
+    import spark.implicits._
+    readEventsStream(spark, dir)
+      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
+      .as[Event]
   }
 
   /** Streaming twin of `EventsOps.hourly` for the driver gate: stages
@@ -475,25 +425,13 @@ object EventsStream {
     * like the batch query (HourTs string, same column names + order).
     * One data batch ⇒ Update mode emits each window exactly once. */
   def hourlyStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val s = stateSizedSession(spark)
-    val streamDir = Files.createTempDirectory("graft_hourly_once")
-    // try/finally: a failure mid-stream must not leak a full
-    // events-corpus copy in /tmp (or a stale tsEncodingCache entry) —
-    // the memory-sink result survives the staging dir's deletion
-    try {
-      Files.copy(Paths.get(s"$dir/events.parquet"),
-        streamDir.resolve("events.parquet"))
-      val name = s"events_hourly_stream_${onceCounter.incrementAndGet()}"
-      runHourlyOnce(s, streamDir.toString, name)
-        .select(
-          date_format(col("WindowStart"), "yyyy-MM-dd HH:mm:ss").as("HourTs"),
-          col("event_type"), col("NEvents"), col("TotalValue"))
-        .orderBy(col("HourTs"), col("event_type"))
-    } finally {
-      deleteRecursively(streamDir)
-      Tables.forgetTsEncoding(streamDir.toString)
-    }
+    OneShot(once => runHourlyOnce(s,
+        once.stage(s"$dir/events.parquet", "events_hourly_stream")))
+      .select(
+        date_format(col("WindowStart"), "yyyy-MM-dd HH:mm:ss").as("HourTs"),
+        col("event_type"), col("NEvents"), col("TotalValue"))
+      .orderBy(col("HourTs"), col("event_type"))
   }
 
   /** Streaming twin of `EventsOps.sessionWindows` for the driver gate:
@@ -506,7 +444,6 @@ object EventsStream {
     * is filtered out. Same construction StreamingSpec proves equal to
     * the batch twin. */
   def sessionWindowsStreamQuery(spark0: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     // one pre-pass serves double duty: the flush-sentinel timestamp AND
     // the projected-state estimate (in-flight sessions ≈ events on a
     // sparse corpus) that sizes the clone's state-store parallelism
@@ -517,66 +454,56 @@ object EventsStream {
     val maxNs = statRow.getLong(0)
     val nEvents = statRow.getLong(1)
     val spark = stateSizedSession(spark0, projectedStateRows = nEvents)
-    val raw = Tables.eventsRaw(spark, dir)
-    val streamDir = Files.createTempDirectory("graft_sess_once")
-    try {
+    OneShot { once =>
+      val streamDir = once.tempDir("events_session_windows_stream")
       val t0 = System.currentTimeMillis() - 60000
       // stage the corpus by FILE COPY (no Spark rewrite — the encoding
       // sniff makes the original physical encoding readable as-is); only
       // the 1-row sentinel is written, in the SAME encoding so the
-      // stream's declared schema fits both files
-      val dst = streamDir.resolve("a_data.parquet")
-      Files.copy(Paths.get(s"$dir/events.parquet"), dst)
-      Files.setLastModifiedTime(dst,
-        java.nio.file.attribute.FileTime.fromMillis(t0))
+      // stream's declared schema fits every file
+      val nData = OneShot.stageFiles(
+        java.nio.file.Paths.get(s"$dir/events.parquet"), streamDir, Some(t0))
       val flushNs = maxNs + 30L * 86400L * 1000000000L
       val sentinelTs = Tables.eventsTsType(spark, s"$dir/events.parquet") match {
         case org.apache.spark.sql.types.LongType => lit(flushNs)
         case t => timestamp_micros(lit(flushNs / 1000L)).cast(t)
       }
-      stageOneFile(raw.limit(1).select(
+      val flush = once.tempDir("events_session_windows_flush")
+      Tables.eventsRaw(spark, dir).limit(1).select(
         lit(-1L).as("event_id"),
         sentinelTs.as("ts"),
         lit(-1L).as("user_id"),
         lit("view").as("event_type"),
         lit(0.0).as("value"),
-        lit("{}").as("props")), streamDir.resolve("b_flush.parquet"), t0 + 10000)
+        lit("{}").as("props"))
+        .coalesce(1).write.mode("overwrite").parquet(flush.toString)
+      OneShot.stageFiles(flush, streamDir, Some(t0 + 10000))
       // FILE sink, not memory: sessions ≈ events on this corpus, so a
       // memory sink would collect a corpus-linear result into the
       // driver (measured ~9.5M rows/run at the 10M-event decade — the
       // one-shot pattern's only non-distributed stage). The parquet
-      // sink keeps emission distributed; the result is read back and
-      // cache-materialized BEFORE the staging/sink dirs are deleted.
-      val name = s"events_session_windows_stream_${onceCounter.incrementAndGet()}"
-      // the SINK dir is NOT deleted here: the returned frame reads it
+      // sink keeps emission distributed.
+      // The SINK dir outlives the one-shot: the returned frame reads it
       // lazily (a cache-pinned copy instead would accumulate a
       // corpus-linear cached relation per invocation in storage
       // memory, with no unpersist seam once the frame is returned —
       // parquet on tmp disk is the cheaper place for that residue).
-      // It IS registered for shutdown-hook deletion, so the residue
-      // lives at most as long as the process, not the machine
-      val sinkDir = Files.createTempDirectory("graft_sess_sink")
-      registerSinkDirForCleanup(sinkDir)
-      val ckDir = Files.createTempDirectory("graft_sess_ck")
-      try {
-        val q = sessionValueCounts(
-            readEventsStream(spark, streamDir.toString, maxFilesPerTrigger = Some(1)),
-            delay = "1 second")
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckDir.toString)
-          .queryName(name)
-          .start(sinkDir.toString)
-        q.processAllAvailable()
-        q.stop()
-        spark.read.parquet(sinkDir.toString)
-          .filter(col("user_id") >= 0)
-          .orderBy(col("user_id"), col("StartUs"))
-      } finally {
-        deleteRecursively(ckDir)
-      }
-    } finally {
-      deleteRecursively(streamDir)
-      Tables.forgetTsEncoding(streamDir.toString)
+      // It is deleted at JVM exit, so the residue lives at most as
+      // long as the process, not the machine.
+      val sinkDir = OneShot.dirUntilExit("graft_sess_sink")
+      val ckDir = once.tempDir("events_session_windows_ck")
+      // every data file in the first trigger, the sentinel alone in the
+      // next: the watermark it sets then flushes every real session
+      OneShot.drain(sessionValueCounts(
+          readEventsStream(spark, streamDir.toString, maxFilesPerTrigger = Some(nData)),
+          delay = "1 second")
+        .writeStream.outputMode(OutputMode.Append())
+        .option("checkpointLocation", ckDir.toString)
+        .queryName(OneShot.name("events_session_windows_stream"))
+        .start(sinkDir.toString))
+      spark.read.parquet(sinkDir.toString)
+        .filter(col("user_id") >= 0)
+        .orderBy(col("user_id"), col("StartUs"))
     }
   }
 
@@ -593,36 +520,84 @@ object EventsStream {
     * and gets bounded join state from the range condition +
     * watermarks. */
   def clickAttributionStreamQuery(spark0: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     // the corpus-spanning delay buffers BOTH join sides, so projected
     // state ≈ the event count — size the store parallelism to it
     val nEvents = Tables.eventsRaw(spark0, dir).count()
     val spark = stateSizedSession(spark0, projectedStateRows = nEvents)
-    val streamDir = Files.createTempDirectory("graft_attr_once")
-    try {
-      Files.copy(Paths.get(s"$dir/events.parquet"),
-        streamDir.resolve("events.parquet"))
-      val name = s"events_click_attribution_stream_${onceCounter.incrementAndGet()}"
-      val q = clickAttribution(
-          readEventsStream(spark, streamDir.toString),
-          delay = "3650 days")
-        .writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(name)
-        .groupBy(col("user_id"))
-        .agg(
-          count(lit(1)).as("Pairs"),
-          min(col("LagUs")).as("MinLagUs"),
-          max(col("LagUs")).as("MaxLagUs"),
-          sum(col("LagUs")).as("SumLagUs"))
-        .orderBy(col("user_id"))
-    } finally {
-      deleteRecursively(streamDir)
-      Tables.forgetTsEncoding(streamDir.toString)
-    }
+    OneShot.memoryOnce(s"$dir/events.parquet", "events_click_attribution_stream",
+        OutputMode.Append())(
+      d => clickAttribution(readEventsStream(spark, d), delay = "3650 days"))
+      .groupBy(col("user_id"))
+      .agg(
+        count(lit(1)).as("Pairs"),
+        min(col("LagUs")).as("MinLagUs"),
+        max(col("LagUs")).as("MaxLagUs"),
+        sum(col("LagUs")).as("SumLagUs"))
+      .orderBy(col("user_id"))
+  }
+
+  /** Streaming twin of `EventsOps.dedupLatest` for the driver gate —
+    * the stateful-upsert compaction ([[latestPerUser]]'s
+    * `mapGroupsWithState`, one small record per key) run as a real
+    * one-shot stream and shaped to hash-match the batch oracle. One
+    * data batch ⇒ Update mode emits each user's winner exactly once,
+    * so the sink IS the batch latest-per-key table. This puts the
+    * third stateful-operator family (arbitrary `GroupState`, next to
+    * the windowed-agg and stream-stream-join twins) inside the
+    * driver's correctness gate. */
+  def dedupLatestStreamQuery(spark0: SparkSession, dir: String): DataFrame = {
+    implicit val spark: SparkSession = stateSizedSession(spark0)
+    OneShot.memoryOnce(s"$dir/events.parquet", "events_dedup_latest_stream",
+        OutputMode.Update())(
+      d => latestPerUser(typedEvents(spark, d)))
+      .select(col("user_id"),
+        date_format(timestamp_micros(col("lastUs")), "yyyy-MM-dd HH:mm:ss")
+          .as("LastTs"),
+        col("event_type"), col("value"))
+      .orderBy(col("user_id"))
+  }
+
+  /** One-shot of [[transitionPairs]] for the driver gate, shaped to
+    * hash-match the batch `events_transition_matrix` oracle: run the
+    * stateful stream over the staged corpus, then apply the batch
+    * matrix presentation (pair counts, From-row totals, one exact
+    * division) to the emitted transition stream. */
+  def transitionMatrixStreamQuery(spark0: SparkSession, dir: String): DataFrame = {
+    implicit val spark: SparkSession = stateSizedSession(spark0)
+    OneShot.memoryOnce(s"$dir/events.parquet", "events_transition_matrix_stream",
+        OutputMode.Append())(
+      d => transitionPairs(typedEvents(spark, d)))
+      .select(col("from").as("From"), col("to").as("To"))
+      .groupBy(col("From"), col("To"))
+      .agg(count(lit(1)).as("NTransitions"))
+      .withColumn("FromTotal", sum(col("NTransitions")).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("From"))))
+      .withColumn("Prob",
+        col("NTransitions").cast(DoubleType) / col("FromTotal"))
+      .select(col("From"), col("To"), col("NTransitions"),
+        col("FromTotal"), col("Prob"))
+      .orderBy(col("From"), col("To"))
+  }
+
+  /** Streaming twin of `RelationalOps.purchaseAsofView` for the driver
+    * gate — [[purchaseAsof]]'s `flatMapGroupsWithState` (Append mode:
+    * zero-or-one row per input event, per-user last-view state) run as
+    * a one-shot and shaped to hash-match the batch oracle. Completes
+    * the stateful-operator coverage in the gate: windowed agg,
+    * session_window, stream-stream join, mapGroupsWithState upsert,
+    * and now Append-mode flatMapGroupsWithState. */
+  def asofViewStreamQuery(spark0: SparkSession, dir: String): DataFrame = {
+    implicit val spark: SparkSession = stateSizedSession(spark0)
+    OneShot.memoryOnce(s"$dir/events.parquet", "events_asof_view_stream",
+        OutputMode.Append())(
+      d => purchaseAsof(typedEvents(spark, d)))
+      .select(col("user_id"), col("event_id"),
+        date_format(timestamp_micros(col("purchaseUs")), "yyyy-MM-dd HH:mm:ss")
+          .as("PurchaseTs"),
+        date_format(timestamp_micros(col("lastViewUs")), "yyyy-MM-dd HH:mm:ss")
+          .as("LastViewTs"),
+        (col("purchaseUs") - col("lastViewUs")).as("GapMicros"))
+      .orderBy(col("user_id"), col("event_id"))
   }
 
   /** Streaming twin of `EventsOps.funnel` for the driver gate: the
@@ -634,161 +609,23 @@ object EventsStream {
     * identical nullif-guarded formula. One staged batch ⇒ exactly one
     * emission per user; cross-batch state carry is StreamingSpec's
     * two-file funnel test. */
-  /** Streaming twin of `EventsOps.dedupLatest` for the driver gate —
-    * the stateful-upsert compaction ([[latestPerUser]]'s
-    * `mapGroupsWithState`, one small record per key) run as a real
-    * one-shot stream and shaped to hash-match the batch oracle. One
-    * data batch ⇒ Update mode emits each user's winner exactly once,
-    * so the sink IS the batch latest-per-key table. This puts the
-    * third stateful-operator family (arbitrary `GroupState`, next to
-    * the windowed-agg and stream-stream-join twins) inside the
-    * driver's correctness gate. */
-  def dedupLatestStreamQuery(spark0: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    implicit val spark: SparkSession = stateSizedSession(spark0)
-    import spark.implicits._
-    val streamDir = Files.createTempDirectory("graft_latest_once")
-    try {
-      Files.copy(Paths.get(s"$dir/events.parquet"),
-        streamDir.resolve("events.parquet"))
-      val events = readEventsStream(spark, streamDir.toString)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[Event]
-      val name = s"events_dedup_latest_stream_${onceCounter.incrementAndGet()}"
-      val q = latestPerUser(events)
-        .writeStream.outputMode(OutputMode.Update())
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(name)
-        .select(col("user_id"),
-          date_format(timestamp_micros(col("lastUs")), "yyyy-MM-dd HH:mm:ss")
-            .as("LastTs"),
-          col("event_type"), col("value"))
-        .orderBy(col("user_id"))
-    } finally {
-      deleteRecursively(streamDir)
-      Tables.forgetTsEncoding(streamDir.toString)
-    }
-  }
-
-  /** One-shot of [[transitionPairs]] for the driver gate, shaped to
-    * hash-match the batch `events_transition_matrix` oracle: run the
-    * stateful stream over the staged corpus, then apply the batch
-    * matrix presentation (pair counts, From-row totals, one exact
-    * division) to the emitted transition stream. */
-  def transitionMatrixStreamQuery(spark0: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    implicit val spark: SparkSession = stateSizedSession(spark0)
-    import spark.implicits._
-    val streamDir = Files.createTempDirectory("graft_trans_once")
-    try {
-      Files.copy(Paths.get(s"$dir/events.parquet"),
-        streamDir.resolve("events.parquet"))
-      val events = readEventsStream(spark, streamDir.toString)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[Event]
-      val name = s"events_transition_matrix_stream_${onceCounter.incrementAndGet()}"
-      val q = transitionPairs(events)
-        .writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(name)
-        .select(col("from").as("From"), col("to").as("To"))
-        .groupBy(col("From"), col("To"))
-        .agg(count(lit(1)).as("NTransitions"))
-        .withColumn("FromTotal", sum(col("NTransitions")).over(
-          org.apache.spark.sql.expressions.Window.partitionBy(col("From"))))
-        .withColumn("Prob",
-          col("NTransitions").cast(DoubleType) / col("FromTotal"))
-        .select(col("From"), col("To"), col("NTransitions"),
-          col("FromTotal"), col("Prob"))
-        .orderBy(col("From"), col("To"))
-    } finally {
-      deleteRecursively(streamDir)
-      Tables.forgetTsEncoding(streamDir.toString)
-    }
-  }
-
-  /** Streaming twin of `RelationalOps.purchaseAsofView` for the driver
-    * gate — [[purchaseAsof]]'s `flatMapGroupsWithState` (Append mode:
-    * zero-or-one row per input event, per-user last-view state) run as
-    * a one-shot and shaped to hash-match the batch oracle. Completes
-    * the stateful-operator coverage in the gate: windowed agg,
-    * session_window, stream-stream join, mapGroupsWithState upsert,
-    * and now Append-mode flatMapGroupsWithState. */
-  def asofViewStreamQuery(spark0: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    implicit val spark: SparkSession = stateSizedSession(spark0)
-    import spark.implicits._
-    val streamDir = Files.createTempDirectory("graft_asof_once")
-    try {
-      Files.copy(Paths.get(s"$dir/events.parquet"),
-        streamDir.resolve("events.parquet"))
-      val events = readEventsStream(spark, streamDir.toString)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[Event]
-      val name = s"events_asof_view_stream_${onceCounter.incrementAndGet()}"
-      val q = purchaseAsof(events)
-        .writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      spark.table(name)
-        .select(col("user_id"), col("event_id"),
-          date_format(timestamp_micros(col("purchaseUs")), "yyyy-MM-dd HH:mm:ss")
-            .as("PurchaseTs"),
-          date_format(timestamp_micros(col("lastViewUs")), "yyyy-MM-dd HH:mm:ss")
-            .as("LastViewTs"),
-          (col("purchaseUs") - col("lastViewUs")).as("GapMicros"))
-        .orderBy(col("user_id"), col("event_id"))
-    } finally {
-      deleteRecursively(streamDir)
-      Tables.forgetTsEncoding(streamDir.toString)
-    }
-  }
-
   def funnelStreamQuery(spark0: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     implicit val spark: SparkSession = stateSizedSession(spark0)
-    import spark.implicits._
-    val streamDir = Files.createTempDirectory("graft_funnel_once")
-    try {
-      Files.copy(Paths.get(s"$dir/events.parquet"),
-        streamDir.resolve("events.parquet"))
-      val events = readEventsStream(spark, streamDir.toString)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[Event]
-      val name = s"events_funnel_stream_${onceCounter.incrementAndGet()}"
-      val q = funnelProgress(events)
-        .writeStream.outputMode(OutputMode.Update())
-        .format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val st = spark.table(name)
-      def step(n: Int, nm: String, instant: org.apache.spark.sql.Column): DataFrame =
-        st.agg(count(instant).as("Users"))
-          .select(lit(n).as("Step"), lit(nm).as("StepName"), col("Users"))
-      val steps = step(1, "view", col("t1"))
-        .union(step(2, "view>click", col("t2")))
-        .union(step(3, "view>click>purchase", col("t3")))
-      val w = org.apache.spark.sql.expressions.Window.orderBy(col("Step"))
-      steps
-        .withColumn("CumRate",
-          col("Users").cast(org.apache.spark.sql.types.DoubleType) /
-            nullif(first(col("Users")).over(w), lit(0L)))
-        .withColumn("StepRate",
-          col("Users").cast(org.apache.spark.sql.types.DoubleType) /
-            nullif(lag(col("Users"), 1).over(w), lit(0L)))
-        .orderBy(col("Step"))
-    } finally {
-      deleteRecursively(streamDir)
-      Tables.forgetTsEncoding(streamDir.toString)
-    }
+    val st = OneShot.memoryOnce(s"$dir/events.parquet", "events_funnel_stream",
+        OutputMode.Update())(
+      d => funnelProgress(typedEvents(spark, d)))
+    def step(n: Int, nm: String, instant: org.apache.spark.sql.Column): DataFrame =
+      st.agg(count(instant).as("Users"))
+        .select(lit(n).as("Step"), lit(nm).as("StepName"), col("Users"))
+    val steps = step(1, "view", col("t1"))
+      .union(step(2, "view>click", col("t2")))
+      .union(step(3, "view>click>purchase", col("t3")))
+    val w = org.apache.spark.sql.expressions.Window.orderBy(col("Step"))
+    steps
+      .withColumn("CumRate",
+        col("Users").cast(DoubleType) / nullif(first(col("Users")).over(w), lit(0L)))
+      .withColumn("StepRate",
+        col("Users").cast(DoubleType) / nullif(lag(col("Users"), 1).over(w), lit(0L)))
+      .orderBy(col("Step"))
   }
 }

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.etl.Tables
 import graft.ops.SimilarityOps
 
 /** Streaming twin of the embedding ingestion path: vectors arrive as a
@@ -20,12 +19,6 @@ import graft.ops.SimilarityOps
   * vector forever (no watermark can evict by vec_id).
   */
 object VecsStream {
-
-  /** A streaming source over an embeddings parquet dir. */
-  def readVecsStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(Tables.embeddingsSchema)
-      .parquet(dir)
 
   /** Drive the incremental-dedup kernel over a vector stream: each
     * microbatch is quantized, routed to its nprobe nearest centroids,

@@ -14,7 +14,8 @@ import scala.jdk.CollectionConverters._
   * shared shingle-hash seam (`shingleHashCol`): make the wrong
   * version UNWRITABLE, not merely discouraged. The same scan keeps
   * [[GraftExtensions]] the one place a native function is
-  * registered. */
+  * registered, and `graft.streaming.OneShot` the one place a stream
+  * twin stages, drains and cleans up. */
 class SessionConfigSpec extends SparkSpec {
 
   private def mainSources: Seq[Path] = {
@@ -50,6 +51,23 @@ class SessionConfigSpec extends SparkSpec {
       }
     assert(offenders.isEmpty,
       s"function registration outside GraftExtensions: ${offenders.mkString(", ")}")
+  }
+
+  test("OneShot is the ONLY one-shot scaffolding site under src/main/scala/graft/streaming") {
+    // staging dirs, draining and ts-sniff cleanup live in one helper;
+    // a twin that drains or stages by hand has to repeat its cleanup
+    val forbidden = Seq("processAllAvailable", "createTempDirectory", "forgetTsEncoding")
+    val streaming = mainSources.filter(_.startsWith(Paths.get("src/main/scala/graft/streaming")))
+    assert(streaming.exists(_.getFileName.toString == "OneShot.scala"),
+      s"scan found no OneShot.scala among ${streaming.mkString(", ")}")
+    val offenders = streaming
+      .filterNot(_.getFileName.toString == "OneShot.scala")
+      .flatMap { p =>
+        val src = new String(Files.readAllBytes(p), "UTF-8")
+        forbidden.filter(src.contains).map(f => s"$p: $f")
+      }
+    assert(offenders.isEmpty,
+      s"one-shot scaffolding outside OneShot: ${offenders.mkString(", ")}")
   }
 
   test("the shared session carries every engine-wide conf GraftSession promises") {

@@ -1079,4 +1079,76 @@ class StreamingSpec extends SparkSpec {
       graft.ops.BucketedTables.deleteRecursively(tmp)
     }
   }
+
+  /** Rows as a multiset, doubles compared to 1e-9 relative: sorted on
+    * a key that formats doubles coarsely, then paired up. */
+  private def assertSameRows(got: Array[org.apache.spark.sql.Row],
+                             want: Array[org.apache.spark.sql.Row], what: String): Unit = {
+    def key(r: org.apache.spark.sql.Row) = r.toSeq.map {
+      case d: Double => f"$d%.6e"
+      case v => String.valueOf(v)
+    }.mkString("|")
+    assert(got.length === want.length, s"$what: ${got.length} rows vs ${want.length}")
+    got.sortBy(key).zip(want.sortBy(key)).foreach { case (g, w) =>
+      val same = g.length == w.length && g.toSeq.zip(w.toSeq).forall {
+        case (a: Double, b: Double) =>
+          (a.isNaN && b.isNaN) || math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(b))
+        case (a, b) => a == b
+      }
+      assert(same, s"$what: stream row $g != batch row $w")
+    }
+  }
+
+  test("gate twins equal their batch twins and leave no query, view or staging dir behind") {
+    // the twins whose oracle IS their batch sibling's SQL; the two
+    // sketch twins emit estimate columns only (covered above)
+    val twins = Seq("events_hourly", "events_session_windows",
+      "events_click_attribution", "events_funnel", "events_dedup_latest",
+      "events_asof_view", "events_transition_matrix",
+      "curate_decontaminate", "text_drift_chisq")
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    // the session-window sink dir (`graft_sess_sink*`) is the one dir
+    // a twin keeps: its frame reads it lazily until JVM exit
+    def staged() = tmp.list().filter(_.startsWith(graft.streaming.OneShot.Prefix)).toSet
+    def tempViews() = spark.catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name).toSet
+    val stagedBefore = staged()
+    val viewsBefore = tempViews()
+    twins.foreach { batchName =>
+      val name = s"${batchName}_stream"
+      assert(SparkEntry.oracleSql(name) === SparkEntry.oracleSql(batchName),
+        s"$name no longer shares its batch twin's oracle")
+      assertSameRows(SparkEntry.queries(name)(spark, sfDir).collect(),
+        SparkEntry.queries(batchName)(spark, sfDir).collect(), name)
+    }
+    assert(spark.streams.active.isEmpty,
+      s"queries left running: ${spark.streams.active.map(_.name).mkString(", ")}")
+    assert(tempViews() -- viewsBefore === Set.empty[String], "sink views left registered")
+    assert(staged() -- stagedBefore === Set.empty[String], "staging dirs left in tmp")
+  }
+
+  test("events one-shot staging takes a part-file events.parquet directory") {
+    import java.nio.file.Files
+    // the fixture with events.parquet rewritten as two part files, the
+    // layout Tables.eventsRaw and the ts sniff already accept
+    val fx = Files.createTempDirectory("graft_partfile_fixture")
+    try {
+      new java.io.File(sfDir).listFiles().filter(_.getName != "events.parquet")
+        .foreach(f => Files.copy(f.toPath, fx.resolve(f.getName)))
+      spark.read.parquet(s"$sfDir/events.parquet").repartition(2)
+        .write.parquet(s"$fx/events.parquet")
+      assert(new java.io.File(s"$fx/events.parquet").listFiles()
+        .count(_.getName.endsWith(".parquet")) === 2)
+      val dir = fx.toString
+      assertSameRows(EventsStream.hourlyStreamQuery(spark, dir).collect(),
+        EventsOps.hourly(spark, dir).collect(), "hourly")
+      assertSameRows(EventsStream.dedupLatestStreamQuery(spark, dir).collect(),
+        EventsOps.dedupLatest(spark, dir).collect(), "dedup_latest")
+      assert(EventsOps.hourly(spark, dir).agg(sum("NEvents")).head().getLong(0) === 1000L)
+    } finally {
+      graft.Substrates.invalidate(spark, fx.toString)
+      graft.etl.Tables.forgetTsEncoding(s"$fx/events.parquet")
+      graft.ops.BucketedTables.deleteRecursively(fx)
+    }
+  }
 }
