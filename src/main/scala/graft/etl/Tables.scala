@@ -207,7 +207,10 @@ object Tables {
     * the schemas-map LongType declaration alone would silently misread
     * a timestamp[us] fixture (the round-6 1970-collapse, at this seam).
     * Non-parquet sources keep the declared contract: their files store
-    * the raw long. */
+    * the raw long.
+    *
+    * Kept with no engine caller: it is the reference's Extract step
+    * (S1, `pd.read_excel`, etl.py:44-54; SURVEY.md:119). */
   def via(source: graft.sources.TabularSource, spark: SparkSession,
           dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.${source.name}"
@@ -226,7 +229,6 @@ object Tables {
   def region(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "region", regionSchema)
   def nation(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "nation", nationSchema)
   def customer(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "customer", customerSchema)
-  def supplier(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "supplier", supplierSchema)
   def part(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "part", partSchema)
   def orders(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "orders", ordersSchema)
   def lineitem(spark: SparkSession, dir: String): DataFrame = read(spark, dir, "lineitem", lineitemSchema)

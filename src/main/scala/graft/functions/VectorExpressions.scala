@@ -103,9 +103,13 @@ case class QuantizeVector(child: Expression)
 }
 
 /** array<bigint> of normalized dimension values → interleaved Morton
-  * (Z-order) code; the clustering key behind `Load.writeZOrdered`.
-  * One static-kernel call per row ([[ExprKernels.zorder]]), real
-  * codegen so the carrying Project stays in WholeStageCodegen. */
+  * (Z-order) code, usable as a multi-dimensional clustering key
+  * (`repartitionByRange` + `sortWithinPartitions` on it). One
+  * static-kernel call per row ([[ExprKernels.zorder]]), real codegen
+  * so the carrying Project stays in WholeStageCodegen.
+  *
+  * Kept with no engine caller: `zorder_long` is part of the registered
+  * native-function surface README documents. */
 case class ZOrderLong(child: Expression)
   extends UnaryExpression {
 

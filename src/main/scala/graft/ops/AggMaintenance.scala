@@ -28,13 +28,12 @@ import graft.etl.{Summaries, Transactions}
   * maintainability.
   *
   * Layout notes: partitions are MONTHS (a day-partitioned aggregate
-  * would create one directory per day — the small-files antidote
-  * [[graft.etl.Load.writeCompacted]] exists for exactly that
-  * mistake); sums are cast back to DECIMAL(18,4)/LONG before every
-  * write so each generation lands the SAME parquet schema (Spark
-  * widens `sum(decimal(18,4))` to decimal(28,4), and a second-level
-  * sum to (38,4) — mixed-precision partition files would fail the
-  * read-back schema merge).
+  * would create one directory of small files per day); sums are
+  * cast back to DECIMAL(18,4)/LONG before every write so each
+  * generation lands the SAME parquet schema (Spark widens
+  * `sum(decimal(18,4))` to decimal(28,4), and a second-level sum to
+  * (38,4) — mixed-precision partition files would fail the read-back
+  * schema merge).
   */
 object AggMaintenance {
 

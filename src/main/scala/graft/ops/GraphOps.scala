@@ -266,11 +266,9 @@ object GraphOps {
   }
 
   /** [[triangles]] over any degree-carrying edge substrate (see
-    * [[pagerankOf]]) — memo-free: probes measure the full build. */
-  def trianglesOf(e: DataFrame): DataFrame = trianglesPinned(e)._1
-
-  /** [[trianglesOf]] plus the oriented pin it reads, for a caller that
-    * releases the pin itself (GraphScaleProbe). */
+    * [[pagerankOf]]), memo-free so probes measure the full build, plus
+    * the oriented pin it reads, which the caller releases itself
+    * (GraphScaleProbe). */
   private[graft] def trianglesPinned(e: DataFrame): (DataFrame, DataFrame) = {
     val deg = e.select(col("Src").as("N"), col("OutDeg").as("Deg")).distinct()
     val (o, bloomBytes) = orientedWithBloom(e, deg)
@@ -296,9 +294,7 @@ object GraphOps {
     * CPU (JobProfileProbe, sf0.1). The returned frame holds the
     * cache: the memoized path's registry entry releases it
     * ([[Substrates.invalidate]]), a probe unpersists it itself
-    * ([[trianglesPinned]]). Entries are keyed by canonicalized plan,
-    * so repeated [[trianglesOf]] calls over one substrate share one
-    * entry instead of leaking one per call. */
+    * ([[trianglesPinned]]). */
   private[graft] def orientedWithBloom(e: DataFrame,
                                        deg: DataFrame): (DataFrame, Array[Byte]) = {
     val spark = e.sparkSession
@@ -329,7 +325,7 @@ object GraphOps {
     * checkpoint build, its count, and the bloom aggregate (~3 s of the
     * gate wall at sf0.1) even though the edge substrate itself was
     * memoized. Released by [[Substrates.invalidate]]; the memo-free
-    * [[trianglesOf]] path is untouched, so probes still measure the
+    * [[trianglesPinned]] path is untouched, so probes still measure the
     * full build. */
   private[graft] def orientedBloomFor(spark: SparkSession,
                                       dir: String): (DataFrame, Array[Byte]) =
@@ -444,18 +440,12 @@ object GraphOps {
     * exceeds O(m) work or O(#communities) output. */
   def modularity(spark: SparkSession, dir: String): DataFrame =
     modularityWith(coPurchaseEdges(spark, dir), lpaLabelsFor(spark, dir),
-      Some(degreesFor(spark, dir)))
+      degreesFor(spark, dir))
 
-  /** [[modularity]] over any degree-carrying edge substrate
-    * (memo-free — the labeling recomputes; probes and synthetic
-    * corpora use this form). */
-  def modularityOf(edges: DataFrame): DataFrame =
-    modularityWith(edges, lpaLabels(edges))
-
-  /** Modularity cards from an edge substrate and its labeling. */
-  private def modularityWith(edges: DataFrame, labels: DataFrame,
-                             degOpt: Option[DataFrame] = None): DataFrame = {
-    val deg = degOpt.getOrElse(degreesOf(edges))
+  /** Modularity cards from an edge substrate, its labeling and its
+    * (Src, OutDeg) table. */
+  private[graft] def modularityWith(edges: DataFrame, labels: DataFrame,
+                                    deg: DataFrame): DataFrame = {
     val twoM = deg.agg(sum(col("OutDeg")).as("TwoM")) // 1 row
     val intra = edges
       .join(labels.select(col("Node").as("Src"), col("Lbl").as("SL")), "Src")

@@ -7,213 +7,40 @@ import org.apache.spark.sql.types._
 import graft.etl.Tables
 
 /** Multimodal-column plumbing: opaque `binary` payloads + typed
-  * metadata, with REAL image decode / feature-extraction staged behind
-  * a per-partition batch boundary.
+  * metadata, with feature extraction staged behind a per-partition
+  * batch boundary, and the perceptual-hash near-dup family.
   *
-  * Decode is JDK `javax.imageio` (PNG/JPEG/GIF/BMP — no external
-  * codecs needed), run inside `mapPartitions` — the JVM analog of
-  * arrow-batched decode UDFs: a typed Dataset, batch iteration per
-  * partition, fixed output schema, no driver round-trips. Payloads
-  * that are not images (or are corrupt) come back as explicit
-  * `"undecodable"` rows rather than errors — a production media scan
-  * filters on that column instead of dying mid-corpus.
+  * Every query here is a BYTE-level twin of a media operator (frame
+  * sampling, resize, metadata, aHash/pHash/audio fingerprints): its
+  * columns are pure functions of the payload bytes, so the DuckDB
+  * oracle reproduces them bit-for-bit. Per-row work runs inside
+  * `mapPartitions` or a codegen'd native expression — the JVM analog
+  * of arrow-batched decode UDFs: batch iteration per partition, fixed
+  * output schema, no driver round-trips.
   *
-  * Scale: decode is embarrassingly parallel, one pass, no shuffle; the
-  * expensive byte payloads are projected only where needed (binary
-  * column pruning), and partition sizing is inherited from the parquet
-  * reader (`maxPartitionBytes`), so batches stay memory-bounded.
+  * Scale: every pass is embarrassingly parallel, one pass, no shuffle
+  * before the band joins; the byte payloads are projected only where
+  * needed (binary column pruning), and partition sizing is inherited
+  * from the parquet reader (`maxPartitionBytes`), so batches stay
+  * memory-bounded.
   */
 object MultimodalOps {
-
-  /** Typed metadata row for a decoded media payload. */
-  case class MediaMeta(doc_id: Long, n_bytes: Int, width: Int, height: Int,
-                       channels: Int, format: String)
-
-  /** `format` value for payloads no installed reader accepts. */
-  val Undecodable = "undecodable"
-
-  /** Real image decode: sniff the payload with the registered
-    * `javax.imageio` readers, read frame 0, return the decoded image +
-    * `image/<format>`. None for non-image or corrupt payloads — the
-    * ONE guarded decode both operators share, so no consumer ever
-    * re-reads the bytes through an unguarded path (a second
-    * `ImageIO.read` can dispatch to a different plugin or return
-    * null and would crash the task mid-corpus). */
-  private def readImage(payload: Array[Byte]): Option[(java.awt.image.BufferedImage, String)] =
-    try {
-      val iis = javax.imageio.ImageIO.createImageInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      try {
-        val readers = javax.imageio.ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) None
-        else {
-          val r = readers.next()
-          try {
-            r.setInput(iis)
-            Some((r.read(0),
-              "image/" + r.getFormatName.toLowerCase(java.util.Locale.ROOT)))
-          } finally r.dispose()
-        }
-      } finally if (iis != null) iis.close()
-    } catch {
-      case _: java.io.IOException | _: RuntimeException => None
-    }
-
-  /** Payload → typed metadata row ([[Undecodable]] with zeroed
-    * dimensions when no reader accepts the bytes). */
-  private def decodeImage(id: Long, payload: Array[Byte]): MediaMeta =
-    readImage(payload) match {
-      case Some((img, fmt)) =>
-        MediaMeta(id, payload.length, img.getWidth, img.getHeight,
-          img.getRaster.getNumBands, fmt)
-      case None => MediaMeta(id, payload.length, 0, 0, 0, Undecodable)
-    }
 
   /** Documents' text bytes treated as opaque binary payloads.
     *
     * Pinned-spread audit exemption (deliberate, recorded): unlike the
-    * hash passes below, the decode/feature consumers of this frame do
+    * hash passes below, the feature consumers of this frame do
     * NOT get a `documentsSpread` repartition. Shuffling the opaque
     * payload BYTES purely to parallelize the local single-file gate
     * would contradict the operators' declared scale shape — at real
     * scale the parquet reader already yields many memory-bounded
-    * splits (`maxPartitionBytes`) and decode inherits them with zero
-    * shuffle; the gate queries on this seam (features/frames/resize)
+    * splits (`maxPartitionBytes`) and the features inherit them with
+    * zero shuffle; the gate queries on this seam (features/frames/resize)
     * measure ≤ 0.5 s at sf0.1 without it (BENCH_LOCAL), so there is
     * no AQE-collapse tax to fix here. */
   def payloads(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("text").cast(BinaryType).as("payload"))
-
-  /** Per-partition batched decode over any (id, payload) frame — the
-    * operator a pipeline points at an image column. */
-  def decodeMetaOf(payloads: Dataset[(Long, Array[Byte])]): Dataset[MediaMeta] = {
-    import payloads.sparkSession.implicits._
-    payloads.mapPartitions(_.map { case (id, bytes) => decodeImage(id, bytes) })
-  }
-
-  /** [[decodeMetaOf]] over the documents table's bytes — which are
-    * text, so every row honestly reports [[Undecodable]] (asserted in
-    * MultimodalSpec; real image fixtures decode there too). */
-  def decodeMeta(spark: SparkSession, dir: String): Dataset[MediaMeta] = {
-    import spark.implicits._
-    decodeMetaOf(payloads(spark, dir).as[(Long, Array[Byte])])
-  }
-
-  /** Per-channel pixel statistics from a REAL decode: mean sample
-    * value per raster band — the downstream shape of any
-    * normalize-then-embed image pipeline (channel means/stds are the
-    * canonical preprocessing statistics). Same mapPartitions seam;
-    * undecodable payloads carry an empty means array. */
-  case class ImageStats(doc_id: Long, width: Int, height: Int,
-                        channels: Int, format: String,
-                        channel_means: Seq[Double])
-
-  def imageStatsOf(payloads: Dataset[(Long, Array[Byte])]): Dataset[ImageStats] = {
-    import payloads.sparkSession.implicits._
-    payloads.mapPartitions(_.map { case (id, bytes) =>
-      readImage(bytes) match {
-        case None => ImageStats(id, 0, 0, 0, Undecodable, Seq.empty)
-        case Some((img, fmt)) =>
-          val raster = img.getRaster
-          val (w, h, bands) = (img.getWidth, img.getHeight, raster.getNumBands)
-          val sums = new Array[Double](bands)
-          var y = 0
-          while (y < h) {
-            var x = 0
-            while (x < w) {
-              var b = 0
-              while (b < bands) {
-                sums(b) += raster.getSample(x, y, b)
-                b += 1
-              }
-              x += 1
-            }
-            y += 1
-          }
-          ImageStats(id, w, h, bands, fmt, sums.toSeq.map(_ / (w.toLong * h)))
-      }
-    })
-  }
-
-  /** Typed metadata + per-channel statistics for a decoded AUDIO
-    * payload. `format` is `audio/<type>` on success, [[Undecodable]]
-    * otherwise; stats arrays are empty unless the payload is 16-bit
-    * signed PCM (the one encoding the stats kernel interprets —
-    * anything else still reports honest metadata). */
-  case class AudioStats(doc_id: Long, n_bytes: Int, sample_rate: Int,
-                        channels: Int, bits: Int, n_frames: Long,
-                        format: String,
-                        channel_means: Seq[Double], channel_peaks: Seq[Int])
-
-  /** Real audio decode via JDK `javax.sound.sampled` (WAV/AIFF/AU —
-    * no external codecs), same guarded-single-decode discipline as
-    * [[readImage]]: None for payloads no installed provider accepts. */
-  private def readAudio(payload: Array[Byte])
-    : Option[(javax.sound.sampled.AudioInputStream, String)] =
-    try {
-      // getAudioInputStream requires mark/reset for format sniffing
-      val in = new java.io.BufferedInputStream(
-        new java.io.ByteArrayInputStream(payload))
-      val fileFormat = javax.sound.sampled.AudioSystem.getAudioFileFormat(in)
-      val ais = javax.sound.sampled.AudioSystem.getAudioInputStream(in)
-      Some((ais,
-        "audio/" + fileFormat.getType.getExtension.toLowerCase(java.util.Locale.ROOT)))
-    } catch {
-      case _: javax.sound.sampled.UnsupportedAudioFileException |
-           _: java.io.IOException | _: RuntimeException => None
-    }
-
-  /** Per-partition batched audio decode + per-channel sample
-    * statistics (mean and absolute peak per channel — the
-    * normalization statistics of any audio-embedding front end), the
-    * audio sibling of [[imageStatsOf]] on the same `mapPartitions`
-    * seam. Sample extraction handles 16-bit signed PCM in either
-    * endianness; other encodings report metadata with empty stats. */
-  def audioStatsOf(payloads: Dataset[(Long, Array[Byte])]): Dataset[AudioStats] = {
-    import payloads.sparkSession.implicits._
-    payloads.mapPartitions(_.map { case (id, bytes) =>
-      readAudio(bytes) match {
-        case None =>
-          AudioStats(id, bytes.length, 0, 0, 0, 0L, Undecodable,
-            Seq.empty, Seq.empty)
-        case Some((ais, fmt)) =>
-          try {
-            val f = ais.getFormat
-            val ch = f.getChannels
-            val pcm16 =
-              f.getEncoding == javax.sound.sampled.AudioFormat.Encoding.PCM_SIGNED &&
-                f.getSampleSizeInBits == 16
-            val data = if (pcm16) ais.readAllBytes() else Array.emptyByteArray
-            val nFrames =
-              if (pcm16) data.length.toLong / (2L * ch) else ais.getFrameLength
-            val (means, peaks) =
-              if (!pcm16 || nFrames == 0L) (Seq.empty[Double], Seq.empty[Int])
-              else {
-                val sums = new Array[Long](ch)
-                val pk = new Array[Int](ch)
-                var i = 0
-                while (i + 2 * ch <= data.length) {
-                  var c = 0
-                  while (c < ch) {
-                    val o = i + 2 * c
-                    val s =
-                      if (f.isBigEndian) ((data(o) << 8) | (data(o + 1) & 0xff)).toShort
-                      else ((data(o + 1) << 8) | (data(o) & 0xff)).toShort
-                    sums(c) += s
-                    if (math.abs(s.toInt) > pk(c)) pk(c) = math.abs(s.toInt)
-                    c += 1
-                  }
-                  i += 2 * ch
-                }
-                (sums.toSeq.map(_.toDouble / nFrames), pk.toSeq)
-              }
-            AudioStats(id, bytes.length, f.getSampleRate.toInt, ch,
-              f.getSampleSizeInBits, nFrames, fmt, means, peaks)
-          } finally ais.close()
-      }
-    })
-  }
 
   /** Frame size (bytes) and sampling stride for [[frameSample]] —
     * shared with the DuckDB mirror. */
@@ -278,10 +105,9 @@ object MultimodalOps {
                           max_byte: Int, sum_bytes: Long, mean_byte: Double)
 
   /** Feature extraction in the REAL batched shape: per-partition JVM
-    * loop over the payload bytes (`mapPartitions`, same seam as
-    * [[decodeMeta]] — a production embedding/feature model plugs in
-    * here), exact integer statistics so the DuckDB oracle reproduces
-    * them bit-for-bit. */
+    * loop over the payload bytes (`mapPartitions` — a production
+    * embedding/feature model plugs in here), exact integer statistics
+    * so the DuckDB oracle reproduces them bit-for-bit. */
   def byteFeatures(spark: SparkSession, dir: String): Dataset[ByteFeatures] = {
     import spark.implicits._
     payloads(spark, dir)
@@ -312,12 +138,9 @@ object MultimodalOps {
   /** Oracle-checkable BYTE-level metadata twin: deterministic
     * fingerprint columns (size, first byte, modular pseudo-dimensions)
     * expressed as pure Catalyst expressions so DuckDB reproduces them
-    * bit-for-bit. This is deliberately NOT the image decode —
-    * `javax.imageio` output is not expressible in an independent SQL
-    * engine, so the REAL decode ([[decodeMetaOf]]/[[imageStatsOf]]) is
-    * verified in MultimodalSpec against generated PNG/JPEG fixtures
-    * with known dimensions and channel statistics, while this twin
-    * keeps the driver's hash gate on the byte plumbing. */
+    * bit-for-bit. This is deliberately NOT an image decode — decoder
+    * output is not expressible in an independent SQL engine, so the
+    * twin keeps the driver's hash gate on the byte plumbing. */
   def metaQuery(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir).select(
       col("doc_id"),
@@ -352,16 +175,13 @@ object MultimodalOps {
   /** PERCEPTUAL-HASH NEAR-DUP over the binary payload column — the
     * image analog of MinHash text dedup, the dedup pass a multimodal
     * training pipeline runs over its image shards. Byte-level twin of
-    * the real decode (the [[metaQuery]] honesty pattern): the "8×8
+    * an image decode (the [[metaQuery]] honesty pattern): the "8×8
     * grayscale downsample" samples 64 evenly-spaced payload bytes
     * (pixel positions never shift in a fixed-raster image, so
     * positional sampling IS the honest fake); bit i = sample_i > mean
-    * (integer mean, floor). The REAL pixel kernel — block means over
-    * the decoded raster with cross-multiplied integer thresholding —
-    * is [[ahashOf]], verified on generated PNG fixtures in
-    * MultimodalSpec; this twin keeps the driver's hash gate on the
-    * Spark-side plumbing: band explode, hot-capped bucket self-join,
-    * XOR/bit_count verify.
+    * (integer mean, floor). The twin keeps the driver's hash gate on
+    * the Spark-side plumbing: band explode, hot-capped bucket
+    * self-join, XOR/bit_count verify.
     *
     * Scale shape: ONE narrow corpus pass builds the hashes
     * (localCheckpoint-pinned — the three downstream references read
@@ -455,8 +275,7 @@ object MultimodalOps {
     * against their median, making the hash exactly invariant to
     * uniform brightness shifts (see [[PhashDctBasis]]) and robust to
     * smooth global gradients. Same byte-level proxy signal as aHash
-    * (the decode honesty pattern — the real-raster kernel seam is
-    * [[ahashOf]]'s mapPartitions shape), same band-bucket candidate
+    * (the [[metaQuery]] honesty pattern), same band-bucket candidate
     * join, hot-bucket cap and Hamming verify.
     *
     * Exactness: the DCT is pure integer — basis entries are driver-
@@ -515,8 +334,7 @@ object MultimodalOps {
     * energies, the hash is exactly invariant under any monotone gain
     * change (volume scaling — the audio analog of pHash's
     * brightness-shift invariance, asserted in MultimodalSpec); the
-    * real-decode seam is [[audioStatsOf]]'s mapPartitions shape (the
-    * metaQuery honesty pattern), this byte twin keeps the gate on
+    * byte twin (the [[metaQuery]] honesty pattern) keeps the gate on
     * Spark-side plumbing.
     *
     * Exactness: energies ≤ 4·255² are small integers, bits are
@@ -553,62 +371,5 @@ object MultimodalOps {
       .withColumn("IsClose", col("Hamming") <= AudioMaxHamming)
       .select(col("IdA"), col("IdB"), col("Hamming"), col("IsClose"))
       .orderBy(col("IdA"), col("IdB"))
-  }
-
-  /** A decoded payload's 64-bit average hash, band-wise ([[AhashBands]]
-    * ints of [[AhashBandBits]] bits); `ok = false` (hash all-zero) for
-    * payloads no image reader accepts. */
-  case class AHash(doc_id: Long, ok: Boolean, bands: Seq[Int])
-
-  /** REAL aHash over the decoded raster: luminance block means on an
-    * 8×8 grid, each cell's bit set when its block mean exceeds the
-    * global mean — all comparisons cross-multiplied in longs
-    * (blockSum·totalPixels > totalSum·blockPixels), so the kernel is
-    * integer-exact and scale-invariant: a downscaled copy with the
-    * same block structure hashes identically. Same mapPartitions
-    * decode seam as [[imageStatsOf]]. */
-  def ahashOf(payloads: Dataset[(Long, Array[Byte])]): Dataset[AHash] = {
-    import payloads.sparkSession.implicits._
-    payloads.mapPartitions(_.map { case (id, bytes) =>
-      readImage(bytes) match {
-        case None => AHash(id, ok = false, Seq.fill(AhashBands)(0))
-        case Some((img, _)) =>
-          val raster = img.getRaster
-          val (w, h, nb) = (img.getWidth, img.getHeight, raster.getNumBands)
-          val blockSum = Array.ofDim[Long](8, 8)
-          val blockPix = Array.ofDim[Long](8, 8)
-          var y = 0
-          while (y < h) {
-            val gy = (y.toLong * 8 / h).toInt
-            var x = 0
-            while (x < w) {
-              val gx = (x.toLong * 8 / w).toInt
-              var lum = 0L
-              var b = 0
-              while (b < nb) { lum += raster.getSample(x, y, b); b += 1 }
-              blockSum(gy)(gx) += lum
-              blockPix(gy)(gx) += nb
-              x += 1
-            }
-            y += 1
-          }
-          val totalSum = blockSum.map(_.sum).sum
-          val totalPix = blockPix.map(_.sum).sum
-          val bands = Array.fill(AhashBands)(0)
-          var i = 0
-          while (i < 64) {
-            val (gy, gx) = (i / 8, i % 8)
-            // block mean > global mean, exactly: s/p > S/P  ⇔  s·P > S·p —
-            // the 64 comparisons promote to BigInt (s·P nears the int64
-            // ceiling around 22k×22k×3-channel images; 64 BigInt
-            // multiplies per image are free next to the pixel loop)
-            if (blockPix(gy)(gx) > 0 &&
-                BigInt(blockSum(gy)(gx)) * totalPix > BigInt(totalSum) * blockPix(gy)(gx))
-              bands(i / AhashBandBits) |= 1 << (i % AhashBandBits)
-            i += 1
-          }
-          AHash(id, ok = true, bands.toSeq)
-      }
-    })
   }
 }

@@ -771,44 +771,6 @@ object RelationalOps {
     in95.intersect(in96).orderBy(col("o_custkey"))
   }
 
-  /** Deliberately skewed join (skew-hardening demo, not a benchmark
-    * query): every even-orderkey lineitem row collapses onto hot key 1
-    * — one join key carries ~50% of the fact stream, the worst case a
-    * real pipeline hits when a null-ish default or a mega-customer
-    * dominates. Every OTHER shuffle key in this engine is uniform by
-    * construction (orderkey, user_id, md5 band values), so this query
-    * exists to prove the engine's answer to the case that breaks that
-    * assumption: AQE's OptimizeSkewedJoin splits the oversized
-    * partition into threshold-sized slices, replicating the matching
-    * build rows, with NO code change — SkewSpec asserts the final
-    * adaptive plan actually took the skew path (`skew=true` /
-    * `skewed` markers) and that results are value-identical to the
-    * same join with skew handling disabled. At 100 TB the identical
-    * mechanism applies per-partition; the alternative (manual salting)
-    * stays documented in PERFORMANCE.md for non-AQE engines. */
-  def skewedOrderJoin(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-      // AQE splits a skewed reduce partition by MAP-RANGE chunks, so the
-      // skewed side must arrive from multiple map tasks. A production
-      // fact table is thousands of splits; the single-file testdata is
-      // ONE, which makes any skew physically unsplittable — this uniform
-      // repartition stands in for the real input layout. Deliberately
-      // UNPINNED (pinned-spread audit exemption): downstream cost here
-      // is join BYTES, not per-row CPU, which is exactly the case AQE's
-      // byte-based coalescing sizes correctly — and the skew-split
-      // machinery this query exists to exercise runs after it anyway.
-      .repartition(col("l_orderkey"), col("l_linenumber"))
-      .withColumn("JoinKey",
-        when(col("l_orderkey") % 2 === 0, lit(1L)).otherwise(col("l_orderkey")))
-    val o = Tables.orders(spark, dir)
-      .select(col("o_orderkey").as("JoinKey"), col("o_orderpriority"))
-    li.join(o, "JoinKey")
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("NRows"),
-        sum(col("l_quantity").cast(dec)).cast(DoubleType).as("SumQty"))
-      .orderBy(col("o_orderpriority"))
-  }
-
   /** Value bands for [[rangeJoinValueBands]]: (name, lo inclusive,
     * hi exclusive). Non-uniform widths on purpose — the binning math
     * must handle bands narrower and wider than a bin. ALSO read by the

@@ -1097,9 +1097,7 @@ object SimilarityOps {
     * sees arrivals immediately. The fingerprint keeps its corpus line
     * and bumps a `batches:<N>` line ([[BucketedTables]] format): the
     * index stays "fresh" for its corpus across sessions, while the
-    * count records that it holds more than the corpus. The bucketed
-    * lists twin (a THIRD layout of this relation) is dropped — it
-    * rebuilds from the appended lists on next use.
+    * count records that it holds more than the corpus.
     *
     * Appends do not move the codebook, so list sizes drift as the
     * data distribution does; when the largest list exceeds
@@ -1125,8 +1123,7 @@ object SimilarityOps {
     * pqcodes not, so [[ivfpqTopk]] misses arrivals [[ivfTopk]] sees.
     * Both are bounded to ONE batch and cannot corrupt corpus-derived
     * state (the fingerprint's corpus line never moves here), but
-    * unlike the sketch table they cannot ride the gen-N swap
-    * discipline (DocsStream.publishSketchGeneration): appends are the
+    * they cannot ride a publish-a-new-generation swap: appends are the
     * point — republishing the whole lists tree per batch would be
     * O(index), not O(batch). The production remedy is a table format
     * with atomic multi-file commits (Iceberg/Delta manifest swap,
@@ -1162,7 +1159,6 @@ object SimilarityOps {
               "vec_id")
             .write.mode("append").partitionBy("Cid").parquet(s"$base/pqcodes")
         }
-        dropListsTwin(spark, dir, nCentroids)
         val n = BucketedTables.bumpAppendedBatches(
           java.nio.file.Paths.get(base, "_corpus_fingerprint"))
         (n, assigned.select(col("Cid")).distinct()
@@ -1189,9 +1185,8 @@ object SimilarityOps {
     * directly over a corpus containing the same rows (OpsSpec).
     * Writes land in `codebook_next`/`lists_next`, then swap in under
     * the build lock — a reader mid-plan sees the old layout or the
-    * new, never a half-written one. The PQ layer and the bucketed
-    * twin are derived from assignments, so both are dropped (they
-    * lazily rebuild). */
+    * new, never a half-written one. The PQ layer is derived from
+    * assignments, so it is dropped (it lazily rebuilds). */
   def reclusterIvfIndex(spark: SparkSession, dir: String,
                         nCentroids: Int = DefaultNCentroids): Unit = {
     reclusterLocked(spark, dir, nCentroids)
@@ -1218,37 +1213,16 @@ object SimilarityOps {
     }
     Seq("pqcodebook", "pqcodes").foreach(d =>
       deleteRecursively(Paths.get(s"$base/$d")))
-    dropListsTwin(spark, dir, nCentroids)
   }
-
-  /** Drop the bucketed lists twin for (dir, K) by NAME, whichever
-    * session built it: its content derives from the lists, so any
-    * lists mutation invalidates it, and a recluster leaves its
-    * fingerprint unchanged. Caller holds [[ivfBuildLock]] and calls
-    * [[releaseListsDerived]] after leaving it. */
-  private def dropListsTwin(spark: SparkSession, dir: String, nCentroids: Int): Unit =
-    BucketedTables.dropWithFiles(spark, listsTableName(dir, nCentroids))
 
   /** Release every session's registry entries derived from the lists
-    * of (dir, K) — the bucketed twin and the cached hierarchical
-    * assignments — after an index mutation. Called OUTSIDE
-    * [[ivfBuildLock]]: a release waits on the entry's key lock, and
-    * the twin's build takes the index lock under it. */
+    * of (dir, K) — the cached hierarchical assignments — after an
+    * index mutation. Called OUTSIDE [[ivfBuildLock]]: a release waits
+    * on the entry's key lock, and the entry's build takes the index
+    * lock under it. */
   private def releaseListsDerived(dir: String, nCentroids: Int): Unit =
     Substrates.release(k => k.dir == dir && k.params.headOption.contains(nCentroids) &&
-      (k.kind == ListsTableKind || k.kind == HierAssignKind))
-
-  /** Fingerprint of the lists CONTENT for (dir, K): the corpus line
-    * plus the appended-batch count. Layouts derived from the lists
-    * (the bucketed twin) carry this, so a twin built before an append
-    * reads as stale even though the corpus itself never changed. */
-  private def listsContentFingerprint(spark: SparkSession, dir: String,
-                                      nCentroids: Int): String = {
-    val fp = java.nio.file.Paths.get(
-      ivfBase(spark, dir, nCentroids), "_corpus_fingerprint")
-    val n = BucketedTables.appendedBatches(fp)
-    corpusFingerprint(dir) + (if (n > 0) s"+batches:$n" else "")
-  }
+      k.kind == HierAssignKind)
 
   /** The probe set (vec_id < [[ProbeIdMax]]) in routing shape. */
   private def probeVectors(spark: SparkSession, dir: String): DataFrame =
@@ -1623,67 +1597,6 @@ object SimilarityOps {
       .transform(graft.etl.Summaries.smallSort(_, col("Cid")))
   }
 
-  private val ListsTableKind = "similarity.listsTable"
-
-  /** Buckets for [[bucketedListsTable]] — matches the default cluster
-    * count so each bucket holds ~one inverted list. */
-  val ListsTableBuckets = 16
-
-  private def listsTableName(dir: String, nCentroids: Int): String =
-    BucketedTables.tableName("graft_ivf_lists", dir, s"_k$nCentroids")
-
-  /** Build (or REBUILD) the BUCKETED twin of the inverted lists: the
-    * same (vec_id, Q, NormSq, Cid) rows as `<index>/lists`, written
-    * once as a catalog table `bucketBy(Cid) sortBy(Cid)`. The
-    * partitioned layout serves ROUTED probes (partition-pruned I/O for
-    * `Cid IN (route)`); this layout serves CLUSTER-SCOPED self-joins
-    * (the corpus never re-shuffles — OpsSpec asserts the join plans
-    * with zero exchanges on both sides). Two layouts of one relation
-    * for two access paths is the standard warehouse trade; both are
-    * write-once, fingerprint-guarded, and dropped by
-    * [[Substrates.invalidate]]. */
-  private def buildBucketedLists(spark: SparkSession, dir: String, nCentroids: Int,
-                                 base: String): String = ivfBuildLock.synchronized {
-    val name = listsTableName(dir, nCentroids)
-    BucketedTables.dropWithFiles(spark, name)
-    spark.read.parquet(s"$base/lists")
-      .select(col("vec_id"), col("Q"), col("NormSq"),
-        col("Cid").cast(LongType).as("Cid"))
-      .write.mode("overwrite")
-      .bucketBy(ListsTableBuckets, "Cid").sortBy("Cid")
-      .saveAsTable(name)
-    BucketedTables.writeFingerprint(spark, name,
-      listsContentFingerprint(spark, dir, nCentroids))
-    name
-  }
-
-  /** Build-if-absent for the bucketed lists: registry entry →
-    * [[BucketedTables.resolve]] ladder (freshness-guarded on every
-    * branch), with the ladder run under [[ivfBuildLock]] inside the
-    * registry's key lock — two racing first-callers would otherwise
-    * both run the DROP+rebuild against the directory the other is
-    * reading. */
-  def bucketedListsTable(spark: SparkSession, dir: String,
-                         nCentroids: Int = DefaultNCentroids): String =
-    Substrates[String](spark, dir, ListsTableKind, nCentroids)(n =>
-      ivfBuildLock.synchronized(BucketedTables.dropWithFiles(spark, n))) {
-      // the IVF key first, outside the index lock (Substrates locking)
-      val base = ivfIndexPath(spark, dir, nCentroids)
-      ivfBuildLock.synchronized {
-        val name = listsTableName(dir, nCentroids)
-        val loc = BucketedTables.location(spark, name)
-        BucketedTables.resolve(spark, name,
-          registerDdl =
-            s"""CREATE TABLE $name (vec_id BIGINT, Q ARRAY<BIGINT>, NormSq BIGINT, Cid BIGINT)
-               |USING PARQUET
-               |CLUSTERED BY (Cid) SORTED BY (Cid)
-               |INTO $ListsTableBuckets BUCKETS
-               |LOCATION '${loc.toUri}'""".stripMargin,
-          fingerprint = listsContentFingerprint(spark, dir, nCentroids),
-          build = () => buildBucketedLists(spark, dir, nCentroids, base))
-      }
-    }
-
   /** SemDeDup-style semantic dedup: near-duplicate detection scoped
     * to k-means clusters. A vector is a duplicate iff some LOWER-id
     * vector in the SAME cluster reaches cosine ≥ `threshold`;
@@ -1713,7 +1626,7 @@ object SimilarityOps {
                     nCentroids: Int = DefaultNCentroids): DataFrame = {
     val base = ivfIndexPath(spark, dir, nCentroids)
     semanticDedupFrom(spark, dir, spark.read.parquet(s"$base/lists"), threshold,
-      sizedForK = Some(nCentroids))
+      sizedForK = nCentroids)
   }
 
   /** The K ∝ √n cluster-count policy as an EXECUTABLE function —
@@ -1746,18 +1659,6 @@ object SimilarityOps {
     val n = quantized(spark, dir).count()
     semanticDedup(spark, dir, threshold, policyK(n))
   }
-
-  /** [[semanticDedup]] over the BUCKETED lists twin: identical values,
-    * but the intra-cluster self-join reads both sides pre-bucketed +
-    * pre-sorted on Cid — ZERO exchanges on either join input
-    * (plan-asserted in OpsSpec with broadcast off), where the
-    * partitioned-parquet path must shuffle the whole corpus past the
-    * broadcast threshold. The 100 TB execution of the same query. */
-  def semanticDedupBucketed(spark: SparkSession, dir: String,
-                            threshold: Double = DefaultSemDedupThreshold,
-                            nCentroids: Int = DefaultNCentroids): DataFrame =
-    semanticDedupFrom(spark, dir,
-      spark.table(bucketedListsTable(spark, dir, nCentroids)), threshold)
 
   /** Hierarchical (coarse-routed) cluster ASSIGNMENT — the next-decade
     * path the round-8 100× rehearsal filed for the semantic-dedup
@@ -1999,9 +1900,8 @@ object SimilarityOps {
     * corpus and every consumer (the pair self-join reads it from BOTH
     * sides) scans the cache. It derives from the persisted codebook,
     * so every index MUTATION (append, recluster) releases it
-    * ([[releaseListsDerived]]) the way it drops the bucketed lists
-    * twin; the flat path needs no such hook only because it re-reads
-    * the lists files per plan.
+    * ([[releaseListsDerived]]); the flat path needs no such hook
+    * because it re-reads the lists files per plan.
     *
     * Lock order: this build holds its key lock while it resolves the
     * IVF index (its key lock, then [[ivfBuildLock]], then the
@@ -2029,24 +1929,22 @@ object SimilarityOps {
                                 nprobe: Int = HierNProbe): DataFrame =
     semanticDedupFrom(spark, dir,
       hierAssigned(spark, dir, nCentroids, nprobe), threshold,
-      sizedForK = Some(nCentroids))
+      sizedForK = nCentroids)
 
   private[graft] def semanticDedupFrom(spark: SparkSession, dir: String,
                                        lists: DataFrame, threshold: Double,
-                                       sizedForK: Option[Int] = None,
+                                       sizedForK: Int,
                                        capRowsPerTask: Long = CandidateRowsPerTask): DataFrame = {
     // SELF-SIZED verify exchange (round 14, the knnGraphIvfEdges
     // rule): the intra-cluster pair join emits ~n²/(2K) candidate
     // rows — computable from the corpus count and the CALLER's K, so
-    // the non-bucketed paths (flat lists, hierarchical assignment)
-    // size their own exchange. The bucketed twin passes None: its
-    // zero-exchange join layout IS the physical choice being
-    // demonstrated, fixed at build time by the bucket count.
-    val sized = sizedForK.map { k =>
-      val n = embeddingsCount(spark, dir).toDouble
-      candidatePartitions(spark, n * n / (2.0 * k), capRowsPerTask)
-    }.filter(_ > spark.sessionState.conf.numShufflePartitions)
-    val src = sized.map(p => lists.repartition(p, col("Cid"))).getOrElse(lists)
+    // both paths (flat lists, hierarchical assignment) size their own
+    // exchange
+    val n = embeddingsCount(spark, dir).toDouble
+    val sized = candidatePartitions(spark, n * n / (2.0 * sizedForK), capRowsPerTask)
+    val src =
+      if (sized > spark.sessionState.conf.numShufflePartitions) lists.repartition(sized, col("Cid"))
+      else lists
     val labels = quantized(spark, dir).select(col("vec_id"), col("label"))
     val a = src.select(col("Cid"), col("vec_id").as("V1"),
       col("Q").as("Q1"), col("NormSq").as("N1"))
@@ -2169,9 +2067,12 @@ object SimilarityOps {
       .select(col("V1"), col("V2")).distinct()
   }
 
-  /** Candidate-pair count for a given band shape (test/diagnostic
-    * surface: candidates shrink as planesPerBand grows). */
-  def lshCandidateCount(spark: SparkSession, dir: String,
+  /** Candidate-pair count for a given band shape (candidates shrink as
+    * planesPerBand grows).
+    *
+    * Kept with no engine caller: OpsSpec and SkewSpec check the live
+    * [[lshNeardup]] banding through it. */
+  private[graft] def lshCandidateCount(spark: SparkSession, dir: String,
                         bands: Int, planesPerBand: Int): Long =
     bandCandidates(withBands(quantized(spark, dir), bands, planesPerBand), bands).count()
 

@@ -651,8 +651,8 @@ object TextOps {
     * side-membership splits of the union bottom-k, own-sketch
     * cardinalities, directional difference estimates and containments.
     * Everything here derives from the SKETCHES alone, which is what
-    * lets the streaming twin emit these columns from its maintained
-    * sketch table; the batch query layers the whole-corpus exact
+    * lets the streaming twin emit these columns from its merged
+    * per-source sketches; the batch query layers the whole-corpus exact
     * certificate on top. Internal columns (U/Sz/Kth/Matched/InA/InB/
     * EstUnion/EstOverlap + prefixed inputs) are kept for that layer —
     * callers select their declared output. */
@@ -1601,7 +1601,7 @@ object TextOps {
       .groupBy(col("A"), col("B")).agg(sum(col("C2")).as("W"))
       .filter(col("W") >= TextRankMinW)
     val sw = sym.groupBy(col("A")).agg(sum(col("W")).as("SW"))
-    // localCheckpoint-pinned (r17, the trianglesOf oriented-set rule):
+    // localCheckpoint-pinned (r17, the orientedWithBloom oriented-set rule):
     // the edge table feeds every unrolled round — unpinned, each round
     // re-derived the unionAll + two aggregates + join chain (the
     // printed plan repeated the substrate five times; measured ~3 s of

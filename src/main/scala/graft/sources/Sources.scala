@@ -16,6 +16,10 @@ import org.apache.spark.sql.types.StructType
   * repartition/cache), so Catalyst pushes filters/projections into the
   * source and AQE sizes shuffles per query. A 100 TB deployment swaps
   * the source object, not the pipeline.
+  *
+  * Kept with no engine caller: it is the reference's Extract step (S1,
+  * `pd.read_excel`, etl.py:44-54; SURVEY.md:119), reached through
+  * `Tables.via`.
   */
 trait TabularSource {
   def name: String

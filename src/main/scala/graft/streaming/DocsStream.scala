@@ -173,145 +173,14 @@ object DocsStream {
       }
       .start()
 
-  /** Schema of the persisted per-source sketch table
-    * ([[runSourceSketchUpsert]]): one row per source, `Ks` = the
-    * bottom-k shingle hashes. */
+  /** Schema of the per-source sketch rows [[runSourceSketch]] emits:
+    * one row per source, `Ks` = the bottom-k shingle hashes. */
   private[graft] val sketchTableSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("source",
       org.apache.spark.sql.types.StringType),
     org.apache.spark.sql.types.StructField("Ks",
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.LongType, containsNull = false))))
-
-  /** Latest COMMITTED generation of a persisted sketch table: the
-    * highest-numbered `gen-N` child directory carrying a `_SUCCESS`
-    * marker. Hadoop FileSystem API, not `java.io.File` (r15 watch
-    * item: the 100 TB home of a persisted sketch table is HDFS/S3,
-    * where a local-FS existence check silently reports absent and
-    * the first trigger would clobber a real table) — the path
-    * resolves through `tablePath`'s own scheme, so `file:`/`hdfs:`/
-    * `s3a:` URIs all work. */
-  private[graft] def latestSketchGeneration(
-      spark: SparkSession, tablePath: String): Option[(Long, String)] = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) None
-    else fs.listStatus(root).toSeq
-      .filter(_.isDirectory)
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (!n.startsWith("gen-")) None
-        else scala.util.Try(n.stripPrefix("gen-").toLong).toOption
-          .filter(_ => fs.exists(
-            new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-          .map(g => (g, st.getPath.toString))
-      }
-      .sortBy(_._1).lastOption
-  }
-
-  /** Read the persisted sketch table — its latest committed
-    * generation, or an empty frame if none exists yet. */
-  private[graft] def readSketchTable(
-      spark: SparkSession, tablePath: String): DataFrame =
-    latestSketchGeneration(spark, tablePath) match {
-      case Some((_, genPath)) =>
-        spark.read.schema(sketchTableSchema).parquet(genPath)
-      case None => OneShot.frame(spark, Nil, sketchTableSchema)
-    }
-
-  /** Publish one new generation of the sketch table ATOMICALLY
-    * (advice r15: a bare `mode("overwrite")` to the table path
-    * deletes the committed table BEFORE the new write commits — a
-    * crash in that window loses every prior source's sketches, and
-    * the restart's checkpoint replays only the in-flight batch, so
-    * the merge silently proceeds from empty and every later
-    * publication under-reports). Here the previous generation
-    * survives until `gen-(N+1)/_SUCCESS` exists: a crash mid-write
-    * leaves an uncommitted dir that [[latestSketchGeneration]]
-    * ignores and the next trigger overwrites. Older committed
-    * generations are pruned only AFTER the new commit (a crash
-    * between commit and prune just leaves extra dirs for the next
-    * trigger's prune). Returns the committed generation path. */
-  private[graft] def writeSketchGeneration(
-      spark: SparkSession, pinned: DataFrame, tablePath: String): String = {
-    val next = latestSketchGeneration(spark, tablePath).map(_._1 + 1).getOrElse(0L)
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val genPath = new org.apache.hadoop.fs.Path(root, f"gen-$next%016d")
-    pinned.coalesce(1).write.mode("overwrite").parquet(genPath.toString)
-    // the commit marker must exist CONFIG-INDEPENDENTLY (r17, r16
-    // advice #1): FileOutputCommitter only writes _SUCCESS when
-    // mapreduce.fileoutputcommitter.marksuccessfuljobs is true — a
-    // common object-store deployment disables it, and then NO
-    // generation ever looks committed: latestSketchGeneration returns
-    // None forever, every merge silently proceeds from the current
-    // batch alone, and every publication under-reports. Create the
-    // marker explicitly when the write didn't.
-    val marker = new org.apache.hadoop.fs.Path(genPath, "_SUCCESS")
-    if (!fs.exists(marker)) fs.create(marker, false).close()
-    // prune only generations STRICTLY OLDER than the one just
-    // committed (r17, r16 advice #3): an unconditional
-    // everything-but-mine sweep would delete a NEWER generation
-    // committed by a misconfigured second writer sharing the table
-    // path; single-writer remains the contract, but the prune no
-    // longer destroys evidence of its violation.
-    fs.listStatus(root).toSeq.filter(_.isDirectory)
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (!n.startsWith("gen-")) None
-        else scala.util.Try(n.stripPrefix("gen-").toLong).toOption
-          .filter(_ < next).map(_ => st.getPath)
-      }
-      .foreach(fs.delete(_, true))
-    genPath.toString
-  }
-
-  /** Incremental PUBLICATION of the source-overlap AND
-    * source-difference estimates (round 15/16 — makes the "any
-    * trigger can publish" claim executable for BOTH cards): maintain
-    * a persisted per-source sketch table via a foreachBatch upsert.
-    * Each trigger folds its microbatch to per-source partials
-    * ([[sourceSketchBatch]]), merges them into the table by
-    * re-sketching the union (EXACT — the KMV composability property
-    * the parity spec proves), publishes a new table generation
-    * atomically ([[writeSketchGeneration]]), and hands `publish` the
-    * fresh pair estimates derived from it — the overlap card
-    * (TextOps.kmvPairEstimates) and the difference card
-    * (TextOps.kmvDifferenceEstimates), both the ONE pair-math
-    * definition shared with the batch queries; the difference card
-    * is sketch-only by construction, which is exactly why the
-    * maintained table can serve it with no further state.
-    *
-    * The table is the ONLY state, so the twin is restart-proof two
-    * ways: unreplayed batches merge in after a restart (checkpointed
-    * source offsets), and a REPLAYED batch (foreachBatch is
-    * at-least-once on crash) is absorbed exactly — a bottom-k union
-    * is idempotent under duplicate elements, so re-merging the same
-    * partial cannot move any sketch. State = |sources| × k longs
-    * however long the stream runs; the upsert pins the merged table
-    * on the driver (sketch-scale by construction) so no generation
-    * write ever reads the path it replaces. */
-  def runSourceSketchUpsert(spark: SparkSession, docs: DataFrame,
-                            tablePath: String, checkpointDir: String)
-                           (publish: (Long, DataFrame, DataFrame) => Unit): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val partials = sourceSketchBatch(spark, batch)
-        val prior = readSketchTable(spark, tablePath)
-        val merged = graft.ops.TextOps.kmvSketchOf(
-          prior.unionByName(partials)
-            .select(col("source"), explode(col("Ks")).as("V")))
-        val pinned = OneShot.frame(spark, merged.collect().toSeq, sketchTableSchema)
-        writeSketchGeneration(spark, pinned, tablePath)
-        publish(batchId,
-          graft.ops.TextOps.kmvPairEstimates(pinned)
-            .select(col("SA"), col("SB"), col("Matched"),
-              col("EstUnion"), col("EstOverlap")),
-          graft.ops.TextOps.kmvDifferenceEstimates(pinned)
-            .select(graft.ops.TextOps.DifferenceEstimateCols.map(col): _*))
-      }
-      .start()
 
   /** Streaming twin of `sketch_source_overlap`, emitting the DECLARED
     * production columns (the estimate side only — the batch query's

@@ -8,8 +8,8 @@ import org.apache.spark.sql.types._
 import graft.etl.Tables
 
 /** Structured Streaming twins of the batch event operators: windowed
-  * aggregation with watermarking, and custom sessionization state via
-  * `mapGroupsWithState`.
+  * aggregation with watermarking, session windows, and custom per-user
+  * state via `mapGroupsWithState` / `flatMapGroupsWithState`.
   *
   * The batch queries in graft.ops.EventsOps define the semantics; these
   * run the same logic incrementally. Local tests drive them from the
@@ -25,10 +25,6 @@ object EventsStream {
 
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
                    event_type: String, value: Double)
-
-  case class SessionState(lastUs: Long, nEvents: Long, nSessions: Long)
-
-  case class UserSessions(user_id: Long, nEvents: Long, nSessions: Long)
 
   /** Per-user last-view state for the as-of twin (Long.MinValue = no
     * view seen yet). */
@@ -82,28 +78,6 @@ object EventsStream {
         sum(col("value").cast(DecimalType(18, 4))).cast(DoubleType).as("TotalValue"))
       .select(col("window.start").as("WindowStart"), col("event_type"),
         col("NEvents"), col("TotalValue"))
-
-  /** Per-user sessionization with a 30-minute inactivity gap as
-    * explicit streaming state (streaming twin of
-    * EventsOps.sessionize). */
-  def sessionCounts(events: Dataset[Event])(implicit spark: SparkSession): Dataset[UserSessions] = {
-    import spark.implicits._
-    val gapUs = 1800L * 1000000L
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout()) {
-        (userId: Long, evs: Iterator[Event], state: GroupState[SessionState]) =>
-          val sorted = evs.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-          var st = state.getOption.getOrElse(SessionState(Long.MinValue, 0L, 0L))
-          sorted.foreach { e =>
-            val us = micros(e.ts)
-            val newSession = st.nEvents == 0L || us - st.lastUs > gapUs
-            st = SessionState(us, st.nEvents + 1, st.nSessions + (if (newSession) 1 else 0))
-          }
-          state.update(st)
-          UserSessions(userId, st.nEvents, st.nSessions)
-      }
-  }
 
   /** Per-user funnel state: the running min view instant plus the
     * PRUNED candidate click/purchase instants that could still matter.
@@ -206,26 +180,6 @@ object EventsStream {
           best
       }
   }
-
-  /** Streaming exact-dedup twin (the dedup_exact family): an
-    * at-least-once transport re-delivers events, and
-    * `dropDuplicatesWithinWatermark` keyed on `event_id` emits each id
-    * once while the watermark EVICTS a key's dedup state once event
-    * time moves `delay` past it — the property that makes streaming
-    * dedup viable at 100 TB: state is a sliding window of recent keys,
-    * not an ever-growing set of every id ever seen (plain
-    * `dropDuplicates` on an unbounded stream is a slow state leak).
-    * The contract is the standard one: a duplicate arriving within
-    * `delay` of the original is suppressed; later re-deliveries are
-    * the transport's SLA violation, not the operator's.
-    *
-    * StreamingSpec drives it with every source file staged TWICE
-    * (full duplicate delivery) and asserts the sink equals the
-    * single-copy batch table exactly. */
-  def dedupEvents(events: DataFrame, delay: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", delay)
-      .dropDuplicatesWithinWatermark("event_id")
 
   /** Streaming twin of RelationalOps.purchaseAsofView: per-user
     * last-view state via `flatMapGroupsWithState` — each incoming

@@ -56,7 +56,7 @@ class BandIndexSpec extends SparkSpec {
       }
     def tableType(name: String) =
       spark.sessionState.catalog.getTableMetadata(TableIdentifier(name)).tableType.name
-    val dir = Files.createTempDirectory("graft-bandidx").toString
+    val dir = tempDir("graft-bandidx").toString
     // corpus id 9 is the "new arrival"; 1 and 2 are corpus
     writeDocs(dir, Seq((1L, "alpha beta gamma delta"), (2L, "unrelated words here now"),
       (9L, "alpha beta gamma delta")))
@@ -66,7 +66,7 @@ class BandIndexSpec extends SparkSpec {
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), name)
     // simulate a NEW session that inherits only the files: stash them,
     // invalidate (drops table + files + memo), restore the stash
-    val stash = Files.createTempDirectory("graft-bandidx-stash")
+    val stash = tempDir("graft-bandidx-stash")
     copyTree(loc, stash)
     Substrates.invalidate(spark, dir)
     copyTree(stash, Files.createDirectories(loc))
@@ -92,7 +92,7 @@ class BandIndexSpec extends SparkSpec {
       texts.map { case (id, t) => (id, t, "en", "fix", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val dir = Files.createTempDirectory("graft-bandidx-sib").toString
+    val dir = tempDir("graft-bandidx-sib").toString
     // doc 9 (arrival) duplicates doc 1 (corpus) → one match
     writeDocs(dir, Seq((1L, "alpha beta gamma delta"), (2L, "unrelated words here now"),
       (9L, "alpha beta gamma delta")))

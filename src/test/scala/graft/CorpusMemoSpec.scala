@@ -14,7 +14,7 @@ import graft.ops.SimilarityOps
 class CorpusMemoSpec extends SparkSpec {
 
   test("dir invalidation refreshes the documents spread width and the embeddings count after an append") {
-    val dir = Files.createTempDirectory("graft_memo_").toString
+    val dir = tempDir("graft_memo_").toString
     // 100 docs → ceil(100/160) = 1 partition at local[4]
     val doc = (n: Long) => spark.range(n)
       .select(col("id").as("doc_id"),
@@ -60,7 +60,7 @@ class CorpusMemoSpec extends SparkSpec {
     // memos are sticky (they must be — the cached listing pins the
     // old file set), then assert the ONE corpus-refresh entry point
     // makes the doubled node universe visible.
-    val dir = Files.createTempDirectory("graft_memo_graph_").toString
+    val dir = tempDir("graft_memo_graph_").toString
     val src = Tables.lineitem(spark, sfDir)
     src.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     def nNodes(): Long = graft.ops.GraphOps.degreeStats(spark, dir)
@@ -71,7 +71,7 @@ class CorpusMemoSpec extends SparkSpec {
     // FILE MOVE — no Spark write touches the corpus dir, exactly like
     // a foreign process appending
     val shift = 10000000L
-    val stage = Files.createTempDirectory("graft_memo_stage_")
+    val stage = tempDir("graft_memo_stage_")
     src
       .withColumn("l_orderkey",
         (col("l_orderkey") + shift).cast(src.schema("l_orderkey").dataType))
@@ -97,7 +97,7 @@ class CorpusMemoSpec extends SparkSpec {
     // postings, doc stats, the n-gram LMs, langid and BPE are all keyed
     // on (session, dir) over documents; land new documents by FILE
     // MOVE (a same-session write would recache and hide staleness)
-    val dir = Files.createTempDirectory("graft_memo_text_").toString
+    val dir = tempDir("graft_memo_text_").toString
     val doc = (from: Long, n: Long) => spark.range(from, from + n)
       .select(col("id").as("doc_id"),
         concat(lit("body of document "), col("id")).as("text"),
@@ -107,7 +107,7 @@ class CorpusMemoSpec extends SparkSpec {
     def docIds(): Set[Long] = graft.ops.TextOps.docPostings(spark, dir)
       .select(col("doc_id")).distinct().collect().map(_.getLong(0)).toSet
     assert(docIds() === (0L until 100L).toSet)
-    val stage = Files.createTempDirectory("graft_memo_text_stage_")
+    val stage = tempDir("graft_memo_text_stage_")
     doc(1000L, 50L).write.mode("overwrite").parquet(stage.toString)
     import scala.jdk.CollectionConverters._
     val listing = Files.list(stage)

@@ -26,7 +26,7 @@ class CurateTextSpec extends SparkSpec {
   /** Write a documents.parquet fixture into a temp dir Tables can read. */
   private def docsFixture(rows: Seq[(Long, String, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-docs").toString
+    val dir = tempDir("graft-docs").toString
     rows.map { case (id, text, lang) => (id, text, lang, "fix", text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
@@ -211,7 +211,7 @@ class CurateTextSpec extends SparkSpec {
 
   test("curation pipeline: funnel monotone, output on disk passes every stage predicate") {
     import org.apache.spark.sql.functions.col
-    val outDir = java.nio.file.Files.createTempDirectory("graft-curated").toString
+    val outDir = tempDir("graft-curated").toString
     // corpus-tuned threshold: the synthetic vocab is tiny, so trigram
     // eval overlap is near-universal (median 5 shared shingles/doc) —
     // drop only the worst leakers
@@ -424,7 +424,7 @@ class CurateTextSpec extends SparkSpec {
   /** documents fixture with caller-controlled sources. */
   private def docsFixtureSrc(rows: Seq[(Long, String, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-docs-src").toString
+    val dir = tempDir("graft-docs-src").toString
     rows.map { case (id, text, src) => (id, text, "en", src, text.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")

@@ -122,7 +122,7 @@ class ExtensionsSpec extends SparkSpec {
     assert(missing(spark).isEmpty, s"session lacks: ${missing(spark).mkString(", ")}")
     val sibling = spark.newSession()
     assert(missing(sibling).isEmpty, s"sibling lacks: ${missing(sibling).mkString(", ")}")
-    val dir = java.nio.file.Files.createTempDirectory("graft_ext_stream")
+    val dir = tempDir("graft_ext_stream")
     import spark.implicits._
     Seq("a b c d").toDF("text").write.mode("overwrite").parquet(s"$dir/in")
     val seen = collection.mutable.ArrayBuffer.empty[(Boolean, Seq[String])]

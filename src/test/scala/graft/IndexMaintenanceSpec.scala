@@ -39,7 +39,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // must be DETECTED by the next session's build-if-absent and
     // rebuilt, never probed. Simulate the two coarse-index windows by
     // deleting the marker a crash would have left unwritten.
-    val tmp = Files.createTempDirectory("graft_ivf_crash").toAbsolutePath
+    val tmp = tempDir("graft_ivf_crash").toAbsolutePath
     copyCorpus(sfDir, "embeddings", tmp, col("vec_id") < 400)
     val dir = tmp.toString
     val base = SimilarityOps.ivfIndexPath(spark, dir)
@@ -59,8 +59,8 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("ivfAppend touches only routed list partitions; recluster equals a from-scratch build") {
-    val tmpA = Files.createTempDirectory("graft_ivf_app_a").toAbsolutePath
-    val tmpB = Files.createTempDirectory("graft_ivf_app_b").toAbsolutePath
+    val tmpA = tempDir("graft_ivf_app_a").toAbsolutePath
+    val tmpB = tempDir("graft_ivf_app_b").toAbsolutePath
     copyCorpus(sfDir, "embeddings", tmpA, col("vec_id") < 400)
     copyCorpus(sfDir, "embeddings", tmpB, lit(true))
 
@@ -125,7 +125,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     // the ordering the first implementation got wrong: append while no
     // PQ layer exists, then let ivfpqTopk build it lazily — the codes
     // must come from the LISTS (corpus + appends), not the corpus table
-    val tmp = Files.createTempDirectory("graft_ivfpq_late").toAbsolutePath
+    val tmp = tempDir("graft_ivfpq_late").toAbsolutePath
     copyCorpus(sfDir, "embeddings", tmp, col("vec_id") < 400)
     SimilarityOps.buildIvfIndex(spark, tmp.toString)
     val arrivals = spark.read.parquet(s"$sfDir/embeddings.parquet")
@@ -141,7 +141,7 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("ivfAppend triggers a recluster when a list blows past the skew threshold") {
-    val tmp = Files.createTempDirectory("graft_ivf_skew").toAbsolutePath
+    val tmp = tempDir("graft_ivf_skew").toAbsolutePath
     copyCorpus(sfDir, "embeddings", tmp, col("vec_id") < 400)
     val base = SimilarityOps.buildIvfIndex(spark, tmp.toString)
     val before = partitionFiles(s"$base/lists")
@@ -163,8 +163,8 @@ class IndexMaintenanceSpec extends SparkSpec {
   }
 
   test("bandAppend keeps existing files, lands through the bucket spec, and matches a full build") {
-    val tmpA = Files.createTempDirectory("graft_band_app_a").toAbsolutePath
-    val tmpB = Files.createTempDirectory("graft_band_app_b").toAbsolutePath
+    val tmpA = tempDir("graft_band_app_a").toAbsolutePath
+    val tmpB = tempDir("graft_band_app_b").toAbsolutePath
     // corpus split on doc_id; arrivals-by-convention (doc_id % 10 == 9)
     // are excluded from BOTH indexes by corpusBandIndex itself
     copyCorpus(sfDir, "documents", tmpA, col("doc_id") < 400)

@@ -1,140 +1,12 @@
 package graft
 
-import java.awt.image.BufferedImage
-import java.io.ByteArrayOutputStream
-
 import graft.ops.MultimodalOps
 
-/** The REAL image decode path: in-repo generated PNG/JPEG fixtures
-  * with known dimensions and pixel statistics, pushed through the
-  * mapPartitions decode operators. */
+/** The perceptual-hash family over the binary payload column: each
+  * banded query against an independent driver recomputation, the
+  * invariances its hash promises, and the native band kernels against
+  * the declarative forms they replaced. */
 class MultimodalSpec extends SparkSpec {
-
-  private def imageBytes(fmt: String, w: Int, h: Int)
-                        (pixel: (Int, Int) => Int): Array[Byte] = {
-    val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, pixel(x, y))
-    val out = new ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, fmt, out), s"no $fmt writer")
-    out.toByteArray
-  }
-
-  private def rgb(r: Int, g: Int, b: Int): Int = (r << 16) | (g << 8) | b
-
-  test("decodeMeta reads true dimensions, channels, and format from generated PNG/JPEG") {
-    import spark.implicits._
-    val png = imageBytes("png", 31, 17)((_, _) => rgb(10, 20, 30))
-    val jpg = imageBytes("jpeg", 8, 12)((_, _) => rgb(200, 100, 50))
-    val garbage = Array.tabulate[Byte](64)(i => (i * 37).toByte)
-    val metas = MultimodalOps.decodeMetaOf(
-        Seq((1L, png), (2L, jpg), (3L, garbage)).toDS())
-      .collect().map(m => m.doc_id -> m).toMap
-    assert(metas(1L).width === 31 && metas(1L).height === 17)
-    assert(metas(1L).channels === 3 && metas(1L).format === "image/png")
-    assert(metas(1L).n_bytes === png.length)
-    assert(metas(2L).width === 8 && metas(2L).height === 12)
-    assert(metas(2L).format === "image/jpeg")
-    assert(metas(3L).format === MultimodalOps.Undecodable)
-    assert(metas(3L).width === 0 && metas(3L).channels === 0)
-  }
-
-  test("imageStats computes channel means from real pixels") {
-    import spark.implicits._
-    // PNG is lossless: a solid color's channel means are exact
-    val solid = imageBytes("png", 10, 10)((_, _) => rgb(40, 80, 120))
-    // gradient: red ramps 0..249 along x on a 250x4 image -> mean 124.5
-    val grad = imageBytes("png", 250, 4)((x, _) => rgb(x, 0, 255))
-    val stats = MultimodalOps.imageStatsOf(
-        Seq((1L, solid), (2L, grad), (3L, "not an image".getBytes("UTF-8"))).toDS())
-      .collect().map(s => s.doc_id -> s).toMap
-    assert(stats(1L).channel_means === Seq(40.0, 80.0, 120.0))
-    assert(stats(2L).channel_means === Seq(124.5, 0.0, 255.0))
-    assert(stats(2L).width === 250 && stats(2L).height === 4)
-    assert(stats(3L).format === MultimodalOps.Undecodable)
-    assert(stats(3L).channel_means.isEmpty)
-
-    // JPEG is lossy but a solid color survives within quantization
-    val jsolid = imageBytes("jpeg", 16, 16)((_, _) => rgb(100, 150, 200))
-    val js = MultimodalOps.imageStatsOf(Seq((9L, jsolid)).toDS()).collect().head
-    assert(js.channels === 3)
-    js.channel_means.zip(Seq(100.0, 150.0, 200.0)).foreach { case (got, want) =>
-      assert(math.abs(got - want) <= 4.0, s"jpeg mean $got vs $want drifted past quantization")
-    }
-  }
-
-  /** Stereo 16-bit little-endian PCM WAV with ch0 = a 0..frames-1 ramp
-    * and ch1 = a constant — every expected statistic is exact. */
-  private def wavBytes(frames: Int, rateHz: Int, ch1Value: Short): Array[Byte] = {
-    import javax.sound.sampled._
-    val fmt = new AudioFormat(rateHz.toFloat, 16, 2, true, false)
-    val pcm = new Array[Byte](frames * 4)
-    for (i <- 0 until frames) {
-      val s0 = i.toShort
-      pcm(i * 4) = (s0 & 0xff).toByte
-      pcm(i * 4 + 1) = ((s0 >> 8) & 0xff).toByte
-      pcm(i * 4 + 2) = (ch1Value & 0xff).toByte
-      pcm(i * 4 + 3) = ((ch1Value >> 8) & 0xff).toByte
-    }
-    val out = new ByteArrayOutputStream()
-    AudioSystem.write(
-      new AudioInputStream(new java.io.ByteArrayInputStream(pcm), fmt, frames),
-      AudioFileFormat.Type.WAVE, out)
-    out.toByteArray
-  }
-
-  test("audioStats decodes real WAV PCM: exact frame count, rate, per-channel mean and peak") {
-    import spark.implicits._
-    val wav = wavBytes(frames = 800, rateHz = 8000, ch1Value = -2000)
-    val rows = MultimodalOps.audioStatsOf(
-        Seq((1L, wav),
-          (2L, "definitely not audio".getBytes("UTF-8")),
-          (3L, imageBytes("png", 4, 4)((_, _) => 0))).toDS())
-      .collect().map(s => s.doc_id -> s).toMap
-    val a = rows(1L)
-    assert(a.format === "audio/wav")
-    assert(a.sample_rate === 8000 && a.channels === 2 && a.bits === 16)
-    assert(a.n_frames === 800L)
-    // ch0 ramp 0..799 -> exact mean 399.5, peak 799; ch1 constant -2000
-    assert(a.channel_means === Seq(399.5, -2000.0))
-    assert(a.channel_peaks === Seq(799, 2000))
-    assert(a.n_bytes === wav.length)
-    // non-audio payloads (text, an image) are honestly undecodable
-    Seq(2L, 3L).foreach { id =>
-      assert(rows(id).format === MultimodalOps.Undecodable, s"doc $id")
-      assert(rows(id).channel_means.isEmpty)
-    }
-  }
-
-  test("ahashOf: brightness- and scale-invariant on real decodes; distinct patterns are distant") {
-    import spark.implicits._
-    // left-dark / right-bright split: block means separate cleanly
-    def split(w: Int, h: Int, lo: Int, hi: Int)(x: Int, y: Int): Int = {
-      val v = if (x < w / 2) lo else hi; rgb(v, v, v)
-    }
-    val base = imageBytes("png", 64, 64)(split(64, 64, 40, 200))
-    val bright = imageBytes("png", 64, 64)(split(64, 64, 60, 220)) // +20 everywhere
-    val small = imageBytes("png", 32, 32)(split(32, 32, 40, 200)) // 2× downscale
-    val inverted = imageBytes("png", 64, 64)(split(64, 64, 200, 40))
-    val checker = imageBytes("png", 64, 64)((x, y) =>
-      if ((x / 8 + y / 8) % 2 == 0) rgb(0, 0, 0) else rgb(255, 255, 255))
-    val rows = MultimodalOps.ahashOf(Seq(
-        1L -> base, 2L -> bright, 3L -> small, 4L -> inverted,
-        5L -> checker, 6L -> "not an image".getBytes("UTF-8")).toDS())
-      .collect().map(a => a.doc_id -> a).toMap
-    def ham(a: Seq[Int], b: Seq[Int]): Int =
-      a.zip(b).map { case (x, y) => Integer.bitCount(x ^ y) }.sum
-    assert(rows(1L).ok && rows(5L).ok && !rows(6L).ok)
-    // a uniform brightness shift moves block means and the global mean
-    // together: hash exactly invariant
-    assert(rows(1L).bands === rows(2L).bands, "brightness shift changed the hash")
-    // a clean 2x downscale preserves the 8x8 block structure exactly
-    assert(rows(1L).bands === rows(3L).bands, "downscale changed the hash")
-    // inversion flips every decided bit: maximal distance from base
-    assert(ham(rows(1L).bands, rows(4L).bands) === 64)
-    // an unrelated pattern is far away (half-split vs checkerboard)
-    assert(ham(rows(1L).bands, rows(5L).bands) >= 16,
-      s"checker unexpectedly close: ${ham(rows(1L).bands, rows(5L).bands)}")
-  }
 
   test("ahash_neardup: banded query equals an independent brute-force recomputation at fixture scale") {
     import graft.etl.Tables

@@ -846,19 +846,6 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("multimodal: real decode reports text payloads undecodable; sizes agree with the byte twin") {
-    val fromDs = MultimodalOps.decodeMeta(spark, sfDir).collect()
-    assert(fromDs.length === 500)
-    // documents are text, not images: the honest answer is undecodable
-    fromDs.foreach { m =>
-      assert(m.format === MultimodalOps.Undecodable)
-      assert(m.width === 0 && m.height === 0 && m.channels === 0)
-    }
-    val sizes = MultimodalOps.metaQuery(spark, sfDir).collect()
-      .map(r => r.getAs[Long]("doc_id") -> r.getAs[Int]("NBytes")).toMap
-    fromDs.foreach(m => assert(m.n_bytes === sizes(m.doc_id)))
-  }
-
   test("dedup: componentsOf throws at the round cap instead of returning under-merged clusters") {
     import spark.implicits._
     // a diameter-10 path cannot converge in 3 rounds; the loop must
@@ -967,7 +954,7 @@ class OpsSpec extends SparkSpec {
     // real, assertable property — at two decades, so the signal
     // survives vocabulary growth, not just a lucky small draw.
     for (n <- Seq(1000, 10000)) {
-      val out = java.nio.file.Files.createTempDirectory(s"graft_langid_$n")
+      val out = tempDir(s"graft_langid_$n")
       try {
         val rc = scala.sys.process.Process(
           Seq("python3", "scripts/gen_scale_corpus.py",
@@ -1096,36 +1083,6 @@ class OpsSpec extends SparkSpec {
     byCluster.values.foreach { ms =>
       val minId = ms.map(_.getAs[Long]("vec_id")).min
       assert(!ms.find(_.getAs[Long]("vec_id") == minId).get.getAs[Boolean]("IsDup"))
-    }
-  }
-
-  test("similarity: bucketed lists make the semantic-dedup self-join exchange-free, values identical") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("Cid"), r.getAs[Int]("label"),
-        r.getAs[Long]("NDupEarlier"), r.getAs[Boolean]("IsDup"))).toSeq
-    assert(rows(SimilarityOps.semanticDedupBucketed(spark, sfDir)) ===
-      rows(SimilarityOps.semanticDedup(spark, sfDir)))
-    // broadcast off: the partitioned-parquet path would shuffle BOTH
-    // sides of the Cid self-join; the bucketed table must shuffle
-    // NEITHER (pre-bucketed + pre-sorted on the join key)
-    withConfs(
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
-      "spark.sql.adaptive.enabled" -> "false") {
-      val plan = SimilarityOps.semanticDedupBucketed(spark, sfDir)
-        .queryExecution.executedPlan
-      val selfJoin = plan.collectFirst {
-        case j: SortMergeJoinExec if j.leftKeys.exists(_.toString.contains("Cid")) => j
-      }
-      assert(selfJoin.isDefined, s"no sort-merge Cid self-join found:\n$plan")
-      Seq(selfJoin.get.left, selfJoin.get.right).foreach { side =>
-        assert(side.collect { case f: FileSourceScanExec if f.relation.bucketSpec.isDefined => f }.nonEmpty,
-          s"join side does not read the bucketed table:\n$side")
-        assert(side.collect { case e: ShuffleExchangeExec => e }.isEmpty,
-          s"join side re-shuffles despite the bucketed layout:\n$side")
-      }
     }
   }
 
@@ -1301,7 +1258,7 @@ class OpsSpec extends SparkSpec {
 
     // encoding independence: round-trip the SAME rows through a µs
     // parquet and a nanos-long parquet; both reads must be identical
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ts_enc")
+    val tmp = tempDir("graft_ts_enc")
     graft.etl.Tables.eventsRaw(spark, sfDir) // canonical nanos long
       .write.mode("overwrite").parquet(s"$tmp/nanos/events.parquet")
     ev.select(col("event_id"), col("ts"), col("user_id"),
@@ -1333,7 +1290,7 @@ class OpsSpec extends SparkSpec {
     // (`events.parquet/date=1/part-0.parquet`) rewritten in place
     // keeps every level-1 dir entry byte-identical, so a one-level
     // listing would serve the stale encoding for the JVM lifetime
-    val stage = Files.createTempDirectory("graft_ts_stage")
+    val stage = tempDir("graft_ts_stage")
     graft.etl.Tables.events(spark, sfDir)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"), col("props"))
@@ -1342,7 +1299,7 @@ class OpsSpec extends SparkSpec {
       .limit(50).coalesce(1).write.parquet(s"$stage/nanos")
     def partFile(d: String) = new java.io.File(d).listFiles()
       .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_")).head.toPath
-    val tmp = Files.createTempDirectory("graft_ts_part")
+    val tmp = tempDir("graft_ts_part")
     val leafDir = tmp.resolve("events.parquet").resolve("date=1")
     Files.createDirectories(leafDir)
     Files.copy(partFile(s"$stage/micros"), leafDir.resolve("part-0.parquet"))
@@ -1367,7 +1324,7 @@ class OpsSpec extends SparkSpec {
     val t10 = shared + " owner tail alpha"
     val t20 = "copy head " + shared + " copy tail"
     val t30 = "totally different words " + (1 to w).map(i => s"uniq$i").mkString(" ")
-    val tmp = Files.createTempDirectory("graft_excise")
+    val tmp = tempDir("graft_excise")
     Seq((10L, t10, "en", "a", t10.length.toLong),
         (20L, t20, "en", "b", t20.length.toLong),
         (30L, t30, "en", "c", t30.length.toLong))
@@ -1401,7 +1358,7 @@ class OpsSpec extends SparkSpec {
     // merge); three count-1 pairs at the tail pin the lexicographic
     // tie-break; 5 total merges exhaust the corpus well before
     // BpeMerges — the loop must stop emitting, not pad
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bpe")
+    val tmp = tempDir("graft_bpe")
     Seq((1L, "aaa aaa ab", "en", "a", 10L), (2L, "xy xz", "en", "b", 5L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/documents.parquet")

@@ -14,7 +14,7 @@ import graft.etl.{Load, Pipeline, Transactions}
 class PipelineSpec extends SparkSpec {
 
   test("run(): five tables, sane cardinalities, csv+parquet+sqlite written") {
-    val out = Files.createTempDirectory("graft_pipeline").toString
+    val out = tempDir("graft_pipeline").toString
     val counts = Pipeline.run(spark, sfDir, out)
     assert(counts.keySet === Set("transactions", "customer_summary",
       "product_summary", "daily_sales", "country_summary"))
@@ -49,7 +49,7 @@ class PipelineSpec extends SparkSpec {
     // Derby ships in /opt/spark/jars, so the writeJdbc path runs for
     // real here: all five tables out through mode(overwrite) JDBC with
     // the reference's SQL-sink shape, then read back and compared.
-    val dbDir = Files.createTempDirectory("graft_derby").toString
+    val dbDir = tempDir("graft_derby").toString
     val url = s"jdbc:derby:$dbDir/wh;create=true"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
@@ -76,8 +76,8 @@ class PipelineSpec extends SparkSpec {
     // the reference's default list is ['csv','parquet','sqlite']
     // (etl.py:368); each SQL format maps to writeJdbc with its own
     // shaping — sqlite keeps column case, mysql rounds doubles
-    val out = Files.createTempDirectory("graft_dispatch").toString
-    val dbDir = Files.createTempDirectory("graft_derby_dispatch").toString
+    val out = tempDir("graft_dispatch").toString
+    val dbDir = tempDir("graft_derby_dispatch").toString
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
     def sink(db: String) =
@@ -106,7 +106,7 @@ class PipelineSpec extends SparkSpec {
     // formats = ['csv','parquet','sqlite'], load_to_sqlite derives its
     // db from output_dir) — load(tables, outDir) mirrors it, landing
     // the embedded warehouse at outDir/sales_data.db
-    val out2 = Files.createTempDirectory("graft_dispatch_default").toString
+    val out2 = tempDir("graft_dispatch_default").toString
     Load.load(tables, out2)
     assert(spark.read.parquet(s"$out2/parquet/country_summary").count() === 25L)
     val defSink = Load.embeddedSink(out2)
@@ -120,61 +120,10 @@ class PipelineSpec extends SparkSpec {
     assert(e.getMessage.contains("postgres"))
   }
 
-  test("partitioned parquet write enables partition pruning layout") {
-    val out = Files.createTempDirectory("graft_part").toString
-    val daily = Pipeline.transform(spark, sfDir)("daily_sales")
-      .withColumn("year", year(col("Date")))
-    Load.writeParquetPartitioned(daily, out, Seq("year"))
-    val dirs = new java.io.File(out).listFiles().filter(_.isDirectory).map(_.getName)
-    assert(dirs.exists(_.startsWith("year=")))
-    val filtered = spark.read.parquet(out).filter(col("year") === 1995)
-    assert(filtered.count() > 0)
-    // the filter must prune at the file index, not post-scan: the scan
-    // carries a `year` partition filter and lists exactly one of the
-    // written partitions
-    val scans = filtered.queryExecution.sparkPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }
-    assert(scans.nonEmpty)
-    scans.foreach { f =>
-      assert(f.partitionFilters.exists(_.toString.contains("year")),
-        s"filter did not reach the partition index: ${f.partitionFilters}")
-      val read = f.relation.location.listFiles(f.partitionFilters, f.dataFilters).length
-      val all = f.relation.location.listFiles(Nil, Nil).length
-      assert(read === 1, s"scan lists $read partitions for a single-year filter")
-      assert(all === dirs.count(_.startsWith("year=")))
-    }
-  }
-
-  test("compacted parquet write sizes file count from the plan estimate") {
-    def dataFiles(dir: String) = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("_"))
-    val df = graft.etl.Tables.lineitem(spark, sfDir)
-      .repartition(16) // a fragmented parent: 16 tasks = 16 tiny files
-    // big target → everything compacts into ONE file
-    val out1 = Files.createTempDirectory("graft_compact1").toString
-    assert(Load.writeCompacted(df, out1, targetMB = 1024) === 1)
-    assert(dataFiles(out1).length === 1)
-    // tiny target → more, evenly-sized files (round-robin, no skew);
-    // sf0.1: a ~10 MB input, so a 1 MB target must split ~10 ways
-    val big = graft.etl.Tables.lineitem(spark, "/root/testdata/sf0.1").repartition(16)
-    val out2 = Files.createTempDirectory("graft_compact2").toString
-    val n = Load.writeCompacted(big, out2, targetMB = 1)
-    assert(n > 1, s"1MB target should split this table, chose $n")
-    val files = dataFiles(out2)
-    assert(files.length === n)
-    val sizes = files.map(_.length())
-    assert(sizes.max <= sizes.min * 3,
-      s"round-robin output should be even: ${sizes.mkString(",")}")
-    // values survive the rewrite
-    assert(spark.read.parquet(out2).count() ===
-      graft.etl.Tables.lineitem(spark, "/root/testdata/sf0.1").count())
-  }
-
   test("transform materializes each summary once; invalidate releases it with the cleaned table") {
     val summaries = Seq("customer_summary", "product_summary", "daily_sales", "country_summary")
     val tables = Pipeline.transform(spark, sfDir)
-    Load.writeParquet(tables, Files.createTempDirectory("graft_once").toString)
+    Load.writeParquet(tables, tempDir("graft_once").toString)
     val level = tables("transactions").storageLevel
     summaries.foreach { t =>
       assert(tables(t).storageLevel === level, s"$t not persisted at the cleaned level")

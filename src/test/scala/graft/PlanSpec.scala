@@ -629,7 +629,7 @@ class PlanSpec extends SparkSpec {
     assert(pd > session, "fixture too small — the verify-join cap no longer binds")
     val dedupPlan = SimilarityOps.semanticDedupFrom(spark, sfDir,
         spark.read.parquet(s"$base/lists"), SimilarityOps.DefaultSemDedupThreshold,
-        sizedForK = Some(SimilarityOps.DefaultNCentroids), capRowsPerTask = 200L)
+        sizedForK = SimilarityOps.DefaultNCentroids, capRowsPerTask = 200L)
       .queryExecution.executedPlan.toString
     val dMarker = s", $pd), REPARTITION_BY_NUM"
     assert(dedupPlan.contains(dMarker),

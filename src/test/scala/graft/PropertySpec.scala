@@ -166,7 +166,7 @@ class PropertySpec extends SparkSpec {
     import graft.ops.TextOps
     (31L to 32L).foreach { seed =>
       import spark.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-prop-docs").toString
+      val dir = tempDir("graft-prop-docs").toString
       textSample(seed).zipWithIndex
         .map { case (t, i) => (i.toLong, t, "en", "gen", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -341,7 +341,8 @@ class RetrievalGraphSpec extends SparkSpec {
         org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1))
           .over(Window.partitionBy($"Src")))
-    val rows = GraphOps.modularityOf(edges).collect()
+    val rows = GraphOps.modularityWith(edges, GraphOps.lpaLabels(edges),
+      edges.select($"Src", $"OutDeg").distinct()).collect()
     assert(rows.map(_.getAs[Long]("Community")).toSeq === Seq(0L, 4L))
     rows.foreach { r =>
       assert(r.getAs[Long]("CommunitySize") === 4L)

@@ -15,7 +15,7 @@ class SourcesSpec extends SparkSpec {
     Seq("InvoiceNo", "LineNumber", "StockCode", "Quantity", "TotalAmount", "UnitPrice")
 
   test("CSV-sourced pipeline equals parquet-sourced pipeline row-for-row") {
-    val dir = Files.createTempDirectory("graft_csv_src").toString
+    val dir = tempDir("graft_csv_src").toString
     starTables.foreach { n =>
       Tables.via(ParquetSource, spark, sfDir, n)
         .write.mode("overwrite").option("header", "true").csv(s"$dir/$n.csv")
@@ -37,7 +37,7 @@ class SourcesSpec extends SparkSpec {
 
   test("jsonl- and orc-sourced pipelines equal the parquet-sourced pipeline") {
     import graft.sources.{JsonlSource, OrcSource}
-    val dir = Files.createTempDirectory("graft_jsonl_orc_src").toString
+    val dir = tempDir("graft_jsonl_orc_src").toString
     starTables.foreach { n =>
       val df = Tables.via(ParquetSource, spark, sfDir, n)
       df.write.mode("overwrite").json(s"$dir/$n.jsonl")
@@ -60,7 +60,7 @@ class SourcesSpec extends SparkSpec {
 
   test("avro-sourced pipeline equals parquet-sourced pipeline row-for-row") {
     import graft.sources.AvroSource
-    val dir = Files.createTempDirectory("graft_avro_src").toString
+    val dir = tempDir("graft_avro_src").toString
     starTables.foreach { n =>
       AvroTestWriter.write(
         Tables.via(ParquetSource, spark, sfDir, n), s"$dir/$n.avro")
@@ -91,7 +91,7 @@ class SourcesSpec extends SparkSpec {
 
   test("avro: executor-side opens use the SESSION Hadoop conf, not a fresh default") {
     import graft.sources.AvroSource
-    val dir = Files.createTempDirectory("graft_avro_conf").toString
+    val dir = tempDir("graft_avro_conf").toString
     AvroTestWriter.write(
       Tables.via(ParquetSource, spark, sfDir, "nation"), s"$dir/nation.avro")
     val schema = Tables.via(ParquetSource, spark, sfDir, "nation").schema
@@ -119,7 +119,7 @@ class SourcesSpec extends SparkSpec {
   test("avro: an existing-but-empty ingest directory reads empty; a missing path errors") {
     import graft.sources.AvroSource
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_avro_empty").toString
+    val dir = tempDir("graft_avro_empty").toString
     val schema = StructType(Seq(StructField("a", IntegerType)))
     // rotation hasn't delivered yet — a normal ingest state, not an error
     val out = AvroSource.read(spark, dir, schema)
@@ -134,7 +134,7 @@ class SourcesSpec extends SparkSpec {
 
   test("avro: one large container file reads across many sync-aligned splits, rows identical") {
     import graft.sources.AvroSource
-    val dir = Files.createTempDirectory("graft_avro_split").toString
+    val dir = tempDir("graft_avro_split").toString
     // small sync interval -> many blocks in one file (the mega-file
     // shape the round-11 reader serialized to a single task)
     AvroTestWriter.write(
@@ -156,7 +156,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("xlsx-sourced pipeline equals parquet-sourced pipeline row-for-row") {
-    val dir = Files.createTempDirectory("graft_xlsx_src").toString
+    val dir = tempDir("graft_xlsx_src").toString
     starTables.foreach { n =>
       XlsxTestWriter.write(
         Tables.via(ParquetSource, spark, sfDir, n), s"$dir/$n.xlsx")
@@ -178,7 +178,7 @@ class SourcesSpec extends SparkSpec {
 
   test("xlsx reader picks the FIRST sheet in workbook order and tolerates no shared strings") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_xlsx_multi").toString
+    val dir = tempDir("graft_xlsx_multi").toString
     val path = s"$dir/multi.xlsx"
     val zos = new java.util.zip.ZipOutputStream(new java.io.FileOutputStream(path))
     def put(name: String, content: String): Unit = {
@@ -206,7 +206,7 @@ class SourcesSpec extends SparkSpec {
 
   test("xlsx reader handles Excel serial timestamps, booleans, and blank cells") {
     import org.apache.spark.sql.types._
-    val dir = Files.createTempDirectory("graft_xlsx_mini").toString
+    val dir = tempDir("graft_xlsx_mini").toString
     val path = s"$dir/mini.xlsx"
     // hand-built sheet: serial-number date cell (the numeric-timestamp
     // path XlsxTestWriter never emits), a boolean, and a missing cell

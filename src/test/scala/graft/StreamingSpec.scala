@@ -16,7 +16,7 @@ class StreamingSpec extends SparkSpec {
                         mtimeMs: Option[Long] = None): Unit = {
     import java.nio.file.Files
     import scala.jdk.CollectionConverters._
-    val tmp = Files.createTempDirectory("graft_stage_part")
+    val tmp = tempDir("graft_stage_part")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val listing = Files.list(tmp)
     try Files.copy(listing.iterator().asScala
@@ -28,7 +28,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming hourly agg over events parquet matches batch totals") {
     // FileStreamSource needs a directory: stage the events file into one
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream")
+    val streamDir = tempDir("graft_stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       streamDir.resolve("events.parquet"))
@@ -46,7 +46,7 @@ class StreamingSpec extends SparkSpec {
 
   test("append mode emits only watermark-finalized windows, matching batch values") {
     import org.apache.spark.sql.streaming.OutputMode
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream_append")
+    val streamDir = tempDir("graft_stream_append")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       streamDir.resolve("events.parquet"))
@@ -107,11 +107,11 @@ class StreamingSpec extends SparkSpec {
     // JDBC overwrite through the SAME writeJdbc path as the batch
     // sinks: the standard streaming-compaction-to-warehouse topology
     // (at scale: MERGE/upsert per batch instead of overwrite).
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream_jdbc")
+    val streamDir = tempDir("graft_stream_jdbc")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       streamDir.resolve("events.parquet"))
-    val dbDir = java.nio.file.Files.createTempDirectory("graft_derby_stream").toString
+    val dbDir = tempDir("graft_derby_stream").toString
     val url = s"jdbc:derby:$dbDir/wh;create=true"
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
@@ -171,9 +171,9 @@ class StreamingSpec extends SparkSpec {
           ((r.getAs[Long]("NEvents"), r.getAs[Double]("TotalValue")))).toMap
 
     // interrupted run: half1 → stop → half2 → restart from checkpoint
-    val streamDir = Files.createTempDirectory("graft_restart_in")
-    val outDir = Files.createTempDirectory("graft_restart_out").toString
-    val ckDir = Files.createTempDirectory("graft_restart_ck").toString
+    val streamDir = tempDir("graft_restart_in")
+    val outDir = tempDir("graft_restart_out").toString
+    val ckDir = tempDir("graft_restart_ck").toString
     stage(raw.filter(col("ts") <= cutNs), streamDir, "half1.parquet")
     runToCompletion(streamDir.toString, outDir, ckDir)
     val afterPhase1 = readOut(outDir)
@@ -182,11 +182,11 @@ class StreamingSpec extends SparkSpec {
     val resumed = readOut(outDir)
 
     // control: the same data, same query, never interrupted
-    val streamDir2 = Files.createTempDirectory("graft_restart_in2")
-    val outDir2 = Files.createTempDirectory("graft_restart_out2").toString
+    val streamDir2 = tempDir("graft_restart_in2")
+    val outDir2 = tempDir("graft_restart_out2").toString
     stage(raw, streamDir2, "all.parquet")
     runToCompletion(streamDir2.toString, outDir2,
-      Files.createTempDirectory("graft_restart_ck2").toString)
+      tempDir("graft_restart_ck2").toString)
     val uninterrupted = readOut(outDir2)
 
     // the restart finalized MORE windows (it did resume, not replay-nothing)
@@ -237,41 +237,12 @@ class StreamingSpec extends SparkSpec {
     assert(missing.isEmpty, s"watermark-finalized windows lost across the restart: $missing")
   }
 
-  test("dropDuplicatesWithinWatermark: twice-delivered stream dedups to the single-copy batch table") {
-    import org.apache.spark.sql.streaming.OutputMode
-    // stage the SAME events file twice — a full at-least-once
-    // re-delivery of every record
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream_dedup")
-    Seq("events_a.parquet", "events_b.parquet").foreach { name =>
-      java.nio.file.Files.copy(
-        java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-        streamDir.resolve(name))
-    }
-    val q = EventsStream.dedupEvents(EventsStream.readEventsStream(spark, streamDir.toString))
-      .writeStream.outputMode(OutputMode.Append())
-      .format("memory").queryName("events_dedup_stream")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("events_dedup_stream")
-    val batch = graft.etl.Tables.events(spark, sfDir)
-    assert(streamed.count() === batch.count(),
-      "duplicate deliveries leaked into (or rows vanished from) the sink")
-    // exact row-level equality with the batch table, not just counts
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .collect()
-        .map(r => (r.getAs[Long]("event_id"), r.getAs[Long]("user_id"),
-          r.getAs[String]("event_type"), r.getAs[Double]("value"))).toSet
-    assert(rows(streamed) === rows(batch))
-  }
-
   test("foreachBatch decontamination over a two-file doc stream matches batch curate_decontaminate") {
     import graft.streaming.DocsStream
     // documents arrive as a two-microbatch stream; the eval shingle
     // set stays static across both (foreachBatch kernel — a plain
     // streaming groupBy would pin one state row per doc forever)
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream_docs")
+    val streamDir = tempDir("graft_stream_docs")
     graft.etl.Tables.documents(spark, sfDir)
       .repartition(2).write.mode("overwrite").parquet(s"$streamDir/docs")
     val evalSh = graft.ops.CurateOps.evalShingles(spark, sfDir)
@@ -315,7 +286,7 @@ class StreamingSpec extends SparkSpec {
     // PLANTED corpus where every doc shares one 3-gram — train-test
     // overlap exists whatever splitOf assigns, so a silently-empty
     // join cannot pass
-    val dir = java.nio.file.Files.createTempDirectory("graft_n3_docs")
+    val dir = tempDir("graft_n3_docs")
     import spark.implicits._
     val docs = (0L until 40L).map { i =>
       val text = s"alpha beta gamma tok$i fill${i % 7} end$i"
@@ -357,7 +328,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.DocsStream
     // the new-arrival docs land as TWO files = two microbatches; the
     // corpus band index stays static across both
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream_incdedup")
+    val streamDir = tempDir("graft_stream_incdedup")
     graft.etl.Tables.documents(spark, sfDir)
       .filter(col("doc_id") % DedupOps.NewArrivalMod === DedupOps.NewArrivalRemainder)
       .repartition(2).write.mode("overwrite").parquet(s"$streamDir/docs")
@@ -386,7 +357,7 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.VecsStream
     // the new-arrival vectors land as TWO files = two microbatches; the
     // persisted IVF index (codebook + corpus lists) stays static
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream_vecdedup")
+    val streamDir = tempDir("graft_stream_vecdedup")
     val isNew = col("vec_id") % SimilarityOps.NewVecMod === SimilarityOps.NewVecRemainder
     graft.etl.Tables.embeddings(spark, sfDir)
       .filter(isNew)
@@ -437,7 +408,7 @@ class StreamingSpec extends SparkSpec {
     // STREAM (arrivals as two microbatches), B by one batch ivfAppend
     val all = spark.read.parquet(s"$sfDir/embeddings.parquet")
     def mkCorpus(): String = {
-      val d = Files.createTempDirectory("graft_stream_ivfapp").toAbsolutePath
+      val d = tempDir("graft_stream_ivfapp").toAbsolutePath
       all.filter(col("vec_id") < 400).coalesce(1)
         .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
       SimilarityOps.buildIvfIndex(spark, d.toString)
@@ -446,7 +417,7 @@ class StreamingSpec extends SparkSpec {
     val (dirA, dirB) = (mkCorpus(), mkCorpus())
     val arrivals = all.filter(col("vec_id") >= 400).select(col("vec_id"), col("embedding"))
 
-    val streamSrc = Files.createTempDirectory("graft_stream_ivfsrc")
+    val streamSrc = tempDir("graft_stream_ivfsrc")
     arrivals.repartition(2).write.mode("overwrite").parquet(s"$streamSrc/vecs")
     val routedBatches = collection.mutable.ArrayBuffer.empty[Array[Long]]
     val q = graft.streaming.VecsStream.runIndexAppend(dirA,
@@ -477,7 +448,7 @@ class StreamingSpec extends SparkSpec {
     import java.nio.file.Files
     val all = spark.read.parquet(s"$sfDir/documents.parquet")
     def mkCorpus(): String = {
-      val d = Files.createTempDirectory("graft_stream_bandapp").toAbsolutePath
+      val d = tempDir("graft_stream_bandapp").toAbsolutePath
       all.filter(col("doc_id") < 400).coalesce(1)
         .write.mode("overwrite").parquet(s"$d/documents.parquet")
       DedupOps.bandIndexTable(spark, d.toString)
@@ -487,7 +458,7 @@ class StreamingSpec extends SparkSpec {
     val newDocs = all.filter(col("doc_id") >= 400 &&
       !(col("doc_id") % DedupOps.NewArrivalMod === DedupOps.NewArrivalRemainder))
 
-    val streamSrc = Files.createTempDirectory("graft_stream_bandsrc")
+    val streamSrc = tempDir("graft_stream_bandsrc")
     newDocs.repartition(2).write.mode("overwrite").parquet(s"$streamSrc/docs")
     var batches = 0
     val q = graft.streaming.DocsStream.runIndexAppend(dirA,
@@ -516,7 +487,7 @@ class StreamingSpec extends SparkSpec {
     implicit val s = spark
     // events land as two microbatches; the per-user funnel state must
     // carry step progress across the file boundary
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream_funnel")
+    val streamDir = tempDir("graft_stream_funnel")
     graft.etl.Tables.eventsRaw(spark, sfDir)
       .repartition(2).write.mode("overwrite").parquet(s"$streamDir/events")
     val events = EventsStream.readEventsStream(spark, s"$streamDir/events",
@@ -577,7 +548,7 @@ class StreamingSpec extends SparkSpec {
       .orderBy(col("CutUs"))
     assert(inPair.count() > 0, "corpus has no within-session transition with a positive gap")
     val cutNs = inPair.first().getLong(0) * 1000L
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream_trans")
+    val streamDir = tempDir("graft_stream_trans")
     stagePart(raw.filter(col("ts").cast("bigint") <= cutNs),
       streamDir.resolve("a.parquet"), Some(1000L))
     stagePart(raw.filter(col("ts").cast("bigint") > cutNs),
@@ -623,7 +594,7 @@ class StreamingSpec extends SparkSpec {
     // boundaries. Delay spans the corpus so the hash-split replay
     // (arbitrary event order) drops nothing — per-user aggregates of
     // the emitted pairs must equal the batch interval join exactly.
-    val streamDir = java.nio.file.Files.createTempDirectory("graft_stream_attr")
+    val streamDir = tempDir("graft_stream_attr")
     graft.etl.Tables.eventsRaw(spark, sfDir)
       .repartition(2).write.mode("overwrite").parquet(s"$streamDir/events")
     val events = EventsStream.readEventsStream(spark, s"$streamDir/events",
@@ -659,7 +630,7 @@ class StreamingSpec extends SparkSpec {
     // event for a dummy user: its arrival pushes the watermark past
     // every real session's end, so append mode finalizes ALL of them —
     // the sentinel's own session stays in-flight and is never emitted
-    val streamDir = Files.createTempDirectory("graft_stream_sess")
+    val streamDir = tempDir("graft_stream_sess")
     def stage(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit =
       stagePart(df, streamDir.resolve(name), Some(mtime))
     val t0 = System.currentTimeMillis() - 60000
@@ -756,74 +727,10 @@ class StreamingSpec extends SparkSpec {
     } finally spark.streams.removeListener(listener)
   }
 
-  test("mapGroupsWithState sessionization survives a checkpointed restart with exact state") {
-    import spark.implicits._
-    implicit val s = spark
-    import java.nio.file.Files
-    import scala.jdk.CollectionConverters._
-    val raw = graft.etl.Tables.eventsRaw(spark, sfDir)
-    // split arrivals at the median event time: users with events on
-    // BOTH sides only reconcile with the batch answer if the explicit
-    // per-user GroupState (lastUs, nEvents, nSessions) survived the
-    // process restart — lost state would reset their running counts
-    val cutNs = raw.selectExpr("CAST(percentile_approx(ts, 0.5) AS BIGINT)").first().getLong(0)
-    val streamDir = Files.createTempDirectory("graft_mgs_in")
-    val ckDir = Files.createTempDirectory("graft_mgs_ck").toString
-    def stage(df: org.apache.spark.sql.DataFrame, name: String): Unit =
-      stagePart(df, streamDir.resolve(name))
-    // the upsert sink: one map shared across both process incarnations
-    // (update mode re-emits only changed groups, so survivors of run 1
-    // keep their values and straddling users get overwritten in run 2)
-    val acc = new java.util.concurrent.ConcurrentHashMap[Long, (Long, Long)]()
-    def runOnce(): Unit = {
-      val events = EventsStream.readEventsStream(spark, streamDir.toString)
-        .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-        .as[EventsStream.Event]
-      val q = EventsStream.sessionCounts(events)
-        .writeStream.outputMode("update")
-        .option("checkpointLocation", ckDir)
-        .foreachBatch { (b: org.apache.spark.sql.Dataset[EventsStream.UserSessions], _: Long) =>
-          b.collect().foreach(u => acc.put(u.user_id, (u.nEvents, u.nSessions)))
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    stage(raw.filter(col("ts") <= cutNs), "a_half1.parquet")
-    runOnce()
-    stage(raw.filter(col("ts") > cutNs), "b_half2.parquet")
-    runOnce() // restart from the same checkpoint — resumes, not replays
-    val batch = EventsOps.sessionize(spark, sfDir).collect()
-      .map(r => r.getAs[Long]("user_id") ->
-        ((r.getAs[Long]("NEvents"), r.getAs[Long]("NSessions")))).toMap
-    // the premise that makes equality a state-survival proof
-    val h1 = raw.filter(col("ts") <= cutNs).select(col("user_id")).distinct()
-    val straddlers = h1.join(
-      raw.filter(col("ts") > cutNs).select(col("user_id")).distinct(),
-      Seq("user_id"), "inner").count()
-    assert(straddlers > 0L, "no user straddles the cut — restart untested")
-    assert(acc.asScala.toMap === batch,
-      "restarted mapGroupsWithState diverged from batch sessionize (state lost or replayed)")
-  }
-
-  test("mapGroupsWithState sessionization matches batch sessionize") {
-    import spark.implicits._
-    implicit val s = spark
-    val events = graft.etl.Tables.events(spark, sfDir)
-      .select($"event_id", $"ts", $"user_id", $"event_type", $"value")
-      .as[EventsStream.Event]
-    val stateful = EventsStream.sessionCounts(events).collect()
-      .map(u => u.user_id -> ((u.nEvents, u.nSessions))).toMap
-    val batch = EventsOps.sessionize(spark, sfDir).collect()
-      .map(r => r.getAs[Long]("user_id") ->
-        ((r.getAs[Long]("NEvents"), r.getAs[Long]("NSessions")))).toMap
-    assert(stateful === batch)
-  }
-
   test("drift histogram state accumulates across TWO microbatches to the batch card") {
     import java.nio.file.Files
     val docs = graft.etl.Tables.documents(spark, sfDir)
-    val watch = Files.createTempDirectory("graft_drift_watch")
+    val watch = tempDir("graft_drift_watch")
     try {
       stagePart(docs.filter(col("doc_id") % 2 === 0), watch.resolve("h1.parquet"))
       val perSource = graft.ops.TextOps.driftPerSource(
@@ -902,184 +809,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("kmv upsert twin: each trigger publishes estimates equal to a batch run over its prefix, across a restart") {
-    // the incremental-publication form (r14 verdict #7): the sketch
-    // TABLE is the only state, each trigger publishes estimates
-    // re-derived from it, and a restart between triggers must change
-    // nothing — the checkpoint resumes the source and the table
-    // carries the sketches
-    import java.nio.file.Files
-    val docs = graft.etl.Tables.documents(spark, sfDir)
-    val watch = Files.createTempDirectory("graft_kmv_watch")
-    val tableDir = Files.createTempDirectory("graft_kmv_table")
-    val ckDir = Files.createTempDirectory("graft_kmv_ck")
-    val table = tableDir.resolve("sketches").toString
-    def estMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[String]("SA"), r.getAs[String]("SB")) ->
-        (r.getAs[Double]("EstUnion"), r.getAs[Double]("EstOverlap"))).toMap
-    def diffMap(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getAs[String]("SA"), r.getAs[String]("SB")) ->
-        (r.getAs[Double]("EstAOnly"), r.getAs[Double]("EstBOnly"),
-          r.getAs[Double]("ContainAB"))).toMap
-    try {
-      val published = collection.mutable.ArrayBuffer
-        .empty[(Long, Map[(String, String), (Double, Double)])]
-      val publishedDiff = collection.mutable.ArrayBuffer
-        .empty[Map[(String, String), (Double, Double, Double)]]
-      // each call is a FRESH query resuming from the same checkpoint —
-      // the second run is the restart
-      def runOnce(): Unit = {
-        val q = graft.streaming.DocsStream.runSourceSketchUpsert(
-          spark,
-          graft.streaming.DocsStream.readDocsStream(spark, watch.toString),
-          table, ckDir.toString) { (id, est, diff) =>
-          val m = estMap(est)
-          val d = diffMap(diff)
-          published.synchronized { published += ((id, m)); publishedDiff += d; () }
-        }
-        try q.processAllAvailable() finally q.stop()
-      }
-      stagePart(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
-        watch.resolve("h1.parquet"))
-      runOnce()
-      assert(published.nonEmpty, "first trigger published nothing")
-      // mid-stream publication == batch pair math over EXACTLY the
-      // docs seen so far (the interleaved half, not a trivial prefix)
-      val prefixSketches = graft.streaming.DocsStream.sourceSketchBatch(
-        spark, docs.filter(pmod(col("doc_id"), lit(2)) === 0))
-      val wantMid = estMap(graft.ops.TextOps.kmvPairEstimates(prefixSketches))
-      assert(published.last._2 === wantMid,
-        "mid-stream publication diverged from the batch run over the prefix")
-      // the DIFFERENCE card rides the same publication (r15 verdict
-      // #3): mid-stream difference row == batch difference math over
-      // the same prefix sketches
-      val wantMidDiff = diffMap(
-        graft.ops.TextOps.kmvDifferenceEstimates(prefixSketches))
-      assert(publishedDiff.last === wantMidDiff,
-        "mid-stream difference card diverged from the batch run over the prefix")
-      stagePart(docs.filter(pmod(col("doc_id"), lit(2)) === 1),
-        watch.resolve("h2.parquet"))
-      runOnce() // restart: same checkpoint, same table, new query
-      // final publication == the batch query's estimate columns over
-      // the whole corpus (the same 190-pair frame the gate hashes)
-      val wantFull = estMap(graft.ops.TextOps.sourceOverlapKmv(spark, sfDir))
-      assert(published.last._2 === wantFull,
-        "post-restart publication diverged from the whole-corpus batch query")
-      assert(published.last._2.size === 190)
-      // and the final difference card == the streaming difference
-      // twin's declared columns over the whole corpus
-      val wantFullDiff = diffMap(graft.ops.TextOps.kmvDifferenceEstimates(
-        graft.streaming.DocsStream.sourceSketchBatch(spark, docs)))
-      assert(publishedDiff.last === wantFullDiff,
-        "post-restart difference card diverged from the whole-corpus batch math")
-      // the restart processed ONLY the new file (offsets resumed, so
-      // batch ids advanced instead of replaying)
-      assert(published.map(_._1).distinct.size === published.size,
-        s"a batch id was published twice: ${published.map(_._1)}")
-      // exactly ONE committed generation remains after pruning, and
-      // the table read comes back through it
-      val gens = graft.streaming.DocsStream.latestSketchGeneration(spark, table)
-      assert(gens.nonEmpty, "no committed generation after two triggers")
-      assert(graft.streaming.DocsStream.readSketchTable(spark, table)
-        .count() === 20)
-    } finally {
-      graft.ops.BucketedTables.deleteRecursively(watch)
-      graft.ops.BucketedTables.deleteRecursively(tableDir)
-      graft.ops.BucketedTables.deleteRecursively(ckDir)
-    }
-  }
-
-  test("sketch table generations: file: URI portability, crash-window atomicity, prune") {
-    // the persistence seam of runSourceSketchUpsert in isolation
-    // (r15 verdict #4 + advice): existence/read/write go through the
-    // Hadoop FileSystem API resolved from the table path's OWN scheme
-    // — exercised here via an explicit file: URI (the API seam a
-    // java.io.File check cannot serve on HDFS/S3) — and a generation
-    // missing its _SUCCESS marker (the crash window) must be
-    // invisible to readers while the prior committed table survives
-    import java.nio.file.{Files, Paths}
-    import org.apache.spark.sql.Row
-    val tmp = Files.createTempDirectory("graft_gen_table")
-    val table = "file://" + tmp.resolve("sketches").toString
-    try {
-      val schema = graft.streaming.DocsStream.sketchTableSchema
-      assert(graft.streaming.DocsStream.latestSketchGeneration(spark, table).isEmpty)
-      assert(graft.streaming.DocsStream.readSketchTable(spark, table).count() === 0)
-      def pin(rows: Seq[Row]) = spark.createDataFrame(
-        new java.util.ArrayList[Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
-      val g0 = graft.streaming.DocsStream.writeSketchGeneration(
-        spark, pin(Seq(Row("a", Seq(1L, 2L)))), table)
-      assert(g0.endsWith("gen-0000000000000000"))
-      assert(graft.streaming.DocsStream.readSketchTable(spark, table)
-        .collect().map(_.getString(0)).toSeq === Seq("a"))
-      val g1 = graft.streaming.DocsStream.writeSketchGeneration(
-        spark, pin(Seq(Row("a", Seq(1L, 2L)), Row("b", Seq(3L)))), table)
-      assert(g1.endsWith("gen-0000000000000001"))
-      // the prior committed generation was pruned AFTER the commit
-      val local = tmp.resolve("sketches")
-      assert(!Files.exists(local.resolve("gen-0000000000000000")))
-      // simulate the crash window: a newer generation dir WITHOUT a
-      // _SUCCESS marker must not become the read source, and the
-      // committed table must still be readable through it
-      val partial = local.resolve("gen-0000000000000002")
-      Files.createDirectories(partial)
-      Files.write(partial.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
-      assert(graft.streaming.DocsStream.latestSketchGeneration(spark, table)
-        .exists(_._2.endsWith("gen-0000000000000001")))
-      assert(graft.streaming.DocsStream.readSketchTable(spark, table)
-        .count() === 2)
-      // the next write lands OVER the dead partial dir and commits
-      val g3 = graft.streaming.DocsStream.writeSketchGeneration(
-        spark, pin(Seq(Row("c", Seq(9L)))), table)
-      assert(g3.endsWith("gen-0000000000000002"))
-      assert(graft.streaming.DocsStream.readSketchTable(spark, table)
-        .collect().map(_.getString(0)).toSeq === Seq("c"))
-    } finally {
-      graft.ops.BucketedTables.deleteRecursively(tmp)
-    }
-  }
-
-  test("sketch generation commit is config-independent (explicit _SUCCESS — r16 advice #1)") {
-    // with mapreduce.fileoutputcommitter.marksuccessfuljobs=false (a
-    // common object-store deployment) FileOutputCommitter writes NO
-    // _SUCCESS — before r17 no generation ever looked committed, so
-    // readSketchTable returned empty on every trigger and every
-    // publication silently under-reported. writeSketchGeneration now
-    // creates the marker itself when the committer didn't.
-    import java.nio.file.Files
-    import org.apache.spark.sql.Row
-    val tmp = Files.createTempDirectory("graft_gen_nomark")
-    val table = "file://" + tmp.resolve("sketches").toString
-    val hc = spark.sparkContext.hadoopConfiguration
-    val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
-    val prev = Option(hc.get(key))
-    hc.set(key, "false")
-    try {
-      val schema = graft.streaming.DocsStream.sketchTableSchema
-      def pin(rows: Seq[Row]) = spark.createDataFrame(
-        new java.util.ArrayList[Row](
-          scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava), schema)
-      val g0 = graft.streaming.DocsStream.writeSketchGeneration(
-        spark, pin(Seq(Row("a", Seq(1L, 2L)))), table)
-      assert(g0.endsWith("gen-0000000000000000"))
-      assert(graft.streaming.DocsStream.latestSketchGeneration(spark, table)
-        .exists(_._2.endsWith("gen-0000000000000000")),
-        "generation invisible when the committer writes no _SUCCESS")
-      assert(graft.streaming.DocsStream.readSketchTable(spark, table)
-        .collect().map(_.getString(0)).toSeq === Seq("a"))
-      // and the next upsert still merges FROM it, not from empty
-      val g1 = graft.streaming.DocsStream.writeSketchGeneration(
-        spark, pin(Seq(Row("a", Seq(1L, 2L)), Row("b", Seq(3L)))), table)
-      assert(g1.endsWith("gen-0000000000000001"))
-      assert(graft.streaming.DocsStream.readSketchTable(spark, table)
-        .count() === 2)
-    } finally {
-      prev match { case Some(v) => hc.set(key, v); case None => hc.unset(key) }
-      graft.ops.BucketedTables.deleteRecursively(tmp)
-    }
-  }
-
   /** Rows as a multiset, doubles compared to 1e-9 relative: sorted on
     * a key that formats doubles coarsely, then paired up. */
   private def assertSameRows(got: Array[org.apache.spark.sql.Row],
@@ -1131,7 +860,7 @@ class StreamingSpec extends SparkSpec {
     import java.nio.file.Files
     // the fixture with events.parquet rewritten as two part files, the
     // layout Tables.eventsRaw and the ts sniff already accept
-    val fx = Files.createTempDirectory("graft_partfile_fixture")
+    val fx = tempDir("graft_partfile_fixture")
     try {
       new java.io.File(sfDir).listFiles().filter(_.getName != "events.parquet")
         .foreach(f => Files.copy(f.toPath, fx.resolve(f.getName)))

@@ -18,7 +18,7 @@ class SubstratesSpec extends SparkSpec {
     spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
 
   test("concurrent first touches of one key build once and share the instance") {
-    val dir = Files.createTempDirectory("graft_substrates_race_").toString
+    val dir = tempDir("graft_substrates_race_").toString
     val builds = new AtomicInteger
     val start = new CountDownLatch(1)
     val pool = Executors.newFixedThreadPool(8)
@@ -46,7 +46,7 @@ class SubstratesSpec extends SparkSpec {
   test("invalidate(spark, dir) releases that dir's cached blocks and nothing of another dir or session") {
     val dirA = sfDir
     Substrates.invalidate(spark, dirA) // start from no dirA entry
-    val dirB = Files.createTempDirectory("graft_substrates_b_").toString
+    val dirB = tempDir("graft_substrates_b_").toString
     spark.range(50)
       .select(col("id").as("doc_id"),
         concat(lit("body of document "), col("id")).as("text"),
@@ -86,7 +86,7 @@ class SubstratesSpec extends SparkSpec {
   test("an entry of a stopped session is gone on the next lookup") {
     // stops the suite's session: this test runs last, and suites after
     // it in the same JVM get a fresh session from GraftSession.local
-    val dir = Files.createTempDirectory("graft_substrates_stop_").toString
+    val dir = tempDir("graft_substrates_stop_").toString
     Substrates[AnyRef](spark, dir, "spec.value")(_ => ())(new Object)
     val stopped = spark
     assert(Substrates.keys.exists(_.spark eq stopped))

@@ -331,7 +331,7 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("dq: a planted dirty star yields exact per-rule violation counts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dirty").toString
+    val dir = tempDir("graft_dirty").toString
     val ts = Timestamp.valueOf("1995-06-01 00:00:00")
     val old = Timestamp.valueOf("1990-01-01 00:00:00")
     def write(name: String, schema: org.apache.spark.sql.types.StructType,
