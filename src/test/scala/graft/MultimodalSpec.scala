@@ -2,11 +2,80 @@ package graft
 
 import graft.ops.MultimodalOps
 
-/** The perceptual-hash family over the binary payload column: each
-  * banded query against an independent driver recomputation, the
-  * invariances its hash promises, and the native band kernels against
-  * the declarative forms they replaced. */
+/** The byte-twin media queries and the perceptual-hash family over the
+  * binary payload column: each query against an independent driver
+  * recomputation over the payload bytes, the invariances each hash
+  * promises, and the native band kernels against the declarative forms
+  * they replaced. */
 class MultimodalSpec extends SparkSpec {
+
+  /** (doc_id, UTF-8 payload bytes) of the fixture corpus, by doc_id —
+    * what `payloads` casts `text` to. */
+  private def payloadBytes(): Seq[(Long, Array[Byte])] =
+    graft.etl.Tables.documents(spark, sfDir).select("doc_id", "text").collect()
+      .map { r =>
+        assert(!r.isNullAt(1), s"doc ${r.getLong(0)} has null text")
+        r.getLong(0) -> r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      }.toSeq.sortBy(_._1)
+
+  private def md5Hex(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("MD5").digest(b).map("%02x".format(_)).mkString
+
+  test("features: byte statistics equal a driver pass over the payload bytes") {
+    val expected = payloadBytes().map { case (id, b) =>
+      val u = b.map(_ & 0xff)
+      if (u.isEmpty) (id, 0, 0, 0, 0L, 0.0)
+      else (id, u.length, u.min, u.max, u.map(_.toLong).sum, u.map(_.toLong).sum.toDouble / u.length)
+    }
+    val got = MultimodalOps.featuresQuery(spark, sfDir).collect().map(r =>
+      (r.getAs[Long]("doc_id"), r.getAs[Int]("NBytes"), r.getAs[Int]("MinByte"),
+        r.getAs[Int]("MaxByte"), r.getAs[Long]("SumBytes"), r.getAs[Double]("MeanByte"))).toSeq
+    assert(got === expected)
+  }
+
+  test("meta: byte-twin metadata equals a driver recomputation from the text") {
+    val docs = graft.etl.Tables.documents(spark, sfDir).select("doc_id", "text").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1)
+    val expected = docs.map { case (id, t) =>
+      val n = t.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
+      val first = if (t.isEmpty) 0 else t.codePointAt(0)
+      val w = n % 317 + 1
+      val h = first * 7 % 97 + 1
+      (id, n, first, w, h, w.toDouble / h)
+    }.toSeq
+    val got = MultimodalOps.metaQuery(spark, sfDir).collect().map(r =>
+      (r.getAs[Long]("doc_id"), r.getAs[Int]("NBytes"), r.getAs[Int]("FirstByte"),
+        r.getAs[Int]("FakeWidth"), r.getAs[Int]("FakeHeight"),
+        r.getAs[Double]("AspectRatio"))).toSeq
+    assert(got === expected)
+  }
+
+  test("frame sampling: every FrameStride-th 64-byte frame, md5 equal to a driver slice") {
+    import MultimodalOps.{FrameBytes, FrameStride}
+    val expected = payloadBytes().flatMap { case (id, b) =>
+      val last = math.max((b.length - 1) / FrameBytes, 0)
+      (0 to last by FrameStride).map { i =>
+        (id, i, md5Hex(b.slice(i * FrameBytes, (i + 1) * FrameBytes)))
+      }
+    }
+    val got = MultimodalOps.frameSample(spark, sfDir).collect().map(r =>
+      (r.getAs[Long]("doc_id"), r.getAs[Int]("FrameIdx"), r.getAs[String]("FrameMd5"))).toSeq
+    assert(got === expected)
+    // the corpus has payloads longer than one stride, so sampling skips frames
+    assert(got.exists(_._2 > 0), "no doc reached a second sampled frame")
+  }
+
+  test("resize: kept bytes are every ResizeFactor-th payload byte, size and md5 equal a driver pass") {
+    import MultimodalOps.ResizeFactor
+    val expected = payloadBytes().map { case (id, b) =>
+      val kept = b.indices.filter(_ % ResizeFactor == 0).map(b(_)).toArray
+      (id, kept.length, md5Hex(kept), kept.length % 317 + 1)
+    }
+    val got = MultimodalOps.resize(spark, sfDir).collect().map(r =>
+      (r.getAs[Long]("doc_id"), r.getAs[Int]("NBytesResized"),
+        r.getAs[String]("ResizedMd5"), r.getAs[Int]("FakeWidthResized"))).toSeq
+    assert(got === expected)
+  }
 
   test("ahash_neardup: banded query equals an independent brute-force recomputation at fixture scale") {
     import graft.etl.Tables

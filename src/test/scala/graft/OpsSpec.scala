@@ -1520,4 +1520,93 @@ class OpsSpec extends SparkSpec {
       assert(r.getAs[Long]("NWords") === toks(r.getAs[Long]("doc_id")).toLong, r.toString)
     }
   }
+
+  test("set ops: churned and returning customers split the 1995 customers exactly") {
+    import graft.ops.RelationalOps
+    val byYear = graft.etl.Tables.orders(spark, sfDir)
+      .select(col("o_custkey").cast("long"), year(col("o_orderdate"))).collect()
+      .map(r => r.getLong(0) -> r.getInt(1))
+    def active(y: Int) = byYear.filter(_._2 == y).map(_._1).toSet
+    val (in95, in96) = (active(1995), active(1996))
+    def keys(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.getAs[Number](0).longValue).toSeq
+    val churned = keys(RelationalOps.churnedCustomers(spark, sfDir))
+    val returning = keys(RelationalOps.returningCustomers(spark, sfDir))
+    assert(churned === (in95 -- in96).toSeq.sorted)
+    assert(returning === (in95 & in96).toSeq.sorted)
+    assert(churned.nonEmpty && returning.nonEmpty, "one side empty — the split is untested")
+  }
+
+  test("rollup: per-country subtotals and the grand total agree with the unpivoted metrics") {
+    import graft.ops.RelationalOps
+    val roll = RelationalOps.rollupCountryYear(spark, sfDir).collect()
+    val long = RelationalOps.unpivotCountryMetrics(spark, sfDir).collect()
+      .map(r => (r.getAs[String]("Country"), r.getAs[String]("Metric")) -> r.getAs[Double]("Value"))
+      .toMap
+    val countries = long.keys.map(_._1).toSet
+    val subtotals = roll.filter(_.getAs[Long]("GroupingId") == 1L)
+    assert(subtotals.map(_.getAs[String]("Country")).toSet === countries)
+    subtotals.foreach { r =>
+      val c = r.getAs[String]("Country")
+      assert(r.isNullAt(r.fieldIndex("Year")))
+      // both are the same exact decimal sum surfaced as double
+      assert(r.getAs[Double]("TotalRevenue") === long(c -> "Revenue"), c)
+      assert(r.getAs[Long]("TotalOrders").toDouble === long(c -> "Orders"), c)
+      // an invoice has one date, so its country's leaves partition its orders
+      val leaves = roll.filter(l => l.getAs[Long]("GroupingId") == 0L && l.getAs[String]("Country") == c)
+      assert(leaves.map(_.getAs[Long]("TotalOrders")).sum === r.getAs[Long]("TotalOrders"), c)
+    }
+    val grand = roll.filter(_.getAs[Long]("GroupingId") == 3L)
+    assert(grand.length === 1)
+    // an invoice has one customer, hence one country
+    assert(grand.head.getAs[Long]("TotalOrders").toDouble ===
+      countries.toSeq.map(c => long(c -> "Orders")).sum)
+    // items: the cleaned non-cancelled quantities, summed per country on the driver
+    val items = graft.etl.Transactions.cleaned(spark, sfDir).filter(!col("IsCancelled"))
+      .select(col("Country"), col("Quantity").cast("long")).collect()
+      .groupBy(_.getString(0)).map { case (c, rs) => c -> rs.map(_.getLong(1)).sum.toDouble }
+    assert(items === countries.map(c => c -> long(c -> "Items")).toMap)
+  }
+
+  test("window ranks: percent_rank and cume_dist of daily revenue equal a driver ranking") {
+    import graft.ops.RelationalOps
+    val rows = RelationalOps.windowDailyRanks(spark, sfDir).collect()
+    val dates = rows.map(_.getDate(0).toLocalDate)
+    assert(dates.toSeq === dates.toSeq.sorted.distinct, "not one row per date in date order")
+    val rev = rows.map(_.getAs[Double]("Revenue"))
+    val n = rev.length
+    assert(n > 2)
+    rows.zip(rev).foreach { case (r, v) =>
+      val rank = rev.count(_ < v) + 1
+      assert(r.getAs[Double]("PctRank") === (rank - 1).toDouble / (n - 1), r.toString)
+      assert(r.getAs[Double]("CumeDist") === rev.count(_ <= v).toDouble / n, r.toString)
+    }
+  }
+
+  test("range join: value-band counts and totals equal a driver classification of every event") {
+    import graft.ops.RelationalOps
+    val values = graft.etl.Tables.events(spark, sfDir).select(col("value")).collect()
+      .filterNot(_.isNullAt(0)).map(_.getDouble(0))
+    val expected = RelationalOps.ValueBands.map { case (name, lo, hi) =>
+      val in = values.filter(v => v >= lo && v < hi)
+      // the query's decimal(18, 4) sum, surfaced as double
+      val total = in.map(v => BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP)).sum
+      (name, lo, hi, in.length.toLong, total.toDouble)
+    }.filter(_._4 > 0)
+    val got = RelationalOps.rangeJoinValueBands(spark, sfDir).collect().map(r =>
+      (r.getAs[String]("Band"), r.getAs[Double]("Lo"), r.getAs[Double]("Hi"),
+        r.getAs[Long]("NEvents"), r.getAs[Double]("TotalValue"))).toSeq
+    assert(got === expected)
+    assert(got.length > 1, "all events in one band — the binning is untested")
+  }
+
+  test("regex tokens: alpha-run and non-space token counts equal a driver regex scan") {
+    import graft.ops.RelationalOps
+    val expected = graft.etl.Tables.documents(spark, sfDir).select("doc_id", "text").collect()
+      .map(r => (r.getLong(0), "[a-z]+".r.findAllIn(r.getString(1)).size,
+        "[^ ]+".r.findAllIn(r.getString(1)).size)).sortBy(_._1).toSeq
+    val got = RelationalOps.regexTokens(spark, sfDir).collect().map(r =>
+      (r.getAs[Long]("doc_id"), r.getAs[Int]("NAlpha"), r.getAs[Int]("NNonSpace"))).toSeq
+    assert(got === expected)
+  }
 }

@@ -906,4 +906,77 @@ class RetrievalGraphSpec extends SparkSpec {
     assert(firstPass.exists { case (q, docs) => second(q) != docs },
       "expansion changed no ranking — the PRF loop is vacuous on this corpus")
   }
+
+  /** Both-directions, degree-carrying (Src, Dst, OutDeg) substrate of
+    * an undirected pair list — the shape every `*Of` graph kernel takes. */
+  private def undirected(pairs: Seq[(Long, Long)]) = {
+    import spark.implicits._
+    val raw = pairs.toDF("A", "B")
+    raw.select($"A".as("Src"), $"B".as("Dst"))
+      .union(raw.select($"B".as("Src"), $"A".as("Dst")))
+      .distinct()
+      .withColumn("OutDeg", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy($"Src")))
+  }
+
+  test("connected components: a triangle, a path and a pair keep their min-id labels and sizes") {
+    val rows = GraphOps.connectedComponentsOf(undirected(Seq(
+      (1L, 2L), (2L, 3L), (1L, 3L),
+      (13L, 12L), (11L, 12L), (10L, 11L),
+      (21L, 20L)))).collect()
+      .map(r => (r.getAs[Long]("PartKey"), r.getAs[Long]("Degree"),
+        r.getAs[Long]("Component"), r.getAs[Long]("ComponentSize"))).toSeq
+    assert(rows === Seq(
+      (1L, 2L, 1L, 3L), (2L, 2L, 1L, 3L), (3L, 2L, 1L, 3L),
+      (10L, 1L, 10L, 4L), (11L, 2L, 10L, 4L), (12L, 2L, 10L, 4L), (13L, 1L, 10L, 4L),
+      (20L, 1L, 20L, 2L), (21L, 1L, 20L, 2L)))
+  }
+
+  test("degree stats: a star is perfectly disassortative; a cycle's assortativity is undefined") {
+    val star = GraphOps.degreeStatsOf(undirected((1L to 4L).map(0L -> _))).head()
+    assert((star.getAs[Long]("NNodes"), star.getAs[Long]("NEdges"),
+      star.getAs[Long]("MinDegree"), star.getAs[Long]("MaxDegree")) === ((5L, 8L, 1L, 4L)))
+    assert(star.getAs[Double]("MeanDegree") === 8.0 / 5)
+    assert(star.getAs[Double]("Assortativity") === -1.0)
+    val cycle = GraphOps.degreeStatsOf(undirected((0L until 5L).map(i => i -> (i + 1) % 5))).head()
+    assert((cycle.getAs[Long]("NNodes"), cycle.getAs[Long]("NEdges"),
+      cycle.getAs[Long]("MinDegree"), cycle.getAs[Long]("MaxDegree")) === ((5L, 10L, 2L, 2L)))
+    assert(cycle.getAs[Double]("MeanDegree") === 2.0)
+    assert(cycle.isNullAt(cycle.fieldIndex("Assortativity")),
+      "zero degree variance must give NULL, not a NaN or a number")
+  }
+
+  test("pagerank: a cycle is an exact fixed point at RankScale; a star's leaves stay equal") {
+    val cycle = GraphOps.pagerankOf(undirected((0L until 6L).map(i => i -> (i + 1) % 6)))
+      .collect().map(r => r.getAs[Long]("RankQ")).toSeq
+    // 2·(R div 2) = R for even R, and TeleportQ + 0.85·R = R exactly
+    assert(cycle === Seq.fill(6)(GraphOps.RankScale))
+    val star = GraphOps.pagerankOf(undirected((1L to 4L).map(0L -> _))).collect()
+      .map(r => r.getAs[Long]("PartKey") -> r.getAs[Long]("RankQ")).toMap
+    assert((1L to 4L).map(star).distinct.size === 1, s"leaves differ: $star")
+    assert(star(0L) > star(1L), s"hub does not outrank its leaves: $star")
+    assert(star.values.sum <= 5 * GraphOps.RankScale, "floor division created rank mass")
+  }
+
+  test("k-core: a 5-clique with a 3-node tail peels one tail node per round") {
+    // degrees 4,4,4,4,5,2,2,1: Σ 26 over 8 nodes ⇒ K = 7·3 div 10 = 2
+    val clique = for (a <- 1L to 5L; b <- (a + 1) to 5L) yield (a, b)
+    val edges = undirected(clique ++ Seq((5L, 6L), (6L, 7L), (7L, 8L)))
+    val (core, rounds) = GraphOps.kcoreWithRounds(edges)
+    // three peels (8, then 7, then 6) and one round that confirms the fixpoint
+    assert(rounds === 4)
+    assert(core.collect().map(r => (r.getAs[Long]("PartKey"), r.getAs[Long]("Degree"),
+      r.getAs[Boolean]("InCore"), r.getAs[Long]("CoreDegree"))).toSeq === Seq(
+      (1L, 4L, true, 4L), (2L, 4L, true, 4L), (3L, 4L, true, 4L), (4L, 4L, true, 4L),
+      (5L, 5L, true, 4L), (6L, 2L, false, 0L), (7L, 2L, false, 0L), (8L, 1L, false, 0L)))
+  }
+
+  test("k-core: a peel deeper than maxRounds fails loudly instead of returning a partial core") {
+    val clique = for (a <- 1L to 5L; b <- (a + 1) to 5L) yield (a, b)
+    val edges = undirected(clique ++ Seq((5L, 6L), (6L, 7L), (7L, 8L)))
+    val e = intercept[AssertionError] {
+      GraphOps.kcoreWithRounds(edges, maxRounds = 3)
+    }
+    assert(e.getMessage.contains("within 3 peels"), e.getMessage)
+  }
 }

@@ -358,4 +358,66 @@ class WarehouseSpec extends SparkSpec {
       .map(r => r.getAs[Int]("RuleNo") -> r.getAs[Long]("NViolations")).toMap
     assert(got === Map(1 -> 1L, 2 -> 1L, 3 -> 1L, 4 -> 1L, 5 -> 1L, 6 -> 1L))
   }
+
+  /** Column 0 of each row as a long, in row order. */
+  private def longKeys(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.collect().map(_.getAs[Number](0).longValue).toSeq
+
+  test("semi join: cancelled customers are exactly the customers with an 'F' order, each once") {
+    val withF = longKeys(Tables.orders(spark, sfDir).filter(col("o_orderstatus") === "F")
+      .select(col("o_custkey"))).toSet
+    val customers = longKeys(Tables.customer(spark, sfDir).select(col("c_custkey"))).toSet
+    val got = longKeys(graft.etl.StarQueries.cancelledCustomers(spark, sfDir))
+    assert(got === (customers & withF).toSeq.sorted)
+    assert(got.nonEmpty && got.length < customers.size, "semi join kept none or all customers")
+  }
+
+  test("anti join: unsold parts are exactly the parts no line item references") {
+    // every fixture part sells, so a second star drops the line items
+    // of every third part: the anti join must return exactly those
+    val planted = tempDir("graft_unsold").toString
+    Tables.part(spark, sfDir).write.parquet(s"$planted/part.parquet")
+    Tables.lineitem(spark, sfDir).filter(col("l_partkey") % 3 =!= 0)
+      .write.parquet(s"$planted/lineitem.parquet")
+    val parts = longKeys(Tables.part(spark, sfDir).select(col("p_partkey"))).toSet
+    Seq(sfDir -> false, planted -> true).foreach { case (dir, plantedDir) =>
+      val sold = longKeys(Tables.lineitem(spark, dir).select(col("l_partkey"))).toSet
+      val got = longKeys(graft.etl.StarQueries.unsoldParts(spark, dir))
+      assert(got === (parts -- sold).toSeq.sorted, dir)
+      if (plantedDir) {
+        assert(got.nonEmpty && got.forall(_ % 3 == 0), "planted unsold parts missing")
+      }
+    }
+  }
+
+  /** Per-date exact decimal(18, 4) revenue of the non-cancelled cleaned
+    * rows, summed on the driver, in date order. */
+  private def dailyRevenueDec(): Seq[(java.time.LocalDate, BigDecimal)] =
+    Transactions.cleaned(spark, sfDir).filter(!col("IsCancelled"))
+      .select(col("Date"), col("TotalAmount")).collect()
+      .groupBy(_.getDate(0).toLocalDate)
+      .map { case (d, rs) =>
+        d -> rs.map(r => BigDecimal(r.getDouble(1)).setScale(4, BigDecimal.RoundingMode.HALF_UP)).sum
+      }.toSeq.sortBy(_._1.toEpochDay)
+
+  test("running total: daily revenue and its prefix sums equal driver decimal sums") {
+    val want = dailyRevenueDec()
+    val prefix = want.map(_._2).scanLeft(BigDecimal(0))(_ + _).tail
+    val got = Summaries.runningTotal(Transactions.cleaned(spark, sfDir)).collect()
+      .map(r => (r.getDate(0).toLocalDate, r.getAs[Double]("Revenue"), r.getAs[Double]("CumRevenue")))
+      .toSeq
+    assert(got === want.zip(prefix).map { case ((d, v), c) => (d, v.toDouble, c.toDouble) })
+  }
+
+  test("lag growth: previous-day revenue and growth follow the date order; the first day has none") {
+    val want = dailyRevenueDec().map { case (d, v) => d -> v.toDouble }
+    val rows = Summaries.lagGrowth(Transactions.cleaned(spark, sfDir)).collect()
+    assert(rows.map(r => (r.getDate(0).toLocalDate, r.getAs[Double]("Revenue"))).toSeq === want)
+    assert(rows.head.isNullAt(2) && rows.head.isNullAt(3))
+    rows.sliding(2).foreach { case Array(prev, cur) =>
+      assert(cur.getAs[Double]("PrevRevenue") === prev.getAs[Double]("Revenue"))
+      assert(cur.getAs[Double]("Growth") ===
+        cur.getAs[Double]("Revenue") - prev.getAs[Double]("Revenue"))
+    }
+  }
 }
