@@ -19,9 +19,8 @@ import org.apache.spark.sql.SparkSession
   * codegen-cache stories):
   *   - `local[cpus]` with `cpus` from SPARK_GRAFT_CPUS (per-site
   *     default; gate surfaces use 32, the Verify dump 4);
-  *   - shuffle width = SPARK_GRAFT_SHUFFLE else `cpus` — the env var
-  *     is an OVERRIDE floor for experiments; the scale-critical joins
-  *     size their own exchanges (SimilarityOps.candidatePartitions);
+  *   - shuffle width = `cpus`; the scale-critical joins size their
+  *     own exchanges (SimilarityOps.candidatePartitions);
   *   - the ObjectHashAggregate hash-path threshold
   *     ([[graft.functions.SketchAggregates.ObjectHashFallbackThreshold]]
   *     — Spark's default 128 groups sort-degrades every realistic
@@ -42,10 +41,9 @@ import org.apache.spark.sql.SparkSession
 object GraftSession {
 
   /** Read an env override that must be a positive integer, failing
-    * with the variable NAME in the message — the same validation
-    * SPARK_GRAFT_OHA_FALLBACK got in round 15 and for the same
-    * reason: a malformed value otherwise surfaces as an opaque
-    * master-URL or conf parse failure deep inside session build. */
+    * with the variable NAME in the message: a malformed value
+    * otherwise surfaces as an opaque master-URL or conf parse failure
+    * deep inside session build. */
   private[graft] def positiveIntEnv(name: String, default: String): String = {
     val v = sys.env.getOrElse(name, default)
     require(v.nonEmpty && v.length <= 9 && v.forall(_.isDigit) && v.toInt > 0,
@@ -58,17 +56,15 @@ object GraftSession {
     * pass probe-specific confs via [[local]]'s `extraConfs`. */
   def builder(defaultCpus: Int = 32): SparkSession.Builder = {
     val cpus = positiveIntEnv("SPARK_GRAFT_CPUS", defaultCpus.toString)
-    val shuffle = positiveIntEnv("SPARK_GRAFT_SHUFFLE", cpus)
     SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         graft.functions.SketchAggregates.ObjectHashFallbackThreshold)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
+      .config("spark.sql.codegen.cache.maxEntries", "5000")
       // Shuffle/broadcast/spill codec: zstd, not Spark's lz4 default.
       // The engine's hot shuffles carry QUANTIZED VECTORS — 64-long
       // arrays whose values fit in 15 bits, so ~75% of every UnsafeRow
@@ -81,9 +77,7 @@ object GraftSession {
       // exhaustion this probe first hit was a SEPARATE defect —
       // one-row shuffle slices from fan-out-sized exchanges defeat
       // ANY codec; see SimilarityOps.MinShuffleRowsPerTask.)
-      // Override: SPARK_GRAFT_CODEC.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_CODEC", "zstd"))
+      .config("spark.io.compression.codec", "zstd")
       .config("spark.network.timeout", "800s")
       .config("spark.executor.heartbeatInterval", "60s")
       .config("spark.ui.enabled", "false")

@@ -1,10 +1,13 @@
 package graft
 
+import java.util.concurrent.{Callable, Executors}
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** The registry of per-session substrates: every cached frame, corpus
   * count, trained model and persisted index that one query builds and
@@ -34,6 +37,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Entries of a stopped session are dropped, without running their
   * release, on the next lookup.
+  *
+  * == Local relations ==
+  * An intermediate bounded by a constant or by the calendar (method
+  * lists, a country × day aggregate, a one-row report) is not
+  * registered: [[local]] collects it to the driver and returns a local
+  * relation. That holds no block, so it needs no release, and it gives
+  * the planner the exact size for its broadcast choice. A registry
+  * entry and a local relation are the two ways the engine holds a
+  * materialized intermediate across the plans of one query or session.
   */
 object Substrates {
 
@@ -70,6 +82,28 @@ object Substrates {
   def frame(spark: SparkSession, dir: String, kind: String, params: Any*)(
       build: => DataFrame): DataFrame =
     apply[DataFrame](spark, dir, kind, params: _*)(_.unpersist(false))(build)
+
+  /** Each frame collected to the driver and returned as a local
+    * relation on its own session. Use only for frames bounded by a
+    * constant or by the calendar. Several frames are collected as
+    * concurrent jobs from driver threads, which Spark's FIFO scheduler
+    * interleaves, so a wave of small AQE jobs costs its slowest frame
+    * rather than the sum of their dispatch latencies. */
+  def local(dfs: DataFrame*): Seq[DataFrame] = {
+    def collected(df: DataFrame): DataFrame =
+      local(df.sparkSession, df.collect().toSeq, df.schema)
+    if (dfs.size <= 1) return dfs.map(collected)
+    val pool = Executors.newFixedThreadPool(dfs.size)
+    try dfs.map(df => pool.submit(new Callable[DataFrame] {
+      def call(): DataFrame = collected(df)
+    })).map(_.get())
+    finally pool.shutdown()
+  }
+
+  /** Rows already on the driver as a local relation: the one place the
+    * engine builds one. */
+  private[graft] def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(rows.asJava, schema)
 
   /** Release every entry `spark` built from `dir`. Safe mid-flight:
     * plans already built over a released frame recompute from its

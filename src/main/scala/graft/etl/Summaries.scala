@@ -586,15 +586,14 @@ object Summaries {
     * the query's cost at 100 TB is the one fact-table scan feeding
     * the daily aggregate. */
   def theilSenTrend(cleaned: DataFrame): DataFrame = {
-    // Pin the country×day aggregate (calendar-sized, ~2.4k rows at
-    // sf0.1): it feeds FOUR consumers (the max-date anchor, both
-    // sides of the pair self-join, and the intercept residual pass),
-    // each of which otherwise re-runs the fact scan + aggregate —
-    // the mmr/textrank per-invocation pin rule (guide §5) applied
-    // here (r18: 1.25 s → fact scan once).
-    val daily = sales(cleaned).groupBy(col("Country"), col("Date"))
-      .agg(decSum(col("TotalAmount")).as("RevDec"))
-      .localCheckpoint()
+    // Collect the country×day aggregate (calendar-sized, ~2.4k rows
+    // at sf0.1) to a local relation: it feeds FOUR consumers (the
+    // max-date anchor, both sides of the pair self-join, and the
+    // intercept residual pass), each of which otherwise re-runs the
+    // fact scan + aggregate (r18: 1.25 s → fact scan once)
+    val Seq(daily) = graft.Substrates.local(
+      sales(cleaned).groupBy(col("Country"), col("Date"))
+        .agg(decSum(col("TotalAmount")).as("RevDec")))
     val maxD = daily.agg(max(col("Date")).as("MaxDate"))
     val win = daily.crossJoin(broadcast(maxD))
       .filter(datediff(col("MaxDate"), col("Date")) < TheilSenWindowDays)

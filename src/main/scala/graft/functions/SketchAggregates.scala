@@ -44,8 +44,7 @@ object SketchAggregates {
 
   /** Session default for
     * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` —
-    * every session builder in this engine sets it (env override:
-    * SPARK_GRAFT_OHA_FALLBACK). The TypedImperative aggregates in
+    * every session builder in this engine sets it. The TypedImperative aggregates in
     * this file execute as ObjectHashAggregate, and Spark's DEFAULT
     * threshold (128 in-memory groups) makes every realistic
     * aggregation abandon the hash map and SORT its whole per-task
@@ -67,21 +66,10 @@ object SketchAggregates {
     * full 65536-group map is ~35-130 MB per task, inside a normal
     * 2-4 GB executor-core budget but NOT "tens of MB"; a conf this
     * size must be weighed against executor memory if
-    * [[ObjectHashFallbackThreshold]] is raised further (the env
-    * override exists for exactly that experiment). In practice every
+    * [[ObjectHashFallbackThreshold]] is raised further. In practice every
     * such aggregation here keys on a pruned substrate whose per-task
     * group count AQE keeps far below the cap. */
-  val ObjectHashFallbackThreshold: String = {
-    val raw = sys.env.getOrElse("SPARK_GRAFT_OHA_FALLBACK", "65536")
-    // validate HERE, not inside Spark's conf machinery, whose error
-    // for a malformed value is an opaque stack trace at session build
-    require(raw.nonEmpty && raw.length <= 9 && raw.forall(_.isDigit)
-        && raw.toInt > 0,
-      s"SPARK_GRAFT_OHA_FALLBACK must be a positive integer " +
-        s"(in-memory ObjectHashAggregate groups before the sort " +
-        s"fallback), got '$raw'")
-    raw
-  }
+  val ObjectHashFallbackThreshold = "65536"
 
   private[graft] def intLit(e: Expression, usage: String): Int = e match {
     case Literal(v: Int, IntegerType) => v

@@ -90,11 +90,12 @@ object AggMaintenance {
     * re-aggregate old+new partials, and dynamically overwrite JUST the
     * affected month directories. Returns the affected months.
     *
-    * The merged frame is `localCheckpoint`ed before the write: its
-    * lineage reads the same partitions the write replaces, and
-    * materializing first is what makes overwrite-what-you-read safe
-    * (and keeps the failure unit clean — the checkpoint either
-    * completed or the table is untouched). */
+    * The merged frame (the days of the touched months, bounded by the
+    * calendar) is collected to a local relation before the write: its
+    * plan reads the same partitions the write replaces, and a local
+    * relation holds no lineage to that path, which is what makes
+    * overwrite-what-you-read safe (and keeps the failure unit clean —
+    * the collect either completed or the table is untouched). */
   def maintainDailyAgg(spark: SparkSession, base: String,
                        batchFacts: DataFrame): Seq[String] = {
     val bp = partials(batchFacts)
@@ -104,7 +105,7 @@ object AggMaintenance {
     val existing = spark.read.parquet(base)
       .filter(col("YM").isin(yms: _*))
       .select(col("Date"), col("RevDec"), col("Items"), col("Lines"), col("YM"))
-    val merged = existing
+    val Seq(merged) = graft.Substrates.local(existing
       .unionByName(bp.select(col("Date"), col("RevDec"), col("Items"),
         col("Lines"), col("YM")))
       .groupBy(col("YM"), col("Date"))
@@ -112,8 +113,7 @@ object AggMaintenance {
         sum(col("RevDec")).cast(dec).as("RevDec"),
         sum(col("Items")).cast(LongType).as("Items"),
         sum(col("Lines")).cast(LongType).as("Lines"))
-      .select(col("Date"), col("RevDec"), col("Items"), col("Lines"), col("YM"))
-      .localCheckpoint()
+      .select(col("Date"), col("RevDec"), col("Items"), col("Lines"), col("YM")))
     merged.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("YM").parquet(base)

@@ -37,31 +37,6 @@ import org.apache.spark.sql.SparkSession
   */
 private[graft] object BucketedTables {
 
-  /** Eagerly localCheckpoint several INDEPENDENT small frames as
-    * CONCURRENT jobs (guide §2.6 — overlap independent jobs so one
-    * arm's scheduling tail backfills with the next arm's tasks; r17):
-    * composite cards (retrieval_eval's six method arms, dedup_report's
-    * three kernels) materialize dozens of sub-second AQE jobs, and
-    * running them sequentially bills one dispatch latency per job —
-    * JobProfileProbe measured retrieval_eval at 105 jobs × ~45 ms.
-    * Spark's FIFO scheduler interleaves jobs submitted from these
-    * driver threads; each frame's own plan is untouched, so results
-    * are unaffected. Use ONLY for frames whose checkpointed size is
-    * bounded (method lists, report rows) — the pinned blocks live
-    * until the frames are GC'd. */
-  def pinAllEager(dfs: Seq[org.apache.spark.sql.DataFrame]): Seq[org.apache.spark.sql.DataFrame] = {
-    if (dfs.size <= 1) return dfs.map(_.localCheckpoint())
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(dfs.size)
-    try {
-      val futs = dfs.map { df =>
-        pool.submit(new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
-          def call(): org.apache.spark.sql.DataFrame = df.localCheckpoint()
-        })
-      }
-      futs.map(_.get())
-    } finally pool.shutdown()
-  }
-
   /** Lowercased slug + md5-of-raw-dir table name (sanitization alone
     * is lossy; the hash makes dir → name injective). */
   def tableName(prefix: String, dir: String, suffix: String = ""): String = {

@@ -540,8 +540,8 @@ object DedupOps {
     * `(CorpusId, band_id, band_val, ShC)`, exact-Jaccard-verify the
     * collisions. The index's ShC rides the band join (no second
     * corpus-wide shingle join — only the batch's own ShN travels).
-    * Shared verbatim by the batch query above and the streaming
-    * foreachBatch twin (graft.streaming.DocsStream). */
+    * Shared verbatim by the batch query above and the per-microbatch
+    * foreachBatch form StreamingSpec checks against it. */
   def incrementalAgainst(spark: SparkSession, newDocs: DataFrame,
                          corpusBands: DataFrame): DataFrame = {
     val newSide = newDocs
@@ -561,9 +561,9 @@ object DedupOps {
 
   /** The indexed-corpus side of incremental dedup as a static
     * relation `(CorpusId, band_id, band_val, ShC)` — the session's
-    * cached sketch table. Consumed by the streaming twin
-    * (graft.streaming.DocsStream.runIncrementalDedup) and as the
-    * build input of the PERSISTED index below. */
+    * cached sketch table. The static side [[incrementalAgainst]]
+    * probes, per query or per stream microbatch (StreamingSpec), and
+    * the build input of the PERSISTED index below. */
   def corpusBandIndex(spark: SparkSession, dir: String): DataFrame = {
     val corpus = docBands(spark, dir)
       .filter(!(col("doc_id") % NewArrivalMod === NewArrivalRemainder))
@@ -704,8 +704,11 @@ object DedupOps {
     * Callers own the arrival/corpus split contract: a doc appended
     * here is CORPUS from then on — later batches probing the index
     * will see it (exactly the semantics an ingestion pipeline wants:
-    * admit a batch, then dedup the next batch against it). */
-  def bandAppend(spark: SparkSession, dir: String, newDocs: DataFrame): String = {
+    * admit a batch, then dedup the next batch against it).
+    *
+    * Kept with no engine caller: IndexMaintenanceSpec checks it against
+    * a full build, and StreamingSpec drives it per microbatch. */
+  private[graft] def bandAppend(spark: SparkSession, dir: String, newDocs: DataFrame): String = {
     val name = bandIndexTable(spark, dir)
     val batches = bandBuildLock.synchronized {
       // BATCH-LOCAL hot-bucket cooling at append time (a flood batch
@@ -1158,16 +1161,13 @@ object DedupOps {
       pairs.agg(count(lit(1)).as("NLinks"),
         countDistinct(col(affectedCol)).as("NAffected"))
         .select(lit(method).as("Method"), col("NLinks"), col("NAffected"))
-    // the three kernels are independent pair-sized frames: pin them as
-    // CONCURRENT jobs (BucketedTables.pinAllEager rationale, r17) so
-    // the card's wall is the slowest kernel, not their sum
-    val Seq(cont, ex, jac) = graft.ops.BucketedTables.pinAllEager(Seq(
-      containment(spark, dir),
-      exact(spark, dir).filter(col("IsDup")).select(col("doc_id").as("A")),
-      jaccardExact(spark, dir)))
-    val rows = row("containment", cont, "InnerId")
-      .union(row("exact", ex, "A"))
-      .union(row("jaccard", jac, "D2"))
+    // the three kernels are independent: their 1-row aggregates are
+    // collected as CONCURRENT jobs (Substrates.local, r17) so the
+    // card's wall is the slowest kernel, not their sum
+    val rows = Substrates.local(
+      row("containment", containment(spark, dir), "InnerId"),
+      row("exact", exact(spark, dir).filter(col("IsDup")).select(col("doc_id").as("A")), "A"),
+      row("jaccard", jaccardExact(spark, dir), "D2")).reduce(_.union(_))
     rows.crossJoin(n)
       .withColumn("RemovalRate",
         col("NAffected").cast(DoubleType) / col("NDocs"))

@@ -151,17 +151,13 @@ object GraphOps {
     val lp = Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("OrderKey"), col("l_partkey").as("Part"))
       .distinct()
-    // Pin the basket table (order-count-sized, bounded ≤MaxOrderParts
-    // arrays): it feeds FOUR consumers (the basket total, both
-    // per-part count arms, and the pair expansion), and unpinned the
-    // whole scan→distinct→collect chain (2 exchanges + an object
-    // hash aggregate over the fact table) re-ran per consumer — the
-    // r18 before-plan shows the identical subtree four times (guide
-    // §5 reuse-over-recompute; the theilSenTrend pin rule).
+    // not pinned: the basket table feeds four consumers, but it is
+    // order-count-sized (it grows with the corpus), and a same-window
+    // A/B at sf0.1 (FreshRunProbe, 10 alternating pairs) resolved no
+    // gain from pinning it
     val baskets = lp.groupBy(col("OrderKey"))
       .agg(collect_list(col("Part")).as("Ps"))
       .filter(size(col("Ps")) <= MaxOrderParts)
-      .localCheckpoint()
     val total = baskets.agg(count(lit(1)).as("NBaskets"))
     val partN = baskets
       .select(explode(col("Ps")).as("Part"))

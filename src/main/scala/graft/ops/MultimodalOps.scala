@@ -183,13 +183,9 @@ object MultimodalOps {
     * the Spark-side plumbing: band explode, hot-capped bucket
     * self-join, XOR/bit_count verify.
     *
-    * Scale shape: ONE narrow corpus pass builds the hashes
-    * (localCheckpoint-pinned — the three downstream references read
-    * materialized 4-int rows, not re-scans), a (band, value)-keyed
-    * window for the cap, a bucket-bounded self-join (never all-pairs
-    * — candidate volume is Σ bucket², capped), then a
-    * |candidates|-sized hash join + bit_count verify. The exact
-    * minhash/banding geometry, on binary payloads.
+    * Scale shape: the [[bandedHamming]] kernel — ONE narrow corpus
+    * pass builds the hashes, and candidate volume is Σ bucket²,
+    * capped. The exact minhash/banding geometry, on binary payloads.
     *
     * Evaluation-structure history (the lesson this query paid 89 s at
     * sf0.1 to learn, preserved because it is a general Catalyst rule):
@@ -204,14 +200,28 @@ object MultimodalOps {
     * native codegen'd `ahash_bands` expression instead (one JVM loop
     * per row, whole-stage codegen — the house route for scalar work,
     * value-identical by the unchanged DuckDB mirror). */
-  def ahashNeardup(spark: SparkSession, dir: String): DataFrame = {
+  def ahashNeardup(spark: SparkSession, dir: String): DataFrame =
+    bandedHamming(spark, dir, "ahash_bands(text)")
+      .filter(col("Hamming") <= AhashMaxHamming)
+      .orderBy(col("IdA"), col("IdB"))
+
+  /** The banded-Hamming kernel of the perceptual-hash family: one
+    * narrow corpus pass computes each doc's band array with `bands`
+    * (a native codegen'd expression over `text`), pinned so the three
+    * downstream references read materialized rows, not re-scans; then
+    * a (band, value)-keyed window for the [[AhashBucketCap]] hot-bucket
+    * guard, a bucket-bounded self-join (never all-pairs), and a
+    * |candidates|-sized hash join + bit_count verify. Returns every
+    * capped band candidate (IdA < IdB) with its Hamming distance. The
+    * pin is a lineage cut the returned plan reads (corpus-linear). */
+  private def bandedHamming(spark: SparkSession, dir: String, bands: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // documentsSpread = the PINNED-count spread (AQE's byte-based
     // coalescer would collapse an unpinned repartition(doc_id) to ONE
     // partition and serialize this per-row-expensive pass — measured
     // 8.5 s vs 0.6 s; rule + guard pointers on Tables.documentsSpread)
     val base = Tables.documentsSpread(spark, dir)
-      .select(col("doc_id"), expr("ahash_bands(text)").as("BV"))
+      .select(col("doc_id"), expr(bands).as("BV"))
       .localCheckpoint()
     val bx = base.select(col("doc_id"),
       posexplode(col("BV")).as(Seq("B", "V")))
@@ -229,9 +239,7 @@ object MultimodalOps {
       .withColumn("Hamming", expr(
         "aggregate(zip_with(BVA, BVB, (x, y) -> bit_count(x ^ y)), 0, (a, v) -> a + v)")
         .cast(IntegerType))
-      .filter(col("Hamming") <= AhashMaxHamming)
       .select(col("IdA"), col("IdB"), col("Hamming"))
-      .orderBy(col("IdA"), col("IdB"))
   }
 
   /** pHash DCT-basis fixed-point scale (2¹⁴). */
@@ -291,35 +299,12 @@ object MultimodalOps {
     * (the interpreted HOF DCT was the multimodal family's worst
     * decade exponent, α 0.51, even after the round-10 let-binding fix
     * — ExprKernels.phashBands is the same arithmetic as one primitive
-    * loop per row), localCheckpoint-pinned, then the banded-LSH join
-    * with the [[AhashBucketCap]] hot-bucket guard bounds pair
-    * volume. */
-  def phashNeardup(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // pinned spread: see ahashNeardup's AQE-coalesce note
-    val base = Tables.documentsSpread(spark, dir)
-      .select(col("doc_id"), expr("phash_bands(text)").as("BV"))
-      .localCheckpoint()
-    val bx = base.select(col("doc_id"),
-      posexplode(col("BV")).as(Seq("B", "V")))
-    val cool = bx
-      .withColumn("BS", count(lit(1)).over(Window.partitionBy(col("B"), col("V"))))
-      .filter(col("BS") <= AhashBucketCap)
-    val cand = cool.as("a").join(cool.as("c"),
-        col("a.B") === col("c.B") && col("a.V") === col("c.V") &&
-          col("a.doc_id") < col("c.doc_id"))
-      .select(col("a.doc_id").as("IdA"), col("c.doc_id").as("IdB"))
-      .distinct()
-    cand
-      .join(base.select(col("doc_id").as("IdA"), col("BV").as("BVA")), "IdA")
-      .join(base.select(col("doc_id").as("IdB"), col("BV").as("BVB")), "IdB")
-      .withColumn("Hamming", expr(
-        "aggregate(zip_with(BVA, BVB, (x, y) -> bit_count(x ^ y)), 0, (a, v) -> a + v)")
-        .cast(IntegerType))
+    * loop per row), then [[bandedHamming]]'s banded-LSH join with the
+    * [[AhashBucketCap]] hot-bucket guard bounds pair volume. */
+  def phashNeardup(spark: SparkSession, dir: String): DataFrame =
+    bandedHamming(spark, dir, "phash_bands(text)")
       .withColumn("IsClose", col("Hamming") <= PhashMaxHamming)
-      .select(col("IdA"), col("IdB"), col("Hamming"), col("IsClose"))
       .orderBy(col("IdA"), col("IdB"))
-  }
 
   /** "Close pair" Hamming ceiling for [[audioFingerprint]]'s IsClose
     * verdict (the [[PhashMaxHamming]] candidate-report discipline). */
@@ -341,35 +326,13 @@ object MultimodalOps {
     * integer comparisons, banding is [[AhashBands]]×16 (last band 15
     * bits — no sign-bit shifts). The hash rides the native codegen'd
     * `audiofp_bands` expression with the partition count pinned (the
-    * two round-10 lessons, both now structural); hash table
-    * localCheckpoint-pinned before the banded-LSH join with the
-    * [[AhashBucketCap]] hot-bucket guard; candidates reported with
+    * two round-10 lessons, both now structural); [[bandedHamming]]'s
+    * banded-LSH join with the [[AhashBucketCap]] hot-bucket guard;
+    * candidates reported with
     * the [[AudioMaxHamming]] IsClose verdict (unthresholded report —
     * the pHash non-vacuous-gate discipline). */
-  def audioFingerprint(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // pinned spread: see ahashNeardup's AQE-coalesce note
-    val base = Tables.documentsSpread(spark, dir)
-      .select(col("doc_id"), expr("audiofp_bands(text)").as("BV"))
-      .localCheckpoint()
-    val bx = base.select(col("doc_id"),
-      posexplode(col("BV")).as(Seq("B", "V")))
-    val cool = bx
-      .withColumn("BS", count(lit(1)).over(Window.partitionBy(col("B"), col("V"))))
-      .filter(col("BS") <= AhashBucketCap)
-    val cand = cool.as("a").join(cool.as("c"),
-        col("a.B") === col("c.B") && col("a.V") === col("c.V") &&
-          col("a.doc_id") < col("c.doc_id"))
-      .select(col("a.doc_id").as("IdA"), col("c.doc_id").as("IdB"))
-      .distinct()
-    cand
-      .join(base.select(col("doc_id").as("IdA"), col("BV").as("BVA")), "IdA")
-      .join(base.select(col("doc_id").as("IdB"), col("BV").as("BVB")), "IdB")
-      .withColumn("Hamming", expr(
-        "aggregate(zip_with(BVA, BVB, (x, y) -> bit_count(x ^ y)), 0, (a, v) -> a + v)")
-        .cast(IntegerType))
+  def audioFingerprint(spark: SparkSession, dir: String): DataFrame =
+    bandedHamming(spark, dir, "audiofp_bands(text)")
       .withColumn("IsClose", col("Hamming") <= AudioMaxHamming)
-      .select(col("IdA"), col("IdB"), col("Hamming"), col("IsClose"))
       .orderBy(col("IdA"), col("IdB"))
-  }
 }

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
+import graft.Substrates
+
 /** HYBRID RETRIEVAL — reciprocal-rank fusion of the lexical (BM25)
   * and embedding (exact cosine top-k) ranked lists, the canonical
   * two-tower retrieval composition a training-data pipeline runs for
@@ -53,8 +55,8 @@ object RetrievalOps {
       SimilarityOps.topk(spark, dir))
 
   /** [[hybridRrf]] over caller-supplied branch lists — the seam that
-    * lets [[retrievalEval]] reuse its ALREADY-PINNED bm25 and exact
-    * top-k frames instead of re-executing both branch subtrees (r17);
+    * lets [[retrievalEval]] reuse its ALREADY-COLLECTED bm25 and exact
+    * top-k lists instead of re-executing both branch subtrees (r17);
     * the declared query passes the canonical branches, so the fused
     * values are unchanged. */
   private def hybridRrfFrom(spark: SparkSession, bm25List: DataFrame,
@@ -115,34 +117,39 @@ object RetrievalOps {
   def retrievalEval(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val qids = TextOps.Bm25Queries.map(_._1)
-    // Every method list and relevance table below is |queries|·k-row
-    // tiny but sits on a full method subtree; each is localCheckpoint-
-    // pinned so the six-arm union executes each method ONCE per
-    // materialization. Before the pinning, bm25 ran three times (own
-    // arm + prf feedback + rrf branch) and the exact top-k scan twice
-    // (rrf branch + the vector truth), and every arm's full subtree
-    // re-executed under the final union — measured 6.3 s per
-    // materialization at sf0.1 for 36 output rows. The pins run in TWO
-    // CONCURRENT WAVES (BucketedTables.pinAllEager, guide §2.6):
-    // sequentially-materialized lazy pins still billed one dispatch
-    // latency per AQE job (105 jobs × ~45 ms measured).
+    // Every method list below is |queries|·k rows but sits on a full
+    // method subtree: each is collected to a local relation, so the
+    // six-arm union executes each method ONCE. Unshared, bm25 ran three
+    // times (own arm + prf feedback + rrf branch) and the exact top-k
+    // scan twice (rrf branch + the vector truth), and every arm's
+    // subtree re-executed under the final union — measured 6.3 s per
+    // materialization at sf0.1 for 36 output rows. The lists are
+    // collected in TWO CONCURRENT WAVES (Substrates.local, guide §2.6):
+    // collected one after another, they billed one dispatch latency
+    // per AQE job (105 jobs × ~45 ms measured).
     // ---- lexical relevance: conjunctive term containment ----
-    val qterms = TextOps.Bm25Queries
-      .flatMap { case (qid, q) => q.split("\\s+").distinct.map(qid -> _) }
-      .toDF("QueryId", "Term")
-    val nq = qterms.groupBy(col("QueryId"))
-      .agg(countDistinct(col("Term")).as("NQ"))
-    val relPlan = TextOps.docPostings(spark, dir)
-      .join(broadcast(qterms), "Term")
-      .groupBy(col("QueryId"), col("doc_id"))
-      .agg(countDistinct(col("Term")).as("NHit"))
-      .join(broadcast(nq), "QueryId")
-      .filter(col("NHit") === col("NQ"))
-      .select(col("QueryId"), col("doc_id"))
-    // wave 1: the three frames every arm feeds from
-    val Seq(rel, bm25List, exactTopk) = graft.ops.BucketedTables.pinAllEager(Seq(
-      relPlan, TextOps.bm25Topk(spark, dir), SimilarityOps.topk(spark, dir)))
-    val nRel = rel.groupBy(col("QueryId")).agg(count(lit(1)).as("NRel"))
+    // the hit set grows with the corpus, not with |queries|·k, and
+    // depends only on `dir` and the constant query set: a registry entry
+    val rel = Substrates.frame(spark, dir, "retrieval.relevant") {
+      val qterms = TextOps.Bm25Queries
+        .flatMap { case (qid, q) => q.split("\\s+").distinct.map(qid -> _) }
+        .toDF("QueryId", "Term")
+      val nq = qterms.groupBy(col("QueryId"))
+        .agg(countDistinct(col("Term")).as("NQ"))
+      TextOps.docPostings(spark, dir)
+        .join(broadcast(qterms), "Term")
+        .groupBy(col("QueryId"), col("doc_id"))
+        .agg(countDistinct(col("Term")).as("NHit"))
+        .join(broadcast(nq), "QueryId")
+        .filter(col("NHit") === col("NQ"))
+        .select(col("QueryId"), col("doc_id"))
+        .cache()
+    }
+    // wave 1: the two lists every other arm feeds from, and the
+    // per-query relevant count, whose job fills the hit-set cache
+    val Seq(nRel, bm25List, exactTopk) = Substrates.local(
+      rel.groupBy(col("QueryId")).agg(count(lit(1)).as("NRel")),
+      TextOps.bm25Topk(spark, dir), SimilarityOps.topk(spark, dir))
     val lexSpine = qids.toDF("QueryId")
     def evalOf(method: String, ranked: DataFrame, truth: DataFrame,
                spine: DataFrame, truthN: DataFrame, k: Int): DataFrame = {
@@ -169,15 +176,14 @@ object RetrievalOps {
             .otherwise(lit(1.0) / col("FirstRel")).as("RR"))
     }
     // wave 2: the five remaining method lists, concurrent jobs over
-    // the wave-1 pins (any first-touch ivf/pq index build happens at
-    // frame CONSTRUCTION on this thread, before the parallel pins)
-    val Seq(prfList, rrfList, ivfList, pqList, ivfpqList) =
-      graft.ops.BucketedTables.pinAllEager(Seq(
-        prfExpandFrom(spark, dir, bm25List),
-        hybridRrfFrom(spark, bm25List, exactTopk),
-        SimilarityOps.ivfTopk(spark, dir),
-        SimilarityOps.pqTopk(spark, dir),
-        SimilarityOps.ivfpqTopk(spark, dir)))
+    // the wave-1 lists (any first-touch ivf/pq index build happens at
+    // frame CONSTRUCTION on this thread, before the concurrent collects)
+    val Seq(prfList, rrfList, ivfList, pqList, ivfpqList) = Substrates.local(
+      prfExpandFrom(spark, dir, bm25List),
+      hybridRrfFrom(spark, bm25List, exactTopk),
+      SimilarityOps.ivfTopk(spark, dir),
+      SimilarityOps.pqTopk(spark, dir),
+      SimilarityOps.ivfpqTopk(spark, dir))
     val lex = Seq(
       evalOf("bm25", bm25List
         .select(col("QueryId"), col("doc_id"), col("Rank")),
@@ -236,8 +242,8 @@ object RetrievalOps {
     prfExpandFrom(spark, dir, TextOps.bm25Topk(spark, dir))
 
   /** [[prfExpand]] over a caller-supplied first-pass list (the
-    * [[hybridRrfFrom]] seam, r17): [[retrievalEval]] passes its pinned
-    * bm25 frame so the feedback set is not a third re-execution of the
+    * [[hybridRrfFrom]] seam, r17): [[retrievalEval]] passes its collected
+    * bm25 list so the feedback set is not a third re-execution of the
     * first-pass subtree; the declared query passes the canonical
     * first pass, so the expansion and reranked values are unchanged. */
   private def prfExpandFrom(spark: SparkSession, dir: String,

@@ -129,7 +129,7 @@ object SimilarityOps {
 
   /** Per-task candidate-row cap for the family's self-sized exchanges
     * — the round-14 promotion of the shuffle-sizing rule from operator
-    * lore (the `SPARK_GRAFT_SHUFFLE` env var two probes had to export)
+    * lore (a session shuffle width two probes had to raise by hand)
     * into the engine. The candidate volume of a routed join is
     * computable at plan-build time from (n, K, nprobe); tasks are
     * sized to stream ~5M candidate rows (~2-3 GB with two quantized
@@ -163,9 +163,7 @@ object SimilarityOps {
     * ceil(candRows / cap), floored by the SESSION's shuffle partitions
     * — when the cap doesn't bind, the plan is byte-identical to the
     * un-sized form (session shuffle + AQE coalescing untouched), so
-    * gate-scale plans never pay for the scale path. The env var the
-    * probes export (`SPARK_GRAFT_SHUFFLE`, which raises the session
-    * setting) is hereby an OVERRIDE floor, not a requirement.
+    * gate-scale plans never pay for the scale path.
     *
     * `inputRows` > 0 (opt-in per site) additionally UPPER-bounds the
     * width at inputRows / [[MinShuffleRowsPerTask]] — for exchanges
@@ -318,25 +316,24 @@ object SimilarityOps {
     * each round is ONE bounded join + window over |queries|·k rows —
     * never the corpus. The candidate pool ([[MmrCandK]] per query via
     * the exact scan; IVF in production) and the k² pairwise-sim table
-    * are built ONCE and localCheckpoint-pinned (the componentsOf loop
-    * discipline: the union tree references them once per round, and
-    * unpinned they would re-run the corpus scan per reference). Total
-    * cost: pool scan + |Q|·k² sims + k·(|Q|·k) selection rows. */
+    * are built ONCE and collected to local relations (|Q|·k and
+    * |Q|·k² rows: the union tree references them once per round, and
+    * uncollected they would re-run the corpus scan per reference).
+    * Total cost: pool scan + |Q|·k² sims + k·(|Q|·k) selection rows. */
   def mmrTopk(spark: SparkSession, dir: String): DataFrame = {
-    val cand = topk(spark, dir, MmrCandK)
-      .select(col("QId"), col("NId"), col("Cosine").as("Rel"))
-      .localCheckpoint()
+    val Seq(cand) = Substrates.local(topk(spark, dir, MmrCandK)
+      .select(col("QId"), col("NId"), col("Cosine").as("Rel")))
     val vecs = quantized(spark, dir).select(col("vec_id"), col("Q"), col("NormSq"))
     val cv = cand.join(vecs, col("NId") === col("vec_id"))
       .select(col("QId"), col("NId"), col("Q"), col("NormSq"))
     val a = cv.select(col("QId"), col("NId").as("A"), col("Q").as("QA"), col("NormSq").as("NA"))
     val b = cv.select(col("QId").as("QIdB"), col("NId").as("B"),
       col("Q").as("QB"), col("NormSq").as("NB"))
-    val pr = a.join(b, col("QId") === col("QIdB") && col("A") =!= col("B"))
-      .withColumn("Sim", expr("long_dot(QA, QB)").cast(DoubleType) /
-        (sqrt(col("NA").cast(DoubleType)) * sqrt(col("NB").cast(DoubleType))))
-      .select(col("QId"), col("A"), col("B"), col("Sim"))
-      .localCheckpoint()
+    val Seq(pr) = Substrates.local(
+      a.join(b, col("QId") === col("QIdB") && col("A") =!= col("B"))
+        .withColumn("Sim", expr("long_dot(QA, QB)").cast(DoubleType) /
+          (sqrt(col("NA").cast(DoubleType)) * sqrt(col("NB").cast(DoubleType))))
+        .select(col("QId"), col("A"), col("B"), col("Sim")))
     val w = Window.partitionBy(col("QId"))
     var sel = cand
       .withColumn("rn", row_number().over(w.orderBy(col("Rel").desc, col("NId"))))
@@ -391,10 +388,9 @@ object SimilarityOps {
     * path at 100 TB builds the same edge list through the routed IVF
     * probe ([[ivfTopk]]'s centroid-partitioned lists, cost
     * n·nprobe/K of the corpus per side) and the downstream
-    * (rank/mutual) stages are unchanged. The edge list is
-    * localCheckpoint-pinned before the mutual self-join so the n²
-    * scan runs ONCE, not once per reference (the mmr pool
-    * discipline). */
+    * (rank/mutual) stages are unchanged ([[mutualGraph]], which pins
+    * the edge list so the n² scan runs ONCE, not once per
+    * reference). */
   def knnGraph(spark: SparkSession, dir: String): DataFrame = {
     val all = quantized(spark, dir)
     // the n-per-row scan side carries the crossJoin's parallelism —
@@ -410,7 +406,17 @@ object SimilarityOps {
         Window.partitionBy(col("SrcId")).orderBy(col("Cosine").desc, col("vec_id"))))
       .filter(col("Rank") <= KnnGraphK)
       .select(col("SrcId"), col("vec_id").as("NId"), col("Cosine"), col("Rank"))
-      .localCheckpoint()
+    mutualGraph(edges)
+  }
+
+  /** The shared tail of [[knnGraph]] and [[knnGraphIvf]]: pin the
+    * (SrcId, NId, Cosine, Rank) edge list, flag each edge whose
+    * reverse is also an edge, and sort. The pin is a lineage cut the
+    * returned plan reads (corpus-linear, n·k rows): the reverse-edge
+    * self-join references the edges twice, and unpinned the edge scan
+    * would run once per reference. */
+  private def mutualGraph(edgeList: DataFrame): DataFrame = {
+    val edges = edgeList.localCheckpoint()
     val rev = edges.select(col("NId").as("RS"), col("SrcId").as("RT"))
     edges.join(rev, col("SrcId") === col("RS") && col("NId") === col("RT"), "left")
       .select(col("SrcId"), col("NId"), col("Cosine"), col("Rank"),
@@ -423,8 +429,8 @@ object SimilarityOps {
     * every corpus vector probes its `nprobe` nearest IVF lists (the
     * persisted index [[ivfTopk]] reads), candidates are the routed
     * lists' members, and the rank / mutual-flag stages are the SAME
-    * code shape as the exact graph — (Cosine desc, NId) row_number
-    * cut, localCheckpoint-pinned edge list, reverse-edge left join.
+    * code as the exact graph — (Cosine desc, NId) rank cut, then
+    * [[mutualGraph]]'s pinned edge list and reverse-edge left join.
     * No candidate dedup is needed: a vector lives in exactly ONE
     * inverted list and a query's probed lists are distinct, so each
     * (query, candidate) pair surfaces at most once.
@@ -457,18 +463,12 @@ object SimilarityOps {
   def knnGraphIvf(spark: SparkSession, dir: String,
                   nCentroids: Int = DefaultNCentroids,
                   nprobe: Int = DefaultNProbe): DataFrame = {
-    val edges = knnGraphIvfEdges(spark, dir, nCentroids, nprobe)
-      .localCheckpoint()
-    val rev = edges.select(col("NId").as("RS"), col("SrcId").as("RT"))
-    edges.join(rev, col("SrcId") === col("RS") && col("NId") === col("RT"), "left")
-      .select(col("SrcId"), col("NId"), col("Cosine"), col("Rank"),
-        col("RS").isNotNull.as("Mutual"))
-      .transform(graft.etl.Summaries.smallSort(_, col("SrcId"), col("Rank")))
+    mutualGraph(knnGraphIvfEdges(spark, dir, nCentroids, nprobe))
   }
 
   /** The routed graph's EDGE stage, pre-checkpoint — exposed so
     * PlanSpec can assert on the plan that actually runs (the eager
-    * localCheckpoint in [[knnGraphIvf]] makes this subtree invisible
+    * localCheckpoint in [[mutualGraph]] makes this subtree invisible
     * to the final plan, which blinded the round-11 quadratic-join
     * guard).
     *
@@ -1129,8 +1129,11 @@ object SimilarityOps {
     * with atomic multi-file commits (Iceberg/Delta manifest swap,
     * guide §6); on this engine's plain-parquet layout the window is
     * accepted and documented, and a caller that must close it can
-    * re-run [[buildIvfIndex]] + re-append its batch log. */
-  def ivfAppend(spark: SparkSession, dir: String, arrivals: DataFrame,
+    * re-run [[buildIvfIndex]] + re-append its batch log.
+    *
+    * Kept with no engine caller: IndexMaintenanceSpec checks it against
+    * a from-scratch build, and StreamingSpec drives it per microbatch. */
+  private[graft] def ivfAppend(spark: SparkSession, dir: String, arrivals: DataFrame,
                 nCentroids: Int = DefaultNCentroids,
                 skewFactor: Double = IvfSkewFactor,
                 skewCheckEvery: Int = IvfSkewCheckEveryBatches): Array[Long] = {
@@ -2002,21 +2005,22 @@ object SimilarityOps {
   }
 
   /** Quantize a raw (vec_id, embedding, …) arrival batch into the
-    * (QId, QP, NormP) probe shape [[incrementalDedupAgainst]] takes —
-    * the adapter the streaming twin applies per microbatch. The batch
-    * resolves against the stream's session clone, whose function
-    * registry is a copy of the outer session's, so the native
-    * functions [[graft.GraftExtensions]] installs are already there. */
-  def quantizeArrivals(arrivals: DataFrame): DataFrame = {
+    * (QId, QP, NormP) probe shape [[incrementalDedupAgainst]] takes.
+    * A stream microbatch resolves against the stream's session clone,
+    * whose function registry is a copy of the outer session's, so the
+    * native functions [[graft.GraftExtensions]] installs are already
+    * there. Kept with no engine caller: StreamingSpec applies it per
+    * microbatch and checks the result against [[incrementalDedup]]. */
+  private[graft] def quantizeArrivals(arrivals: DataFrame): DataFrame = {
     arrivals
       .select(col("vec_id").as("QId"), expr("quantize_vec(embedding)").as("QP"))
       .withColumn("NormP", expr("long_dot(QP, QP)"))
   }
 
   /** The route-then-verify kernel shared by the batch query and the
-    * streaming twin (VecsStream.runIncrementalDedup): ONE definition,
-    * so the per-microbatch semantics are the batch semantics by
-    * construction. `arrivalsQ` is (QId, QP, NormP); `corpusLists` is
+    * per-microbatch form StreamingSpec checks against it: ONE
+    * definition, so the per-microbatch semantics are the batch
+    * semantics by construction. `arrivalsQ` is (QId, QP, NormP); `corpusLists` is
     * the standing index's (vec_id, Q, NormSq, Cid) relation. */
   def incrementalDedupAgainst(arrivalsQ: DataFrame, cent: DataFrame,
                               corpusLists: DataFrame, threshold: Double = DefaultSemDedupThreshold,

@@ -6,16 +6,16 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.etl.Tables
-import graft.ops.{CurateOps, DedupOps}
+import graft.ops.CurateOps
 
 /** Streaming twins of the corpus-curation front door: documents arrive
-  * as a stream (the ingestion firehose) and are checked against STATIC
-  * reference relations — the eval shingle set (decontamination) and
-  * the corpus band index (incremental dedup).
+  * as a stream (the ingestion firehose) and are checked against a
+  * STATIC reference relation — the eval shingle set (decontamination)
+  * — or folded into per-source sketches.
   *
-  * Both twins run their kernel per microbatch via `foreachBatch`, the
+  * The foreachBatch twins run their kernel per microbatch, the
   * pattern for operators that need full batch semantics inside each
-  * trigger (per-pair candidate dedup; per-doc distinct counts) with
+  * trigger (per-doc distinct counts) with
   * NO state store: nothing grows with stream history — a plain
   * streaming `groupBy` would pin one state row per document forever
   * (no watermark can evict by doc_id), which at firehose scale is a
@@ -127,23 +127,8 @@ object DocsStream {
       StructField("NEvalDocs", IntegerType),
       StructField("NSharedShingles", IntegerType)))
     CurateOps.decontaminateShape(spark, dir,
-      OneShot.frame(spark, batches.flatten, hitSchema))
+      graft.Substrates.local(spark, batches.flatten, hitSchema))
   }
-
-  /** Drive the incremental-dedup kernel (DedupOps.incrementalAgainst —
-    * one definition with the batch query) over a document stream,
-    * invoking `sink` with each microbatch's verified matches (e.g. an
-    * upsert into the dup registry). `corpusBands` is the static
-    * `(CorpusId, band_id, band_val, ShC)` relation — the session's
-    * cached sketch table or the persisted bucketed band index. */
-  def runIncrementalDedup(spark: SparkSession, docs: DataFrame,
-                          corpusBands: DataFrame)
-                         (sink: DataFrame => Unit): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        sink(DedupOps.incrementalAgainst(spark, batch, corpusBands))
-      }
-      .start()
 
   /** The per-batch KMV kernel: each document microbatch reduces to
     * one k-long sketch row per source it touches (TextOps.kmvSketchOf
@@ -217,24 +202,7 @@ object DocsStream {
     val batches = OneShot(once => OneShot.batchRows(runSourceSketch(spark,
       readDocsStream(spark, once.stage(s"$dir/documents.parquet", "docs")))(_)))
     graft.ops.TextOps.kmvSketchOf(
-      OneShot.frame(spark, batches.flatten, sketchTableSchema)
+      graft.Substrates.local(spark, batches.flatten, sketchTableSchema)
         .select(col("source"), explode(col("Ks")).as("V")))
   }
-
-  /** Streaming INDEX MAINTENANCE, text side — the mirror of
-    * VecsStream.runIndexAppend: each admitted document microbatch is
-    * appended to the persisted band index via `DedupOps.bandAppend`
-    * (sketch, explode, append THROUGH the bucket spec, batch-count
-    * bump, periodic compaction). Together with [[runIncrementalDedup]]
-    * this closes the text ingestion loop: probe the index for dups,
-    * admit the survivors, append them so the NEXT batch probes against
-    * them too. Kernel runs on the batch's session (the foreachBatch
-    * seam); mutations serialize on the band build lock. */
-  def runIndexAppend(dir: String, docs: DataFrame)
-                    (afterBatch: String => Unit = _ => ()): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        afterBatch(DedupOps.bandAppend(batch.sparkSession, dir, batch))
-      }
-      .start()
 }

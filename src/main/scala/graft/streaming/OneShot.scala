@@ -7,8 +7,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
-import org.apache.spark.sql.types.StructType
 
+import graft.Substrates
 import graft.etl.Tables
 import graft.ops.BucketedTables
 
@@ -26,8 +26,9 @@ import graft.ops.BucketedTables
   *     concurrently and Bench re-runs each, so names must not collide.
   *   - [[drain]] runs `start → processAllAvailable` with `stop` in a
   *     `finally`.
-  *   - [[memorySink]] and [[batchRows]] read a memory or foreachBatch
-  *     sink back; [[frame]] is the one rows → frame form.
+  *   - [[memorySink]] reads a memory sink back as a local relation
+  *     ([[graft.Substrates.local]]); [[batchRows]] returns the rows of
+  *     each foreachBatch microbatch.
   *
   * The memory-sink rows are collected before the sink's view is
   * dropped, so the returned frame never reads the staged files. */
@@ -132,10 +133,6 @@ private[graft] object OneShot {
     try q.processAllAvailable() finally q.stop()
   }
 
-  /** A local frame over rows collected on the driver. */
-  def frame(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(rows.asJava, schema)
-
   /** Drain `stream` into a memory sink and return its rows as a local
     * frame on the stream's session, dropping the view the sink
     * registered there. */
@@ -144,8 +141,7 @@ private[graft] object OneShot {
     val n = name(kind)
     try {
       drain(stream.writeStream.outputMode(mode).format("memory").queryName(n).start())
-      val out = spark.table(n)
-      frame(spark, out.collect().toSeq, out.schema)
+      Substrates.local(spark.table(n)).head
     } finally spark.catalog.dropTempView(n)
   }
 

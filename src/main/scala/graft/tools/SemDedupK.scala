@@ -33,9 +33,8 @@ object SemDedupK {
     // small downstream stages). Since round 14 BOTH the verify join
     // AND the k-means update join size their own exchanges
     // (SimilarityOps.candidatePartitions — the 20M build computes the
-    // hand-tuned 256 from n·Dims), so SPARK_GRAFT_SHUFFLE (read by
-    // GraftSession) is an OVERRIDE floor for experiments, no longer a
-    // requirement at any decade
+    // hand-tuned 256 from n·Dims), so a raised session shuffle width
+    // is no longer a requirement at any decade
     val spark = graft.GraftSession.local()
     def race(name: String, build: Int => org.apache.spark.sql.DataFrame): String = {
       val results = ks.map { k =>

@@ -15,10 +15,11 @@ import scala.jdk.CollectionConverters._
   * version UNWRITABLE, not merely discouraged. The same scan keeps
   * [[GraftExtensions]] the one place a native function is
   * registered, and `graft.streaming.OneShot` the one place a stream
-  * twin stages, drains and cleans up. Two more scans keep every public
+  * twin stages, drains and cleans up. Three more scans keep every public
   * engine entry point reachable from a query, pipeline, tool or
-  * benchmark, not only from its own test, and [[SparkSpec.tempDir]]
-  * the one place a spec makes a temp dir. */
+  * benchmark, not only from its own test, every pin in a def whose
+  * release is on record, and [[SparkSpec.tempDir]] the one place a
+  * spec makes a temp dir. */
 class SessionConfigSpec extends SparkSpec {
 
   private def mainSources: Seq[Path] = {
@@ -124,6 +125,23 @@ class SessionConfigSpec extends SparkSpec {
     out.toString
   }
 
+  private def indent(l: String): Int = l.length - l.replaceAll("^ +", "").length
+
+  /** A `def` line: its indent, its modifiers, its name. */
+  private val Def =
+    """^( *)((?:(?:final|override|implicit|private(?:\[\w+\])?|protected(?:\[\w+\])?)\s+)*)def\s+([A-Za-z_]\w*)""".r.unanchored
+
+  /** The line after the body of the def declared on line `i`: its
+    * body is every following blank or deeper-indented line, plus a
+    * closing brace or paren at the def's own indent. */
+  private def spanEnd(lines: Array[String], i: Int): Int = {
+    val ind = indent(lines(i))
+    var e = i + 1
+    while (e < lines.length && (lines(e).trim.isEmpty || indent(lines(e)) > ind)) e += 1
+    if (e < lines.length && Seq("}", ")").exists(lines(e).trim.startsWith)) e += 1
+    e
+  }
+
   test("every public def in graft.{ops,etl,streaming} is reached from outside its own definition") {
     // a public entry point that only its own test calls is engine code
     // no query, pipeline, tool or benchmark reaches. References count
@@ -142,8 +160,6 @@ class SessionConfigSpec extends SparkSpec {
         .map(p => p -> blankComments(new String(Files.readAllBytes(p), "UTF-8"),
           python = p.toString.endsWith(".py")).split("\n", -1))
         .toMap
-    def indent(l: String): Int = l.length - l.replaceAll("^ +", "").length
-    val Def = """^( *)((?:(?:final|override|implicit|private(?:\[\w+\])?|protected(?:\[\w+\])?)\s+)*)def\s+([A-Za-z_]\w*)""".r.unanchored
     val Template = """\b(object|class|trait)\s+\w+""".r.unanchored
     case class Member(name: String, file: Path, from: Int, until: Int) {
       def where = s"${file.getFileName.toString.stripSuffix(".scala")}.$name"
@@ -158,12 +174,7 @@ class SessionConfigSpec extends SparkSpec {
               val ind = lead.length
               val outer = (i - 1 to 0 by -1).find(k => lines(k).trim.nonEmpty && indent(lines(k)) < ind)
               if (!outer.exists(k => Template.findFirstIn(lines(k)).isDefined)) None
-              else {
-                var e = i + 1
-                while (e < lines.length && (lines(e).trim.isEmpty || indent(lines(e)) > ind)) e += 1
-                if (e < lines.length && Seq("}", ")").exists(lines(e).trim.startsWith)) e += 1
-                Some(Member(name, p, i, e))
-              }
+              else Some(Member(name, p, i, spanEnd(lines, i)))
             case _ => None
           }
         }
@@ -176,9 +187,16 @@ class SessionConfigSpec extends SparkSpec {
       i <- lines.indices
       w <- Word.findAllIn(lines(i))
     } yield w -> ((p, i))).groupMap(_._1)(_._2)
+    // a line that declares a def of the same name (another object's
+    // member, an overload) is not a use of it
+    val declared: Set[(String, Path, Int)] = (for {
+      (p, lines) <- corpus.toSeq
+      i <- lines.indices
+      name <- Def.findFirstMatchIn(lines(i)).map(_.group(3))
+    } yield (name, p, i)).toSet
     val unreached = members.filterNot { m =>
       uses.getOrElse(m.name, Nil).exists { case (p, i) =>
-        !(p == m.file && i >= m.from && i < m.until) }
+        !(p == m.file && i >= m.from && i < m.until) && !declared((m.name, p, i)) }
     }.map(_.where).toSet
     assert(exempt.subsetOf(unreached),
       s"exemption no longer needed: ${(exempt -- unreached).mkString(", ")}")
@@ -187,41 +205,104 @@ class SessionConfigSpec extends SparkSpec {
         "or make a test hook on live code private[graft])")
   }
 
+  /** Every def under src/main/scala/graft (tools aside) that pins a
+    * frame, with the one way its blocks are released:
+    *   - "registry": a `Substrates` entry, released by `invalidate`;
+    *   - "finally": op-scoped, unpersisted in a `finally` by the op;
+    *   - "cut": a loop or lineage cut that the returned plan reads,
+    *     whose blocks go when that plan is dropped.
+    * A frame bounded by a constant or by the calendar is not pinned
+    * at all: `Substrates.local` collects it to a local relation. */
+  private val PinSites = Map(
+    "Pipeline.transform" -> "registry",
+    "Transactions.cleaned" -> "registry",
+    "CurateOps.shinglesAt" -> "registry",
+    "CurateOps.runCurationPipeline" -> "finally",
+    "CurateOps.curationFunnel" -> "finally",
+    "DedupOps.docBands" -> "registry",
+    "DedupOps.sourceShingles" -> "registry",
+    "DedupOps.sourceShingleHashes" -> "registry",
+    "DedupOps.prefixRankedShingles" -> "registry",
+    "DedupOps.docChunks" -> "registry",
+    "DedupOps.cooledChunks" -> "registry",
+    "DedupOps.cooledBands" -> "registry",
+    "DedupOps.verifiedPairs" -> "registry",
+    "DedupOps.componentLabelsFor" -> "registry",
+    "DedupOps.componentsOf" -> "finally", // and the per-round label cuts
+    "GraphOps.coPurchaseEdges" -> "registry",
+    "GraphOps.degreesFor" -> "registry",
+    "GraphOps.lpaLabelsFor" -> "registry",
+    "GraphOps.orientedWithBloom" -> "registry", // orientedBloomFor's entry
+    "GraphOps.kcoreWithRounds" -> "cut",
+    "GraphOps.requireSymmetrizedSampleUncached" -> "cut",
+    "GraphOps.bfsHopsWithRounds" -> "cut",
+    "MultimodalOps.bandedHamming" -> "cut",
+    "RetrievalOps.retrievalEval" -> "registry",
+    "SimilarityOps.quantized" -> "registry",
+    "SimilarityOps.bandedSig" -> "registry",
+    "SimilarityOps.mmrTopk" -> "cut",
+    "SimilarityOps.mutualGraph" -> "cut",
+    "SimilarityOps.kmeansCentroids" -> "cut",
+    "SimilarityOps.ivfAppend" -> "finally",
+    "SimilarityOps.hierAssigned" -> "registry",
+    "TextOps.bpeModel" -> "registry",
+    "TextOps.langidModel" -> "registry",
+    "TextOps.docPostings" -> "registry",
+    "TextOps.docStats" -> "registry",
+    "TextOps.unigramCounts" -> "registry",
+    "TextOps.bigramCounts" -> "registry",
+    "TextOps.textrankKeywords" -> "cut")
+
+  test("every pin under src/main/scala/graft sits in a def of the pin-site table") {
+    // a new localCheckpoint/cache/persist needs an owner and a release
+    // story before it lands: a registry entry, a finally, or a cut the
+    // returned plan reads — or no pin, as a local relation
+    val Pin = """localCheckpoint\(|\.cache\(\)|\.persist\(""".r
+    val tools = Paths.get("src/main/scala/graft/tools")
+    val found = mainSources.filterNot(_.startsWith(tools)).flatMap { p =>
+      val lines = blankComments(new String(Files.readAllBytes(p), "UTF-8"), python = false)
+        .split("\n", -1)
+      val spans = lines.indices.flatMap(i =>
+        Def.findFirstMatchIn(lines(i)).map(m => (m.group(3), i, spanEnd(lines, i))))
+      val file = p.getFileName.toString.stripSuffix(".scala")
+      lines.indices.filter(i => Pin.findFirstIn(lines(i)).isDefined).map { i =>
+        // the innermost def whose body holds the line
+        val owner = spans.filter { case (_, from, until) => from <= i && i < until }
+          .sortBy(-_._2).headOption.fold("<no def>")(_._1)
+        s"$file.$owner" -> s"$p:${i + 1}"
+      }
+    }
+    assert(found.size > 40, s"scan found only ${found.size} pins")
+    val unlisted = found.filterNot { case (owner, _) => PinSites.contains(owner) }
+    assert(unlisted.isEmpty,
+      s"pins in defs missing from the pin-site table: ${unlisted.mkString(", ")}")
+    assert(PinSites.keySet -- found.map(_._1) === Set.empty[String],
+      "pin-site table entries with no pin left")
+  }
+
   test("the shared session carries every engine-wide conf GraftSession promises") {
     // the suite session IS GraftSession.local (SparkSpec), so this
-    // asserts the builder actually lands each conf on a real session.
-    // Env-overridable confs are asserted against the SAME expression
-    // the builder uses (advice r15: pinning the literal default made
-    // the spec fail spuriously whenever SPARK_GRAFT_* overrides were
-    // exported in the test environment, even though the builder
-    // behaved correctly).
+    // asserts the builder actually lands each conf on a real session
     val c = spark.conf
-    assert(c.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
-      === graft.functions.SketchAggregates.ObjectHashFallbackThreshold)
+    assert(c.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") === "65536")
     assert(c.get("spark.sql.session.timeZone") === "UTC")
     assert(c.get("spark.sql.adaptive.enabled") === "true")
     assert(c.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
-    assert(c.get("spark.sql.codegen.cache.maxEntries")
-      === sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "5000"))
-    assert(c.get("spark.io.compression.codec")
-      === sys.env.getOrElse("SPARK_GRAFT_CODEC", "zstd"))
-    // the shuffle floor follows the session's OWN cpu count (the
-    // suite may build at any defaultCpus), overridable by env
+    assert(c.get("spark.sql.codegen.cache.maxEntries") === "5000")
+    assert(c.get("spark.io.compression.codec") === "zstd")
+    // the shuffle width follows the session's OWN cpu count (the
+    // suite may build at any defaultCpus)
     val cpus = spark.sparkContext.master.stripPrefix("local[").stripSuffix("]")
-    assert(c.get("spark.sql.shuffle.partitions")
-      === sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
+    assert(c.get("spark.sql.shuffle.partitions") === cpus)
     assert(c.get("spark.network.timeout") === "800s")
   }
 
   test("OHA fallback threshold default parses as a positive int") {
-    // the env override is validated at object init with a clear
-    // message (advice r14: a malformed SPARK_GRAFT_OHA_FALLBACK used
-    // to surface as an opaque Spark conf error at session build)
     val v = graft.functions.SketchAggregates.ObjectHashFallbackThreshold
     assert(v.toInt > 0)
   }
 
-  test("cpus/shuffle env overrides are validated with the variable name") {
+  test("the cpus env override is validated with the variable name") {
     // advice r15: SPARK_GRAFT_CPUS used to interpolate unvalidated
     // into the master URL — a typo surfaced as an obscure
     // master-URL parse failure instead of naming the variable

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.EventsOps
@@ -325,7 +326,6 @@ class StreamingSpec extends SparkSpec {
 
   test("foreachBatch incremental dedup over a two-file doc stream equals batch dedup_incremental") {
     import graft.ops.DedupOps
-    import graft.streaming.DocsStream
     // the new-arrival docs land as TWO files = two microbatches; the
     // corpus band index stays static across both
     val streamDir = tempDir("graft_stream_incdedup")
@@ -336,11 +336,12 @@ class StreamingSpec extends SparkSpec {
     val buf = collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     val stream = spark.readStream.schema(graft.etl.Tables.documentsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$streamDir/docs")
-    val q = DocsStream.runIncrementalDedup(spark, stream, corpus) { out =>
-      val rows = out.collect().map(r => (r.getAs[Long]("NewId"),
-        r.getAs[Long]("CorpusId"), r.getAs[Double]("Jaccard")))
+    val q = stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      val rows = DedupOps.incrementalAgainst(spark, batch, corpus).collect()
+        .map(r => (r.getAs[Long]("NewId"), r.getAs[Long]("CorpusId"), r.getAs[Double]("Jaccard")))
       buf.synchronized { buf ++= rows }
-    }
+      ()
+    }.start()
     q.processAllAvailable()
     q.stop()
     assert(q.recentProgress.count(_.numInputRows > 0) >= 2,
@@ -354,7 +355,6 @@ class StreamingSpec extends SparkSpec {
 
   test("foreachBatch incremental vec dedup over a two-file stream equals batch similarity_incremental_dedup") {
     import graft.ops.SimilarityOps
-    import graft.streaming.VecsStream
     // the new-arrival vectors land as TWO files = two microbatches; the
     // persisted IVF index (codebook + corpus lists) stays static
     val streamDir = tempDir("graft_stream_vecdedup")
@@ -368,11 +368,13 @@ class StreamingSpec extends SparkSpec {
     val buf = collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
     val stream = spark.readStream.schema(graft.etl.Tables.embeddingsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$streamDir/vecs")
-    val q = VecsStream.runIncrementalDedup(stream, cent, corpusLists) { out =>
-      val rows = out.collect().map(r => (r.getAs[Long]("NewId"),
-        r.getAs[Long]("CorpusId"), r.getAs[Double]("Cosine")))
+    val q = stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      val rows = SimilarityOps.incrementalDedupAgainst(
+          SimilarityOps.quantizeArrivals(batch), cent, corpusLists).collect()
+        .map(r => (r.getAs[Long]("NewId"), r.getAs[Long]("CorpusId"), r.getAs[Double]("Cosine")))
       buf.synchronized { buf ++= rows }
-    }
+      ()
+    }.start()
     q.processAllAvailable()
     q.stop()
     assert(q.recentProgress.count(_.numInputRows > 0) >= 2,
@@ -420,11 +422,14 @@ class StreamingSpec extends SparkSpec {
     val streamSrc = tempDir("graft_stream_ivfsrc")
     arrivals.repartition(2).write.mode("overwrite").parquet(s"$streamSrc/vecs")
     val routedBatches = collection.mutable.ArrayBuffer.empty[Array[Long]]
-    val q = graft.streaming.VecsStream.runIndexAppend(dirA,
-        spark.readStream.schema(graft.etl.Tables.embeddingsSchema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$streamSrc/vecs")) { r =>
-      routedBatches.synchronized { routedBatches += r }
-    }
+    // the kernel runs on the batch's session, as an ingestion sink would
+    val q = spark.readStream.schema(graft.etl.Tables.embeddingsSchema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$streamSrc/vecs")
+      .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+        val r = SimilarityOps.ivfAppend(batch.sparkSession, dirA, batch.select("vec_id", "embedding"))
+        routedBatches.synchronized { routedBatches += r }
+        ()
+      }.start()
     q.processAllAvailable()
     q.stop()
     assert(routedBatches.size >= 2, "expected at least two appended microbatches")
@@ -461,11 +466,12 @@ class StreamingSpec extends SparkSpec {
     val streamSrc = tempDir("graft_stream_bandsrc")
     newDocs.repartition(2).write.mode("overwrite").parquet(s"$streamSrc/docs")
     var batches = 0
-    val q = graft.streaming.DocsStream.runIndexAppend(dirA,
-        spark.readStream.schema(graft.etl.Tables.documentsSchema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$streamSrc/docs")) { _ =>
-      synchronized { batches += 1 }
-    }
+    val q = spark.readStream.schema(graft.etl.Tables.documentsSchema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$streamSrc/docs")
+      .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+        DedupOps.bandAppend(batch.sparkSession, dirA, batch)
+        synchronized { batches += 1 }
+      }.start()
     q.processAllAvailable()
     q.stop()
     assert(batches >= 2, "expected at least two appended microbatches")

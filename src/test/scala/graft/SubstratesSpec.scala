@@ -5,13 +5,16 @@ import java.util.concurrent.{Callable, CountDownLatch, Executors}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.etl.{Pipeline, Transactions}
 import graft.ops.{DedupOps, GraphOps, SimilarityOps, TextOps}
 
 /** The substrate registry's contract: one build per key under
-  * concurrent first touch, release of exactly one (session, dir), and
-  * eviction of stopped sessions. */
+  * concurrent first touch, release of exactly one (session, dir),
+  * eviction of stopped sessions, and no block left once every dir is
+  * invalidated and the results are dropped. */
 class SubstratesSpec extends SparkSpec {
 
   private def cachedRdds(): Set[Int] =
@@ -95,5 +98,34 @@ class SubstratesSpec extends SparkSpec {
     Substrates[AnyRef](fresh, dir, "spec.value")(_ => ())(new Object)
     assert(!Substrates.keys.exists(_.spark eq stopped))
     Substrates.invalidate(fresh, dir)
+  }
+
+  test("after invalidate and GC, the board and every query with a changed pin hold no block") {
+    // runs after the stopped-session test, on the fresh context it
+    // left, so the storage checked holds only what these queries pinned
+    val s = GraftSession.local(defaultCpus = 4)
+    assert(s.sparkContext.getRDDStorageInfo.isEmpty, "expected a fresh context")
+    val board = Seq("transactions", "country_summary", "join_semi_cancelled_customers",
+      "dim_scd2_customers", "setop_churned_customers", "agg_incremental_daily",
+      "dedup_minhash_bands", "curate_token_budget", "similarity_ivf_topk",
+      "retrieval_query_likelihood", "graph_label_propagation", "events_hourly",
+      "events_hourly_stream", "text_drift_chisq", "text_drift_chisq_stream")
+    val changed = Seq("timeseries_theilsen", "similarity_mmr_topk", "retrieval_eval",
+      "dedup_report", "multimodal_ahash_neardup", "multimodal_phash_neardup",
+      "multimodal_audio_fingerprint", "similarity_knn_graph", "similarity_knn_graph_ivf",
+      "basket_pair_lift")
+    (board ++ changed).foreach { q =>
+      SparkEntry.queries(q)(s, sfDir).write.format("noop").mode("overwrite").save()
+    }
+    assert(s.sparkContext.getRDDStorageInfo.nonEmpty, "the queries pinned nothing")
+    val dirs = Substrates.keys.filter(_.spark eq s).map(_.dir).distinct
+    assert(dirs.contains(sfDir))
+    dirs.foreach(Substrates.invalidate(s, _))
+    // the loop cuts the results read go when nothing references them
+    eventually(timeout(30.seconds), interval(1.second)) {
+      System.gc()
+      val left = s.sparkContext.getRDDStorageInfo
+      assert(left.isEmpty, s"blocks still held: ${left.map(r => s"${r.id}:${r.name}").mkString(", ")}")
+    }
   }
 }
