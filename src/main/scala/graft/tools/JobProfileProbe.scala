@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Dev probe: per-JOB wall breakdown of one query's materialization —
   * where FreshRunProbe says "this query costs 5 s", this says which of
@@ -27,17 +28,27 @@ object JobProfileProbe {
     val starts = scala.collection.concurrent.TrieMap.empty[Int, (Long, String)]
     val stageToJob = scala.collection.concurrent.TrieMap.empty[Int, Int]
     val jobs = scala.collection.concurrent.TrieMap.empty[Int, Job]
+    val sqlSites = scala.collection.concurrent.TrieMap.empty[Long, String]
     spark.sparkContext.addSparkListener(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => sqlSites(s.executionId) = s.description
+        case _ => ()
+      }
       override def onJobStart(js: SparkListenerJobStart): Unit = {
-        val d = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description"))).getOrElse("")
+        // unlabelled jobs carry their call site, e.g. `collect at X.scala:N`:
+        // their SQL execution's (AQE submits stage jobs from pool threads,
+        // whose own call site is the pool), else their result stage's name
+        val props = Option(js.properties)
+        def prop(k: String) = props.flatMap(p => Option(p.getProperty(k)))
+        val d = prop("spark.job.description")
+          .orElse(prop("spark.sql.execution.id").flatMap(id => sqlSites.get(id.toLong)))
+          .orElse(js.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse("")
         starts(js.jobId) = (js.time, d)
         js.stageIds.foreach(sid => stageToJob(sid) = js.jobId)
       }
       override def onJobEnd(je: SparkListenerJobEnd): Unit =
         starts.remove(je.jobId).foreach { case (t0, d) =>
           val j = jobs.getOrElseUpdate(je.jobId, Job(je.jobId, t0, je.time, d))
-          j.id match { case _ => () }
           jobs(je.jobId) = j.copy(start = t0, end = je.time, desc = d,
             shufRead = j.shufRead, shufWrite = j.shufWrite,
             tasks = j.tasks, taskTimeMs = j.taskTimeMs)

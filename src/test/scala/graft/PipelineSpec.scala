@@ -120,6 +120,38 @@ class PipelineSpec extends SparkSpec {
     assert(e.getMessage.contains("postgres"))
   }
 
+  test("the embedded warehouse has one writer per table, and its own props read the table back") {
+    // the reference loads sqlite through one connection (etl.py:292-303):
+    // a 4-partition frame must insert in one task, not four
+    val df = spark.range(0, 400).select(
+      col("id"),
+      timestamp_seconds(col("id") * 3607 + 1294128000L).as("InvoiceDate"),
+      (col("id") * 1.25).cast("decimal(12,2)").as("TotalPrice"),
+      concat(lit("item-"), col("id")).as("Description"))
+      .repartition(4)
+    val out = tempDir("graft_one_writer").toString
+    // the insert stage is the write's only result stage; the shuffle
+    // runs as map tasks
+    val insertTasks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (t.taskType == "ResultTask") insertTasks.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Load.load(Map("t" -> df), out, formats = Seq("sqlite"))
+      // listener delivery is async: wait for the count to go quiet
+      eventually(timeout(30.seconds)) { assert(insertTasks.get() > 0) }
+      Thread.sleep(500)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(insertTasks.get() === 1, "insert stage tasks")
+    val wh = Load.embeddedSink(out)
+    val back = spark.read.jdbc(wh.url, "t", wh.props)
+    assert(back.columns.toSeq === df.columns.toSeq)
+    assert(back.orderBy("id").collect().map(_.toSeq).toSeq ===
+      df.orderBy("id").collect().map(_.toSeq).toSeq)
+  }
+
   test("transform materializes each summary once; invalidate releases it with the cleaned table") {
     val summaries = Seq("customer_summary", "product_summary", "daily_sales", "country_summary")
     val tables = Pipeline.transform(spark, sfDir)
