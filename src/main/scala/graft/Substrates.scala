@@ -88,17 +88,43 @@ object Substrates {
     * constant or by the calendar. Several frames are collected as
     * concurrent jobs from driver threads, which Spark's FIFO scheduler
     * interleaves, so a wave of small AQE jobs costs its slowest frame
-    * rather than the sum of their dispatch latencies. */
+    * rather than the sum of their dispatch latencies.
+    *
+    * Each collect carries the caller's call site, not this file's
+    * (`collect at RetrievalOps.scala:150`, with `(frame 2 of 3)` for a
+    * wave), so a job profile tells the callers and the frames of one
+    * wave apart. It is taken on the calling thread and set on the
+    * thread that collects. */
   def local(dfs: DataFrame*): Seq[DataFrame] = {
-    def collected(df: DataFrame): DataFrame =
-      local(df.sparkSession, df.collect().toSeq, df.schema)
-    if (dfs.size <= 1) return dfs.map(collected)
-    val pool = Executors.newFixedThreadPool(dfs.size)
-    try dfs.map(df => pool.submit(new Callable[DataFrame] {
-      def call(): DataFrame = collected(df)
-    })).map(_.get())
+    val caller = Thread.currentThread.getStackTrace.toSeq
+      .dropWhile(f => !inThisObject(f)).dropWhile(inThisObject)
+    val at = caller.headOption.fold("local")(f => s"collect at ${f.getFileName}:${f.getLineNumber}")
+    def collected(df: DataFrame, short: String): DataFrame = {
+      val sc = df.sparkSession.sparkContext
+      // the long form as deep as Spark's own default (spark.callstack.depth)
+      val site = Seq(CallSiteShort -> short, CallSiteLong -> caller.take(20).mkString("\n"))
+      val before = site.map { case (k, _) => k -> sc.getLocalProperty(k) }
+      site.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try local(df.sparkSession, df.collect().toSeq, df.schema)
+      finally before.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }
+    val work = dfs.zipWithIndex.map { case (df, i) =>
+      () => collected(df, if (dfs.size <= 1) at else s"$at (frame ${i + 1} of ${dfs.size})")
+    }
+    if (work.size <= 1) return work.map(_())
+    val pool = Executors.newFixedThreadPool(work.size)
+    try work.map(w => pool.submit(new Callable[DataFrame] { def call(): DataFrame = w() }))
+      .map(_.get())
     finally pool.shutdown()
   }
+
+  /** The local properties Spark reads a job's call site from
+    * (`SparkContext.getCallSite`), short and long form. */
+  private val CallSiteShort = "callSite.short"
+  private val CallSiteLong = "callSite.long"
+
+  private def inThisObject(f: StackTraceElement): Boolean =
+    f.getClassName == "graft.Substrates" || f.getClassName.startsWith("graft.Substrates$")
 
   /** Rows already on the driver as a local relation: the one place the
     * engine builds one. */

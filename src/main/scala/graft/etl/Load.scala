@@ -53,12 +53,19 @@ object Load {
     * dialect registry picks the DDL per URL. The sqlite/postgres/mysql
     * driver jars are not in this offline image, so the e2e test runs
     * the same code path against embedded Derby (PipelineSpec), which
-    * ships with Spark. */
+    * ships with Spark.
+    *
+    * A `numPartitions` prop is applied here, as a coalesce of the
+    * shaped frame. Spark's writer would coalesce too, but it first
+    * reads the frame's partition count, which under AQE runs the
+    * shuffle stages, and then writes a new plan that runs them again;
+    * on an already coalesced frame it writes the same Dataset. */
   def writeJdbc(tables: Map[String, DataFrame], url: String,
                 props: java.util.Properties, roundDoubles: Boolean = false,
                 lowercaseCols: Boolean = true): Unit =
     tables.foreach { case (name, df) =>
-      sqlSinkShape(df, roundDoubles, lowercaseCols)
+      val shaped = sqlSinkShape(df, roundDoubles, lowercaseCols)
+      Option(props.getProperty("numPartitions")).fold(shaped)(n => shaped.coalesce(n.toInt))
         .write.mode("overwrite").jdbc(url, name, props)
     }
 
@@ -76,7 +83,7 @@ object Load {
     * so the default `load(tables, outDir)` call matches the
     * reference's shape end-to-end.
     *
-    * One writer per table: `numPartitions=1` makes Spark's JDBC writer
+    * One writer per table: `numPartitions=1` makes [[writeJdbc]]
     * coalesce each table to one insert task, as the reference's one
     * SQLite connection does. Concurrent inserters into one Derby heap
     * cost bytes: the sf0.01 transactions table (2 partitions) into a

@@ -4,12 +4,11 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared machinery for write-once persisted BUCKETED catalog tables
-  * (the band index in DedupOps, the bucketed lists twin in
-  * SimilarityOps): one implementation of the
-  * registry entry → catalog → on-disk-re-registration → build ladder, so its
-  * correctness properties — freshness guarding on EVERY branch,
-  * lowercased locations, file cleanup — exist in exactly one place.
+/** Machinery for write-once persisted BUCKETED catalog tables (the
+  * band index in DedupOps): the registry entry → catalog →
+  * on-disk-re-registration → build ladder, with freshness guarding on
+  * EVERY branch, lowercased locations and file cleanup; plus the one
+  * fingerprint check every persisted index shares.
   *
   * == Case folding ==
   * Spark folds table identifiers to lower case
@@ -33,7 +32,7 @@ import org.apache.spark.sql.SparkSession
   * Callers hold their own build lock around [[resolve]] (inside the
   * [[graft.Substrates]] key lock of their entry) — the ladder itself
   * is not thread-safe, by design: the lock also covers the caller's
-  * other index mutations.
+  * build and drop.
   */
 private[graft] object BucketedTables {
 
@@ -72,38 +71,17 @@ private[graft] object BucketedTables {
   def writeFingerprint(spark: SparkSession, name: String, fp: String): Unit =
     Files.writeString(location(spark, name).resolve("_corpus_fingerprint"), fp)
 
-  /** Fingerprint FORMAT (shared with the IVF index's sibling file):
-    * line 1 = the md5 of the corpus the index derives from; an
-    * optional line 2 `batches:<N>` counts incrementally APPENDED
-    * batches. Freshness compares line 1 only — an appended index is
-    * still an index OF its corpus (plus extras the appender chose to
-    * add); a REPLACED corpus invalidates regardless of appends. */
-  def corpusLine(raw: String): String =
-    // total on empty/truncated files (writeString is not atomic — a
-    // crash can leave a 0-byte fingerprint): "" never equals a real
-    // md5, so the caller's freshness check reads stale-and-rebuild
-    // instead of throwing forever
-    raw.linesIterator.nextOption().getOrElse("")
+  /** Whether `f` holds exactly `fingerprint`, the md5 of the corpus
+    * the index derives from: the one freshness check of every
+    * persisted index (band, IVF, flat PQ). A missing, empty or torn
+    * file (`writeString` is not atomic) does not match, nor does one
+    * with any extra line, so each reads as stale and the index is
+    * rebuilt. */
+  def fingerprintMatches(f: Path, fingerprint: String): Boolean =
+    Files.exists(f) && Files.readString(f) == fingerprint
 
-  /** Read the appended-batch count (0 for a never-appended index). */
-  def appendedBatches(fpFile: Path): Int =
-    if (!Files.exists(fpFile)) 0
-    else Files.readString(fpFile).linesIterator.toSeq.drop(1).headOption
-      .flatMap(_.stripPrefix("batches:").toIntOption).getOrElse(0)
-
-  /** Bump the appended-batch count in a fingerprint file, preserving
-    * its corpus line. Caller holds the index's build lock. */
-  def bumpAppendedBatches(fpFile: Path): Int = {
-    val n = appendedBatches(fpFile) + 1
-    Files.writeString(fpFile,
-      s"${corpusLine(Files.readString(fpFile))}\nbatches:$n")
-    n
-  }
-
-  private def fresh(spark: SparkSession, name: String, fingerprint: => String): Boolean = {
-    val f = location(spark, name).resolve("_corpus_fingerprint")
-    Files.exists(f) && corpusLine(Files.readString(f)) == fingerprint
-  }
+  private def fresh(spark: SparkSession, name: String, fingerprint: => String): Boolean =
+    fingerprintMatches(location(spark, name).resolve("_corpus_fingerprint"), fingerprint)
 
   /** The ladder below the registry entry: a FRESH catalog table wins; a
     * fresh on-disk layout from a previous session re-registers as an

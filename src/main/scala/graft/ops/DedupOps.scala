@@ -570,18 +570,14 @@ object DedupOps {
     // hot buckets are excluded AT INDEX TIME ([[coolBands]]): an
     // arriving batch joining a boilerplate bucket of occupancy k would
     // otherwise fan out |batch|·k rows per band — with the cap, probe
-    // volume is bounded by |batch|·bands·T for a freshly built (or
-    // freshly compacted) index; between [[bandAppend]] compactions,
-    // cross-batch accumulation can exceed T by at most the appended
-    // deltas (append-time cooling is batch-local; [[compactBandIndex]]
-    // restores the corpus-wide invariant)
+    // volume is bounded by |batch|·bands·T
     coolBands(explodedBands(corpus))
       .join(corpus.select(col("doc_id"), col("Sh")), "doc_id")
       .select(col("doc_id").as("CorpusId"),
         col("band_id"), col("band_val"), col("Sh").as("ShC"))
   }
 
-  /** Serializes band-index build/register/drop/append/compact — same
+  /** Serializes band-index build/register/drop — same
     * reasoning as SimilarityOps.ivfBuildLock: the batch query, the
     * streaming twin, and the concurrent Verify harness can all touch
     * the index at once. Taken inside the registry's key lock, never
@@ -655,7 +651,7 @@ object DedupOps {
     * the registry's key lock. The entry's release drops the table AND
     * its files (managed tables drop files with the table; EXTERNAL
     * re-registrations do not); the name is a function of the dir, so
-    * the entry stays valid across appends and compactions.
+    * the entry stays valid across rebuilds.
     * Same-session corpus mutation still requires
     * [[Substrates.invalidate]]. */
   def bandIndexTable(spark: SparkSession, dir: String): String =
@@ -675,103 +671,6 @@ object DedupOps {
           build = () => buildBandIndex(spark, dir))
       }
     }
-
-  /** Compact the band index after every this-many appended batches
-    * (each append adds a file generation per occupied bucket; the
-    * build's own file count is task-count-dependent, so batch count —
-    * already tracked in the fingerprint — is the stable trigger). */
-  val BandCompactEveryBatches = 8
-
-  /** Append new corpus documents (documents-shaped rows) to the
-    * persisted band index WITHOUT a rebuild — the text mirror of
-    * SimilarityOps.ivfAppend. The batch is sketched with the same
-    * native expressions as the build, exploded to
-    * `(CorpusId, band_id, band_val, ShC)`, and appended THROUGH the
-    * table's bucket spec (`bucketBy(band_id, band_val)`), so the new
-    * rows land hash-co-located with the existing ones and every
-    * subsequent incremental probe keeps its zero-corpus-side-exchange
-    * join — the batch is the only thing that shuffles, at append time,
-    * once. The fingerprint keeps its corpus line and bumps the
-    * `batches:<N>` count ([[BucketedTables]] format).
-    *
-    * Appends never unbalance the BUCKETING (hash on band keys), but
-    * each batch adds a file generation per bucket; every
-    * [[BandCompactEveryBatches]] batches, [[compactBandIndex]]
-    * rewrites the table in place — the small-files half of the
-    * maintenance loop (the IVF side's skew recluster analogue; there
-    * is no codebook to re-learn here).
-    *
-    * Callers own the arrival/corpus split contract: a doc appended
-    * here is CORPUS from then on — later batches probing the index
-    * will see it (exactly the semantics an ingestion pipeline wants:
-    * admit a batch, then dedup the next batch against it).
-    *
-    * Kept with no engine caller: IndexMaintenanceSpec checks it against
-    * a full build, and StreamingSpec drives it per microbatch. */
-  private[graft] def bandAppend(spark: SparkSession, dir: String, newDocs: DataFrame): String = {
-    val name = bandIndexTable(spark, dir)
-    val batches = bandBuildLock.synchronized {
-      // BATCH-LOCAL hot-bucket cooling at append time (a flood batch
-      // sharing one band value must not insert a hot bucket), plus a
-      // full corpus-wide re-cool at every compaction below — between
-      // compactions, cross-batch accumulation can exceed the cap by at
-      // most the appended deltas, the documented maintenance window
-      coolBands(newDocs
-        .select(col("doc_id"), expr("token_shingles(text)").as("Sh"))
-        .withColumn("Bands", expr("minhash_bands(Sh)"))
-        .select(col("doc_id"), col("Sh"),
-          posexplode(col("Bands")).as(Seq("BandIdx", "band_val")))
-        .select(col("doc_id").as("CorpusId"),
-          (col("BandIdx") + 1).as("band_id"), col("band_val"),
-          col("Sh").as("ShC")))
-        .select(col("CorpusId"), col("band_id"), col("band_val"), col("ShC"))
-        .write.mode("append")
-        .bucketBy(BandIndexBuckets, "band_id", "band_val")
-        .sortBy("band_id", "band_val")
-        .saveAsTable(name)
-      BucketedTables.bumpAppendedBatches(
-        BucketedTables.location(spark, name).resolve("_corpus_fingerprint"))
-    }
-    if (batches % BandCompactEveryBatches == 0) compactBandIndex(spark, dir)
-    name
-  }
-
-  /** Rewrite the band index from its own content — one file
-    * generation per bucket again — preserving the appended-batch
-    * count. Content is staged to a sibling directory first (never
-    * read-and-overwrite the same files in one job), then the table is
-    * rebuilt under the lock.
-    *
-    * Crash window (documented, not hidden): a failure between the
-    * table drop and the rebuilt `saveAsTable` leaves only the staged
-    * copy on disk — the next [[bandIndexTable]] would rebuild from the
-    * CORPUS, losing appended batches (the stage dir survives for
-    * manual recovery). Same non-transactional-rewrite caveat as any
-    * plain-parquet table maintenance; a production deployment runs
-    * compaction through a transactional table format. */
-  def compactBandIndex(spark: SparkSession, dir: String): String = bandBuildLock.synchronized {
-    val name = bandIndexName(dir)
-    val loc = BucketedTables.location(spark, name)
-    val batches = BucketedTables.appendedBatches(loc.resolve("_corpus_fingerprint"))
-    val stage = loc.resolveSibling(s"${name}_stage")
-    BucketedTables.deleteRecursively(stage)
-    spark.table(name).write.mode("overwrite").parquet(stage.toString)
-    BucketedTables.dropWithFiles(spark, name)
-    // corpus-wide re-cool: buckets that crossed the occupancy cap via
-    // cross-batch accumulation (append-time cooling is batch-local)
-    // are evicted here, restoring the exact cap invariant a
-    // from-scratch build over the same documents would have
-    coolBands(spark.read.parquet(stage.toString))
-      .select(col("CorpusId"), col("band_id"), col("band_val"), col("ShC"))
-      .write.mode("overwrite")
-      .bucketBy(BandIndexBuckets, "band_id", "band_val")
-      .sortBy("band_id", "band_val")
-      .saveAsTable(name)
-    BucketedTables.writeFingerprint(spark, name, corpusFingerprint(dir) +
-      (if (batches > 0) s"\nbatches:$batches" else ""))
-    BucketedTables.deleteRecursively(stage)
-    name
-  }
 
   /** Hard upper bound on label-propagation rounds — a runaway
     * backstop, NOT the convergence mechanism (the loop exits as soon

@@ -442,18 +442,6 @@ object SimilarityOps {
     * query is exact, and OpsSpec measures recall against [[knnGraph]]
     * the way `retrieval_eval` scores ivf/pq.
     *
-    * Append caveat: [[ivfAppend]] leaves the index "fresh" (its
-    * fingerprint tracks the CORPUS snapshot, not the list contents)
-    * with appended vectors routed by the then-current codebook —
-    * correct for probe SEARCH, but the DuckDB gate mirror replays
-    * k-means over the full current corpus, so gating this query on an
-    * appended corpus hash-mismatches BY CONSTRUCTION (codebooks
-    * differ), not from an engine defect. Rebuild the index (delete
-    * the index dir, or refresh the corpus through
-    * [[Substrates.invalidate]]) before gating a routed graph over
-    * appended data; steady-state search paths ([[ivfTopk]]) are the
-    * append consumers.
-    *
     * Scale shape: pair volume drops from the exact graph's n² to
     * n·nprobe·(n/K) — at the engine's K ∝ √n sizing policy that is
     * n^1.5·nprobe, the same exponent cut the hierarchical assignment
@@ -636,8 +624,7 @@ object SimilarityOps {
         java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/$d/_SUCCESS"))) &&
         java.nio.file.Files.exists(layoutFile) &&
         java.nio.file.Files.readString(layoutFile) == PqFlatLayoutVersion
-      val fresh = java.nio.file.Files.exists(fpFile) &&
-        java.nio.file.Files.readString(fpFile) == corpusFingerprint(dir)
+      val fresh = BucketedTables.fingerprintMatches(fpFile, corpusFingerprint(dir))
       if (!(complete && fresh)) {
         deleteRecursively(Paths.get(base))
         val all = quantized(spark, dir)
@@ -745,9 +732,7 @@ object SimilarityOps {
   /** Exact cosine rerank of a (QId, vec_id) shortlist against
     * `vectors` — the full-width (vec_id, Q, NormSq) store the
     * shortlisted ids live in. [[pqTopk]] passes the quantized corpus;
-    * [[ivfpqTopk]] passes the index's own lists, which ALSO hold
-    * vectors appended after the corpus snapshot ([[ivfAppend]]) — a
-    * corpus-table join would silently drop those. Only the shortlist
+    * [[ivfpqTopk]] passes the index's own lists. Only the shortlist
     * (bounded: probes × [[PqShortlist]]) pays the full-width
     * `long_dot`. */
   private def exactRerank(spark: SparkSession, dir: String,
@@ -998,6 +983,9 @@ object SimilarityOps {
     // assignment is approximate exactly as the probe side already is
     assignAuto(all, spark.read.parquet(s"$base/codebook"))
       .write.mode("overwrite").partitionBy("Cid").parquet(s"$base/lists")
+    // commit markers last (lists/_SUCCESS, then the fingerprint): a
+    // crash before either leaves a base the next build-if-absent reads
+    // as stale and rebuilds (IndexMaintenanceSpec)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(base, "_corpus_fingerprint"),
       corpusFingerprint(dir))
@@ -1024,8 +1012,8 @@ object SimilarityOps {
   }
 
   /** Serializes every index-directory mutation ([[buildIvfIndex]],
-    * [[ivfIndexPath]]'s build-if-absent, a registry release's
-    * delete, appends and reclusters): since round 5 FOUR queries share
+    * [[ivfIndexPath]]'s build-if-absent and a registry release's
+    * delete): since round 5 FOUR queries share
     * one index and the Verify harness runs them concurrently, and two
     * racing writers (a forced build beside a first touch) would both
     * write into the SAME directory mid-overwrite. Taken inside the
@@ -1050,182 +1038,20 @@ object SimilarityOps {
       val base = ivfBase(spark, dir, nCentroids)
       val complete = Seq("codebook", "lists").forall(d =>
         java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/$d/_SUCCESS")))
-      val fp = java.nio.file.Paths.get(base, "_corpus_fingerprint")
-      // line-1 compare (BucketedTables.corpusLine): an APPENDED index
-      // is still fresh for its corpus; a replaced corpus is not
-      val fresh = java.nio.file.Files.exists(fp) &&
-        BucketedTables.corpusLine(java.nio.file.Files.readString(fp)) ==
-          corpusFingerprint(dir)
+      val fresh = BucketedTables.fingerprintMatches(
+        Paths.get(base, "_corpus_fingerprint"), corpusFingerprint(dir))
       if (complete && fresh) base else writeIvfIndex(spark, dir, nCentroids)
     })
 
   /** Register the persisted index dir `base` in [[Substrates]]; its
     * release deletes the dir under [[ivfBuildLock]]. The path is a
-    * function of the key, so an entry stays valid across rebuilds,
-    * appends and reclusters; registering after a rebuild outside the
-    * key lock keeps an existing entry. */
+    * function of the key, so an entry stays valid across rebuilds;
+    * registering after a rebuild outside the key lock keeps an
+    * existing entry. */
   private def indexDir(spark: SparkSession, dir: String, kind: String,
                        params: Any*)(base: => String): String =
     Substrates[String](spark, dir, kind, params: _*)(b =>
       ivfBuildLock.synchronized(deleteRecursively(Paths.get(b))))(base)
-
-  /** Recluster when the largest inverted list exceeds this multiple
-    * of the mean list size after an append. */
-  val IvfSkewFactor = 4.0
-
-  /** Run the (index-wide) skew measurement every this-many appended
-    * batches — the per-Cid count scans the whole lists tree, and
-    * paying that per MICROBATCH would make per-batch append cost
-    * scale with total index size, the exact regression the append
-    * path exists to avoid. Skew drifts over many appends, not one;
-    * a periodic check matches the band index's compaction cadence. */
-  val IvfSkewCheckEveryBatches = 8
-
-  /** Append a batch of arrivals (vec_id, embedding) to the persisted
-    * IVF index WITHOUT a rebuild — the maintenance path an
-    * append-heavy corpus needs at 100 TB, where "refresh = full
-    * rebuild" would re-shuffle the whole corpus per batch.
-    *
-    * Mechanics: the batch is quantized, routed against the PERSISTED
-    * codebook (broadcast, take=1 — the batch never shuffles for
-    * routing), and written `mode("append")` under `partitionBy(Cid)` —
-    * parquet appends are partition-local, so ONLY the routed lists'
-    * directories gain files (OpsSpec asserts non-routed dirs are
-    * untouched, file-for-file). If the lazy PQ layer exists, the batch
-    * is PQ-encoded against the persisted `pqcodebook` and appended to
-    * the routed `pqcodes` partitions the same way, so [[ivfpqTopk]]
-    * sees arrivals immediately. The fingerprint keeps its corpus line
-    * and bumps a `batches:<N>` line ([[BucketedTables]] format): the
-    * index stays "fresh" for its corpus across sessions, while the
-    * count records that it holds more than the corpus.
-    *
-    * Appends do not move the codebook, so list sizes drift as the
-    * data distribution does; when the largest list exceeds
-    * [[IvfSkewFactor]]× the mean, [[reclusterIvfIndex]] runs —
-    * re-learning the codebook from the CURRENT lists content (corpus
-    * + every appended batch), the classic append-then-periodically-
-    * recluster ANN maintenance loop.
-    *
-    * Returns the routed list ids (driver-scale, ≤ |batch| values).
-    * Labels: appended rows carry no label column; [[kmeansProfile]]
-    * deliberately profiles corpus rows only (inner label join).
-    *
-    * Crash atomicity (r18 audit, r16 verdict #5): the BUILD paths are
-    * crash-safe by marker ordering — data writes first, commit
-    * markers (`lists/_SUCCESS` → `_corpus_fingerprint`, pq layers →
-    * `_pq_layout`) last, so every pre-marker crash state is detected
-    * by the next session's build-if-absent and rebuilt
-    * (IndexMaintenanceSpec exercises both coarse windows). The APPEND
-    * path is NOT single-crash-atomic: a process death inside this
-    * method can leave (a) a torn lists job commit (v1 committer moved
-    * some task outputs before dying — old `_SUCCESS` still present,
-    * so the half batch is served silently) or (b) lists committed but
-    * pqcodes not, so [[ivfpqTopk]] misses arrivals [[ivfTopk]] sees.
-    * Both are bounded to ONE batch and cannot corrupt corpus-derived
-    * state (the fingerprint's corpus line never moves here), but
-    * they cannot ride a publish-a-new-generation swap: appends are the
-    * point — republishing the whole lists tree per batch would be
-    * O(index), not O(batch). The production remedy is a table format
-    * with atomic multi-file commits (Iceberg/Delta manifest swap,
-    * guide §6); on this engine's plain-parquet layout the window is
-    * accepted and documented, and a caller that must close it can
-    * re-run [[buildIvfIndex]] + re-append its batch log.
-    *
-    * Kept with no engine caller: IndexMaintenanceSpec checks it against
-    * a from-scratch build, and StreamingSpec drives it per microbatch. */
-  private[graft] def ivfAppend(spark: SparkSession, dir: String, arrivals: DataFrame,
-                nCentroids: Int = DefaultNCentroids,
-                skewFactor: Double = IvfSkewFactor,
-                skewCheckEvery: Int = IvfSkewCheckEveryBatches): Array[Long] = {
-    val base = ivfIndexPath(spark, dir, nCentroids)
-    val routed = ivfBuildLock.synchronized {
-      val cent = spark.read.parquet(s"$base/codebook")
-      val q = arrivals
-        .select(col("vec_id"), expr("quantize_vec(embedding)").as("Q"))
-        .withColumn("NormSq", expr("long_dot(Q, Q)"))
-      val assigned = nearestCentroids(q, cent, 1, "vec_id", "Q", "NormSq")
-        .select(col("vec_id"), col("Q"), col("NormSq"), col("Cid"))
-        .cache()
-      try {
-        assigned.write.mode("append").partitionBy("Cid").parquet(s"$base/lists")
-        if (java.nio.file.Files.exists(
-            java.nio.file.Paths.get(s"$base/pqcodes/_SUCCESS"))) {
-          // encode the batch's RESIDUALS against its assigned coarse
-          // centroids with the persisted residual codebook — the same
-          // layout the lazy build writes (versioned by _pq_layout)
-          val pqCent = spark.read.parquet(s"$base/pqcodebook")
-          val resid = listResidualsAsQ(assigned, cent)
-          assigned.select(col("vec_id"), col("NormSq"), col("Cid"))
-            .join(pqAssign(pqSlices(resid), pqCent)
-              .groupBy(col("vec_id"))
-              .agg(expr("transform(array_sort(collect_list(struct(Sub, Cid))), x -> x.Cid)").as("Codes")),
-              "vec_id")
-            .write.mode("append").partitionBy("Cid").parquet(s"$base/pqcodes")
-        }
-        val n = BucketedTables.bumpAppendedBatches(
-          java.nio.file.Paths.get(base, "_corpus_fingerprint"))
-        (n, assigned.select(col("Cid")).distinct()
-          .collect().map(_.getLong(0)).sorted)
-      } finally assigned.unpersist(false)
-    }
-    val (batches, routedIds) = routed
-    releaseListsDerived(dir, nCentroids)
-    // skew check is PERIODIC: the per-Cid count scans the whole index
-    if (batches % skewCheckEvery == 0) {
-      val sizes = spark.read.parquet(s"$base/lists")
-        .groupBy(col("Cid")).count().collect().map(_.getLong(1))
-      if (sizes.max > skewFactor * (sizes.sum.toDouble / sizes.length))
-        reclusterIvfIndex(spark, dir, nCentroids)
-    }
-    routedIds
-  }
-
-  /** Re-learn the coarse codebook from the CURRENT lists content
-    * (corpus + appended batches) and re-route every row — the
-    * "periodic recluster" half of the append maintenance loop.
-    * Deterministic ([[kmeansCentroids]] on the union), so an
-    * appended-then-reclustered index is bit-identical to one built
-    * directly over a corpus containing the same rows (OpsSpec).
-    * Writes land in `codebook_next`/`lists_next`, then swap in under
-    * the build lock — a reader mid-plan sees the old layout or the
-    * new, never a half-written one. The PQ layer is derived from
-    * assignments, so it is dropped (it lazily rebuilds). */
-  def reclusterIvfIndex(spark: SparkSession, dir: String,
-                        nCentroids: Int = DefaultNCentroids): Unit = {
-    reclusterLocked(spark, dir, nCentroids)
-    releaseListsDerived(dir, nCentroids)
-  }
-
-  private def reclusterLocked(spark: SparkSession, dir: String,
-                              nCentroids: Int): Unit = ivfBuildLock.synchronized {
-    val base = ivfBase(spark, dir, nCentroids)
-    val rows = spark.read.parquet(s"$base/lists")
-      .select(col("vec_id"), col("Q"), col("NormSq"))
-    kmeansCentroids(rows, nCentroids)
-      .write.mode("overwrite").parquet(s"$base/codebook_next")
-    // size-routed like the direct build: identical below the
-    // crossover, so append-then-recluster stays bit-identical to a
-    // direct build over the same rows at every measured gate scale
-    assignAuto(rows, spark.read.parquet(s"$base/codebook_next"))
-      .write.mode("overwrite").partitionBy("Cid").parquet(s"$base/lists_next")
-    Seq("codebook", "lists").foreach { d =>
-      deleteRecursively(Paths.get(s"$base/$d"))
-      java.nio.file.Files.move(
-        java.nio.file.Paths.get(s"$base/${d}_next"),
-        java.nio.file.Paths.get(s"$base/$d"))
-    }
-    Seq("pqcodebook", "pqcodes").foreach(d =>
-      deleteRecursively(Paths.get(s"$base/$d")))
-  }
-
-  /** Release every session's registry entries derived from the lists
-    * of (dir, K) — the cached hierarchical assignments — after an
-    * index mutation. Called OUTSIDE [[ivfBuildLock]]: a release waits
-    * on the entry's key lock, and the entry's build takes the index
-    * lock under it. */
-  private def releaseListsDerived(dir: String, nCentroids: Int): Unit =
-    Substrates.release(k => k.dir == dir && k.params.headOption.contains(nCentroids) &&
-      k.kind == HierAssignKind)
 
   /** The probe set (vec_id < [[ProbeIdMax]]) in routing shape. */
   private def probeVectors(spark: SparkSession, dir: String): DataFrame =
@@ -1355,13 +1181,9 @@ object SimilarityOps {
       java.nio.file.Files.readString(layoutFile) == PqLayoutVersion
     if (!built) ivfBuildLock.synchronized {
       if (!built) {
-        // build from the LISTS, not the corpus table: the lists are the
-        // index's ground truth and also hold vectors appended after the
-        // corpus snapshot (ivfAppend) — a corpus-derived encode would
-        // inner-join them away and ivfpqTopk would silently miss them
-        // (the same class of bug as the rerank's old corpus join).
-        // The codebook trains on the lists' RESIDUALS (deterministic
-        // Lloyd, so rebuilds over the same lists are bit-identical).
+        // build from the LISTS, the index's ground truth. The codebook
+        // trains on the lists' RESIDUALS (deterministic Lloyd, so
+        // rebuilds over the same lists are bit-identical).
         val lists = spark.read.parquet(s"$base/lists")
         val coarse = spark.read.parquet(s"$base/codebook")
         val resid = listResidualsAsQ(lists, coarse)
@@ -1894,27 +1716,17 @@ object SimilarityOps {
       .select(col("vec_id"), col("Q"), col("NormSq"), col("Cid"))
   }
 
-  private val HierAssignKind = "similarity.hierAssign"
-
   /** The hierarchical assignment as a cached substrate per (session,
     * dir, K, nprobe) — in production the assignment IS a materialized
     * index artifact (it is what the persisted lists are for the flat
     * path), so the coarse Lloyd + routing pipeline runs once per
     * corpus and every consumer (the pair self-join reads it from BOTH
     * sides) scans the cache. It derives from the persisted codebook,
-    * so every index MUTATION (append, recluster) releases it
-    * ([[releaseListsDerived]]); the flat path needs no such hook
-    * because it re-reads the lists files per plan.
-    *
-    * Lock order: this build holds its key lock while it resolves the
-    * IVF index (its key lock, then [[ivfBuildLock]], then the
-    * quantized key) and the quantized key. Index mutations release
-    * this key only after leaving [[ivfBuildLock]], so no thread holds
-    * the index lock while it waits for this key, and no AB/BA pair
-    * between the two can form. */
+    * and [[Substrates.invalidate]] releases it before the index it
+    * was built after. */
   private def hierAssigned(spark: SparkSession, dir: String,
                            nCentroids: Int, nprobe: Int): DataFrame =
-    Substrates.frame(spark, dir, HierAssignKind, nCentroids, nprobe) {
+    Substrates.frame(spark, dir, "similarity.hierAssign", nCentroids, nprobe) {
       val base = ivfIndexPath(spark, dir, nCentroids)
       val vecs = quantized(spark, dir).select(col("vec_id"), col("Q"), col("NormSq"))
       assignHierarchical(vecs, spark.read.parquet(s"$base/codebook"), nprobe).cache()
@@ -2002,19 +1814,6 @@ object SimilarityOps {
       .select(col("vec_id").as("QId"), col("Q").as("QP"), col("NormSq").as("NormP"))
     incrementalDedupAgainst(batch, cent, lists.filter(!isNew), threshold, nprobe)
       .transform(graft.etl.Summaries.smallSort(_, col("NewId"), col("CorpusId")))
-  }
-
-  /** Quantize a raw (vec_id, embedding, …) arrival batch into the
-    * (QId, QP, NormP) probe shape [[incrementalDedupAgainst]] takes.
-    * A stream microbatch resolves against the stream's session clone,
-    * whose function registry is a copy of the outer session's, so the
-    * native functions [[graft.GraftExtensions]] installs are already
-    * there. Kept with no engine caller: StreamingSpec applies it per
-    * microbatch and checks the result against [[incrementalDedup]]. */
-  private[graft] def quantizeArrivals(arrivals: DataFrame): DataFrame = {
-    arrivals
-      .select(col("vec_id").as("QId"), expr("quantize_vec(embedding)").as("QP"))
-      .withColumn("NormP", expr("long_dot(QP, QP)"))
   }
 
   /** The route-then-verify kernel shared by the batch query and the

@@ -73,6 +73,18 @@ class BandIndexSpec extends SparkSpec {
     // fresh corpus fingerprint matches → re-registered as EXTERNAL, no rebuild
     assert(DedupOps.bandIndexTable(spark, dir) === name)
     assert(tableType(name) === "EXTERNAL")
+    // a fingerprint that is not exactly the corpus md5 is stale: a torn
+    // (0-byte) write, and a leftover line after the md5
+    val fp = loc.resolve("_corpus_fingerprint")
+    val md5 = Files.readString(stash.resolve("_corpus_fingerprint"))
+    Seq("", s"$md5\nbatches:3").foreach { torn =>
+      Substrates.invalidate(spark, dir)
+      copyTree(stash, Files.createDirectories(loc))
+      Files.writeString(fp, torn)
+      assert(DedupOps.bandIndexTable(spark, dir) === name)
+      assert(tableType(name) === "MANAGED", s"index fingerprinted '$torn' was adopted instead of rebuilt")
+      assert(Files.readString(fp) === md5)
+    }
     // corpus changes on disk → fingerprint mismatch → REBUILT (managed),
     // and the matches reflect the NEW corpus, not the stale index
     Substrates.invalidate(spark, dir) // simulate session end: table+files+memos gone
@@ -112,6 +124,23 @@ class BandIndexSpec extends SparkSpec {
     assert(matches.isEmpty, s"stale catalog hit was adopted: ${matches.mkString(",")}")
     Substrates.invalidate(sibling, dir)
     Substrates.invalidate(spark, dir)
+  }
+
+  test("a fingerprint file is fresh only when it holds exactly the corpus md5") {
+    import java.nio.file.Files
+    import graft.ops.BucketedTables
+    val md5 = graft.functions.TextExpressions.md5Hex("corpus")
+    val f = tempDir("graft_fingerprint").resolve("_corpus_fingerprint")
+    assert(!BucketedTables.fingerprintMatches(f, md5), "missing file")
+    Files.writeString(f, md5)
+    assert(BucketedTables.fingerprintMatches(f, md5), "exact md5")
+    // every other content reads stale: a torn write, a trailing
+    // newline, a leftover second line, another corpus's md5
+    Seq("", md5.take(16), s"$md5\n", s"$md5\nbatches:3",
+        graft.functions.TextExpressions.md5Hex("other")).foreach { c =>
+      Files.writeString(f, c)
+      assert(!BucketedTables.fingerprintMatches(f, md5), s"served a fingerprint '$c'")
+    }
   }
 
   test("invalidation drops the persisted index; the next query rebuilds it") {

@@ -122,8 +122,10 @@ class PipelineSpec extends SparkSpec {
 
   test("the embedded warehouse has one writer per table, and its own props read the table back") {
     // the reference loads sqlite through one connection (etl.py:292-303):
-    // a 4-partition frame must insert in one task, not four
-    val df = spark.range(0, 400).select(
+    // a 4-partition frame must insert in one task, not four, and its
+    // shuffle must run once: 4 map tasks, not a second 4 for the
+    // coalesced plan
+    val df = spark.range(0, 400, 1, 4).select(
       col("id"),
       timestamp_seconds(col("id") * 3607 + 1294128000L).as("InvoiceDate"),
       (col("id") * 1.25).cast("decimal(12,2)").as("TotalPrice"),
@@ -133,9 +135,14 @@ class PipelineSpec extends SparkSpec {
     // the insert stage is the write's only result stage; the shuffle
     // runs as map tasks
     val insertTasks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val mapTasks = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskType == "ResultTask") insertTasks.incrementAndGet()
+        t.taskType match {
+          case "ResultTask" => insertTasks.incrementAndGet()
+          case "ShuffleMapTask" => mapTasks.incrementAndGet()
+          case _ =>
+        }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -145,11 +152,37 @@ class PipelineSpec extends SparkSpec {
       Thread.sleep(500)
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(insertTasks.get() === 1, "insert stage tasks")
+    assert(mapTasks.get() === 4, "shuffle map tasks")
     val wh = Load.embeddedSink(out)
     val back = spark.read.jdbc(wh.url, "t", wh.props)
     assert(back.columns.toSeq === df.columns.toSeq)
     assert(back.orderBy("id").collect().map(_.toSeq).toSeq ===
       df.orderBy("id").collect().map(_.toSeq).toSeq)
+  }
+
+  test("writeJdbc only coalesces down: no numPartitions, or one above the frame's, keeps a writer per partition") {
+    val df = spark.range(0, 400, 1, 4).select(col("id"), (col("id") * 2).as("twice"))
+    val url = s"jdbc:derby:${tempDir("graft_jdbc_parts")}/wh;create=true"
+    Seq(None, Some("8")).foreach { parts =>
+      val props = new java.util.Properties()
+      props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+      parts.foreach(props.setProperty("numPartitions", _))
+      val insertTasks = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+          if (t.taskType == "ResultTask") insertTasks.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        Load.writeJdbc(Map("t" -> df), url, props)
+        // listener delivery is async: wait for the count to go quiet
+        eventually(timeout(30.seconds)) { assert(insertTasks.get() > 0) }
+        Thread.sleep(500)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      assert(insertTasks.get() === 4, s"insert tasks with numPartitions=$parts")
+      assert(spark.read.jdbc(url, "t", props).orderBy("id").collect().map(_.toSeq).toSeq ===
+        df.orderBy("id").collect().map(_.toSeq).toSeq, s"read-back with numPartitions=$parts")
+    }
   }
 
   test("transform materializes each summary once; invalidate releases it with the cleaned table") {

@@ -369,8 +369,11 @@ class StreamingSpec extends SparkSpec {
     val stream = spark.readStream.schema(graft.etl.Tables.embeddingsSchema)
       .option("maxFilesPerTrigger", "1").parquet(s"$streamDir/vecs")
     val q = stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      val rows = SimilarityOps.incrementalDedupAgainst(
-          SimilarityOps.quantizeArrivals(batch), cent, corpusLists).collect()
+      // the native functions come with the stream's session clone
+      val arrivalsQ = batch
+        .select(col("vec_id").as("QId"), expr("quantize_vec(embedding)").as("QP"))
+        .withColumn("NormP", expr("long_dot(QP, QP)"))
+      val rows = SimilarityOps.incrementalDedupAgainst(arrivalsQ, cent, corpusLists).collect()
         .map(r => (r.getAs[Long]("NewId"), r.getAs[Long]("CorpusId"), r.getAs[Double]("Cosine")))
       buf.synchronized { buf ++= rows }
       ()
@@ -401,91 +404,6 @@ class StreamingSpec extends SparkSpec {
       .map(r => r.getAs[Long]("user_id") -> ((r.getAs[String]("LastTs"),
         r.getAs[String]("event_type"), r.getAs[Double]("value")))).toMap
     assert(streamed === batch)
-  }
-
-  test("streaming ivfAppend over a two-file vector stream equals one batch append") {
-    import graft.ops.SimilarityOps
-    import java.nio.file.Files
-    // two corpora with the same 400-vector base; A is maintained by the
-    // STREAM (arrivals as two microbatches), B by one batch ivfAppend
-    val all = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    def mkCorpus(): String = {
-      val d = tempDir("graft_stream_ivfapp").toAbsolutePath
-      all.filter(col("vec_id") < 400).coalesce(1)
-        .write.mode("overwrite").parquet(s"$d/embeddings.parquet")
-      SimilarityOps.buildIvfIndex(spark, d.toString)
-      d.toString
-    }
-    val (dirA, dirB) = (mkCorpus(), mkCorpus())
-    val arrivals = all.filter(col("vec_id") >= 400).select(col("vec_id"), col("embedding"))
-
-    val streamSrc = tempDir("graft_stream_ivfsrc")
-    arrivals.repartition(2).write.mode("overwrite").parquet(s"$streamSrc/vecs")
-    val routedBatches = collection.mutable.ArrayBuffer.empty[Array[Long]]
-    // the kernel runs on the batch's session, as an ingestion sink would
-    val q = spark.readStream.schema(graft.etl.Tables.embeddingsSchema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$streamSrc/vecs")
-      .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-        val r = SimilarityOps.ivfAppend(batch.sparkSession, dirA, batch.select("vec_id", "embedding"))
-        routedBatches.synchronized { routedBatches += r }
-        ()
-      }.start()
-    q.processAllAvailable()
-    q.stop()
-    assert(routedBatches.size >= 2, "expected at least two appended microbatches")
-
-    SimilarityOps.ivfAppend(spark, dirB, arrivals)
-
-    // both indexes hold the identical 500 rows and answer probes the same
-    val baseA = SimilarityOps.ivfIndexPath(spark, dirA)
-    val baseB = SimilarityOps.ivfIndexPath(spark, dirB)
-    assert(spark.read.parquet(s"$baseA/lists").count() === 500L)
-    def rows(b: String) = spark.read.parquet(s"$b/lists")
-      .select("vec_id", "Cid").collect().map(r => (r.getLong(0), r.getAs[Number](1).longValue)).toSet
-    assert(rows(baseA) === rows(baseB))
-    val a = SimilarityOps.ivfTopk(spark, dirA).collect().toSeq
-    val b = SimilarityOps.ivfTopk(spark, dirB).collect().toSeq
-    assert(a == b, "stream-maintained index answers differently from batch-maintained")
-  }
-
-  test("streaming bandAppend over a two-file doc stream equals one batch append") {
-    import graft.ops.{BucketedTables, DedupOps}
-    import java.nio.file.Files
-    val all = spark.read.parquet(s"$sfDir/documents.parquet")
-    def mkCorpus(): String = {
-      val d = tempDir("graft_stream_bandapp").toAbsolutePath
-      all.filter(col("doc_id") < 400).coalesce(1)
-        .write.mode("overwrite").parquet(s"$d/documents.parquet")
-      DedupOps.bandIndexTable(spark, d.toString)
-      d.toString
-    }
-    val (dirA, dirB) = (mkCorpus(), mkCorpus())
-    val newDocs = all.filter(col("doc_id") >= 400 &&
-      !(col("doc_id") % DedupOps.NewArrivalMod === DedupOps.NewArrivalRemainder))
-
-    val streamSrc = tempDir("graft_stream_bandsrc")
-    newDocs.repartition(2).write.mode("overwrite").parquet(s"$streamSrc/docs")
-    var batches = 0
-    val q = spark.readStream.schema(graft.etl.Tables.documentsSchema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$streamSrc/docs")
-      .writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-        DedupOps.bandAppend(batch.sparkSession, dirA, batch)
-        synchronized { batches += 1 }
-      }.start()
-    q.processAllAvailable()
-    q.stop()
-    assert(batches >= 2, "expected at least two appended microbatches")
-
-    DedupOps.bandAppend(spark, dirB, newDocs)
-
-    def rows(dir: String) = spark.table(DedupOps.bandIndexTable(spark, dir))
-      .select(col("CorpusId"), col("band_id"), col("band_val"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-    assert(rows(dirA) === rows(dirB))
-    assert(rows(dirA).nonEmpty)
-    // the stream bumped the batch count once per microbatch
-    val locA = BucketedTables.location(spark, DedupOps.bandIndexTable(spark, dirA))
-    assert(BucketedTables.appendedBatches(locA.resolve("_corpus_fingerprint")) === batches)
   }
 
   test("mapGroupsWithState funnel over a two-file event stream matches batch events_funnel") {

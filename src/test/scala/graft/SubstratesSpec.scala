@@ -86,6 +86,31 @@ class SubstratesSpec extends SparkSpec {
     assert(TextOps.docStats(sibling, dirA) eq statsSibling, "sibling session's entry was released")
   }
 
+  test("each collect of local carries its caller's call site, not the registry's") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => sites.add(s.description)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Substrates.local(spark.range(3).toDF(), spark.range(5).toDF())
+      // listener delivery is async: wait for the count to go quiet
+      eventually(timeout(30.seconds)) { assert(sites.size >= 2) }
+      Thread.sleep(500)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val seen = sites.toArray.toSeq.map(_.toString)
+    assert(seen.forall(_.contains("SubstratesSpec.scala")), s"call sites: ${seen.mkString(", ")}")
+    assert(Seq("frame 1 of 2", "frame 2 of 2").forall(f => seen.exists(_.contains(f))),
+      s"call sites: ${seen.mkString(", ")}")
+    assert(spark.sparkContext.getLocalProperty("callSite.short") === null,
+      "the calling thread kept the call site")
+  }
+
   test("an entry of a stopped session is gone on the next lookup") {
     // stops the suite's session: this test runs last, and suites after
     // it in the same JVM get a fresh session from GraftSession.local

@@ -311,4 +311,55 @@ class SummariesSpec extends SparkSpec {
       assert(r.isNullAt(r.fieldIndex("Residual")))
     }
   }
+
+  test("topCustomers: top n by revenue, ties by CustomerID, cancelled rows excluded (README.md:132-136)") {
+    val df = mk(Seq(
+      sale("1", 1, 20.0, "2011-01-01 09:00:00"),
+      sale("2", 1, 30.0, "2011-01-02 09:00:00"),
+      sale("3", 2, 50.0, "2011-01-02 10:00:00"),
+      sale("4", 3, 80.0, "2011-01-03 09:00:00"),
+      sale("5", 4, 10.0, "2011-01-03 10:00:00"),
+      sale("C6", 4, 999.0, "2011-01-04 09:00:00", cancelled = true)))
+    val top = Summaries.topCustomers(df, n = 3)
+    assert(top.columns.toSeq === Seq("CustomerID", "Country", "TotalOrders", "TotalRevenue"))
+    assert(top.collect().map(_.toSeq).toSeq === Seq(
+      Seq(3, "Nowhere", 1L, 80.0),
+      Seq(1, "Nowhere", 2L, 50.0),
+      Seq(2, "Nowhere", 1L, 50.0)))
+  }
+
+  test("productSummary: one row per (StockCode, Description), distinct orders and customers (etl.py:150-175)") {
+    def item(inv: String, cust: Int, stock: String, desc: String, qty: Long, price: Double,
+             cancelled: Boolean = false) =
+      Row(inv, stock, desc, qty, ts("2011-01-01 09:00:00"), price, cust, "Nowhere", cancelled,
+        qty * price, d("2011-01-01"))
+    val df = mk(Seq(
+      item("1", 1, "S1", "Mug", 2, 3.0),
+      item("1", 1, "S1", "Mug", 1, 3.0),
+      item("2", 2, "S1", "Mug", 4, 2.5),
+      item("3", 1, "S1", "Mug (red)", 1, 5.0),
+      item("4", 3, "S2", "Pen", 10, 1.0),
+      item("C5", 3, "S2", "Pen", 3, 1.0, cancelled = true)))
+    val rows = Summaries.productSummary(df).collect().map(_.toSeq).toSeq
+    assert(rows === Seq(
+      Seq("S1", "Mug", 7L, 19.0, 2L, 2L, 19.0 / 7),
+      Seq("S2", "Pen", 10L, 10.0, 1L, 1L, 1.0),
+      Seq("S1", "Mug (red)", 1L, 5.0, 1L, 1L, 5.0)))
+  }
+
+  test("dailyTrendRecent: the trailing window counts back from the last sales day (README.md:144-147)") {
+    val df = mk(Seq(
+      sale("1", 1, 10.0, "2011-01-01 09:00:00"),
+      sale("2", 1, 20.0, "2011-01-05 09:00:00"),
+      sale("3", 1, 30.0, "2011-01-08 09:00:00"),
+      sale("4", 2, 5.0, "2011-01-08 11:00:00"),
+      sale("5", 2, 40.0, "2011-01-10 09:00:00"),
+      // a cancelled later day must not move the window's end
+      sale("C6", 2, 99.0, "2011-01-20 09:00:00", cancelled = true)))
+    val rows = Summaries.dailyTrendRecent(df, days = 7).collect().map(_.toSeq).toSeq
+    assert(rows === Seq(
+      Seq(d("2011-01-05"), 20.0, 1L, 1L, 1L),
+      Seq(d("2011-01-08"), 35.0, 2L, 2L, 2L),
+      Seq(d("2011-01-10"), 40.0, 1L, 1L, 1L)))
+  }
 }
