@@ -29,9 +29,9 @@ import org.apache.spark.sql.types.StructType
   * and builds of different keys do not serialize each other. A build
   * may touch the keys it derives from, so key locks nest in dependency
   * order. A release holds one key lock at a time and waits for an
-  * in-flight build of the key it drops. Index families take their
-  * index lock (`SimilarityOps.ivfBuildLock`, `DedupOps.bandBuildLock`)
-  * inside the key lock, in build and in release; code that holds an
+  * in-flight build of the key it drops. A persisted index
+  * (`graft.ops.BucketedTables.resolve`) takes the one index lock
+  * inside its key lock, in build and in release; code that holds the
   * index lock therefore touches only keys whose build takes no index
   * lock.
   *

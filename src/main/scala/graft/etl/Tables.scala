@@ -102,31 +102,17 @@ object Tables {
   private[graft] def forgetTsEncoding(path: String): Unit =
     tsEncodingCache.remove(path)
 
-  /** Filesystem fingerprint (names+sizes+mtimes) of a local events
-    * path, so the sniff cache self-invalidates when a path's parquet
-    * is REWRITTEN with the other ts encoding (previously path-only
-    * keying misread it for the JVM lifetime unless the writer knew to
-    * call [[forgetTsEncoding]]). Walks the FULL tree, not one level:
-    * a partitioned layout (`dir/date=X/part-0.parquet`) rewritten
-    * in place changes only a leaf file's mtime — its parent dir entry
-    * is unchanged, so a one-level listing would serve the stale
-    * encoding. Non-local paths (no java.nio view) fall back to
-    * "" = path-only keying, the old behavior. */
+  /** Filesystem fingerprint of a local events path (the persisted
+    * indexes' [[graft.ops.BucketedTables.fingerprint]]: names, sizes
+    * and mtimes of the whole tree), so the sniff cache self-invalidates
+    * when a path's parquet is REWRITTEN with the other ts encoding
+    * (previously path-only keying misread it for the JVM lifetime
+    * unless the writer knew to call [[forgetTsEncoding]]). A missing
+    * or non-local path (no java.nio view) falls back to "" =
+    * path-only keying, the old behavior. */
   private def tsPathFingerprint(path: String): String =
-    try {
-      val p = java.nio.file.Paths.get(path)
-      def one(f: java.nio.file.Path) =
-        s"${p.relativize(f)}:${java.nio.file.Files.size(f)}:${java.nio.file.Files.getLastModifiedTime(f).toMillis}"
-      if (java.nio.file.Files.isDirectory(p)) {
-        import scala.jdk.CollectionConverters._
-        val walk = java.nio.file.Files.walk(p)
-        try walk.iterator().asScala
-          .filter(java.nio.file.Files.isRegularFile(_))
-          .toSeq.sortBy(_.toString).map(one).mkString("|")
-        finally walk.close()
-      } else if (java.nio.file.Files.exists(p)) one(p)
-      else ""
-    } catch { case _: Exception => "" }
+    try graft.ops.BucketedTables.fingerprint(java.nio.file.Paths.get(path))
+    catch { case _: Exception => "" }
 
   /** The physical type Spark surfaces for `ts` in the parquet at `path`
     * (file or directory of staged files): LongType for the

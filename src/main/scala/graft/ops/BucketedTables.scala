@@ -1,40 +1,132 @@
 package graft.ops
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{FileVisitOption, Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.SparkSession
 
-/** Machinery for write-once persisted BUCKETED catalog tables (the
-  * band index in DedupOps): the registry entry → catalog →
-  * on-disk-re-registration → build ladder, with freshness guarding on
-  * EVERY branch, lowercased locations and file cleanup; plus the one
-  * fingerprint check every persisted index shares.
+import graft.Substrates
+
+/** The one persisted-index form. Every index the engine writes to disk
+  * and serves across sessions is a [[Form]]: the band index
+  * (DedupOps), and the IVF, IVF-PQ and flat-PQ indexes
+  * (SimilarityOps). [[resolve]] is the one ladder that serves or
+  * rebuilds them: registry entry, then a servable index on disk, else
+  * a rebuild by the family's writer.
+  *
+  * == Servable ==
+  * An index is servable when every part holds its `_SUCCESS` and the
+  * manifest holds exactly the form's layout version and the
+  * [[fingerprint]] of its input. A rebuild deletes the base, runs the
+  * writer, and writes the manifest last, through a temp file and an
+  * atomic rename. So a crash anywhere in a build leaves no manifest,
+  * and the next resolve rebuilds. Any other manifest (empty, another
+  * layout, another input, a leftover line) reads stale too. The
+  * manifest is underscore-prefixed, so parquet readers skip it.
+  *
+  * The check runs on every resolution that misses the registry, a
+  * catalog hit included: a sibling session sharing the catalog could
+  * otherwise adopt a table built from a corpus since refreshed on
+  * disk, while queries on the primary layout rebuild, and two
+  * "identical" queries would return different rows. A derived form
+  * ([[Form.derived]], the IVF-PQ layer over the IVF base) takes its
+  * base's manifest as its input, so a rebuilt base makes it stale.
+  *
+  * == Catalog tables ==
+  * A form with a [[Table]] (the band index) is also a catalog table. A
+  * servable index with a catalog entry is served; servable files with
+  * no entry are re-registered EXTERNAL by the table's DDL; anything
+  * else is dropped and rebuilt MANAGED by the writer.
   *
   * == Case folding ==
   * Spark folds table identifiers to lower case
   * (`spark.sql.caseSensitive=false` default), so a managed table's
   * files land under `<warehouse>/<lowercased-name>` regardless of the
-  * name's spelling. Every path derivation here lowercases; name
-  * builders lowercase their slugs too, so the catalog name and the
-  * on-disk directory can never disagree (a mixed-case corpus dir would
-  * otherwise write the fingerprint beside a directory that does not
+  * name's spelling. [[location]] lowercases, and [[tableName]]
+  * lowercases its slug too, so the catalog name and the on-disk
+  * directory can never disagree (a mixed-case corpus dir would
+  * otherwise write the manifest beside a directory that does not
   * exist and leak the real files on invalidation).
   *
-  * == Freshness ==
-  * `_corpus_fingerprint` (underscore-prefixed — parquet readers skip
-  * it) is checked on EVERY resolution branch, including a catalog hit:
-  * a sibling session sharing the catalog could otherwise adopt a table
-  * built from a corpus that has since been refreshed on disk, while
-  * queries on the primary layout rebuild — two "identical" queries
-  * returning different rows.
-  *
   * == Locking ==
-  * Callers hold their own build lock around [[resolve]] (inside the
-  * [[graft.Substrates]] key lock of their entry) — the ladder itself
-  * is not thread-safe, by design: the lock also covers the caller's
-  * build and drop.
+  * One lock serializes every mutation of an index location (a build, a
+  * re-registration, a release) across all sessions of the JVM. It is
+  * taken inside the [[graft.Substrates]] key lock of the index's
+  * entry, so a writer touches only registry keys whose build takes no
+  * index lock; a derived form resolves its base before taking it. A
+  * registry hit takes no lock and touches no file.
   */
 private[graft] object BucketedTables {
+
+  /** The file that commits an index. */
+  private[graft] val Manifest = "_manifest"
+
+  private val lock = new Object
+
+  /** A catalog table over a form's base: its name, and the DDL that
+    * registers the base's files as an EXTERNAL table. */
+  final case class Table(name: String, ddl: String)
+
+  /** An index on disk: the `parts` under `base` whose `_SUCCESS` commit
+    * them (`.` for files written straight into the base), the version
+    * of their encoding, and the input they derive from. */
+  final case class Form(base: Path, parts: Seq[String], layout: String, input: Path,
+                        table: Option[Table] = None) {
+    def manifest: Path = base.resolve(Manifest)
+
+    /** A form under `sub` of this one, built from this one's files: its
+      * input is this form's manifest. */
+    def derived(sub: String, parts: Seq[String], layout: String): Form =
+      Form(base.resolve(sub), parts, layout, manifest)
+  }
+
+  /** The registered index of `form`, built by `write` unless a servable
+    * one is on disk. `write` gets the form, writes its parts under an
+    * empty base, and for a [[Table]] saves the table. The entry's
+    * release drops the table and deletes the base. */
+  def resolve(spark: SparkSession, dir: String, kind: String, params: Any*)(form: => Form)(
+      write: Form => Unit): Form =
+    Substrates[Form](spark, dir, kind, params: _*)(f => lock.synchronized(drop(spark, f))) {
+      val f = form
+      lock.synchronized {
+        val manifest = s"layout ${f.layout}\ninput ${fingerprint(f.input)}\n"
+        if (servable(f, manifest))
+          f.table.foreach(t => if (!spark.catalog.tableExists(t.name)) spark.sql(t.ddl))
+        else {
+          drop(spark, f)
+          write(f)
+          val tmp = f.base.resolve(s"$Manifest.tmp")
+          Files.write(tmp, manifest.getBytes(UTF_8))
+          Files.move(tmp, f.manifest, StandardCopyOption.ATOMIC_MOVE)
+        }
+      }
+      f
+    }
+
+  private def servable(f: Form, manifest: String): Boolean =
+    f.parts.forall(p => Files.exists(f.base.resolve(p).resolve("_SUCCESS"))) &&
+      Files.exists(f.manifest) && new String(Files.readAllBytes(f.manifest), UTF_8) == manifest
+
+  private def drop(spark: SparkSession, f: Form): Unit = {
+    f.table.foreach(t => spark.sql(s"DROP TABLE IF EXISTS ${t.name}"))
+    deleteRecursively(f.base)
+  }
+
+  /** md5 over the name (relative to `input`'s parent), size and mtime
+    * of every file at or under `input`: what an index is built from.
+    * The whole tree, so a partitioned layout rewritten in place, which
+    * changes only a leaf file's mtime, reads as changed. */
+  def fingerprint(input: Path): String = {
+    import scala.jdk.CollectionConverters._
+    val in = input.toAbsolutePath
+    val walk = Files.walk(in, FileVisitOption.FOLLOW_LINKS) // must close: holds dir handles
+    val files =
+      try walk.iterator().asScala.filter(Files.isRegularFile(_)).toSeq.sortBy(_.toString)
+      finally walk.close()
+    graft.functions.TextExpressions.md5Hex(files.map(f =>
+      s"${in.getParent.relativize(f)}:${Files.size(f)}:${Files.getLastModifiedTime(f).toMillis}")
+      .mkString("|"))
+  }
 
   /** Lowercased slug + md5-of-raw-dir table name (sanitization alone
     * is lossy; the hash makes dir → name injective). */
@@ -59,42 +151,4 @@ private[graft] object BucketedTables {
       try walk.iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
       finally walk.close()
     }
-
-  /** DROP the catalog entry AND its files (managed tables drop files
-    * with the table; external re-registrations do not). */
-  def dropWithFiles(spark: SparkSession, name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    deleteRecursively(location(spark, name))
-  }
-
-  /** Record the corpus fingerprint beside the just-built table. */
-  def writeFingerprint(spark: SparkSession, name: String, fp: String): Unit =
-    Files.writeString(location(spark, name).resolve("_corpus_fingerprint"), fp)
-
-  /** Whether `f` holds exactly `fingerprint`, the md5 of the corpus
-    * the index derives from: the one freshness check of every
-    * persisted index (band, IVF, flat PQ). A missing, empty or torn
-    * file (`writeString` is not atomic) does not match, nor does one
-    * with any extra line, so each reads as stale and the index is
-    * rebuilt. */
-  def fingerprintMatches(f: Path, fingerprint: String): Boolean =
-    Files.exists(f) && Files.readString(f) == fingerprint
-
-  private def fresh(spark: SparkSession, name: String, fingerprint: => String): Boolean =
-    fingerprintMatches(location(spark, name).resolve("_corpus_fingerprint"), fingerprint)
-
-  /** The ladder below the registry entry: a FRESH catalog table wins; a
-    * fresh on-disk layout from a previous session re-registers as an
-    * external table (`registerDdl`); anything else (absent OR stale
-    * either way) rebuilds via `build` (which must pre-drop). Caller
-    * holds its build lock. */
-  def resolve(spark: SparkSession, name: String, registerDdl: String,
-              fingerprint: => String, build: () => String): String =
-    if (spark.catalog.tableExists(name) && fresh(spark, name, fingerprint)) name
-    else if (!spark.catalog.tableExists(name) &&
-      Files.exists(location(spark, name).resolve("_SUCCESS")) &&
-      fresh(spark, name, fingerprint)) {
-      spark.sql(registerDdl)
-      name
-    } else build()
 }

@@ -577,100 +577,49 @@ object DedupOps {
         col("band_id"), col("band_val"), col("Sh").as("ShC"))
   }
 
-  /** Serializes band-index build/register/drop — same
-    * reasoning as SimilarityOps.ivfBuildLock: the batch query, the
-    * streaming twin, and the concurrent Verify harness can all touch
-    * the index at once. Taken inside the registry's key lock, never
-    * around a registry call that may build or release an index entry
-    * (see [[Substrates]]). */
-  private val bandBuildLock = new Object
-
   /** Buckets for the persisted band index. */
   val BandIndexBuckets = 16
 
-  /** Catalog table name for (session, dir): readable slug + md5 of the
-    * raw dir (sanitization alone is lossy — same injectivity argument
-    * as the IVF index path). Lowercased by [[BucketedTables.tableName]]
-    * so the name always matches the warehouse directory Spark's
-    * case-insensitive catalog actually writes. */
-  private def bandIndexName(dir: String): String =
-    BucketedTables.tableName("graft_bands", dir)
-
-  /** Fingerprint of the corpus an index was built from (md5 over the
-    * documents parquet's file names, sizes, and mtimes). Written next
-    * to the index as `_corpus_fingerprint` (underscore-prefixed —
-    * parquet readers skip it) and compared before any cross-session
-    * re-registration: a refreshed corpus must REBUILD, not silently
-    * adopt the stale index. */
-  private[graft] def corpusFingerprint(dir: String): String = {
-    val p = java.nio.file.Paths.get(dir, "documents.parquet")
-    def one(f: java.nio.file.Path) =
-      s"${f.getFileName}:${java.nio.file.Files.size(f)}:${java.nio.file.Files.getLastModifiedTime(f).toMillis}"
-    val s =
-      if (java.nio.file.Files.isDirectory(p)) {
-        import scala.jdk.CollectionConverters._
-        val listing = java.nio.file.Files.list(p)
-        try listing.iterator().asScala.toSeq.sortBy(_.toString).map(one).mkString("|")
-        finally listing.close()
-      } else one(p)
-    graft.functions.TextExpressions.md5Hex(s)
-  }
-
-  /** Build (or REBUILD) the persisted corpus band index: the
-    * `(CorpusId, band_id, band_val, ShC)` rows written ONCE as a
-    * catalog table `bucketBy(16, band_id, band_val)` + sorted within
-    * buckets. This is the write-once/probe-many half of ingestion-time
-    * dedup: every subsequent batch joins the index on exactly the
-    * bucket keys, so the CORPUS side is never re-shuffled — only the
-    * (small) arriving batch moves (plan-asserted in BandIndexSpec).
-    * Returns the table name. Pre-drops table AND location: the
-    * default in-memory catalog forgets tables across sessions while
-    * the warehouse directory persists, and `saveAsTable` refuses a
-    * dangling location. */
-  private def buildBandIndex(spark: SparkSession, dir: String): String = bandBuildLock.synchronized {
-    val name = bandIndexName(dir)
-    BucketedTables.dropWithFiles(spark, name)
-    corpusBandIndex(spark, dir)
-      .write.mode("overwrite")
-      .bucketBy(BandIndexBuckets, "band_id", "band_val")
-      .sortBy("band_id", "band_val")
-      .saveAsTable(name)
-    BucketedTables.writeFingerprint(spark, name, corpusFingerprint(dir))
+  /** The persisted corpus band index: the `(CorpusId, band_id,
+    * band_val, ShC)` rows written ONCE as a catalog table
+    * `bucketBy(16, band_id, band_val)` + sorted within buckets. This is
+    * the write-once/probe-many half of ingestion-time dedup: every
+    * subsequent batch joins the index on exactly the bucket keys, so
+    * the CORPUS side is never re-shuffled — only the (small) arriving
+    * batch moves (plan-asserted in BandIndexSpec). Returns the table
+    * name: a readable slug + md5 of the raw dir (sanitization alone is
+    * lossy — same injectivity argument as the IVF index path),
+    * lowercased so it always matches the warehouse directory Spark's
+    * case-insensitive catalog writes.
+    *
+    * Resolved by [[BucketedTables.resolve]] over the documents parquet:
+    * a fresh catalog table is served, fresh files from a PREVIOUS
+    * session (the in-memory catalog forgets tables across sessions
+    * while the warehouse directory persists) are re-registered as an
+    * EXTERNAL bucketed table, and anything else is rebuilt MANAGED.
+    * The entry's release drops the table AND its files. Same-session
+    * corpus mutation still requires [[Substrates.invalidate]]. */
+  def bandIndexTable(spark: SparkSession, dir: String): String = {
+    val name = BucketedTables.tableName("graft_bands", dir)
+    BucketedTables.resolve(spark, dir, "dedup.bandIndex") {
+      val loc = BucketedTables.location(spark, name)
+      BucketedTables.Form(loc, parts = Seq("."), layout = "bands-v1",
+        input = java.nio.file.Paths.get(dir, "documents.parquet"),
+        table = Some(BucketedTables.Table(name,
+          s"""CREATE TABLE $name (CorpusId BIGINT, band_id INT, band_val STRING, ShC ARRAY<STRING>)
+             |USING PARQUET
+             |CLUSTERED BY (band_id, band_val) SORTED BY (band_id, band_val)
+             |INTO $BandIndexBuckets BUCKETS
+             |LOCATION '${loc.toUri}'""".stripMargin)))
+    } { _ =>
+      corpusBandIndex(spark, dir)
+        .write.mode("overwrite")
+        .bucketBy(BandIndexBuckets, "band_id", "band_val")
+        .sortBy("band_id", "band_val")
+        .saveAsTable(name)
+    }
     name
   }
-
-  /** Build-if-absent: registry entry → catalog table → files already on
-    * disk from a PREVIOUS session (re-registered as an external
-    * bucketed table — the in-memory catalog can't remember it, but the
-    * bucketed layout is still there) → build, via the shared
-    * [[BucketedTables.resolve]] ladder. EVERY branch is guarded by the
-    * `_corpus_fingerprint` check — catalog hit included, since a
-    * sibling session sharing the catalog could otherwise adopt a table
-    * built from a corpus refreshed since; a stale index is rebuilt,
-    * never adopted. The ladder runs under [[bandBuildLock]] inside
-    * the registry's key lock. The entry's release drops the table AND
-    * its files (managed tables drop files with the table; EXTERNAL
-    * re-registrations do not); the name is a function of the dir, so
-    * the entry stays valid across rebuilds.
-    * Same-session corpus mutation still requires
-    * [[Substrates.invalidate]]. */
-  def bandIndexTable(spark: SparkSession, dir: String): String =
-    Substrates[String](spark, dir, "dedup.bandIndex")(n =>
-      bandBuildLock.synchronized(BucketedTables.dropWithFiles(spark, n))) {
-      bandBuildLock.synchronized {
-        val name = bandIndexName(dir)
-        val loc = BucketedTables.location(spark, name)
-        BucketedTables.resolve(spark, name,
-          registerDdl =
-            s"""CREATE TABLE $name (CorpusId BIGINT, band_id INT, band_val STRING, ShC ARRAY<STRING>)
-               |USING PARQUET
-               |CLUSTERED BY (band_id, band_val) SORTED BY (band_id, band_val)
-               |INTO $BandIndexBuckets BUCKETS
-               |LOCATION '${loc.toUri}'""".stripMargin,
-          fingerprint = corpusFingerprint(dir),
-          build = () => buildBandIndex(spark, dir))
-      }
-    }
 
   /** Hard upper bound on label-propagation rounds — a runaway
     * backstop, NOT the convergence mechanism (the loop exits as soon

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 
 import graft.Substrates
 import graft.etl.Tables
-import graft.ops.BucketedTables.deleteRecursively
+import graft.ops.BucketedTables.Form
 
 /** Similarity search over the `embeddings` table (64-dim float
   * vectors): brute-force top-k cosine as the exact baseline and
@@ -604,8 +604,8 @@ object SimilarityOps {
 
   /** Build-if-absent for the PERSISTED flat-PQ index: `pqcodebook/`
     * (the M×K per-subspace codebook) and `pqcodes/` (vec_id, NormSq,
-    * Codes[M]) under their own fingerprinted base, mirroring
-    * [[ivfIndexPath]]'s freshness contract.
+    * Codes[M]) under their own base, a [[BucketedTables.Form]] over
+    * the embeddings parquet like [[ivfIndexPath]].
     *
     * Persisted rather than session-cached deliberately: round 7's
     * driver bench showed the cached-codes variant re-paying the full
@@ -615,32 +615,19 @@ object SimilarityOps {
     * codes on disk the worst case under eviction is a narrow parquet
     * read, the same degradation mode as the IVF lists, and a fresh
     * session reuses the index instead of re-training. */
-  def pqFlatIndexPath(spark: SparkSession, dir: String): String = {
-    indexDir(spark, dir, "similarity.pqFlatIndex")(ivfBuildLock.synchronized {
-      val base = indexBase(spark, dir, "pqflat")
-      val layoutFile = java.nio.file.Paths.get(base, "_pq_layout")
-      val fpFile = java.nio.file.Paths.get(base, "_corpus_fingerprint")
-      val complete = Seq("pqcodebook", "pqcodes").forall(d =>
-        java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/$d/_SUCCESS"))) &&
-        java.nio.file.Files.exists(layoutFile) &&
-        java.nio.file.Files.readString(layoutFile) == PqFlatLayoutVersion
-      val fresh = BucketedTables.fingerprintMatches(fpFile, corpusFingerprint(dir))
-      if (!(complete && fresh)) {
-        deleteRecursively(Paths.get(base))
-        val all = quantized(spark, dir)
-        pqCodebook(all).write.mode("overwrite").parquet(s"$base/pqcodebook")
-        all.select(col("vec_id"), col("NormSq"))
-          .join(pqAssign(pqSlices(all), spark.read.parquet(s"$base/pqcodebook"))
-            .groupBy(col("vec_id"))
-            .agg(expr("transform(array_sort(collect_list(struct(Sub, Cid))), x -> x.Cid)").as("Codes")),
-            "vec_id")
-          .write.mode("overwrite").parquet(s"$base/pqcodes")
-        java.nio.file.Files.writeString(layoutFile, PqFlatLayoutVersion)
-        java.nio.file.Files.writeString(fpFile, corpusFingerprint(dir))
-      }
-      base
-    })
-  }
+  def pqFlatIndexPath(spark: SparkSession, dir: String): String =
+    BucketedTables.resolve(spark, dir, "similarity.pqFlatIndex")(
+      Form(Paths.get(indexBase(spark, dir, "pqflat")), Seq("pqcodebook", "pqcodes"),
+        PqFlatLayoutVersion, embeddingsOf(dir))) { f =>
+      val all = quantized(spark, dir)
+      pqCodebook(all).write.mode("overwrite").parquet(s"${f.base}/pqcodebook")
+      all.select(col("vec_id"), col("NormSq"))
+        .join(pqAssign(pqSlices(all), spark.read.parquet(s"${f.base}/pqcodebook"))
+          .groupBy(col("vec_id"))
+          .agg(expr("transform(array_sort(collect_list(struct(Sub, Cid))), x -> x.Cid)").as("Codes")),
+          "vec_id")
+        .write.mode("overwrite").parquet(s"${f.base}/pqcodes")
+    }.base.toString
 
   /** The flat-PQ index for (session, dir): (codebook, codes) — codes
     * is (vec_id, NormSq, Codes[M]) with the exact norm kept alongside
@@ -918,7 +905,7 @@ object SimilarityOps {
     * cwd-relative literal (a query path must not impose a hidden
     * write-permission requirement on whatever directory the process
     * happens to start in). Build/delete mutations are serialized
-    * per-JVM ([[ivfBuildLock]]); pointing SPARK_GRAFT_IVF_DIR from
+    * per-JVM ([[BucketedTables]]' lock); pointing SPARK_GRAFT_IVF_DIR from
     * SEVERAL concurrent drivers at one root additionally needs
     * external coordination (build from one writer, or front the root
     * with a catalog) — same contract as any shared table location. */
@@ -940,12 +927,19 @@ object SimilarityOps {
     s"${ivfRoot(spark)}/${slug}_${h}_$suffix"
   }
 
-  private def ivfBase(spark: SparkSession, dir: String, nCentroids: Int): String =
-    indexBase(spark, dir, s"k$nCentroids")
+  /** The embeddings parquet every vector index of `dir` derives from. */
+  private def embeddingsOf(dir: String) = Paths.get(dir, "embeddings.parquet")
 
-  /** Build (or REBUILD) the persisted IVF index for (dir, K) and
-    * return its base path — the explicit build API (round 4 built the
-    * index only as a side effect of the first query). Writes:
+  /** Versions the on-disk IVF layout; bump on any encoding change. */
+  private val IvfLayoutVersion = "ivf-v1"
+
+  /** Build-if-absent for the persisted IVF index of (dir, K): reuse the
+    * session's registered index, else an index already persisted on
+    * disk (cross-session reuse — the point of persistence; callers
+    * that mutate the corpus in place must [[Substrates.invalidate]],
+    * which deletes it), else build. A [[BucketedTables.Form]] over the
+    * embeddings parquet, so a refreshed corpus rebuilds instead of
+    * silently probing stale lists. Writes:
     *   `<base>/codebook/` — the K-row k-means codebook (parquet);
     *   `<base>/lists/`    — the inverted lists `(vec_id, Q, NormSq)`
     *                        written `partitionBy("Cid")`, so each
@@ -958,100 +952,26 @@ object SimilarityOps {
     * PlanSpec). At 100 TB this is exactly the BucketSpec trade: one
     * shuffle+write at build time, partition-pruned I/O on every probe
     * after. */
-  def buildIvfIndex(spark: SparkSession, dir: String,
-                    nCentroids: Int = DefaultNCentroids): String = {
-    val base = writeIvfIndex(spark, dir, nCentroids)
-    indexDir(spark, dir, "similarity.ivfIndex", nCentroids)(base)
-  }
-
-  private def writeIvfIndex(spark: SparkSession, dir: String,
-                            nCentroids: Int): String = ivfBuildLock.synchronized {
-    val all = quantized(spark, dir)
-    val base = ivfBase(spark, dir, nCentroids)
-    // wipe the whole base first: per-subdir overwrite alone would let
-    // OPTIONAL layers built lazily on top of the index (the PQ codes
-    // of [[ivfPqIndexPath]]) survive a corpus-change rebuild and be
-    // silently probed stale against the new codebook/lists
-    deleteRecursively(Paths.get(base))
-    kmeansCentroids(all, nCentroids)
-      .write.mode("overwrite").parquet(s"$base/codebook")
-    // assignment against the PERSISTED codebook (read it back rather
-    // than re-running the Lloyd rounds a second time), size-routed:
-    // below the measured crossover this IS the flat take-1 (gate
-    // hashes unchanged); past it the hierarchical route wins 9.2×
-    // (PERFORMANCE.md round 10) and an IVF list built from the routed
-    // assignment is approximate exactly as the probe side already is
-    assignAuto(all, spark.read.parquet(s"$base/codebook"))
-      .write.mode("overwrite").partitionBy("Cid").parquet(s"$base/lists")
-    // commit markers last (lists/_SUCCESS, then the fingerprint): a
-    // crash before either leaves a base the next build-if-absent reads
-    // as stale and rebuilds (IndexMaintenanceSpec)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(base, "_corpus_fingerprint"),
-      corpusFingerprint(dir))
-    base
-  }
-
-  /** Fingerprint of the embeddings parquet an index was built from
-    * (names+sizes+mtimes) — checked before cross-session reuse of an
-    * on-disk index, so a refreshed corpus REBUILDS instead of silently
-    * probing stale lists ([[Substrates.invalidate]] can only cover
-    * indexes built in ITS session; its entries are per-session). */
-  private def corpusFingerprint(dir: String): String = {
-    val p = java.nio.file.Paths.get(dir, "embeddings.parquet")
-    def one(f: java.nio.file.Path) =
-      s"${f.getFileName}:${java.nio.file.Files.size(f)}:${java.nio.file.Files.getLastModifiedTime(f).toMillis}"
-    val s =
-      if (java.nio.file.Files.isDirectory(p)) {
-        import scala.jdk.CollectionConverters._
-        val listing = java.nio.file.Files.list(p)
-        try listing.iterator().asScala.toSeq.sortBy(_.toString).map(one).mkString("|")
-        finally listing.close()
-      } else one(p)
-    graft.functions.TextExpressions.md5Hex(s)
-  }
-
-  /** Serializes every index-directory mutation ([[buildIvfIndex]],
-    * [[ivfIndexPath]]'s build-if-absent and a registry release's
-    * delete): since round 5 FOUR queries share
-    * one index and the Verify harness runs them concurrently, and two
-    * racing writers (a forced build beside a first touch) would both
-    * write into the SAME directory mid-overwrite. Taken inside the
-    * registry's key lock, never around a registry call that may
-    * build or release an index entry (see [[Substrates]]).
-    * JVM-local by design: the index dir is per-driver state (keyed
-    * under this session's warehouse dir unless SPARK_GRAFT_IVF_DIR
-    * points several drivers at one root — coordinating THAT is an
-    * external-catalog job, out of scope here and called out in the
-    * env var's docs). */
-  private val ivfBuildLock = new Object
-
-  /** Build-if-absent: reuse the session's registered index, else an
-    * index already persisted on disk (cross-session reuse — the point
-    * of persistence; callers that mutate the corpus in place must
-    * [[Substrates.invalidate]], which deletes it), else build. A hit
-    * takes no lock; a miss builds under [[ivfBuildLock]] inside the
-    * registry's key lock. */
   def ivfIndexPath(spark: SparkSession, dir: String,
                    nCentroids: Int = DefaultNCentroids): String =
-    indexDir(spark, dir, "similarity.ivfIndex", nCentroids)(ivfBuildLock.synchronized {
-      val base = ivfBase(spark, dir, nCentroids)
-      val complete = Seq("codebook", "lists").forall(d =>
-        java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/$d/_SUCCESS")))
-      val fresh = BucketedTables.fingerprintMatches(
-        Paths.get(base, "_corpus_fingerprint"), corpusFingerprint(dir))
-      if (complete && fresh) base else writeIvfIndex(spark, dir, nCentroids)
-    })
+    ivfIndex(spark, dir, nCentroids).base.toString
 
-  /** Register the persisted index dir `base` in [[Substrates]]; its
-    * release deletes the dir under [[ivfBuildLock]]. The path is a
-    * function of the key, so an entry stays valid across rebuilds;
-    * registering after a rebuild outside the key lock keeps an
-    * existing entry. */
-  private def indexDir(spark: SparkSession, dir: String, kind: String,
-                       params: Any*)(base: => String): String =
-    Substrates[String](spark, dir, kind, params: _*)(b =>
-      ivfBuildLock.synchronized(deleteRecursively(Paths.get(b))))(base)
+  private def ivfIndex(spark: SparkSession, dir: String, nCentroids: Int): Form =
+    BucketedTables.resolve(spark, dir, "similarity.ivfIndex", nCentroids)(
+      Form(Paths.get(indexBase(spark, dir, s"k$nCentroids")), Seq("codebook", "lists"),
+        IvfLayoutVersion, embeddingsOf(dir))) { f =>
+      val all = quantized(spark, dir)
+      kmeansCentroids(all, nCentroids)
+        .write.mode("overwrite").parquet(s"${f.base}/codebook")
+      // assignment against the PERSISTED codebook (read it back rather
+      // than re-running the Lloyd rounds a second time), size-routed:
+      // below the measured crossover this IS the flat take-1 (gate
+      // hashes unchanged); past it the hierarchical route wins 9.2×
+      // (PERFORMANCE.md round 10) and an IVF list built from the routed
+      // assignment is approximate exactly as the probe side already is
+      assignAuto(all, spark.read.parquet(s"${f.base}/codebook"))
+        .write.mode("overwrite").partitionBy("Cid").parquet(s"${f.base}/lists")
+    }
 
   /** The probe set (vec_id < [[ProbeIdMax]]) in routing shape. */
   private def probeVectors(spark: SparkSession, dir: String): DataFrame =
@@ -1131,6 +1051,17 @@ object SimilarityOps {
       .transform(graft.etl.Summaries.smallSort(_, col("QId"), col("Rank")))
   }
 
+  /** Versions the on-disk PQ encoding; bump on any layout change. */
+  private val PqLayoutVersion = "residual-v1"
+
+  /** Lists rows with their residual against the assigned coarse
+    * centroid, shaped for the PQ machinery (residual as `Q`). */
+  private def listResidualsAsQ(lists: DataFrame, coarse: DataFrame): DataFrame =
+    lists.join(broadcast(coarse.select(col("Cid").as("CCid"), col("CQ"))),
+        lists("Cid") === col("CCid"))
+      .withColumn("R", expr("zip_with(Q, CQ, (a, b) -> a - b)"))
+      .select(col("vec_id"), col("R").as("Q"))
+
   /** Build-if-absent for the PQ layer of the persisted IVF index —
     * the compressed-codes half of FULL IVFADC (Jégou et al. 2011):
     * codes encode the per-list RESIDUALS (v − assigned coarse
@@ -1143,62 +1074,41 @@ object SimilarityOps {
     * rides the route) to the LUT sum over the residual codebook.
     * Since the exact rerank confines PQ error to candidate SELECTION,
     * the recall contract (ivfpq == ivf-flat at verify scale) is
-    * layout-independent. A `_pq_layout` marker versions the encoding:
+    * layout-independent. [[PqLayoutVersion]] versions the encoding:
     * on-disk codes from an older layout rebuild instead of being
-    * silently scored with the wrong decoder. On top of
-    * `<base>/codebook` +
-    * `<base>/lists` this adds:
-    *   `<base>/pqcodebook/` — the M×K per-subspace PQ codebook;
-    *   `<base>/pqcodes/`    — `(vec_id, NormSq, Codes[M])` written
-    *                          `partitionBy("Cid")`, so a routed probe
-    *                          reads ONLY its lists' codes — the same
-    *                          partition-pruned I/O as the flat lists,
-    *                          at ~25× less bytes per routed row.
-    * Lazy by design: IVF-flat queries ([[ivfTopk]], [[kmeansProfile]],
-    * the semantic-dedup family) never pay the PQ encode. Freshness
-    * rides the base index's fingerprint: [[buildIvfIndex]] wipes the
-    * whole base before a rebuild, so stale codes cannot outlive a
-    * corpus change; [[Substrates.invalidate]] deletes the base
-    * recursively, codes included. */
-  /** Versions the on-disk PQ encoding; bump on any layout change. */
-  private val PqLayoutVersion = "residual-v1"
-
-  /** Lists rows with their residual against the assigned coarse
-    * centroid, shaped for the PQ machinery (residual as `Q`). */
-  private def listResidualsAsQ(lists: DataFrame, coarse: DataFrame): DataFrame =
-    lists.join(broadcast(coarse.select(col("Cid").as("CCid"), col("CQ"))),
-        lists("Cid") === col("CCid"))
-      .withColumn("R", expr("zip_with(Q, CQ, (a, b) -> a - b)"))
-      .select(col("vec_id"), col("R").as("Q"))
-
+    * silently scored with the wrong decoder. Under `<base>/pq` of the
+    * IVF index ([[ivfIndexPath]]) this writes:
+    *   `pqcodebook/` — the M×K per-subspace PQ codebook;
+    *   `pqcodes/`    — `(vec_id, NormSq, Codes[M])` written
+    *                   `partitionBy("Cid")`, so a routed probe reads
+    *                   ONLY its lists' codes — the same
+    *                   partition-pruned I/O as the flat lists, at ~25×
+    *                   less bytes per routed row.
+    * and returns that `pq` dir. Lazy by design: IVF-flat queries
+    * ([[ivfTopk]], [[kmeansProfile]], the semantic-dedup family) never
+    * pay the PQ encode. A form derived from the IVF index's
+    * ([[BucketedTables.Form.derived]]): its input is the base's
+    * manifest, so a rebuilt base makes the codes stale, and a base
+    * rebuild or [[Substrates.invalidate]] deletes them with the base. */
   def ivfPqIndexPath(spark: SparkSession, dir: String,
-                     nCentroids: Int = DefaultNCentroids): String = {
-    val base = ivfIndexPath(spark, dir, nCentroids)
-    val layoutFile = java.nio.file.Paths.get(base, "_pq_layout")
-    def built = Seq("pqcodebook", "pqcodes").forall(d =>
-      java.nio.file.Files.exists(java.nio.file.Paths.get(s"$base/$d/_SUCCESS"))) &&
-      java.nio.file.Files.exists(layoutFile) &&
-      java.nio.file.Files.readString(layoutFile) == PqLayoutVersion
-    if (!built) ivfBuildLock.synchronized {
-      if (!built) {
-        // build from the LISTS, the index's ground truth. The codebook
-        // trains on the lists' RESIDUALS (deterministic Lloyd, so
-        // rebuilds over the same lists are bit-identical).
-        val lists = spark.read.parquet(s"$base/lists")
-        val coarse = spark.read.parquet(s"$base/codebook")
-        val resid = listResidualsAsQ(lists, coarse)
-        pqCodebook(resid).write.mode("overwrite").parquet(s"$base/pqcodebook")
-        lists.select(col("vec_id"), col("NormSq"), col("Cid"))
-          .join(pqAssign(pqSlices(resid), spark.read.parquet(s"$base/pqcodebook"))
-            .groupBy(col("vec_id"))
-            .agg(expr("transform(array_sort(collect_list(struct(Sub, Cid))), x -> x.Cid)").as("Codes")),
-            "vec_id")
-          .write.mode("overwrite").partitionBy("Cid").parquet(s"$base/pqcodes")
-        java.nio.file.Files.writeString(layoutFile, PqLayoutVersion)
-      }
-    }
-    base
-  }
+                     nCentroids: Int = DefaultNCentroids): String =
+    BucketedTables.resolve(spark, dir, "similarity.ivfPqIndex", nCentroids)(
+      ivfIndex(spark, dir, nCentroids).derived("pq", Seq("pqcodebook", "pqcodes"),
+        PqLayoutVersion)) { f =>
+      // build from the LISTS, the index's ground truth. The codebook
+      // trains on the lists' RESIDUALS (deterministic Lloyd, so
+      // rebuilds over the same lists are bit-identical).
+      val ivf = f.input.getParent
+      val lists = spark.read.parquet(s"$ivf/lists")
+      val resid = listResidualsAsQ(lists, spark.read.parquet(s"$ivf/codebook"))
+      pqCodebook(resid).write.mode("overwrite").parquet(s"${f.base}/pqcodebook")
+      lists.select(col("vec_id"), col("NormSq"), col("Cid"))
+        .join(pqAssign(pqSlices(resid), spark.read.parquet(s"${f.base}/pqcodebook"))
+          .groupBy(col("vec_id"))
+          .agg(expr("transform(array_sort(collect_list(struct(Sub, Cid))), x -> x.Cid)").as("Codes")),
+          "vec_id")
+        .write.mode("overwrite").partitionBy("Cid").parquet(s"${f.base}/pqcodes")
+    }.base.toString
 
   /** IVF-PQ approximate top-k — the composed ANN architecture both
     * halves of which exist above: [[ivfTopk]]'s coarse router prunes
@@ -1232,13 +1142,14 @@ object SimilarityOps {
                 nCentroids: Int = DefaultNCentroids,
                 nprobe: Int = DefaultNProbe): DataFrame = {
     import spark.implicits._
-    val base = ivfPqIndexPath(spark, dir, nCentroids)
+    val pq = ivfPqIndexPath(spark, dir, nCentroids)
+    val base = ivfIndexPath(spark, dir, nCentroids)
     val coarse = spark.read.parquet(s"$base/codebook")
-    val codes = spark.read.parquet(s"$base/pqcodes")
+    val codes = spark.read.parquet(s"$pq/pqcodes")
     val probes = probeVectors(spark, dir)
     val probeRows = probes.collect()
     val lutByQid = pqLutRows(probeRows,
-      spark.read.parquet(s"$base/pqcodebook")
+      spark.read.parquet(s"$pq/pqcodebook")
         .select(col("Sub"), col("Cid"), col("CQ")).collect()).toMap
     // per-probe routing pairs carrying that probe's residual-space LUT
     // AND its exact coarse term dot(q, c) — IVFADC's approx dot is

@@ -70,22 +70,19 @@ class BandIndexSpec extends SparkSpec {
     copyTree(loc, stash)
     Substrates.invalidate(spark, dir)
     copyTree(stash, Files.createDirectories(loc))
-    // fresh corpus fingerprint matches → re-registered as EXTERNAL, no rebuild
+    // the manifest matches the corpus → re-registered as EXTERNAL, no rebuild
     assert(DedupOps.bandIndexTable(spark, dir) === name)
     assert(tableType(name) === "EXTERNAL")
-    // a fingerprint that is not exactly the corpus md5 is stale: a torn
-    // (0-byte) write, and a leftover line after the md5
-    val fp = loc.resolve("_corpus_fingerprint")
-    val md5 = Files.readString(stash.resolve("_corpus_fingerprint"))
-    Seq("", s"$md5\nbatches:3").foreach { torn =>
-      Substrates.invalidate(spark, dir)
-      copyTree(stash, Files.createDirectories(loc))
-      Files.writeString(fp, torn)
-      assert(DedupOps.bandIndexTable(spark, dir) === name)
-      assert(tableType(name) === "MANAGED", s"index fingerprinted '$torn' was adopted instead of rebuilt")
-      assert(Files.readString(fp) === md5)
-    }
-    // corpus changes on disk → fingerprint mismatch → REBUILT (managed),
+    // a crash between the table's files and its manifest (the manifest
+    // missing) is rebuilt MANAGED, never adopted
+    Substrates.invalidate(spark, dir)
+    copyTree(stash, Files.createDirectories(loc))
+    Files.delete(loc.resolve(graft.ops.BucketedTables.Manifest))
+    assert(DedupOps.bandIndexTable(spark, dir) === name)
+    assert(tableType(name) === "MANAGED", "an index with no manifest was adopted instead of rebuilt")
+    assert(Files.readString(loc.resolve(graft.ops.BucketedTables.Manifest)) ===
+      Files.readString(stash.resolve(graft.ops.BucketedTables.Manifest)))
+    // corpus changes on disk → manifest mismatch → REBUILT (managed),
     // and the matches reflect the NEW corpus, not the stale index
     Substrates.invalidate(spark, dir) // simulate session end: table+files+memos gone
     copyTree(stash, Files.createDirectories(loc)) // ...but the old session's files remain
@@ -113,7 +110,7 @@ class BandIndexSpec extends SparkSpec {
     // corpus refreshed on disk, NO invalidation: the catalog still
     // holds the old table. A sibling session (shared catalog, its own
     // memo — exactly what two concurrent jobs on one metastore look
-    // like) must hit the catalog, see the stale fingerprint, and
+    // like) must hit the catalog, see the stale manifest, and
     // rebuild; adopting the hit would resurrect doc 1's old shingles.
     writeDocs(dir, Seq((1L, "totally different content words"), (2L, "unrelated words here now"),
       (9L, "alpha beta gamma delta")))
@@ -124,23 +121,6 @@ class BandIndexSpec extends SparkSpec {
     assert(matches.isEmpty, s"stale catalog hit was adopted: ${matches.mkString(",")}")
     Substrates.invalidate(sibling, dir)
     Substrates.invalidate(spark, dir)
-  }
-
-  test("a fingerprint file is fresh only when it holds exactly the corpus md5") {
-    import java.nio.file.Files
-    import graft.ops.BucketedTables
-    val md5 = graft.functions.TextExpressions.md5Hex("corpus")
-    val f = tempDir("graft_fingerprint").resolve("_corpus_fingerprint")
-    assert(!BucketedTables.fingerprintMatches(f, md5), "missing file")
-    Files.writeString(f, md5)
-    assert(BucketedTables.fingerprintMatches(f, md5), "exact md5")
-    // every other content reads stale: a torn write, a trailing
-    // newline, a leftover second line, another corpus's md5
-    Seq("", md5.take(16), s"$md5\n", s"$md5\nbatches:3",
-        graft.functions.TextExpressions.md5Hex("other")).foreach { c =>
-      Files.writeString(f, c)
-      assert(!BucketedTables.fingerprintMatches(f, md5), s"served a fingerprint '$c'")
-    }
   }
 
   test("invalidation drops the persisted index; the next query rebuilds it") {

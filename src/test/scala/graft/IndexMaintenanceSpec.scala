@@ -3,73 +3,70 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.functions._
-import graft.ops.SimilarityOps
+import graft.ops.{BucketedTables, SimilarityOps}
 
-/** Crash safety of the persisted IVF index: every state a build can
-  * leave before its commit markers, and every fingerprint that is not
-  * exactly the corpus md5, is rebuilt by the next build-if-absent
-  * instead of being served. */
+/** Crash safety of the persisted vector indexes, end to end: for the
+  * IVF index, its IVF-PQ layer and the flat-PQ index, a crash between
+  * the parts and the manifest (the manifest deleted) is rebuilt by the
+  * next session instead of being served, and the rebuild is
+  * bit-identical. Every other stale state is covered once, over a
+  * trivial writer, by PersistedIndexSpec; the band index by
+  * BandIndexSpec. */
 class IndexMaintenanceSpec extends SparkSpec {
 
-  private def copyCorpus(src: String, table: String, dst: Path,
-                         filter: org.apache.spark.sql.Column): Unit =
-    spark.read.parquet(s"$src/$table.parquet").filter(filter)
+  /** A 400-vector copy of the fixture's embeddings. */
+  private def smallCorpus(name: String): String = {
+    val tmp = tempDir(name).toAbsolutePath
+    spark.read.parquet(s"$sfDir/embeddings.parquet").filter(col("vec_id") < 400)
       .coalesce(1).write.mode("overwrite")
-      .parquet(dst.resolve(s"$table.parquet").toString)
+      .parquet(tmp.resolve("embeddings.parquet").toString)
+    tmp.toString
+  }
 
-  test("half-built IVF index states (crash before a commit marker) rebuild instead of being served") {
-    // r16 verdict #5 (closed r18): the index build paths write their
-    // commit markers LAST (lists/_SUCCESS, then _corpus_fingerprint;
-    // pq layers then _pq_layout), so every pre-marker crash state
-    // must be DETECTED by the next session's build-if-absent and
-    // rebuilt, never probed. Simulate the two coarse-index windows by
-    // deleting the marker a crash would have left unwritten.
-    val tmp = tempDir("graft_ivf_crash").toAbsolutePath
-    copyCorpus(sfDir, "embeddings", tmp, col("vec_id") < 400)
-    val dir = tmp.toString
+  private def rows(path: String): Seq[String] =
+    spark.read.parquet(path).collect().map(_.toString).toSeq.sorted
+
+  /** Delete `base`'s manifest, leave a sentinel beside it, and check that
+    * `resolve` (in a fresh session) rebuilds: same base, the sentinel
+    * gone with the old files, a new manifest, and `parts` unchanged. */
+  private def rebuildsWithoutManifest(base: String, parts: Seq[String])(resolve: => String): Unit = {
+    val before = parts.map(p => rows(s"$base/$p"))
+    val manifest = Paths.get(base, BucketedTables.Manifest)
+    val sentinel = Paths.get(base, "_sentinel")
+    Files.delete(manifest)
+    Files.writeString(sentinel, "")
+    assert(resolve === base)
+    assert(!Files.exists(sentinel), s"an index with no manifest was served: $base")
+    assert(Files.exists(manifest))
+    assert(parts.map(p => rows(s"$base/$p")) === before, "the rebuild is not bit-identical")
+  }
+
+  test("the IVF index rebuilds, bit-identical, after a crash before its manifest") {
+    val dir = smallCorpus("graft_ivf_crash")
     val base = SimilarityOps.ivfIndexPath(spark, dir)
-    val fp = Paths.get(base, "_corpus_fingerprint")
-    val expected = Files.readString(fp)
-    // window 1: codebook+lists committed, crash before the fingerprint
-    Files.delete(fp)
-    val s2 = spark.newSession()
-    assert(SimilarityOps.ivfIndexPath(s2, dir) === base)
-    assert(Files.readString(fp) === expected) // rebuilt + re-fingerprinted
-    // window 2: crash mid lists write (no job commit marker)
-    Files.delete(Paths.get(base, "lists", "_SUCCESS"))
-    val s3 = spark.newSession()
-    assert(SimilarityOps.ivfIndexPath(s3, dir) === base)
-    assert(Files.exists(Paths.get(base, "lists", "_SUCCESS")))
-    assert(Files.readString(fp) === expected)
-    // a fingerprint that is not exactly the corpus md5 is stale: a
-    // torn (0-byte) write, and a leftover line after the md5
-    Seq("", s"$expected\nbatches:3").foreach { torn =>
-      Files.writeString(fp, torn)
-      assert(SimilarityOps.ivfIndexPath(spark.newSession(), dir) === base)
-      assert(Files.readString(fp) === expected, s"served an index fingerprinted '$torn'")
+    rebuildsWithoutManifest(base, Seq("codebook", "lists")) {
+      SimilarityOps.ivfIndexPath(spark.newSession(), dir)
     }
   }
 
-  test("the flat-PQ index rebuilds on a fingerprint or layout that is not exactly its own") {
-    // same freshness contract as the IVF index: _corpus_fingerprint and
-    // _pq_layout are each compared whole, so a missing, torn or
-    // leftover-line fingerprint, or another layout version, rebuilds
-    val tmp = tempDir("graft_pqflat_stale").toAbsolutePath
-    copyCorpus(sfDir, "embeddings", tmp, col("vec_id") < 400)
-    val dir = tmp.toString
-    val base = SimilarityOps.pqFlatIndexPath(spark, dir)
-    val fp = Paths.get(base, "_corpus_fingerprint")
-    val layout = Paths.get(base, "_pq_layout")
-    val expected = Files.readString(fp)
-    val version = Files.readString(layout)
-    Seq("", s"$expected\nbatches:3").foreach { torn =>
-      Files.writeString(fp, torn)
-      assert(SimilarityOps.pqFlatIndexPath(spark.newSession(), dir) === base)
-      assert(Files.readString(fp) === expected, s"served a flat-PQ index fingerprinted '$torn'")
+  test("the IVF-PQ layer rebuilds after a crash before its manifest, over the same IVF base") {
+    val dir = smallCorpus("graft_ivfpq_crash")
+    val pq = SimilarityOps.ivfPqIndexPath(spark, dir)
+    val base: Path = Paths.get(SimilarityOps.ivfIndexPath(spark, dir))
+    assert(Paths.get(pq).getParent === base, "the PQ layer does not live under its IVF base")
+    val baseSentinel = base.resolve("_sentinel")
+    Files.writeString(baseSentinel, "")
+    rebuildsWithoutManifest(pq, Seq("pqcodebook", "pqcodes")) {
+      SimilarityOps.ivfPqIndexPath(spark.newSession(), dir)
     }
-    Files.writeString(layout, s"$version-old")
-    assert(SimilarityOps.pqFlatIndexPath(spark.newSession(), dir) === base)
-    assert(Files.readString(layout) === version, "served a flat-PQ index of another layout")
-    assert(Files.exists(Paths.get(base, "pqcodes", "_SUCCESS")))
+    assert(Files.exists(baseSentinel), "the IVF base was rebuilt for its PQ layer")
+  }
+
+  test("the flat-PQ index rebuilds, bit-identical, after a crash before its manifest") {
+    val dir = smallCorpus("graft_pqflat_crash")
+    val base = SimilarityOps.pqFlatIndexPath(spark, dir)
+    rebuildsWithoutManifest(base, Seq("pqcodebook", "pqcodes")) {
+      SimilarityOps.pqFlatIndexPath(spark.newSession(), dir)
+    }
   }
 }

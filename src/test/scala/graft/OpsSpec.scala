@@ -493,13 +493,14 @@ class OpsSpec extends SparkSpec {
     // vectors: decode(codes) should recover most of what the coarse
     // centroid misses. Decoded driver-side from the persisted tables:
     // v̂ = c_assigned + concat_m pqCQ(m, code_m)
-    val base = SimilarityOps.ivfPqIndexPath(spark, sfDir)
+    val pq = SimilarityOps.ivfPqIndexPath(spark, sfDir)
+    val base = SimilarityOps.ivfIndexPath(spark, sfDir)
     val coarse = spark.read.parquet(s"$base/codebook").collect()
       .map(r => r.getAs[Long]("Cid") -> r.getAs[scala.collection.Seq[Long]]("CQ").toVector).toMap
-    val pqCent = spark.read.parquet(s"$base/pqcodebook").collect()
+    val pqCent = spark.read.parquet(s"$pq/pqcodebook").collect()
       .map(r => (r.getAs[Int]("Sub"), r.getAs[Long]("Cid")) ->
         r.getAs[scala.collection.Seq[Long]]("CQ").toVector).toMap
-    val codes = spark.read.parquet(s"$base/pqcodes").collect()
+    val codes = spark.read.parquet(s"$pq/pqcodes").collect()
       .map(r => r.getAs[Long]("vec_id") ->
         r.getAs[scala.collection.Seq[Long]]("Codes").toVector).toMap
     val lists = spark.read.parquet(s"$base/lists").collect()

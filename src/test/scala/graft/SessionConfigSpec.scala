@@ -14,8 +14,9 @@ import scala.jdk.CollectionConverters._
   * shared shingle-hash seam (`shingleHashCol`): make the wrong
   * version UNWRITABLE, not merely discouraged. The same scan keeps
   * [[GraftExtensions]] the one place a native function is
-  * registered, and `graft.streaming.OneShot` the one place a stream
-  * twin stages, drains and cleans up. Three more scans keep every
+  * registered, `graft.streaming.OneShot` the one place a stream
+  * twin stages, drains and cleans up, and `graft.ops.BucketedTables`
+  * the one place a persisted index is checked and committed. Three more scans keep every
   * public or `private[graft]` engine entry point reachable from a
   * query, pipeline, tool or benchmark, not only from its own test
   * (test seams on live code are exempt by name, with a reason), every
@@ -73,6 +74,26 @@ class SessionConfigSpec extends SparkSpec {
       }
     assert(offenders.isEmpty,
       s"one-shot scaffolding outside OneShot: ${offenders.mkString(", ")}")
+  }
+
+  test("BucketedTables is the ONLY persisted-index resolve site under src/main") {
+    // one resolve path: a part's _SUCCESS, the manifest and the input
+    // fingerprint (a read of a file's mtime) are read and written by
+    // the form alone, so no index family grows its own ladder of
+    // "complete, fresh, else rebuild" beside it. Comments are blanked:
+    // a mention is no check.
+    val forbidden = Seq("_SUCCESS", graft.ops.BucketedTables.Manifest,
+      "getLastModifiedTime|\\.lastModified\\(").map(_.r.unanchored)
+    val (form, rest) = mainSources.partition(_.getFileName.toString == "BucketedTables.scala")
+    def found(p: Path) = {
+      val src = blankComments(new String(Files.readAllBytes(p), "UTF-8"), python = false)
+      forbidden.filter(_.findFirstIn(src).isDefined)
+    }
+    assert(form.size === 1 && found(form.head) === forbidden,
+      s"the scan's markers are not all in the form: ${form.mkString(", ")}")
+    val offenders = rest.flatMap(p => found(p).map(f => s"$p: $f"))
+    assert(offenders.isEmpty,
+      s"persisted-index checks outside BucketedTables: ${offenders.mkString(", ")}")
   }
 
   test("SparkSpec.tempDir is the ONLY temp-dir site under src/test") {
