@@ -40,8 +40,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * The two samples are INTERLEAVED (full pass 1 over all queries, then
   * full pass 2) rather than back-to-back: round 2 recorded 15.8 s /
   * 9.4 s minimums for two queries ADJACENT in run order whose
-  * steady-state cost is 1.4 s / 0.5 s (BenchOne repetitions,
-  * PERFORMANCE.md round 3) — a sustained stall window can cover both
+  * steady-state cost is 1.4 s / 0.5 s (repeated runs, PERFORMANCE.md
+  * round 3; reproduce with `JobProfileProbe <dir> <q> N`) — a
+  * sustained stall window can cover both
   * back-to-back runs of one query, but not the same query in two
   * passes separated by the whole suite. All raw samples are reported
   * in "raw" so stall frequency stays visible across rounds; a query

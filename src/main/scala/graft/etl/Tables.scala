@@ -175,40 +175,6 @@ object Tables {
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
-  /** name → declared schema, for source-generic reads ([[via]]). */
-  val schemas: Map[String, StructType] = Map(
-    "region" -> regionSchema, "nation" -> nationSchema,
-    "customer" -> customerSchema, "supplier" -> supplierSchema,
-    "part" -> partSchema, "orders" -> ordersSchema,
-    "lineitem" -> lineitemSchema, "events" -> eventsRawSchema,
-    "documents" -> documentsSchema, "embeddings" -> embeddingsSchema)
-
-  /** Read a named table through any pluggable [[graft.sources.TabularSource]]
-    * (S1 seam): `path` is `dir/name.ext` with the source's own
-    * extension. The parquet readers below are `via(ParquetSource, ...)`
-    * specialized for the driver testdata layout.
-    *
-    * Events via parquet take the SAME encoding sniff as [[eventsRaw]]
-    * and come back in the canonical raw shape (`ts` = nanos long) —
-    * the schemas-map LongType declaration alone would silently misread
-    * a timestamp[us] fixture (the round-6 1970-collapse, at this seam).
-    * Non-parquet sources keep the declared contract: their files store
-    * the raw long.
-    *
-    * Kept with no engine caller: it is the reference's Extract step
-    * (S1, `pd.read_excel`, etl.py:44-54; SURVEY.md:119). */
-  def via(source: graft.sources.TabularSource, spark: SparkSession,
-          dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.${source.name}"
-    if (name == "events" && source.name == "parquet")
-      eventsTsType(spark, path) match {
-        case LongType => source.read(spark, path, eventsRawSchema)
-        case t => source.read(spark, path, eventsSchemaWith(t))
-          .withColumn("ts", tsToNanos(col("ts")))
-      }
-    else source.read(spark, path, schemas(name))
-  }
-
   private def read(spark: SparkSession, dir: String, name: String, schema: StructType): DataFrame =
     spark.read.schema(schema).parquet(s"$dir/$name.parquet")
 

@@ -30,20 +30,12 @@ import org.apache.spark.sql.types._
 object Transactions {
 
   /** Raw reference-shaped transactions (pre-clean). ref: etl.py:44-54. */
-  def raw(spark: SparkSession, dir: String): DataFrame =
-    rawFrom(
-      Tables.lineitem(spark, dir), Tables.orders(spark, dir),
-      Tables.customer(spark, dir), Tables.nation(spark, dir),
-      Tables.part(spark, dir))
-
-  /** Source-agnostic assembly: the same reference-shaped projection
-    * over ANY five input frames with the star-schema columns — the
-    * pipeline half of the S1 source seam (the frames may come from
-    * parquet, CSV, or an Excel connector via Tables.via; SourcesSpec
-    * proves parquet- and CSV-sourced pipelines agree byte-for-byte). */
-  def rawFrom(l: DataFrame, o: DataFrame, c: DataFrame,
-              nation: DataFrame, p: DataFrame): DataFrame = {
-    val n = broadcast(nation)
+  def raw(spark: SparkSession, dir: String): DataFrame = {
+    val l = Tables.lineitem(spark, dir)
+    val o = Tables.orders(spark, dir)
+    val c = Tables.customer(spark, dir)
+    val n = broadcast(Tables.nation(spark, dir))
+    val p = Tables.part(spark, dir)
     l.join(o, l("l_orderkey") === o("o_orderkey"))
       .join(c, o("o_custkey") === c("c_custkey"))
       .join(n, c("c_nationkey") === n("n_nationkey"))

@@ -295,8 +295,9 @@ object DedupOps {
     // Pinning TRIED and REVERTED (r18): JobProfileProbe shows the
     // tokenize running 3× and the window-md5 pass 2× across the
     // consumers, so docs/wins localCheckpoint pins looked like the
-    // theilsen/basket win — measured WORSE (FreshRunProbe min-of-5
-    // 1.53 → 1.93 s): each eager pin is a BARRIER, serializing
+    // theilsen/basket win — measured WORSE (min-of-5 1.53 → 1.93 s,
+    // PERFORMANCE.md round 18; reproduce with `JobProfileProbe <dir>
+    // dedup_span_excise 5`): each eager pin is a BARRIER, serializing
     // subtrees the unpinned plan runs as concurrent overlapping
     // stages, and at sf0.1 the lost overlap exceeds the saved
     // recompute. At cluster scale the duplicate-CPU argument may
@@ -709,21 +710,12 @@ object DedupOps {
     * `ids` are dropped by the final left join; before round 7's
     * edge-touched-only loop they appeared in the output via the
     * identity edges, so callers relying on that would silently lose
-    * rows). Every current caller passes the full corpus id set. Run
-    * with `-Dgraft.debug.checks=true` to verify the containment per
-    * call (one anti-join count — too expensive to leave on). */
+    * rows). Every current caller passes the full corpus id set;
+    * OpsSpec checks the containment over the pairs and ids the dedup
+    * caller passes. */
   def componentsOf(pairs: DataFrame, ids: DataFrame,
                    maxRounds: Int = MaxLabelRounds): DataFrame = {
     val spark = pairs.sparkSession
-    if (sys.props.get("graft.debug.checks").contains("true")) {
-      val orphans = pairs.toDF("D1", "D2")
-        .select(col("D1").as("v")).union(pairs.toDF("D1", "D2").select(col("D2").as("v")))
-        .distinct()
-        .join(ids.toDF("v"), Seq("v"), "left_anti").count()
-      require(orphans == 0L,
-        s"componentsOf precondition violated: $orphans pair vertices absent from ids " +
-          "(their labels would be silently dropped by the ids join)")
-    }
     // cache the pair list itself: the caller's pair plan (typically the
     // LSH-verify pipeline) executes ONCE — the sizing count below rides
     // it, and the edge build reads the cache

@@ -153,8 +153,9 @@ object GraphOps {
       .distinct()
     // not pinned: the basket table feeds four consumers, but it is
     // order-count-sized (it grows with the corpus), and a same-window
-    // A/B at sf0.1 (FreshRunProbe, 10 alternating pairs) resolved no
-    // gain from pinning it
+    // A/B at sf0.1 (10 alternating pairs, recorded in CHANGES.md;
+    // reproduce with `JobProfileProbe <dir> basket_pair_lift 3`)
+    // resolved no gain from pinning it
     val baskets = lp.groupBy(col("OrderKey"))
       .agg(collect_list(col("Part")).as("Ps"))
       .filter(size(col("Ps")) <= MaxOrderParts)

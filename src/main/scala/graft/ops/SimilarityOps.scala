@@ -847,10 +847,10 @@ object SimilarityOps {
     * one posexplode/groupBy((Cid, dim)) aggregate — the classic
     * distributed Lloyd step, shuffle keyed on K·dims uniform keys. The
     * centroid table itself stays ≤ K rows (collect_list/transform over
-    * 64 elements per centroid — driver-scale, not data-scale). */
-  private def kmeansCentroids(all: DataFrame, nCentroids: Int): DataFrame = {
+    * 64 elements per centroid — driver-scale, not data-scale). `n` is
+    * `all`'s row count, which every caller already holds. */
+  private def kmeansCentroids(all: DataFrame, n: Long, nCentroids: Int): DataFrame = {
     val spark = all.sparkSession
-    val n = all.count()
     // SELF-SIZED update exchange (round 14, the candidate-join rule):
     // the per-round dims ⋈ assign join streams n·Dims exploded rows —
     // 1.28e9 at the 20M decade, the exchange that exhausted the
@@ -960,8 +960,15 @@ object SimilarityOps {
     BucketedTables.resolve(spark, dir, "similarity.ivfIndex", nCentroids)(
       Form(Paths.get(indexBase(spark, dir, s"k$nCentroids")), Seq("codebook", "lists"),
         IvfLayoutVersion, embeddingsOf(dir))) { f =>
+      // one count sizes both k-means and the size-routed assignment.
+      // It is taken over the cache, not read from the registered
+      // footer count, because it also builds the cache in one wave:
+      // the Lloyd plan reads the cache six times, and over an unbuilt
+      // cache AQE runs one cache job per read (on a 400-vector corpus,
+      // 6 jobs where the count runs 3; IndexMaintenanceSpec's budget)
       val all = quantized(spark, dir)
-      kmeansCentroids(all, nCentroids)
+      val n = all.count()
+      kmeansCentroids(all, n, nCentroids)
         .write.mode("overwrite").parquet(s"${f.base}/codebook")
       // assignment against the PERSISTED codebook (read it back rather
       // than re-running the Lloyd rounds a second time), size-routed:
@@ -969,7 +976,7 @@ object SimilarityOps {
       // hashes unchanged); past it the hierarchical route wins 9.2×
       // (PERFORMANCE.md round 10) and an IVF list built from the routed
       // assignment is approximate exactly as the probe side already is
-      assignAuto(all, spark.read.parquet(s"${f.base}/codebook"))
+      assignAuto(all, n, spark.read.parquet(s"${f.base}/codebook"))
         .write.mode("overwrite").partitionBy("Cid").parquet(s"${f.base}/lists")
     }
 
@@ -1571,16 +1578,16 @@ object SimilarityOps {
 
   /** Size-routed assignment: flat below [[HierAssignMinNK]] n·K,
     * hierarchical above — the measured crossover as an executable
-    * default rather than a scaladoc claim. `n` and `k` are one
-    * metadata-cheap count each (the codebook is K rows; the corpus
-    * count rides parquet/cached statistics). Both branches emit the
-    * identical (vec_id, Q, NormSq, Cid) shape; divergence between
-    * them is confined to cluster-boundary vectors (OpsSpec measures
-    * ≥0.95 agreement). */
-  def assignAuto(vecs: DataFrame, fineCent: DataFrame,
+    * default rather than a scaladoc claim. `n` is `vecs`' row count,
+    * which the caller already holds (the IVF build passes its one
+    * corpus count); `k` is one count of the K-row codebook. Both
+    * branches emit the identical (vec_id, Q, NormSq, Cid) shape;
+    * divergence between them is confined to cluster-boundary vectors
+    * (OpsSpec measures ≥0.95 agreement). */
+  def assignAuto(vecs: DataFrame, n: Long, fineCent: DataFrame,
                  nprobe: Int = HierNProbe,
                  minNK: Long = HierAssignMinNK): DataFrame = {
-    val nk = vecs.count() * fineCent.count()
+    val nk = n * fineCent.count()
     if (nk >= minNK) assignHierarchical(vecs, fineCent, nprobe)
     else assignFlat(vecs, fineCent)
   }
@@ -1594,7 +1601,7 @@ object SimilarityOps {
     // (0..K-1 labels survive rounds), so `vec_id < coarseK` seeds hold
     val fineAsVecs = fineCent.select(col("Cid").as("vec_id"),
       col("CQ").as("Q"), col("CNorm").as("NormSq"))
-    val coarse = kmeansCentroids(fineAsVecs, coarseK)
+    val coarse = kmeansCentroids(fineAsVecs, k, coarseK)
     // fine centroid -> its coarse cell (K rows, broadcast economics)
     val fineCells = nearestCentroids(fineAsVecs, coarse, 1, "vec_id", "Q", "NormSq")
       .select(col("vec_id").as("FCid"), col("Q").as("FQ"),

@@ -3,23 +3,52 @@ package graft.tools
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
-/** Dev probe: per-JOB wall breakdown of one query's materialization —
-  * where FreshRunProbe says "this query costs 5 s", this says which of
-  * its jobs (construction-time actions like localCheckpoint/count vs
-  * the final noop sink, AQE stage jobs, broadcast builds) carry the
-  * seconds, and how much wall sits BETWEEN jobs (driver-side planning,
-  * codegen, analysis). Stage shuffle totals ride the job rows so an
+/** Dev probe: times fresh constructions+materializations of named
+  * SparkEntry queries and breaks each one's wall down per JOB. Each
+  * rep calls the query function again, the timing mode graft.Bench
+  * uses: a plan built once and re-run leaves construction-time work
+  * (eager localCheckpoint materializations) outside the timed region,
+  * which is how a 0.5 s reading once hid an 8.5 s suite cost (the
+  * round-10 pHash lesson). The queries run in the order given on one
+  * session, so substrates built by earlier queries show in the later
+  * ones' walls and cached-RDD counts.
+  *
+  * Per rep it prints the wall and the session's cached-RDD count, then
+  * one row per job: construction-time actions (localCheckpoint, count)
+  * vs the final noop sink, AQE stage jobs and broadcast builds, and
+  * the wall that sits BETWEEN jobs (driver-side planning, codegen,
+  * analysis). Stage shuffle totals ride the job rows so an
   * exchange-bound job is distinguishable from a compute-bound one.
   *
-  * usage: runMain graft.tools.JobProfileProbe <sfDir> <query> [reps]
+  * usage: runMain graft.tools.JobProfileProbe <sfDir> <q1[,q2,...]> [reps]
   */
 object JobProfileProbe {
+  private val Usage = "usage: runMain graft.tools.JobProfileProbe <sfDir> <q1[,q2,...]> [reps]"
+
+  /** The query names of a `q1[,q2,...]` list, in the order given,
+    * repeats kept. Every name is checked against [[graft.SparkEntry.queries]]
+    * before a session starts, so a misspelt name fails at once rather
+    * than after the queries ahead of it have run. */
+  def queryList(list: String): Seq[String] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    require(names.nonEmpty, s"no query named in '$list'")
+    val unknown = names.filterNot(graft.SparkEntry.queries.contains).distinct
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    names
+  }
+
   def main(args: Array[String]): Unit = {
     if (args.length < 2) {
-      System.err.println("usage: runMain graft.tools.JobProfileProbe <sfDir> <query> [reps]")
+      System.err.println(Usage)
       sys.exit(2)
     }
-    val Array(sfDir, name) = args.take(2)
+    val sfDir = args(0)
+    val names =
+      try queryList(args(1))
+      catch { case e: IllegalArgumentException =>
+        System.err.println(s"${e.getMessage}\n$Usage")
+        sys.exit(2)
+      }
     val reps = if (args.length > 2) args(2).toInt else 2
     val spark = graft.GraftSession.local()
     case class Job(id: Int, start: Long, end: Long, desc: String,
@@ -62,16 +91,17 @@ object JobProfileProbe {
           j.taskTimeMs += sc.stageInfo.taskMetrics.executorRunTime
         }
     })
-    for (i <- 1 to reps) {
+    for (name <- names; i <- 1 to reps) {
       jobs.clear(); starts.clear(); stageToJob.clear()
       val w0 = System.currentTimeMillis()
       val t0 = System.nanoTime()
       graft.SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val wall = (System.nanoTime() - t0) / 1e9
+      val cached = spark.sparkContext.getPersistentRDDs.size
       Thread.sleep(500) // listener-bus drain
       val rows = jobs.values.toSeq.sortBy(_.start)
-      println(f"[jobprofile] $name rep $i wall $wall%.2f s, ${rows.size} jobs, " +
+      println(f"[jobprofile] $name rep $i wall $wall%.2f s, cachedRDDs $cached, ${rows.size} jobs, " +
         f"job-covered ${rows.map(j => (j.end - j.start) / 1000.0).sum}%.2f s")
       var prevEnd = w0
       rows.foreach { j =>

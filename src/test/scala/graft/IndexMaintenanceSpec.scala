@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import graft.ops.{BucketedTables, SimilarityOps}
 
@@ -13,6 +15,12 @@ import graft.ops.{BucketedTables, SimilarityOps}
   * trivial writer, by PersistedIndexSpec; the band index by
   * BandIndexSpec. */
 class IndexMaintenanceSpec extends SparkSpec {
+
+  /** Jobs a first-touch IVF build of the 400-vector corpus runs, by
+    * call site: the registered footer count 2, the corpus count 3, the
+    * codebook write with its Lloyd rounds 5, the codebook read back 1,
+    * its count for the size route 2, the lists write 2. */
+  private val IvfBuildJobs = 15
 
   /** A 400-vector copy of the fixture's embeddings. */
   private def smallCorpus(name: String): String = {
@@ -47,6 +55,40 @@ class IndexMaintenanceSpec extends SparkSpec {
     rebuildsWithoutManifest(base, Seq("codebook", "lists")) {
       SimilarityOps.ivfIndexPath(spark.newSession(), dir)
     }
+  }
+
+  test("a first-touch IVF build counts its corpus once, within its job budget") {
+    // the build counts its corpus once; a recount in k-means or in the
+    // size-routed assignment adds jobs
+    val dir = smallCorpus("graft_ivf_jobs")
+    val t0 = System.currentTimeMillis()
+    // each job by its call site: its SQL execution's, since AQE submits
+    // stage jobs from pool threads
+    val sites = new java.util.concurrent.ConcurrentHashMap[String, String]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => sites.put(s.executionId.toString, s.description)
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.time >= t0) jobs.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .flatMap(id => Option(sites.get(id))).getOrElse("?"))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      SimilarityOps.ivfIndexPath(spark, dir)
+      // listener delivery is async: wait for the count to go quiet
+      var last = -1
+      val deadline = System.currentTimeMillis() + 10000
+      while (last != jobs.size && System.currentTimeMillis() < deadline) {
+        last = jobs.size
+        Thread.sleep(500)
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.size <= IvfBuildJobs,
+      s"${jobs.size} jobs, by call site: ${jobs.toArray.groupBy(identity).map { case (s, n) => s"$s ×${n.length}" }.mkString(", ")}")
   }
 
   test("the IVF-PQ layer rebuilds after a crash before its manifest, over the same IVF base") {

@@ -23,6 +23,12 @@ class OpsSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("D1"), r.getAs[Long]("D2")))
     val rows = DedupOps.components(spark, sfDir).collect()
     assert(rows.length === 500)
+    // componentsOf's precondition, over the pairs and ids this caller
+    // passes: every pair vertex is a corpus id, so no label is dropped
+    val ids = graft.etl.Tables.documents(spark, sfDir).select("doc_id").collect()
+      .map(_.getLong(0)).toSet
+    val orphans = pairs.flatMap { case (a, b) => Seq(a, b) }.toSet -- ids
+    assert(pairs.nonEmpty && orphans.isEmpty, s"pair vertices absent from ids: $orphans")
     val cluster = rows.map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("ClusterId")).toMap
     // every verified near-dup pair landed in one cluster
     pairs.foreach { case (a, b) =>
@@ -64,6 +70,18 @@ class OpsSpec extends SparkSpec {
     }
     assert(labels(900L) === 900L && labels(901L) === 901L)
     assert(labels.size === 18)
+  }
+
+  test("dedup: componentsOf drops a pair vertex absent from ids, as its precondition states") {
+    import spark.implicits._
+    // vertex 3 sits in two pairs but not in ids: its label is dropped by
+    // the final ids join, while 1, 2 and 4 still merge through it. The
+    // output is one row per id, never per pair vertex.
+    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("D1", "D2")
+    val ids = Seq(1L, 2L, 4L, 7L).toDF("doc_id")
+    val labels = DedupOps.componentsOf(pairs, ids).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels === Map(1L -> 1L, 2L -> 1L, 4L -> 1L, 7L -> 7L))
   }
 
   test("dedup: prefix-filtered exact Jaccard join equals brute force, covers LSH pairs, no cartesian") {
@@ -1068,11 +1086,12 @@ class OpsSpec extends SparkSpec {
     // the measured n·K crossover it returns the flat assignment, above
     // it (forced with minNK=1) the hierarchical one — bit-identical to
     // the respective direct paths
-    val autoFlat = SimilarityOps.assignAuto(vecs, cent).collect()
+    val n = vecs.count()
+    val autoFlat = SimilarityOps.assignAuto(vecs, n, cent).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("Cid")).toMap
     assert(autoFlat === flat,
       "assignAuto below the crossover must be the flat assignment")
-    val autoHier = SimilarityOps.assignAuto(vecs, cent, minNK = 1L).collect()
+    val autoHier = SimilarityOps.assignAuto(vecs, n, cent, minNK = 1L).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("Cid")).toMap
     assert(autoHier === hier,
       "assignAuto above the crossover must be the hierarchical assignment")
@@ -1085,6 +1104,27 @@ class OpsSpec extends SparkSpec {
       val minId = ms.map(_.getAs[Long]("vec_id")).min
       assert(!ms.find(_.getAs[Long]("vec_id") == minId).get.getAs[Boolean]("IsDup"))
     }
+  }
+
+  test("similarity: assignAuto routes on the corpus count it is given, not on a recount") {
+    // the IVF build passes the one count it already took; the route
+    // must follow that count whatever `vecs` holds
+    val base = SimilarityOps.ivfIndexPath(spark, sfDir)
+    val cent = spark.read.parquet(s"$base/codebook")
+    val vecs = spark.read.parquet(s"$base/lists")
+      .select(col("vec_id"), col("Q"), col("NormSq"))
+    def cids(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = df.collect()
+      .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("Cid")).toMap
+    val flat = cids(SimilarityOps.assignFlat(vecs, cent))
+    val hier = cids(SimilarityOps.assignHierarchical(vecs, cent))
+    // the routes must differ on this corpus for the check to see which ran
+    assert(flat !== hier, "flat and hierarchical agree on every vector: the route is unobservable")
+    // the real n·K is far below the crossover: a recount would go flat
+    assert(cids(SimilarityOps.assignAuto(vecs, SimilarityOps.HierAssignMinNK, cent)) === hier,
+      "a count past the crossover must take the hierarchical route")
+    // and with a crossover of 1 a recount would go hierarchical
+    assert(cids(SimilarityOps.assignAuto(vecs, 0L, cent, minNK = 1L)) === flat,
+      "a count of 0 must take the flat route")
   }
 
   test("similarity: incremental dedup equals a driver recomputation of route-then-verify") {
@@ -1272,16 +1312,6 @@ class OpsSpec extends SparkSpec {
       .orderBy(col("event_id")).collect().map(_.toSeq).toSeq
     assert(rows(s"$tmp/nanos") === rows(s"$tmp/micros"),
       "µs-encoded and ns-encoded events decode differently")
-
-    // the generic-source seam must take the same sniff: via(Parquet)
-    // with the schemas-map LongType declaration alone would misread a
-    // µs fixture at exactly this altitude
-    val viaRows = graft.etl.Tables
-      .via(graft.sources.ParquetSource, spark, sfDir, "events")
-      .orderBy(col("event_id")).collect().map(_.toSeq).toSeq
-    val rawRows = graft.etl.Tables.eventsRaw(spark, sfDir)
-      .orderBy(col("event_id")).collect().map(_.toSeq).toSeq
-    assert(viaRows === rawRows, "via(ParquetSource, events) diverges from eventsRaw")
   }
 
   test("ts sniff cache self-invalidates on an in-place rewrite inside a NESTED (partitioned) layout") {

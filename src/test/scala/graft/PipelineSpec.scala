@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 
-import graft.etl.{Load, Pipeline, Transactions}
+import graft.etl.{Load, Pipeline, Tables, Transactions}
 
 /** End-to-end pipeline + sink tests (ref: etl.py:390-413, 264-386). */
 class PipelineSpec extends SparkSpec {
@@ -32,6 +32,37 @@ class PipelineSpec extends SparkSpec {
     val wh = Load.embeddedSink(out)
     val sq = spark.read.jdbc(wh.url, "country_summary", wh.props)
     assert(sq.count() === 25L && sq.columns.contains("TotalRevenue"))
+  }
+
+  test("Transactions.raw: one row per lineitem, in the reference's ten columns (etl.py:44-54)") {
+    val raw = Transactions.raw(spark, sfDir)
+    assert(raw.columns.toSeq === Seq("InvoiceNo", "StockCode", "Description", "Quantity",
+      "InvoiceDate", "UnitPrice", "CustomerID", "CountryRaw", "TotalAmount", "LineNumber"))
+    assert(raw.count() === Tables.lineitem(spark, sfDir).count(),
+      "a lineitem lost or duplicated by the order/customer/nation/part joins")
+  }
+
+  test("Transactions.raw: C-prefixed invoices are exactly the F-status orders; money per line") {
+    // an independent driver-side derivation from lineitem and orders,
+    // compared as a multiset: (orderkey, linenumber) is not a key in
+    // the fixture
+    val status = Tables.orders(spark, sfDir).select("o_orderkey", "o_orderstatus").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    val expected = Tables.lineitem(spark, sfDir)
+      .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity", "l_extendedprice", "l_discount")
+      .collect().map { l =>
+        val key = l.getLong(0)
+        val (qty, ext, disc) = (l.getDouble(3), l.getDouble(4), l.getDouble(5))
+        (if (status(key) == "F") s"C$key" else key.toString, l.getInt(1), l.getLong(2).toString,
+          qty.toLong, ext / qty, ext * (1.0 - disc))
+      }.toSeq
+    val got = Transactions.raw(spark, sfDir)
+      .select("InvoiceNo", "LineNumber", "StockCode", "Quantity", "UnitPrice", "TotalAmount").collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getLong(3), r.getDouble(4), r.getDouble(5)))
+      .toSeq
+    assert(expected.exists(_._1.startsWith("C")) && expected.exists(!_._1.startsWith("C")),
+      "the fixture must hold both kinds of invoice")
+    assert(got.sorted === expected.sorted)
   }
 
   test("sqlSinkShape: lowercase names + bround half-even (⚠R, etl.py:328,356)") {

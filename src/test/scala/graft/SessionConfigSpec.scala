@@ -16,10 +16,12 @@ import scala.jdk.CollectionConverters._
   * [[GraftExtensions]] the one place a native function is
   * registered, `graft.streaming.OneShot` the one place a stream
   * twin stages, drains and cleans up, and `graft.ops.BucketedTables`
-  * the one place a persisted index is checked and committed. Three more scans keep every
+  * the one place a persisted index is checked and committed. More scans keep every
   * public or `private[graft]` engine entry point reachable from a
   * query, pipeline, tool or benchmark, not only from its own test
   * (test seams on live code are exempt by name, with a reason), every
+  * tool main a documented entry or a cited probe, every setting an
+  * env var of one table, every
   * pin in a def whose release is on record, and [[SparkSpec.tempDir]]
   * the one place a spec makes a temp dir. */
 class SessionConfigSpec extends SparkSpec {
@@ -171,7 +173,6 @@ class SessionConfigSpec extends SparkSpec {
     // scripts, comments stripped and strings kept: the oracle SQL
     // interpolates names. Exempt, each with its reason:
     val exempt = Map(
-      "Tables.via" -> "the reference's Extract step (S1, pd.read_excel, etl.py:44-54)",
       "SimilarityOps.lshCandidateCount" -> "test seam: counts the live lshNeardup banding's candidates",
       "SimilarityOps.pqCodesForTest" -> "test seam: the codes table of the live pqTopk index",
       "DedupOps.candidatePairsFrom" -> "test seam: the live blocking self-join over planted bands")
@@ -229,6 +230,107 @@ class SessionConfigSpec extends SparkSpec {
     assert(unreached -- exempt.keySet === Set.empty[String],
       "defs reached from no query, pipeline, tool or benchmark (delete them, " +
         "or exempt a test seam on live code with its reason)")
+  }
+
+  /** Every tool main under src/main/scala/graft/tools, with its verdict,
+    * the file that names it, and why it stays:
+    *   - "entry": a user entry that README documents;
+    *   - "probe": it reproduces a measured constant or claim that the
+    *     named file cites, or that file drives its generators.
+    * A tool with neither verdict is deleted, along with any engine def
+    * that only it kept alive (the unreached-def scan above finds those). */
+  private val ToolVerdicts: Map[String, (String, String, String)] = Map(
+    "RunPipeline" -> ("entry", "README.md", "the reference's run(): clean, summaries, load"),
+    "RunCuration" -> ("entry", "README.md", "the curation pipeline end to end"),
+    "Explain" -> ("entry", "README.md", "explains and times named queries"),
+    "ScaleBench" -> ("entry", "README.md", "steady-state query times on a generated scale corpus"),
+    "SemDedupK" -> ("entry", "README.md", "the semantic-dedup cluster-count curve at scale"),
+    "JobProfileProbe" -> ("probe", "src/main/scala/graft/ops/DedupOps.scala",
+      "per-rep walls and per-job rows behind the pin A/Bs the engine cites"),
+    "HierAssignProbe" -> ("probe", "src/main/scala/graft/ops/SimilarityOps.scala",
+      "the flat/hierarchical crossover behind HierAssignMinNK"),
+    "KnnSampleProbe" -> ("probe", "src/main/scala/graft/GraftSession.scala",
+      "the zstd shuffle codec measurement"),
+    "StateStoreAbProbe" -> ("probe", "src/main/scala/graft/GraftSession.scala",
+      "the state-store provider A/B behind keeping the default; GraftSession's extraConfs names it"),
+    "GraphScaleProbe" -> ("probe", "src/main/scala/graft/ops/GraphOps.scala",
+      "the 100M-edge kernel walls; PlanSpec and RetrievalGraphSpec use its generators"),
+    "KnnRecallProbe" -> ("probe", "src/test/scala/graft/OpsSpec.scala",
+      "the recall measurement behind the pinned kNN recall bounds"))
+
+  test("every tool main has a verdict, and the file its verdict names still names it") {
+    // a tool nobody documents or cites is history, not a user entry or
+    // a reproduction: it goes, and with it what only it kept alive
+    val tools = Paths.get("src/main/scala/graft/tools")
+    val Main = """\bobject\s+(\w+)""".r.unanchored
+    val mains = mainSources.filter(_.startsWith(tools)).flatMap { p =>
+      val src = blankComments(new String(Files.readAllBytes(p), "UTF-8"), python = false)
+      if (src.contains("def main(")) Main.findFirstMatchIn(src).map(_.group(1)) else None
+    }.toSet
+    assert(mains.size > 5, s"scan found only ${mains.size} tool mains")
+    assert(mains -- ToolVerdicts.keySet === Set.empty[String],
+      "tool mains with no verdict (document them as an entry, cite what they reproduce, or delete them)")
+    assert(ToolVerdicts.keySet -- mains === Set.empty[String], "verdicts for tools that are gone")
+    val uncited = ToolVerdicts.toSeq.collect {
+      case (tool, (kind, file, _)) if !Seq("entry", "probe").contains(kind) ||
+          !Files.isRegularFile(Paths.get(file)) ||
+          !s"\\b$tool\\b".r.unanchored.matches(new String(Files.readAllBytes(Paths.get(file)), "UTF-8")) =>
+        s"$tool ($kind, $file)"
+    }
+    assert(uncited.isEmpty, s"verdicts whose file no longer names the tool: ${uncited.mkString(", ")}")
+  }
+
+  test("JobProfileProbe takes its query list in the order given, repeats kept") {
+    // one session runs the list in order, so a later query's wall shows
+    // what the earlier ones built: the order is part of the measurement
+    assert(graft.tools.JobProfileProbe.queryList(" customer_summary,transactions ,customer_summary")
+      === Seq("customer_summary", "transactions", "customer_summary"))
+  }
+
+  test("JobProfileProbe rejects an unknown or empty query list before it starts a session") {
+    val e = intercept[IllegalArgumentException] {
+      graft.tools.JobProfileProbe.queryList("customer_summary,no_such_query,customer_sumary")
+    }
+    assert(e.getMessage.contains("no_such_query") && e.getMessage.contains("customer_sumary"),
+      e.getMessage)
+    assert(!e.getMessage.contains("customer_summary"), e.getMessage)
+    intercept[IllegalArgumentException](graft.tools.JobProfileProbe.queryList(" , "))
+  }
+
+  /** What a user can set from outside the code, each with what it sets.
+    * Every one is an env var: the engine reads no JVM system property
+    * and defines no `spark.graft.*` conf. */
+  private val SettableEnv: Map[String, String] = Map(
+    "SPARK_GRAFT_CPUS" -> "the local session's core count (GraftSession)",
+    "SPARK_GRAFT_IVF_DIR" -> "the root of the persisted IVF indexes (SimilarityOps)",
+    "SPARK_GRAFT_AGG_DIR" -> "the root of the persisted aggregate tables (AggMaintenance)",
+    "SPARK_GRAFT_SF_DIR" -> "graft.Bench's input directory",
+    "SPARK_GRAFT_BENCH_PASSES" -> "graft.Bench's interleaved pass count",
+    "SPARK_GRAFT_BENCH_OUT" -> "graft.Bench's output file")
+
+  private def mainCode: Seq[(Path, String)] = mainSources.map(p =>
+    p -> blankComments(new String(Files.readAllBytes(p), "UTF-8"), python = false))
+
+  test("src/main reads exactly the env vars of the settable-value table") {
+    val Lit = "\"(SPARK_\\w+)\"".r
+    val named = mainCode.flatMap { case (_, src) => Lit.findAllMatchIn(src).map(_.group(1)) }.toSet
+    assert(named === SettableEnv.keySet,
+      "env vars read in src/main and the table differ (a new one is a declared setting: add it with what it sets)")
+    // a read through a variable would hide from the literal scan: the one
+    // such read is GraftSession.positiveIntEnv, whose callers pass literals
+    val byName = mainCode.flatMap { case (p, src) =>
+      src.split("\n").filter(l => l.contains("sys.env") || l.contains("System.getenv"))
+        .filter(l => Lit.findFirstIn(l).isEmpty).map(_ => p.getFileName.toString)
+    }
+    assert(byName === Seq("GraftSession.scala"), s"env reads not through a literal name: $byName")
+  }
+
+  test("src/main reads no JVM system property and defines no spark.graft.* conf") {
+    val forbidden = Seq("sys.props", "System.getProperty", "System.setProperty",
+      "Boolean.getBoolean", "Integer.getInteger", "\"spark.graft.")
+    val offenders = mainCode.flatMap { case (p, src) => forbidden.filter(src.contains).map(f => s"$p: $f") }
+    assert(offenders.isEmpty,
+      s"settings outside the env-var table: ${offenders.mkString(", ")}")
   }
 
   /** Every def under src/main/scala/graft (tools aside) that pins a
